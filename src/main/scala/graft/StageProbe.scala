@@ -76,11 +76,9 @@ object StageProbe {
     val en = time("K2 enabled stage")(Pinned.stage(pm.EnabledTime.withEnabled(log)))
     val seg = time("segment")(pm.BatchDiscovery.segment(en).count())
     val disc = time("discover (task)")(Pinned.stage(pm.BatchDiscovery.discover(en)))
-    for (part <- Seq("runsEv", "seg", "cand", "evSp", "spSub", "claims",
-        "unclaimed", "withSub", "spEvents", "all")) {
-      val n = time(s"discoverFull/$part")(pm.BatchDiscovery.discoverFull(en, debugPart = part).count())
-      println(s"   rows=$n")
-    }
+    val full = time("discoverFull")(pm.BatchDiscovery.discoverFull(en))
+    println(s"   rows=${full.count()}")
+    Pinned.releaseFrame(full)
     for (part <- Seq("instants", "subs", "workload", "all"))
       time(s"features/$part")(rules.Features.featuresTable(disc, part).count())
     println(s"rows: seg=$seg")

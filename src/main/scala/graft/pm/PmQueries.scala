@@ -335,9 +335,8 @@ object PmQueries {
 
     // Full discovery INCLUDING case-based (subprocess) batches — the
     // reference's complete pass order with the nullification path.
-    // discoverFull returns an EAGERLY staged frame (round-7: stage
-    // boundaries replaced persists, 9.6s -> 6.1s at sf0.1) whose lifecycle
-    // belongs to the caller — memoized per (session, dataset) with the
+    // discoverFullFromStages returns an EAGERLY staged frame whose
+    // lifecycle belongs to the caller — memoized per (session, dataset) with the
     // standard eviction so one session computes it once and the staged
     // blocks are released on dataset switch.
     "pm_sp_batches" -> ((s, d) => {
@@ -438,8 +437,13 @@ object PmQueries {
       |  FROM log l LEFT JOIN pred pr ON l.event_id = pr.event_id
       |  JOIN cs c ON l.case_id = c.case_id)""".stripMargin
 
-  /** Segmentation CTEs (mirrors BatchDiscovery.segment: typed-link chains
-    * with the anchor/parity boundary rule — see ProcessMining Scaladoc).
+  /** Segmentation CTEs (mirrors BatchDiscovery.segment: typed-link chains,
+    * see the BatchDiscovery Scaladoc). SQL has no per-row recursion, so the
+    * boundary recurrence bnd(i) = none(i) OR (changed(i) AND NOT bnd(i-1))
+    * runs as a parity rule (verified exhaustively equivalent): anchor rows
+    * are hard boundaries (no link) and unchanged-link rows; for the most
+    * recent anchor at rn a, bnd = ((rn - a) even) if the anchor is hard,
+    * else ((rn - a) odd).
     * The S-link gap tolerance is generated from PmConfig.SeqGapUs (same
     * constant the engine uses — const-sharing pattern). */
   private def segCtesFor(gapUs: Long): String =
@@ -475,7 +479,7 @@ object PmQueries {
   private val segCtes = segCtesFor(PmConfig.SeqGapUs)
 
   /** Classification + batch-case grain + W4 recursive split + W7 min size +
-    * W8 renumbering (mirrors BatchDiscovery.classify/batchCases/split/discover). */
+    * W8 renumbering (mirrors BatchDiscovery's segment pass and rank). */
   private val batchCtes =
     """btype AS (
       |  SELECT resource, activity, seg_no,

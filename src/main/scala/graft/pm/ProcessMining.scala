@@ -1,8 +1,11 @@
 package graft.pm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StringType}
 import graft.Tables
 
 /** An activity instance in the canonical event log (times in epoch micros). */
@@ -21,9 +24,20 @@ case class EvEn(event_id: Long, case_id: Long, activity: String, resource: Strin
 case class EvEnR(event_id: Long, case_id: Long, activity: String, resource: String,
                  start_us: Long, end_us: Long, enabled_us: Long, run_no: Long)
 
-/** Batch-case grain row used by the wrong-enabled split (SURVEY W4). */
-case class BatchCase(resource: String, activity: String, seg_no: Long, case_id: Long,
-                     case_start: Long, case_enabled: Long, case_end: Long)
+/** Pass-1 input of case-based discovery: an event of a same-resource run
+  * with its segment's task-level link `tk`. */
+case class RunEv(case_id: Long, run_no: Long, resource: String, activity: String,
+                 start_us: Long, end_us: Long, event_id: Long, enabled_us: Long, tk: String)
+
+/** A subsequence unit: one run of >= 2 events over >= 2 activities, with
+  * its C2 enabled time and the bit set of its events' task-level types. */
+case class SpUnit(case_id: Long, run_no: Long, resource: String, subseq: String,
+                  unit_start: Long, unit_end: Long, unit_enabled: Long, tk_mask: Int)
+
+/** A unit's claim by a W6-clean candidate chain: chain, W4 generation,
+  * case-based type, batch start, and whether the batch reaches min size. */
+case class SpClaim(case_id: Long, run_no: Long, subseq: String, sp_seg: Long, sp_sub: Int,
+                   sp_type: String, sp_start: Long, sp_ok: Boolean)
 
 /** Engine defaults for the reference's exposed configuration knobs. The
   * DuckDB oracle SQL is generated from these same constants (the ExtQueries
@@ -312,15 +326,17 @@ object EnabledTime {
   }
 }
 
-/** K1 — BAMA-equivalent batch discovery as window sessionization, plus the
-  * reference's cleanup passes (SURVEY W3–W8; semantics reconstructed from
-  * batch_detection.R:54-77 and discovery.py:12-209).
+/** K1 — BAMA-equivalent batch discovery plus the reference's cleanup passes
+  * (SURVEY W3–W8; semantics reconstructed from batch_detection.R:54-77 and
+  * discovery.py:12-209), written as key-sorted passes: each pass clusters
+  * its rows once (`repartition` + `sortWithinPartitions`) and runs plain
+  * Scala over the sorted iterator, holding one chain or one segment in
+  * memory — never a whole (resource, activity) timeline.
   *
   * Typed-link segmentation (round-2 reconstruction, validated against the
   * reference goldens: 485/485 instances exact on Production, 584/587 on
   * Loan with min size 10): within (resource, activity), ordered by
-  * (start_us, end_us, case_id, event_id), each row links to its predecessor
-  * as
+  * (start_us, end_us, event_id), each row links to its predecessor as
   *   P (simultaneous): equal start AND equal end,
   *   S (sequential):   start == previous end (gap tolerance 0),
   *   C (concurrent):   start < previous end AND end != previous end
@@ -330,68 +346,116 @@ object EnabledTime {
   *   none otherwise.
   * A batch instance is a maximal chain whose FIRST link sets the type and
   * every following link repeats it; a link of a different type (or none)
-  * starts a new instance at that row, discarding the breaking link.
+  * starts a new instance at that row, discarding the breaking link:
+  * boundary(i) = none(i) OR (changed(i) AND NOT boundary(i-1)). [[linked]]
+  * is the one implementation of both rules; it serves the event grain
+  * ([[segment]]) and the subsequence-unit grain ([[SubprocessBatches]]).
   *
-  * The chain recurrence boundary(i) = none(i) OR (changed(i) AND
-  * NOT boundary(i-1)) is computed without per-row recursion via a parity
-  * rule (verified exhaustively equivalent): anchor rows are hard boundaries
-  * (no link) and unchanged-link rows; for the most recent anchor at rn a,
-  * boundary = ((rn - a) even) if the anchor is hard, else ((rn - a) odd).
+  * The passes of [[discoverFullFromStages]]:
+  *   1. units per (case_id, run_no), each with the set of its events'
+  *      task-level types ([[SubprocessBatches]]);
+  *   2. units clustered by (resource, subseq) and chained; per closed chain:
+  *      candidacy, W6, W4 split, min size — one claim row per unit (the
+  *      only staged intermediate, at unit grain);
+  *   3. events left-joined to the claims on (case_id, run_no) and clustered
+  *      by (resource, activity, seg_no): per segment, the W4 split of its
+  *      unclaimed cases and every event's task or subprocess batch key;
+  *   4. one [[graft.Dist.withGlobalRank]] over all keys, task keys first
+  *      (kind 0, then kind 1: discovery.py:161-181 unify order), and one
+  *      join-back.
+  * Task-only discovery ([[discoverFromSeg]]) is passes 3–4 with no claims.
   */
 object BatchDiscovery {
-  /** Typed-link chain segmentation over any interval grain: adds lnk / bnd /
-    * seg_no within `partCols`, ordered by `orderCols` (which must start with
-    * the start/end columns named by `startCol`/`endCol`). Used at event
-    * grain for task batches and at subsequence-unit grain for case-based
-    * (subprocess) batches. */
-  private[pm] def typedLinkSegments(df: DataFrame, partCols: Seq[String],
-                                    orderCols: Seq[String],
-                                    startCol: String, endCol: String,
-                                    seqGapUs: Long = PmConfig.SeqGapUs): DataFrame = {
-    val w = Window.partitionBy(partCols.map(col): _*).orderBy(orderCols.map(col): _*)
-    val wRun = w.rowsBetween(Window.unboundedPreceding, 0)
-    val s = col(startCol); val e = col(endCol)
-    df
-      .withColumn("prev_s", lag(s, 1).over(w))
-      .withColumn("prev_e", lag(e, 1).over(w))
-      .withColumn("lnk",
-        when(col("prev_s").isNull, lit(null: String))
-          .when(s === col("prev_s") && e === col("prev_e"), "P")
-          // S admits a tolerated gap after the previous end
-          // (batch_detection.R:36,53-55 seq_tolerated_gap; 0 = exact abut)
-          .when(s >= col("prev_e") && s <= col("prev_e") + seqGapUs, "S")
-          // C = overlap that is neither simultaneous nor equal-end. Round-4
-          // variants tried and REJECTED by the goldens: strict s > prev_s
-          // (same-start different-end pairs DO batch — Production instances
-          // 2/334/352/379/471) and any-overlap C (equal-end adjacent pairs
-          // do not batch: +25 spurious instances). Round 5 closed the two
-          // golden-only residuals by fixing the same-start TIE-BREAK to
-          // end_us (see segment) — with it, every one of the 485 golden
-          // Production instances is reproduced EXACTLY (instance-set diff
-          // empty), leaving ONE engine-only extra (the Case28/Case87
-          // same-start pair, 2012-02-19 21:25): by every local feature
-          // (interval shape, enabled gaps, resource idle, neighbour links)
-          // it is inside the distribution of 352 golden-batched C links, so
-          // its absence from the golden traces to BAMA-internal candidate
-          // handling the interval sequence cannot express
-          // (log_and_model_based=TRUE, batch_detection.R:72) — an accepted,
-          // pinned residual (486 vs golden 485).
-          .when(s < col("prev_e") && e =!= col("prev_e"), "C")
-          .otherwise(lit(null: String)))
-      .withColumn("prev_lnk", lag(col("lnk"), 1).over(w))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      // anchor encoded as rn*2 + (hard ? 1 : 0); rows can't share rn so the
-      // max picks the latest anchor and the low bit carries its kind
-      .withColumn("anchor", max(
-        when(col("lnk").isNull, col("rn") * 2 + 1)             // hard boundary
-          .when(col("prev_lnk").isNotNull && col("lnk") === col("prev_lnk"),
-            col("rn") * 2)                                     // unchanged
-        ).over(wRun))
-      .withColumn("bnd",
-        when(col("anchor") % 2 === 1, (col("rn") - shiftright(col("anchor"), 1)) % 2 === 0)
-          .otherwise((col("rn") - shiftright(col("anchor"), 1)) % 2 === 1))
-      .withColumn("seg_no", sum(when(col("bnd"), 1L).otherwise(0L)).over(wRun))
-      .drop("prev_s", "prev_e", "prev_lnk", "rn", "anchor")
+  private val TaskLabels = Map("P" -> "Parallel", "S" -> "Sequential task-based",
+    "C" -> "Concurrent task-based")
+  private val KeyCols = Seq("k_kind", "k_start", "resource", "k_grp", "k_seg", "k_sub")
+
+  /** Streams the typed-link chain rule over a key-sorted iterator: every
+    * element with its (lnk, bnd, seg_no); seg_no counts boundaries within
+    * the key, from 1. */
+  private[pm] def linked[A](it: Iterator[A], seqGapUs: Long)(key: A => Any,
+      start: A => Long, end: A => Long): Iterator[(A, String, Boolean, Long)] = {
+    var k: Any = null
+    var ps, pe, segNo = 0L
+    var lnk: String = null
+    var bnd = false
+    it.map { a =>
+      val s = start(a); val e = end(a); val ka = key(a)
+      val first = k == null || k != ka
+      val l =
+        if (first) null
+        else if (s == ps && e == pe) "P"
+        // S admits a tolerated gap after the previous end
+        // (batch_detection.R:36,53-55 seq_tolerated_gap; 0 = exact abut)
+        else if (s >= pe && s <= pe + seqGapUs) "S"
+        // C = overlap that is neither simultaneous nor equal-end. Round-4
+        // variants tried and REJECTED by the goldens: strict s > prev_s
+        // (same-start different-end pairs DO batch — Production instances
+        // 2/334/352/379/471) and any-overlap C (equal-end adjacent pairs
+        // do not batch: +25 spurious instances). Round 5 closed the two
+        // golden-only residuals by fixing the same-start TIE-BREAK to
+        // end_us (see segment) — with it, every one of the 485 golden
+        // Production instances is reproduced EXACTLY (instance-set diff
+        // empty), leaving ONE engine-only extra (the Case28/Case87
+        // same-start pair, 2012-02-19 21:25): by every local feature
+        // (interval shape, enabled gaps, resource idle, neighbour links)
+        // it is inside the distribution of 352 golden-batched C links, so
+        // its absence from the golden traces to BAMA-internal candidate
+        // handling the interval sequence cannot express
+        // (log_and_model_based=TRUE, batch_detection.R:72) — an accepted,
+        // pinned residual (486 vs golden 485).
+        else if (s < pe && e != pe) "C"
+        else null
+      if (first) { k = ka; segNo = 0L }
+      bnd = l == null || (l != lnk && !bnd)
+      if (bnd) segNo += 1
+      lnk = l; ps = s; pe = e
+      (a, l, bnd, segNo)
+    }
+  }
+
+  /** Consecutive runs of equal `key` in a key-sorted iterator, one run in
+    * memory at a time. */
+  private[pm] def groups[A](it: Iterator[A])(key: A => Any): Iterator[ArrayBuffer[A]] =
+    new Iterator[ArrayBuffer[A]] {
+      private val b = it.buffered
+      def hasNext: Boolean = b.hasNext
+      def next(): ArrayBuffer[A] = {
+        val k = key(b.head)
+        val g = ArrayBuffer(b.next())
+        while (b.hasNext && key(b.head) == k) g += b.next()
+        g
+      }
+    }
+
+  /** A case's batch generation: W4 `sub`, the generation's batch start
+    * (min case start) and whether it reaches the minimum size. */
+  private[pm] final case class Gen(sub: Int, start: Long, ok: Boolean)
+
+  /** Batch-case grain + W4 + W7 over one group's members
+    * (case_id, start, enabled). A case starts at its lexicographically
+    * minimal (start, enabled) member and is enabled by it (C2 struct-min,
+    * utils.py:93-106). W4 — wrong-enabled split, exact reference fixed
+    * point (discovery.py:12-81): cases whose enabled exceeds the group's
+    * min start are split off together and re-analyzed. */
+  private[pm] def gens(members: Iterator[(Long, Long, Long)], minSize: Int): Map[Long, Gen] = {
+    val first = mutable.HashMap.empty[Long, (Long, Long)]
+    members.foreach { case (c, s, e) =>
+      if (first.get(c).forall { case (s0, e0) => s < s0 || (s == s0 && e < e0) }) first(c) = (s, e)
+    }
+    var rest = first.toSeq
+    var sub = 0
+    val out = Map.newBuilder[Long, Gen]
+    while (rest.nonEmpty) {
+      val s = rest.map(_._2._1).min
+      val (stay, late) = rest.partition(_._2._2 <= s)
+      require(stay.nonEmpty, s"W4 split cannot progress: cases ${late.map(_._1)} are all enabled after $s")
+      val g = Gen(sub, stay.map(_._2._1).min, stay.size >= minSize)
+      stay.foreach(c => out += c._1 -> g)
+      sub += 1
+      rest = late
+    }
+    out.result()
   }
 
   /** Adds lnk / bnd / seg_no within (resource, activity). Ordered by
@@ -402,318 +466,156 @@ object BatchDiscovery {
     * put the longer one first and stranded a member behind an equal-end
     * non-link). Same-interval rows still fall back to input order, which
     * golden batch 384 requires (Case110's row precedes Case78's). */
-  def segment(en: DataFrame, seqGapUs: Long = PmConfig.SeqGapUs): DataFrame =
-    typedLinkSegments(en, Seq("resource", "activity"),
-      Seq("start_us", "end_us", "event_id"), "start_us", "end_us", seqGapUs)
-
-  /** Per-segment batch type = the shared type of the chain's links (all
-    * non-boundary rows of a segment carry the same lnk by construction).
-    * Singleton segments get null and are dropped by the min-size gate. */
-  def classify(seg: DataFrame): DataFrame = {
-    import seg.sparkSession.implicits._
-    seg.groupBy("resource", "activity", "seg_no")
-      .agg(min(when(!$"bnd", $"lnk")).as("l2"))
-      .withColumn("batch_type",
-        when($"l2" === "P", "Parallel")
-          .when($"l2" === "S", "Sequential task-based")
-          .when($"l2" === "C", "Concurrent task-based"))
-      .select($"resource", $"activity", $"seg_no", $"batch_type")
+  def segment(en: DataFrame, seqGapUs: Long = PmConfig.SeqGapUs): DataFrame = {
+    val in = en.schema
+    val Seq(iR, iA, iS, iE) = Seq("resource", "activity", "start_us", "end_us").map(in.fieldIndex)
+    en.repartition(col("resource"), col("activity"))
+      .sortWithinPartitions("resource", "activity", "start_us", "end_us", "event_id")
+      .mapPartitions(it => linked(it, seqGapUs)(r => (r.getString(iR), r.getString(iA)),
+          _.getLong(iS), _.getLong(iE))
+        .map { case (r, l, b, n) => Row.fromSeq(r.toSeq :+ l :+ b :+ n) })(Encoders.row(in
+        .add("lnk", StringType).add("bnd", BooleanType).add("seg_no", LongType)))
   }
 
-  /** Batch-case grain: case_start, case_enabled (C2 struct-min: enabled of
-    * the lexicographically minimal (start, enabled) row — utils.py:93-106),
-    * case_end. */
-  def batchCases(seg: DataFrame): DataFrame = {
-    import seg.sparkSession.implicits._
-    seg.groupBy("resource", "activity", "seg_no", "case_id")
-      .agg(
-        min(struct($"start_us".as("s"), $"enabled_us".as("e"))).as("m"),
-        max($"end_us").as("case_end"))
-      .select($"resource", $"activity", $"seg_no", $"case_id",
-        $"m.s".as("case_start"), $"m.e".as("case_enabled"), $"case_end")
-  }
-
-  /** W4 — wrong-enabled split, exact reference fixed point (discovery.py:12-81):
-    * cases whose enabled exceeds the group's min start are split off together
-    * and re-analyzed. Runs per batch segment (small groups) as a typed kernel;
-    * emits a `sub` generation index per case. */
-  def split(bc: DataFrame): DataFrame = {
-    val spark = bc.sparkSession
-    import spark.implicits._
-    bc.as[BatchCase]
-      .groupByKey(r => (r.resource, r.activity, r.seg_no))
-      .flatMapGroups { (_, it) =>
-        var rest = it.toArray
-        val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long, Long, Long, Long, Long, Int)]
-        var sub = 0
-        while (rest.nonEmpty) {
-          var s = Long.MaxValue
-          rest.foreach(c => if (c.case_start < s) s = c.case_start)
-          val (stay, late) = rest.partition(_.case_enabled <= s)
-          stay.foreach(c => out +=
-            ((c.resource, c.activity, c.seg_no, c.case_id, c.case_start, c.case_enabled, c.case_end, sub)))
-          sub += 1
-          rest = late
+  /** Passes 3 and 4 over the segmented events `ev` (with the claim columns
+    * of [[SubprocessBatches.claims]] when case-based discovery ran): per
+    * segment, the task type (the shared link of its non-boundary rows;
+    * singletons get null), the W4 split of the UNCLAIMED cases (reference
+    * W4/min-size filter on isna(subprocess_type)) and each event's batch
+    * key and type; then W8 dense renumbering and the join-back. A claimed
+    * event carries its subprocess batch key, or none when that batch is
+    * undersized — it then loses its task batch too (the NULLIFICATION
+    * path, discovery.py:128-147); a "task-based" subprocess batch keeps
+    * the event's task-level type (discovery.py:183-187). */
+  private def assign(ev: DataFrame, minSize: Int, cols: Seq[String]): DataFrame = {
+    val in = ev.schema
+    val Seq(iR, iA, iG, iC, iS, iEn, iL, iB) = Seq("resource", "activity", "seg_no", "case_id",
+      "start_us", "enabled_us", "lnk", "bnd").map(in.fieldIndex)
+    val Seq(iT, iQ, iP, iU, iBs, iOk) =
+      if (in.fieldNames.contains("sp_type"))
+        Seq("sp_type", "subseq", "sp_seg", "sp_sub", "sp_start", "sp_ok").map(in.fieldIndex)
+      else Seq.fill(6)(-1)
+    val none = Seq.fill(6)(null) // the five key fields + batch_type
+    val keyed = ev.repartition(col("resource"), col("activity"), col("seg_no"))
+      .sortWithinPartitions("resource", "activity", "seg_no")
+      .mapPartitions(it => groups(it)(r => (r.getString(iR), r.getString(iA), r.getLong(iG))).flatMap { seg =>
+        val tk = seg.collectFirst { case r if !r.getBoolean(iB) => TaskLabels(r.getString(iL)) }.orNull
+        def claimed(r: Row) = iT >= 0 && !r.isNullAt(iT)
+        val g = gens(seg.iterator.filterNot(claimed).map(r => (r.getLong(iC), r.getLong(iS), r.getLong(iEn))),
+          minSize)
+        seg.iterator.map { r =>
+          val key =
+            if (claimed(r)) {
+              if (!r.getBoolean(iOk)) none
+              else Seq(1, r.getLong(iBs), r.getString(iQ), r.getLong(iP), r.getInt(iU),
+                if (r.getString(iT) == "task-based") tk else r.getString(iT))
+            } else g(r.getLong(iC)) match {
+              case Gen(sub, start, true) => Seq(0, start, r.getString(iA), r.getLong(iG), sub, tk)
+              case _ => none
+            }
+          Row.fromSeq(r.toSeq ++ key)
         }
-        out.iterator
-      }
-      .toDF("resource", "activity", "seg_no", "case_id", "case_start", "case_enabled", "case_end", "sub")
+      })(Encoders.row(in.add("k_kind", IntegerType).add("k_start", LongType).add("k_grp", StringType)
+        .add("k_seg", LongType).add("k_sub", IntegerType).add("batch_type", StringType)))
+    // W8 canonical renumbering: the grain is one row per batch key and the
+    // order is the full key, so the global row rank IS dense_rank — range
+    // partitioned (graft.Dist), never one single-partition window
+    val keys = keyed.filter(col("k_kind").isNotNull).select(KeyCols.map(col): _*).distinct()
+    val bid = graft.Dist.withGlobalRank(keys, "batch_id", KeyCols.map(col))
+    // one row per batch — far below the event grain it joins back to
+    keyed.join(broadcast(bid), KeyCols, "left")
+      .select((cols :+ "batch_id" :+ "batch_type").map(col): _*)
   }
 
-  /** Full pipeline: segment → classify → W4 split → W7 min-size → W8 dense
-    * renumbering → event-grain left-join write-back. Returns the event grain
-    * with nullable batch_id / batch_type.
-    *
-    * The renumbering window is intentionally single-partition: it runs on the
-    * distinct-batch grain only (tiny — bounded by #batches, not #events).
-    */
+  /** Full task-only pipeline: [[segment]] then [[discoverFromSeg]]. Returns
+    * the event grain with nullable batch_id / batch_type. */
   def discover(en: DataFrame, minSize: Int = 2,
                seqGapUs: Long = PmConfig.SeqGapUs): DataFrame =
-    // seg feeds three consumers (classify, batchCases->split, the final
-    // join-back): persist it so the enabled-time kernel + segmentation
-    // windows run once, not three times (visible as repeated case_id /
-    // (resource, activity) exchanges in the un-cached plan)
-    discoverFromSeg(segment(en, seqGapUs).transform(graft.Pinned.track),
-      minSize)
+    // persisted: both the key ranking and the join-back read the segments
+    discoverFromSeg(segment(en, seqGapUs).transform(graft.Pinned.track), minSize)
 
-  /** Task-only discovery over an ALREADY-SEGMENTED event frame. `seg` must
-    * be reusable across its three consumers here (persisted or a checkpoint
-    * leaf — the caller owns that); PmQueries passes the session-memoized
-    * segmentation stage shared with [[discoverFull]], so a suite running
-    * both task and subprocess discovery segments the log ONCE. A `run_no`
-    * column (present when seg came from the shared runs-annotated stage) is
-    * dropped so the output schema matches discover(en)'s exactly. */
-  def discoverFromSeg(seg0: DataFrame, minSize: Int = 2): DataFrame = {
-    val spark = seg0.sparkSession
-    import spark.implicits._
-    val seg = if (seg0.columns.contains("run_no")) seg0.drop("run_no") else seg0
-    val types = classify(seg)
-    val withSub = split(batchCases(seg))
-    val bkeys = withSub
-      .groupBy("resource", "activity", "seg_no", "sub")
-      .agg(min($"case_start").as("b_start"), count(lit(1)).as("n_cases"))
-      .filter($"n_cases" >= minSize)
-    // W8 canonical renumbering, distributed: the grain is one row per batch
-    // key and the order includes the full key, so the global row rank IS
-    // dense_rank — computed range-partitioned (graft.Dist) instead of
-    // through one single-partition window, removing the last documented
-    // all-rows-to-one-task exception in the discovery path.
-    val bid = graft.Dist.withGlobalRank(bkeys, "batch_id",
-      Seq($"b_start", $"resource", $"activity", $"seg_no", $"sub"))
-    // Pre-combine the three small frames (case grain <= batched cases) so
-    // the event-grain seg shuffles through ONE join-back, not three.
-    val perCase = withSub.select($"resource", $"activity", $"seg_no", $"case_id", $"sub")
-      .join(bid.select($"resource", $"activity", $"seg_no", $"sub", $"batch_id"),
-        Seq("resource", "activity", "seg_no", "sub"), "left")
-      .join(types, Seq("resource", "activity", "seg_no"), "left")
-      .withColumn("batch_type", when($"batch_id".isNull, lit(null: String)).otherwise($"batch_type"))
-      .select($"resource", $"activity", $"seg_no", $"case_id", $"batch_id", $"batch_type")
-    seg.join(perCase, Seq("resource", "activity", "seg_no", "case_id"), "left")
+  /** Task-only discovery over an ALREADY-SEGMENTED event frame: passes 3–4
+    * with no claims. `seg` is read twice (key ranking and join-back), so it
+    * should be a persisted or staged leaf; PmQueries passes the
+    * session-memoized segmentation stage shared with [[discoverFull]]. A
+    * `run_no` column is dropped so the output schema matches
+    * discover(en)'s exactly. */
+  def discoverFromSeg(seg: DataFrame, minSize: Int = 2): DataFrame = {
+    val front = Seq("resource", "activity", "seg_no", "case_id")
+    assign(seg, minSize, front ++ seg.columns.filterNot((front :+ "run_no").contains))
   }
 
   /** Full pipeline INCLUDING case-based (subprocess) batches, mirroring the
-    * reference's pass order (discovery.py:255-263): subprocess candidates →
-    * W6 type-mix invalidation → W4 splits (subprocess at unit grain, task
-    * level over unclaimed events) → min-size with the subprocess
-    * NULLIFICATION path → unified renumbering (task batches first, then
-    * subprocess). Events claimed by a valid subprocess batch carry its id
-    * and its case-based type ("task-based" subprocess batches fall back to
-    * the event's task-level type, discovery.py:183-187); events of an
-    * UNDERSIZED subprocess batch lose their task-level batch too
-    * (discovery.py:128-147). */
+    * reference's pass order (discovery.py:255-263). A `run_no` column on
+    * `en` (the one [[EnabledTime.withEnabled]] emits) must follow
+    * `seqGapUs`; without one, [[SubprocessBatches.withRuns]] derives it. */
   def discoverFull(en: DataFrame, minSize: Int = 2,
-                   seqGapUs: Long = PmConfig.SeqGapUs,
-                   debugPart: String = "all"): DataFrame = {
-    // runsEv feeds both the task-side segmentation and the subprocess-unit
-    // side; without the boundary the whole enabled-time kernel upstream
-    // (K2 sweep + concurrency collect) runs twice. Callers that already
-    // hold the session-memoized runs/seg stages (PmQueries) go through
-    // discoverFullFromStages directly and skip rebuilding them here.
-    val runsEv = graft.Pinned.stage(SubprocessBatches.withRuns(en, seqGapUs))
+                   seqGapUs: Long = PmConfig.SeqGapUs): DataFrame = {
+    val runsEv = if (en.columns.contains("run_no")) en else SubprocessBatches.withRuns(en, seqGapUs)
     val seg = graft.Pinned.stage(segment(runsEv, seqGapUs))
-    val out = discoverFullFromStages(runsEv, seg, minSize, seqGapUs, debugPart)
-    // locally-built stages are released once the final frame is eager —
-    // unless a debugPart early return still references them (StageProbe
-    // diagnostics only, never a long-lived session)
-    if (debugPart == "all") Seq(runsEv, seg).foreach(graft.Pinned.releaseFrame)
+    val out = discoverFullFromStages(runsEv, seg, minSize, seqGapUs)
+    graft.Pinned.releaseFrame(seg)
     out
   }
 
-  /** [[discoverFull]] over caller-owned runs/segmentation stages. `runsEv`
-    * and `seg` must be reusable leaves (checkpoints); they are NOT released
-    * here — PmQueries owns them via its dataset-switch eviction, so one
-    * session segments the log once for task-only AND subprocess discovery. */
+  /** [[discoverFull]] over caller-owned stages: `seg` is the segmentation of
+    * `runsEv` (run_no is read from `runsEv` only when `seg` lacks it) and a
+    * reusable leaf, NOT released here — PmQueries owns it via its
+    * dataset-switch eviction, so one session segments the log once for
+    * task-only AND subprocess discovery. Returns an EAGER stage (the claims
+    * stage is released before returning); its lifecycle is the caller's. */
   def discoverFullFromStages(runsEv: DataFrame, seg: DataFrame,
                              minSize: Int = 2,
-                             seqGapUs: Long = PmConfig.SeqGapUs,
-                             debugPart: String = "all"): DataFrame = {
-    val spark = runsEv.sparkSession
-    import spark.implicits._
-    // STAGE boundaries (lazy localCheckpoint), not persists: the pipeline
-    // is ~12 sequential kernels layered 4+ plans deep, and with persist()
-    // boundaries every downstream stage re-analyzed/re-codegen'd the whole
-    // cached subtree — cutting lineage at each boundary dropped
-    // pm_sp_batches from 9.6s to 6.3s at sf0.1 (round-7 profile; the data
-    // is small, the TREES were the cost). Intermediates are collected and
-    // RELEASED once the final event-grain frame is eagerly materialized —
-    // same lifecycle as Dedup.ccGroups (staged frames are otherwise
-    // session-lifetime leaks). debugPart early returns skip the release:
-    // diagnostics only (StageProbe), never a long-lived session.
-    val tmp = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def staged(df: DataFrame): DataFrame = { val f = graft.Pinned.stage(df); tmp += f; f }
-    val types = classify(seg)
-
-    // --- subprocess side ---
-    // cand and evSp are deliberately LAZY (round-8 profile): each stage()
-    // here is an eager materialization under AQE, and the chain
-    // cand -> mixed -> candOk -> spSub -> claims is inherently sequential,
-    // so two extra boundaries bought nothing but two more job barriers +
-    // driver replans (58 sequential jobs, ~6.8s of inter-job driver gap in
-    // the cold run). Lazy, they fold into the spSub/claims materializations;
-    // the one recompute (evSp inside claims, a join over the runsEv/seg
-    // LEAVES) costs less than the boundaries did: 7.3s -> 6.4s min-of-5
-    // standalone at sf0.1.
-    val cand = SubprocessBatches.candidates(SubprocessBatches.units(runsEv), seqGapUs)
-    // event grain of candidate units, with the event's task-level type
-    val evSp = seg
-      .join(cand.select($"case_id", $"run_no", $"subseq", $"sp_seg", $"sp_type",
-        $"unit_start", $"unit_end", $"unit_enabled"), Seq("case_id", "run_no"))
-    // W6: >1 distinct task-level type (null counts, as pandas unique does)
-    val mixed = evSp
-      .join(types, Seq("resource", "activity", "seg_no"), "left")
-      .groupBy($"resource", $"subseq", $"sp_seg")
-      .agg(countDistinct(coalesce($"batch_type", lit("\u0000"))).as("ntypes"))
-      .filter($"ntypes" > 1)
-      .select($"resource", $"subseq", $"sp_seg")
-    val candOk = cand.join(mixed, Seq("resource", "subseq", "sp_seg"), "left_anti")
-    // W4 at unit/case grain (reuse the task split kernel via renaming)
-    val spCases = candOk
-      .groupBy($"resource", $"subseq", $"sp_seg", $"case_id")
-      .agg(
-        min($"unit_start").as("case_start"),
-        min(struct($"unit_start".as("s"), $"unit_enabled".as("e"))).as("m"),
-        max($"unit_end").as("case_end"))
-      .select($"resource", $"subseq".as("activity"), $"sp_seg".as("seg_no"),
-        $"case_id", $"case_start", $"m.e".as("case_enabled"), $"case_end")
-    // consumed by spKeys (→ ids) and claims — persist so the split kernel
-    // chain runs once
-    val spSub = split(spCases)
-      .withColumnRenamed("activity", "subseq").withColumnRenamed("seg_no", "sp_seg")
-      .transform(staged)
-    val spKeys = spSub.groupBy($"resource", $"subseq", $"sp_seg", $"sub")
-      .agg(min($"case_start").as("b_start"), count(lit(1)).as("n_cases"))
-    val spValidKeys = spKeys.filter($"n_cases" >= minSize)
-
-    // post-W6 membership at event grain: (event, sp key incl. sub).
-    // Persisted: feeds unclaimed (twice through the task side below) and
-    // spEvents — without it the subprocess chain above re-runs per consumer.
-    val claims = evSp
-      .join(spSub.select($"resource", $"subseq", $"sp_seg", $"case_id", $"sub"),
-        Seq("resource", "subseq", "sp_seg", "case_id"))
-      .transform(staged)
-
-    // --- task side over UNCLAIMED events only (reference W4/min-size
-    // filter on isna(subprocess_type)) ---
-    val unclaimed = seg.join(claims.select($"event_id"), Seq("event_id"), "left_anti")
-    // batch-case grain is tiny (#cases x #segments); persisting it means the
-    // maxTaskId action + the two final joins don't re-run the split kernel.
-    val withSub = split(batchCases(unclaimed)).transform(staged)
-    val bkeys = withSub
-      .groupBy("resource", "activity", "seg_no", "sub")
-      .agg(min($"case_start").as("b_start"), count(lit(1)).as("n_cases"))
-      .filter($"n_cases" >= minSize)
-    // distributed W8 renumbering (unique key grain: rank == dense_rank),
-    // same as discover's — no single-partition window
-    val bid = graft.Dist.withGlobalRank(bkeys, "batch_id",
-      Seq($"b_start", $"resource", $"activity", $"seg_no", $"sub"))
-    // subprocess ids continue after the task ids (unify order,
-    // discovery.py:161-181).
-    // The task-side max id is a 1-row aggregate folded INTO the plan as a
-    // broadcast cross join — a driver-side .first() here evaluated the whole
-    // task chain at plan-build time (round-3 verdict What's-wrong #3).
-    val maxTaskId = bid.agg(coalesce(max($"batch_id"), lit(0L)).as("max_task_id"))
-    val spBid = graft.Dist.withGlobalRank(spValidKeys, "sp_rank",
-        Seq($"b_start", $"resource", $"subseq", $"sp_seg", $"sub"))
-      .crossJoin(broadcast(maxTaskId))
-      .withColumn("batch_id", $"sp_rank" + $"max_task_id")
-      .drop("sp_rank", "max_task_id")
-
-    // tk_type = the event's task-level segment type (types is seg grain,
-    // claims carry the seg key): the "task-based" subprocess fallback reads
-    // it here, since claimed events are excluded from the task-side perCase
-    val spEvents = claims
-      .join(spBid.select($"resource", $"subseq", $"sp_seg", $"sub", $"batch_id".as("sp_bid")),
-        Seq("resource", "subseq", "sp_seg", "sub"), "left")
-      .join(types.select($"resource", $"activity", $"seg_no", $"batch_type".as("tk_type")),
-        Seq("resource", "activity", "seg_no"), "left")
-      .select($"event_id", $"sp_bid", $"sp_type", $"tk_type")
-
-    debugPart match {
-      case "runsEv" => return runsEv
-      case "seg" => return seg
-      case "cand" => return cand
-      case "evSp" => return evSp
-      case "spSub" => return spSub
-      case "claims" => return claims
-      case "unclaimed" => return unclaimed
-      case "withSub" => return withSub
-      case "spEvents" => return spEvents
-      case _ =>
-    }
-
-    // Pre-combine the task-side small frames at case grain (same rewrite as
-    // discover): the event-grain seg then shuffles through two join-backs
-    // (per-case task info + per-event subprocess claims), not four.
-    val perCase = withSub.select($"resource", $"activity", $"seg_no", $"case_id", $"sub")
-      .join(bid.select($"resource", $"activity", $"seg_no", $"sub", $"batch_id"),
-        Seq("resource", "activity", "seg_no", "sub"), "left")
-      .join(types, Seq("resource", "activity", "seg_no"), "left")
-      .select($"resource", $"activity", $"seg_no", $"case_id", $"batch_id", $"batch_type")
-    val out = graft.Pinned.stageEager(seg
-      .join(perCase, Seq("resource", "activity", "seg_no", "case_id"), "left")
-      .join(spEvents, Seq("event_id"), "left")
-      // a claimed event in an UNDERSIZED subprocess batch (sp_bid null)
-      // loses its task batch too; "task-based" subprocess type falls back
-      // to the event's task-level type
-      .withColumn("batch_id",
-        when($"sp_type".isNotNull, $"sp_bid").otherwise($"batch_id"))
-      .withColumn("batch_type",
-        when($"batch_id".isNull, lit(null: String))
-          .when($"sp_bid".isNotNull && $"sp_type" =!= "task-based", $"sp_type")
-          .when($"sp_bid".isNotNull, $"tk_type")
-          .otherwise($"batch_type"))
-      .drop("sp_bid", "sp_type", "tk_type"))
-    tmp.foreach(graft.Pinned.releaseFrame)
+                             seqGapUs: Long = PmConfig.SeqGapUs): DataFrame = {
+    val ev = if (seg.columns.contains("run_no")) seg
+      else seg.join(runsEv.select("event_id", "run_no"), "event_id")
+    val claims = graft.Pinned.stage(SubprocessBatches.claims(ev, minSize, seqGapUs))
+    val front = Seq("event_id", "resource", "activity", "seg_no", "case_id")
+    // claims are unit grain and only the units of candidate chains
+    val out = graft.Pinned.stageEager(assign(
+      ev.join(broadcast(claims), Seq("case_id", "run_no"), "left"), minSize,
+      front ++ seg.columns.filterNot(front.contains)))
+    graft.Pinned.releaseFrame(claims)
     out
   }
 }
 
 /** Case-based (subprocess) batch discovery — BAMA's subsequence units
   * (batch_detection.R:57-77, discovery.py:100-207 subprocess passes,
-  * config.py:45-51 case-based types).
+  * config.py:45-51 case-based types): passes 1 and 2 of
+  * [[BatchDiscovery.discoverFullFromStages]].
   *
   * Units are MAXIMAL same-resource runs of >= 2 consecutive events within a
-  * case (documented reconstruction of BAMA's subsequence enumeration at
-  * engine scale: all-sub-window enumeration is combinatorial, and a
-  * non-maximal run implies the resource interleaved other work). Units
-  * sharing (resource, subsequence) are segmented with the SAME typed-link
-  * chain rule as task batches, at unit grain:
+  * case spanning >= 2 DISTINCT activities (documented reconstruction of
+  * BAMA's subsequence enumeration at engine scale: all-sub-window
+  * enumeration is combinatorial, a non-maximal run implies the resource
+  * interleaved other work, and a repeated single activity is task-level
+  * batching). Units sharing (resource, subsequence) are chained with the
+  * SAME typed-link rule as task batches ([[BatchDiscovery.linked]]), at unit
+  * grain, ordered by (unit_start, unit_end, case_id, run_no):
   *   P  -> "task-based" (each position simultaneous across cases — the
   *          batching is really at task level; events keep task-level types,
   *          discovery.py:183-187 np.where),
   *   S  -> Sequential case-based (resource completes one case's subsequence
   *          before starting the next),
   *   C  -> Concurrent case-based (case subsequences interleave).
-  * Cleanup mirrors the reference order (discovery.py:255-263): W6 type-mix
-  * invalidation -> W4 wrong-enabled split at unit grain -> min-size with
-  * the NULLIFICATION path (an undersized subprocess batch clears its
-  * events' task-level batch info too — discovery.py:128-147).
+  * A chain is a candidate when it is typed and spans >= 2 cases. Cleanup
+  * mirrors the reference order (discovery.py:255-263): W6 type-mix
+  * invalidation (> 1 distinct task-level type among the chain's events,
+  * null counting as a type as pandas unique does) -> W4 wrong-enabled split
+  * at unit/case grain -> min size, whose undersized batches still claim
+  * their events (the NULLIFICATION path, discovery.py:128-147).
   */
 object SubprocessBatches {
+  private val Labels = Map("P" -> "task-based", "S" -> "Sequential case-based",
+    "C" -> "Concurrent case-based")
+
   /** Event grain + run_no of the maximal same-resource TIME-CONTIGUOUS run
     * within the case: consecutive events must keep gap <= 0
     * (within_case_seq_tolerated_gap = 0, batch_detection.R:75 — the
-    * resource performs the subsequence as one block). */
+    * resource performs the subsequence as one block). The K2 sweep emits
+    * the same column ([[EnabledTime.withEnabled]]); this window form serves
+    * logs that arrive with their own enabled times. */
   def withRuns(en: DataFrame, seqGapUs: Long = PmConfig.SeqGapUs): DataFrame = {
     import en.sparkSession.implicits._
     val w = Window.partitionBy("case_id").orderBy("start_us", "end_us", "event_id")
@@ -726,46 +628,64 @@ object SubprocessBatches {
       .drop("prev_res", "prev_end", "newrun")
   }
 
-  /** Subsequence units: ordered activity sequence, interval, and the unit's
-    * C2 enabled time. A unit needs >= 2 events spanning >= 2 DISTINCT
-    * activities — a repeated single activity is task-level batching, not a
-    * subprocess. */
-  def units(withRuns: DataFrame): DataFrame = {
-    import withRuns.sparkSession.implicits._
-    withRuns.groupBy($"case_id", $"run_no")
-      .agg(
-        first($"resource").as("resource"),
-        count(lit(1)).as("n_events"),
-        countDistinct($"activity").as("n_acts"),
-        concat_ws("\u0001", transform(
-          sort_array(collect_list(struct($"start_us", $"end_us", $"event_id", $"activity"))),
-          x => x.getField("activity"))).as("subseq"),
-        min($"start_us").as("unit_start"),
-        max($"end_us").as("unit_end"),
-        min(struct($"start_us".as("s"), $"enabled_us".as("e"))).as("m"))
-      .withColumn("unit_enabled", $"m.e").drop("m")
-      .filter($"n_events" >= 2 && $"n_acts" >= 2)
+  /** A task-level type as one bit, so a unit's type set is an OR. */
+  private def typeBit(lnk: String): Int = lnk match {
+    case null => 1
+    case "P" => 2
+    case "S" => 4
+    case _ => 8
   }
 
-  /** Unit grain with sp_seg + sp_type for candidate subprocess batches
-    * (typed-link chains of >= 2 distinct cases within (resource, subseq)). */
-  def candidates(u: DataFrame, seqGapUs: Long = PmConfig.SeqGapUs): DataFrame = {
-    // per-segment type + case count as WINDOW aggregates over the segmented
-    // units (one pass) — the groupBy+self-join form evaluated the whole
-    // units aggregation twice
-    val wSeg = Window.partitionBy("resource", "subseq", "sp_seg")
-    BatchDiscovery.typedLinkSegments(u, Seq("resource", "subseq"),
-      Seq("unit_start", "unit_end", "case_id", "run_no"), "unit_start", "unit_end", seqGapUs)
-      .withColumnRenamed("seg_no", "sp_seg")
-      .withColumn("l2", min(when(!col("bnd"), col("lnk"))).over(wSeg))
-      .withColumn("sp_ncases", size(collect_set(col("case_id")).over(wSeg)))
-      .withColumn("sp_type",
-        when(col("l2") === "P", "task-based")
-          .when(col("l2") === "S", "Sequential case-based")
-          .when(col("l2") === "C", "Concurrent case-based"))
-      .filter(col("sp_ncases") >= 2 && col("sp_type").isNotNull)
-      .select("case_id", "run_no", "resource", "subseq", "sp_seg", "sp_type",
-        "unit_start", "unit_end", "unit_enabled")
+  /** Pass 1, per (case_id, run_no) sorted by (start_us, end_us, event_id):
+    * the unit, if the run is one. */
+  private def unit(run: ArrayBuffer[RunEv]): Option[SpUnit] = {
+    val acts = run.map(_.activity)
+    if (run.size < 2 || acts.distinct.size < 2) None
+    else {
+      val h = run.head
+      Some(SpUnit(h.case_id, h.run_no, h.resource, acts.mkString("\u0001"), h.start_us,
+        run.map(_.end_us).max, run.filter(_.start_us == h.start_us).map(_.enabled_us).min,
+        run.foldLeft(0)((m, e) => m | typeBit(e.tk))))
+    }
+  }
+
+  /** Pass 2, per closed chain of units: candidacy, W6, W4 + min size. */
+  private def chainClaims(chain: ArrayBuffer[(SpUnit, String, Boolean, Long)],
+                          minSize: Int): Iterator[SpClaim] = {
+    val units = chain.map(_._1)
+    val typ = if (chain.size > 1) Labels(chain(1)._2) else null
+    if (typ == null || units.map(_.case_id).distinct.size < 2 ||
+        Integer.bitCount(units.foldLeft(0)(_ | _.tk_mask)) > 1) Iterator.empty
+    else {
+      val g = BatchDiscovery.gens(units.iterator.map(u => (u.case_id, u.unit_start, u.unit_enabled)), minSize)
+      units.iterator.map { u =>
+        val c = g(u.case_id)
+        SpClaim(u.case_id, u.run_no, u.subseq, chain.head._4, c.sub, typ, c.start, c.ok)
+      }
+    }
+  }
+
+  /** Passes 1 and 2 over segmented events with run_no: one claim row per
+    * unit of every W6-clean candidate chain, keyed (case_id, run_no). */
+  private[pm] def claims(seg: DataFrame, minSize: Int, seqGapUs: Long): DataFrame = {
+    val spark = seg.sparkSession
+    import spark.implicits._
+    // the event's task-level type: its segment's shared link
+    val tk = min(when(!$"bnd", $"lnk")).over(Window.partitionBy("resource", "activity", "seg_no"))
+    seg.select($"case_id", $"run_no", $"resource", $"activity", $"start_us", $"end_us",
+        $"event_id", $"enabled_us", tk.as("tk")).as[RunEv]
+      .repartition($"case_id", $"run_no")
+      .sortWithinPartitions("case_id", "run_no", "start_us", "end_us", "event_id")
+      .mapPartitions(it => BatchDiscovery.groups(it)(e => (e.case_id, e.run_no)).flatMap(unit))
+      .repartition($"resource", $"subseq")
+      .sortWithinPartitions("resource", "subseq", "unit_start", "unit_end", "case_id", "run_no")
+      .mapPartitions { it =>
+        val chained = BatchDiscovery.linked(it, seqGapUs)(u => (u.resource, u.subseq),
+          _.unit_start, _.unit_end)
+        BatchDiscovery.groups(chained)(c => (c._1.resource, c._1.subseq, c._4))
+          .flatMap(chainClaims(_, minSize))
+      }
+      .toDF()
   }
 }
 

@@ -16,6 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *      (all internal orderings are total; at cluster scale partition order
   *      is arbitrary, so this is the distributed-correctness property).
   *
+  * Full discovery (task + case-based) adds: every task id is below every
+  * case-based id, and the samples must actually produce case-based batches.
+  *
   * Times sit on a small grid so the generator actually produces the hard
   * collisions (simultaneous, abutting, overlapping, equal-end). Seeded:
   * a failure reproduces by its printed sample index.
@@ -84,6 +87,81 @@ class DiscoveryPropertySpec extends AnyFunSuite {
         clue("discovery output depends on input row order"))
       Pinned.release(spark)
     }
+  }
+
+  /** Random log of same-resource runs: every case runs an A->B(->C) block
+    * on one resource, starting at a slot where blocks of other cases
+    * coincide, overlap or abut, so subsequence units chain into case-based
+    * batches; half the cases also run one later D event, which batches at
+    * task level. A quarter of the events are enabled only at their start,
+    * which makes the W4 split fire. */
+  private def randomRunLog(rnd: scala.util.Random): List[(Long, Long, String, String, Long, Long, Long)] = {
+    var id = 0L
+    def ev(c: Long, act: String, res: String, start: Long, dur: Long) = {
+      id += 1
+      (id, c, act, res, start, start + dur, if (rnd.nextInt(4) == 0) start else 0L)
+    }
+    (1L to 3L + rnd.nextInt(5)).toList.flatMap { c =>
+      val res = s"r${rnd.nextInt(2)}"
+      val t = Seq(0L, 0L, 25L, 150L, 300L)(rnd.nextInt(5))
+      val dB = if (rnd.nextInt(4) == 0) 75L else 100L
+      List(ev(c, "A", res, t, 50L), ev(c, "B", res, t + 50L, dB)) ++
+        (if (rnd.nextInt(3) == 0) List(ev(c, "C", res, t + 50L + dB, 50L)) else Nil) ++
+        (if (rnd.nextBoolean()) List(ev(c, "D", res, 600L + rnd.nextInt(3) * 25L, 50L + rnd.nextInt(2) * 50L))
+         else Nil)
+    }
+  }
+
+  test("full discovery invariants hold on random run logs; task ids precede case-based ids") {
+    val taskTypes = Set("Parallel", "Sequential task-based", "Concurrent task-based")
+    val caseTypes = Set("Sequential case-based", "Concurrent case-based")
+    val rnd = new scala.util.Random(20261017L)
+    var caseBased = 0
+    var both = 0
+    for (sample <- 1 to 12) {
+      val rows = randomRunLog(rnd)
+      def clue(msg: String) = s"[sample $sample] $msg (log: $rows)"
+      def run(rs: List[(Long, Long, String, String, Long, Long, Long)]) = {
+        val d = pm.BatchDiscovery.discoverFull(toDf(rs))
+        val out = d.select("event_id", "case_id", "activity", "resource", "batch_id", "batch_type")
+          .collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3),
+            Option(r.get(4)).map(_.asInstanceOf[Long]), Option(r.getString(5))))
+          .sortBy(_._1)
+        Pinned.releaseFrame(d)
+        out
+      }
+      val out = run(rows)
+
+      // 1. preservation
+      assert(out.map(_._1).toSeq == rows.map(_._1).sorted, clue("event ids not preserved"))
+
+      // 2. known labels, >= 2 cases and one resource per batch; a
+      // case-based batch spans >= 2 activities (its units do), a task batch one
+      val byBatch = out.filter(_._5.isDefined).groupBy(_._5.get)
+      val (spIds, taskIds) = byBatch.keySet.partition(b => byBatch(b).map(_._3).distinct.length > 1)
+      byBatch.foreach { case (bid, evs) =>
+        assert(evs.forall(e => e._6.exists(taskTypes ++ caseTypes)), clue(s"batch $bid has unknown type"))
+        assert(evs.map(_._2).distinct.length >= 2, clue(s"batch $bid has <2 distinct cases"))
+        assert(evs.map(_._4).distinct.length == 1, clue(s"batch $bid spans resources"))
+        if (!spIds(bid))
+          assert(evs.forall(_._6.exists(taskTypes)), clue(s"task batch $bid has a case-based type"))
+      }
+      caseBased += spIds.size
+      if (spIds.nonEmpty && taskIds.nonEmpty) both += 1
+
+      // 3. dense renumbering, every task id below every case-based id
+      val ids = byBatch.keySet
+      assert(ids == (1L to ids.size).toSet, clue(s"batch ids not dense 1..N: $ids"))
+      assert(taskIds.isEmpty || spIds.isEmpty || taskIds.max < spIds.min,
+        clue(s"task ids $taskIds do not precede case-based ids $spIds"))
+
+      // 4. input-order invariance
+      assert(run(rnd.shuffle(rows)).toSeq == out.toSeq, clue("discovery output depends on input row order"))
+      Pinned.release(spark)
+    }
+    assert(caseBased > 0, "no sample produced a case-based batch: the subprocess path went untested")
+    assert(both > 0, "no sample mixed task and case-based batches: the id order went untested")
   }
 
   test("K3 waiting-time decomposition invariants hold on random discovered logs") {

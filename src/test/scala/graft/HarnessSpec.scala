@@ -25,9 +25,9 @@ class HarnessSpec extends AnyFunSuite {
     val en = EnabledTime.withEnabled(graft.pm.EventLogOps.fromEvents(spark, sfDir))
     val out = BatchDiscovery.discoverFull(en)
     out.count()
-    // round 7: discoverFull's pipeline boundaries are stage cuts released
-    // internally; the tracked persists that remain are Dist.withGlobalRank's
-    // correctness caches, dropped by the harness release. The returned
+    // discoverFull releases its segmentation and claims stages itself; the
+    // tracked persists that remain are Dist.withGlobalRank's correctness
+    // caches, dropped by the harness release. The returned
     // frame is an EAGER stage whose lifecycle belongs to the caller
     // (pm_sp_batches memoizes it; here we release it directly).
     assert(Pinned.trackedCount(spark) > 0, "discoverFull should track the Dist rank persists")
@@ -39,6 +39,61 @@ class HarnessSpec extends AnyFunSuite {
     def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
     assert(leaked.isEmpty, s"persistent RDDs leaked after release: $leaked")
+  }
+
+  /** Jobs `body` starts, counted by a listener. A marker job in its own
+    * group follows the body: listener events arrive in order, so once the
+    * marker's start is seen every job of the body has been counted. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"counted-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marked = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(g) if g == s"$group-marker" => marked.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobGroup(s"$group-marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marked.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener never saw the marker job")
+      jobs.get()
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("batch discovery job counts stay at or below the key-sorted kernel's") {
+    // Job counts do not depend on machine load, so they lock the pass
+    // structure: each extra shuffle, staged kernel or join-back shows up
+    // here. Counted with AQE on (one job per shuffle stage, as the graded
+    // sessions run) on the staged sf0.001 log; the ceilings are the counts
+    // of the key-sorted kernel (the staged window/join kernels it replaced
+    // ran 34 and 19).
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    val (full, task) = try {
+      val en = Pinned.stage(EnabledTime.withEnabled(graft.pm.EventLogOps.fromEvents(spark, sfDir)))
+      val seg = Pinned.stage(BatchDiscovery.segment(en))
+      seg.count()
+      val full = jobsOf(Pinned.releaseFrame(BatchDiscovery.discoverFullFromStages(en, seg)))
+      val task = jobsOf(BatchDiscovery.discoverFromSeg(seg).write.format("noop").mode("overwrite").save())
+      Seq(seg, en).foreach(Pinned.releaseFrame)
+      (full, task)
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      Pinned.release(spark)
+    }
+    assert(full <= 17, s"discoverFullFromStages ran $full jobs")
+    assert(task <= 12, s"one action over discoverFromSeg ran $task jobs")
   }
 
   test("building query DataFrames runs zero Spark jobs (no driver actions mid-plan)") {

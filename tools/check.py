@@ -48,10 +48,27 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(by=list(df.columns)).reset_index(drop=True)
 
 
+def spark_env():
+    """The Verify JVM's cores and heap: SPARK_GRAFT_CPUS and SPARK_DRIVER_MEM
+    from the environment, else sized to the host like the ScalaTest run in
+    ROADMAP.md (every core this process may run on, and half of MemTotal
+    clamped to 2-8g)."""
+    env = dict(os.environ)
+    env.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+    if "SPARK_DRIVER_MEM" not in env:
+        try:
+            with open("/proc/meminfo") as f:
+                kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+            env["SPARK_DRIVER_MEM"] = f"{min(8, max(2, kb // 2097152))}g"
+        except (OSError, StopIteration):
+            env["SPARK_DRIVER_MEM"] = "2g"
+    return env
+
+
 def main():
     if os.path.exists(OUT):
         shutil.rmtree(OUT)
-    env = {**os.environ, "SPARK_GRAFT_CPUS": "8"}
+    env = spark_env()
     if ONLY:
         env["SPARK_GRAFT_ONLY"] = ",".join(sorted(ONLY))
     r = subprocess.run([os.path.join(REPO, "tools", "run.sh"), "graft.Verify", SF, OUT],
