@@ -38,7 +38,7 @@ import java.nio.file.{Files, Paths}
   */
 object Bench {
   /** Process CPU time in nanoseconds (-1 when the platform bean is absent). */
-  private def cpuNs: Long =
+  private[graft] def cpuNs: Long =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
       case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime
       case _ => -1L
@@ -81,7 +81,13 @@ object Bench {
   private final case class Timing(wall: Double, cpu: Double, load: Double,
                                   gc: Double, jit: Double, ok: Boolean)
 
-  private def newSession(sfDir: String, cpus: String): SparkSession = {
+  /** Local cores: `SPARK_GRAFT_CPUS`, else this host's processors (at most 32). */
+  private[graft] def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    math.min(Runtime.getRuntime.availableProcessors(), 32).toString)
+
+  /** A fresh, warmed local session: the one session setup of Bench and the
+    * diagnostic mains (Probe, QueryProbe, StageProbe, LshRecallProbe). */
+  private[graft] def newSession(sfDir: String, cpus: String = defaultCpus): SparkSession = {
     // after spark.stop() the builder would hand back the stopped singleton;
     // clearing both references forces a genuinely fresh context
     SparkSession.clearActiveSession()
@@ -136,8 +142,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors(), 32).toString)
+    val cpus = defaultCpus
     val passes = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt)
     var calibStart = -1.0
     var calibEnd = -1.0

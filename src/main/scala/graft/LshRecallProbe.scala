@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Recall/cost measurement for the LSH near-dup dial (SURVEY §2 J2) —
   * diagnostics, not part of the graded surface.
   *
@@ -20,11 +18,7 @@ import org.apache.spark.sql.SparkSession
 object LshRecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = Harness.tmpfsLocalDir(SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.newSession(sfDir)
     import spark.implicits._
     import org.apache.spark.sql.functions._
 

@@ -15,9 +15,9 @@ import scala.jdk.CollectionConverters._
   * `track` replaces the bare `.persist()` at those sites; `release` drops
   * every tracked cache for a session. Unpersisting is always safe — a block
   * evicted mid-job is recomputed from lineage — so harness code can call
-  * `release` after every query action. Memoized STAGE caches (PmQueries
-  * discCache) are deliberately not tracked: their lifecycle is the
-  * dataset-switch eviction hook.
+  * `release` after every query action. Memoized STAGE caches
+  * ([[SessionMemo]]) are deliberately not tracked: their lifecycle is the
+  * memo's dataset-switch eviction.
   */
 object Pinned {
   private val reg =

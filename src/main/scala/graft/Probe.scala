@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Per-query wall-time probe: times selected SparkEntry queries (all, if
@@ -14,22 +13,10 @@ import java.nio.file.{Files, Paths}
   * a judge separate code cost from machine contention in the graded bench.
   */
 object Probe {
-  private def cpuNs: Long =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-      case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime
-      case _ => -1L
-    }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = Harness.tmpfsLocalDir(SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxPlanStringLength", "65536")
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.newSession(sfDir)
     def sysLoad: Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
     val results = names.flatMap { n =>
@@ -38,10 +25,10 @@ object Probe {
         // observer attribute a grinding JVM to the query it's in
         System.err.println(s"[probe] start $n")
         val t0 = System.nanoTime()
-        val c0 = cpuNs
+        val c0 = Bench.cpuNs
         val c = fn(spark, sfDir).count()
         val wall = (System.nanoTime() - t0) / 1e9
-        val cpu = if (c0 < 0) -1.0 else (cpuNs - c0) / 1e9
+        val cpu = if (c0 < 0) -1.0 else (Bench.cpuNs - c0) / 1e9
         println(f"== $n: $wall%.1f s rows=$c")
         Pinned.release(spark)
         (n, wall, cpu, sysLoad)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-JOB wall attribution for any declared query — diagnostics only,
   * not part of the graded surface. Runs each named query cold in its own
   * session (same confs as Bench) with a job listener, printing every
@@ -15,25 +13,9 @@ object QueryProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     names.foreach { n =>
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      val spark = Harness.tmpfsLocalDir(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.maxPlanStringLength", "65536")
-        .config("spark.sql.codegen.cache.maxEntries", "1000")
-        .config("spark.ui.enabled", "false")).getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      // same warmup as Bench so the first job isn't charged startup cost
-      try {
-        spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-        val r = spark.range(0, 1000000L, 1, 8).toDF("id")
-        r.join(r.withColumnRenamed("id", "id2"),
-            org.apache.spark.sql.functions.col("id") === org.apache.spark.sql.functions.col("id2"))
-          .groupBy(org.apache.spark.sql.functions.expr("id % 7")).count().count()
-      } catch { case _: Throwable => }
+      // Bench's warmed session, so the first job isn't charged startup cost
+      val spark = Bench.newSession(sfDir)
 
       val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long, String, Int)]()
       val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int)]()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Cold stage-by-stage timing of the shared pm pipeline: isolates where a
   * first-touch pm/ar query's wall time goes (enabled-time kernel, task
   * discovery, subprocess discovery, feature engineering). Diagnostics only —
@@ -10,11 +8,7 @@ import org.apache.spark.sql.SparkSession
 object StageProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = Harness.tmpfsLocalDir(SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.newSession(sfDir)
 
     def time[A](name: String)(f: => A): A = {
       val t0 = System.nanoTime()
@@ -79,8 +73,7 @@ object StageProbe {
     val full = time("discoverFull")(pm.BatchDiscovery.discoverFull(en))
     println(s"   rows=${full.count()}")
     Pinned.releaseFrame(full)
-    for (part <- Seq("instants", "subs", "workload", "all"))
-      time(s"features/$part")(rules.Features.featuresTable(disc, part).count())
+    time("features")(rules.Features.featuresTable(disc).count())
     println(s"rows: seg=$seg")
     spark.stop()
   }

@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Det, Tables}
+import graft.{Det, SessionMemo, Tables}
 
 /** LLM-pipeline extension queries (SURVEY §2 J + streaming-shaped I):
   * dedup, near-dup, simhash, similarity search, text analysis, multimodal
@@ -12,15 +12,10 @@ object ExtQueries {
 
   /** Near-dup cluster labels are consumed by TWO graded queries
     * (j2_neardup_groups, j7_trainset) and the computation ends in an
-    * eagerly-staged frame ([[Dedup.nearDupGroups]]): memoize per
-    * (session, dataset) with the standard dataset-switch eviction
-    * (PmQueries.evictOthers releases the staged frame's blocks), so a
-    * long-lived session computes the clustering once and never
+    * eagerly-staged frame ([[Dedup.nearDupGroups]]): one session memo, so
+    * a long-lived session computes the clustering once and never
     * accumulates stale checkpoint blocks. */
-  private val groupsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def neardupGroups(s: SparkSession, d: String): DataFrame = {
-    graft.pm.PmQueries.evictOthers(groupsCache, s, d)
+  private def neardupGroups(s: SparkSession, d: String): DataFrame =
     // GRADED path is the convergence-checked CC (round 10): the fixed
     // 5-round unroll is exact only up to component diameter 31, and 100 TB
     // boilerplate duplicate chains exceed that; the converged kernel's
@@ -29,16 +24,10 @@ object ExtQueries {
     // precondition. Hash-identical to the unroll on the harness corpora
     // (diameters <= 2) — the recursive-CTE oracle checks EXACT components
     // either way.
-    groupsCache.computeIfAbsent((s, d), _ =>
+    SessionMemo(s, d, "j2_neardup_groups")(
       Dedup.nearDupGroupsConverged(Tables.documents(s, d),
         pairs0 = Some(neardupPairs(s, d))))
-  }
 
-  /** The verified LSH pair graph feeds THREE graded queries in a session
-    * (j2_neardup_pairs itself, the clustering, and through it j7_trainset):
-    * memoize the eagerly-staged pairs frame with the same lifecycle, so
-    * the shingle/minhash/bucket pipeline runs once per (session, dataset)
-    * instead of once per consumer. */
   /** Fan an unsplittable single-row-group harness scan out to the
     * session's shuffle parallelism by its primary key (guide §2.5 input
     * skew) — used ONLY inside the session memo builders, whose per-row
@@ -53,68 +42,47 @@ object ExtQueries {
   private def fanDocs(s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
     fanned(Tables.documents(s, d), "doc_id")
 
-  private val pairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def neardupPairs(s: SparkSession, d: String): DataFrame = {
-    graft.pm.PmQueries.evictOthers(pairsCache, s, d)
-    pairsCache.computeIfAbsent((s, d), _ =>
+  /** The verified LSH pair graph feeds THREE graded queries in a session
+    * (j2_neardup_pairs itself, the clustering, and through it j7_trainset):
+    * memoize the eagerly-staged pairs frame, so the shingle/minhash/bucket
+    * pipeline runs once per (session, dataset) instead of once per
+    * consumer. */
+  private def neardupPairs(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "j2_neardup_pairs")(
       graft.Pinned.stageEager(Dedup.nearDupPairs(Tables.documents(s, d),
         sa0 = Some(shingleFpFrame(s, d)),
         bandSig0 = Some(bandSigFrame(s, d)))))
-  }
 
   /** SemDeDup decision surface: the converged-CC kernel inside runs eager
-    * supersteps at construction time, so memoize per (session, dataset)
-    * with the standard dataset-switch eviction (same lifecycle as the
-    * lexical near-dup clustering above). */
-  private val semdedupCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def semdedup(s: SparkSession, d: String): DataFrame = {
-    graft.pm.PmQueries.evictOthers(semdedupCache, s, d)
-    semdedupCache.computeIfAbsent((s, d), _ =>
+    * supersteps at construction time, so memoize it (same lifecycle as
+    * the lexical near-dup clustering above). */
+  private def semdedup(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "j3_semdedup")(
       graft.Pinned.stageEager(Similarity.semDedup(Tables.embeddings(s, d))))
-  }
 
   /** Trained BPE merge rules + the encoded vocabulary, each an
     * eagerly-staged frame shared by THREE graded queries (j4_bpe_train,
-    * j4_bpe_apply, j4_bpe_encode_docs) — memoized per (session, dataset)
-    * with the standard dataset-switch eviction so a session trains once. */
-  private val bpeRulesCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def bpeRules(s: SparkSession, d: String): DataFrame = {
-    graft.pm.PmQueries.evictOthers(bpeRulesCache, s, d)
-    bpeRulesCache.computeIfAbsent((s, d), _ => TextOps.bpeTrain(Tables.documents(s, d)))
-  }
-  private val bpeAppliedCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def bpeApplied(s: SparkSession, d: String): DataFrame = {
-    graft.pm.PmQueries.evictOthers(bpeAppliedCache, s, d)
-    bpeAppliedCache.computeIfAbsent((s, d), _ =>
+    * j4_bpe_apply, j4_bpe_encode_docs) — memoized so a session trains
+    * once. */
+  private def bpeRules(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "j4_bpe_rules")(TextOps.bpeTrain(Tables.documents(s, d)))
+  private def bpeApplied(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "j4_bpe_applied")(
       TextOps.bpeApply(Tables.documents(s, d), bpeRules(s, d)))
-  }
   // document-grain encodings feed j4_bpe_encode_docs AND j7_pack_bpe
-  private val bpeEncodedCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def bpeEncoded(s: SparkSession, d: String): DataFrame = {
-    graft.pm.PmQueries.evictOthers(bpeEncodedCache, s, d)
-    bpeEncodedCache.computeIfAbsent((s, d), _ => graft.Pinned.stageEager(
+  private def bpeEncoded(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "j4_bpe_encoded")(graft.Pinned.stageEager(
       TextOps.bpeEncodeDocs(Tables.documents(s, d), bpeApplied(s, d))))
-  }
 
   /** The scrub family's duplicated-run START index (doc_id, toks, ss)
     * feeds THREE graded transforms (j2_scrub_spans, j2_scrub_long_runs,
-    * j2_dup_run_len): memoize the eagerly-staged frame per (session,
-    * dataset) so the gram-grain shuffle behind it runs once — the
-    * production shape (one pass builds the index, every transform
-    * consumes it), and the three decision surfaces share their inputs
-    * bit-for-bit. */
-  private val dupStartsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def dupStartsFrame(s: SparkSession, d: String): DataFrame = {
-    graft.pm.PmQueries.evictOthers(dupStartsCache, s, d)
-    dupStartsCache.computeIfAbsent((s, d), _ =>
+    * j2_dup_run_len): memoize the eagerly-staged frame so the gram-grain
+    * shuffle behind it runs once — the production shape (one pass builds
+    * the index, every transform consumes it), and the three decision
+    * surfaces share their inputs bit-for-bit. */
+  private def dupStartsFrame(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "j2_dup_starts")(
       graft.Pinned.stageEager(Dedup.dupStarts(fanDocs(s, d))))
-  }
 
   /** The synthetic PNG payload fixture (doc_id, payload) over ALL docs —
     * the per-row PNG ENCODE behind every image-family build. Round-18:
@@ -124,188 +92,126 @@ object ExtQueries {
     * staged build per (session, dataset) now serves them all (guide §1.2
     * step 1). The fixture is already fanned to the session's shuffle
     * parallelism inside pngFixture, so the staged leaf keeps that layout. */
-  private val pngCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def pngFrame(s: SparkSession, d: String): DataFrame = {
-    graft.pm.PmQueries.evictOthers(pngCache, s, d)
-    pngCache.computeIfAbsent((s, d), _ => graft.Pinned.stageEager(
+  private def pngFrame(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "j5_png")(graft.Pinned.stageEager(
       Multimodal.pngFixture(Tables.documents(s, d))))
-  }
 
   /** Image hamming-pair graph feeds TWO graded queries (j5_phash_hamming
     * and the j5_phash_groups clustering): memoize the eagerly-staged pairs
-    * frame per (session, dataset) with the standard dataset-switch
-    * eviction. Round-18: the builder reads the memoized fused-aHash frame
+    * frame. Round-18: the builder reads the memoized fused-aHash frame
     * (hashes0) instead of running its own decode+hash pass — bit-identical
     * input by construction (same memo the incremental family probes). */
-  private val phashPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def phashHamPairs(s: SparkSession, d: String): DataFrame = {
-    graft.pm.PmQueries.evictOthers(phashPairsCache, s, d)
-    phashPairsCache.computeIfAbsent((s, d), _ => graft.Pinned.stageEager(
+  private def phashHamPairs(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "j5_phash_pairs")(graft.Pinned.stageEager(
       Multimodal.aHashHammingPairs(pngFrame(s, d),
         hashes0 = Some(imgHashFrame(s, d)))))
-  }
 
   /** Image near-dup clusters: converged CC over the hamming-pair graph —
     * eager supersteps at construction, so memoized like the lexical and
     * semantic clusterings above. */
-  private val phashGroupsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def phashGroups(s: SparkSession, d: String): DataFrame = {
-    graft.pm.PmQueries.evictOthers(phashGroupsCache, s, d)
-    phashGroupsCache.computeIfAbsent((s, d), _ => {
+  private def phashGroups(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "j5_phash_groups") {
       import s.implicits._
       Dedup.ccGroupsConverged(
         Tables.documents(s, d).select($"doc_id".as("v")),
         phashHamPairs(s, d).select($"doc_a", $"doc_b"))
-    })
-  }
+    }
 
   /** The incremental semantic family's trained corpus state — the Lloyd
     * train + full-corpus cell assignment over the 90% carve — derived
     * identically by BOTH recompute twins (j3_semdedup_inc, j8_cell_psi):
-    * one staged build per (session, dataset). */
-  private val semIncCellsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
-  private def semIncCellsFrame(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    import scala.jdk.CollectionConverters._
-    semIncCellsCache.keySet.asScala.toList
-      .filter { case (ks, kd) => ks.sparkContext.isStopped || (ks == s && kd != d) }
-      .foreach { k =>
-        Option(semIncCellsCache.remove(k)).foreach { case (a, b) =>
-          if (!k._1.sparkContext.isStopped)
-            Seq(a, b).foreach(graft.Pinned.releaseFrame)
-        }
-      }
-    semIncCellsCache.computeIfAbsent((s, d), _ => {
+    * one staged build per (session, dataset), both frames released on
+    * eviction. */
+  private def semIncCellsFrame(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    SessionMemo.of[(DataFrame, DataFrame)](s, d, "j3_sem_inc_cells",
+      { case (a, b) => Seq(a, b).foreach(graft.Pinned.releaseFrame) }) {
       val (cents, cells) = Similarity.semIncCells(Tables.embeddings(s, d))
       (graft.Pinned.stageEager(cents), graft.Pinned.stageEager(cells))
-    })
-  }
+    }
 
   /** The CCNet perplexity-tercile frame (the lmBits chain + per-lang
     * rank) feeds FOUR graded queries (j7_ppl_buckets, j7_curriculum and
     * the full/marginal funnels' ppl gate): one staged build per
     * (session, dataset). */
-  private val pplCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def pplFrame(s: SparkSession, d: String): DataFrame = {
-    graft.pm.PmQueries.evictOthers(pplCache, s, d)
-    pplCache.computeIfAbsent((s, d), _ => graft.Pinned.stageEager(
+  private def pplFrame(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "j7_ppl")(graft.Pinned.stageEager(
       Pipeline.pplBuckets(Tables.documents(s, d))))
-  }
 
   /** The trained IVF coarse quantizer feeds four graded queries
     * (j3_ivf_ann, j3_ivf_np1 and both recall rows), each previously
     * re-running the Lloyd training: one staged build per
     * (session, dataset). */
-  private val ivfCentsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def ivfCentsFrame(s: SparkSession, d: String): DataFrame = {
-    graft.pm.PmQueries.evictOthers(ivfCentsCache, s, d)
-    ivfCentsCache.computeIfAbsent((s, d), _ => graft.Pinned.stageEager(
+  private def ivfCentsFrame(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "j3_ivf_cents")(graft.Pinned.stageEager(
       Similarity.ivfCents(Tables.embeddings(s, d))))
-  }
 
   /** The direct 13-gram decontamination verdict frame is consumed by
     * FOUR graded queries (j7_decontam_ngram and the three funnels'
     * decontam gate): one staged build per (session, dataset), gram
     * hashing fanned like the other memo builders. */
-  private val decNgramCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def decNgramFrame(s: SparkSession, d: String): DataFrame = {
-    graft.pm.PmQueries.evictOthers(decNgramCache, s, d)
-    decNgramCache.computeIfAbsent((s, d), _ =>
+  private def decNgramFrame(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "j7_decontam_ngram")(
       graft.Pinned.stageEager(Pipeline.decontamNgram(fanDocs(s, d))))
-  }
 
   /** The REAL-decode stats frame (decodeImages over the PNG fixture) is
     * consumed by four graded sites (j5_decode, j5_keep_best, j7_pack_mm,
     * j7_retract), each previously re-running the encode+decode pass:
-    * memoize one eagerly-staged build per (session, dataset). */
-  private val decodedCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def decodedFrame(s: SparkSession, d: String): DataFrame = {
-    graft.pm.PmQueries.evictOthers(decodedCache, s, d)
-    decodedCache.computeIfAbsent((s, d), _ => graft.Pinned.stageEager(
+    * one eagerly-staged build per (session, dataset). */
+  private def decodedFrame(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "j5_decoded")(graft.Pinned.stageEager(
       Multimodal.decodeImages(pngFrame(s, d))))
-  }
 
   /** The fused per-doc aHash frame (ALL docs) feeds every query of the
     * incremental image family — the standing index build plus each
     * query's batch slice — and the PNG decode under it is the expensive
-    * step: memoize one eagerly-staged build per (session, dataset). */
-  private val imgHashCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def imgHashFrame(s: SparkSession, d: String): DataFrame = {
-    graft.pm.PmQueries.evictOthers(imgHashCache, s, d)
-    imgHashCache.computeIfAbsent((s, d), _ => graft.Pinned.stageEager(
+    * step: one eagerly-staged build per (session, dataset). */
+  private def imgHashFrame(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "j5_img_hash")(graft.Pinned.stageEager(
       Multimodal.aHashLocal(pngFrame(s, d))))
-  }
 
   /** The standing cap-gated image index (with the gated-block mask) —
     * probed by j5_incremental, written by the upsert, persisted by the
     * state form's builder, and joined by the stream-static twin; memoized
-    * per (session, dataset) like every shared standing state. */
-  private val imgIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def imgIdxFrame(s: SparkSession, d: String): DataFrame = {
-    graft.pm.PmQueries.evictOthers(imgIdxCache, s, d)
-    imgIdxCache.computeIfAbsent((s, d), _ => {
+    * like every shared standing state. */
+  private def imgIdxFrame(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "j5_img_index") {
       import s.implicits._
       graft.Pinned.stageEager(
         Multimodal.imgIndex(imgHashFrame(s, d).filter($"doc_id" % 10 =!= 0)))
-    })
-  }
+    }
 
   /** The FFD packing manifests feed multiple graded consumers per window
     * width (W=32: j7_pack_fit, the concat-comparison stats row, and the
     * dial; W=256: j7_pack_fit_w256 and the dial) — memoize each width's
     * manifest once per (session, dataset), the shared-stage discipline. */
-  private val packFit32Cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val packFit256Cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def packFitFrame(s: SparkSession, d: String, wide: Boolean): DataFrame = {
-    val cache = if (wide) packFit256Cache else packFit32Cache
-    graft.pm.PmQueries.evictOthers(cache, s, d)
-    cache.computeIfAbsent((s, d), _ => {
+  private def packFitFrame(s: SparkSession, d: String, wide: Boolean): DataFrame =
+    SessionMemo(s, d, if (wide) "j7_pack_fit_w256" else "j7_pack_fit") {
       import s.implicits._
       graft.Pinned.stageEager(Pipeline.packFit(
         bpeEncoded(s, d).select($"doc_id", $"n_tokens"),
         windowDocs =
           if (wide) Pipeline.PackFitWindowDial else Pipeline.PackFitWindowDocs))
-    })
-  }
+    }
 
   /** The scalable-Bloom (line, slice) state frame feeds FOUR graded
     * queries (stats, probe, upsert, stream probe) and the upsert reads it
     * three times internally — the distinct + two-phase rank behind it
     * runs once per (session, dataset), the dupStartsFrame discipline. */
-  private val bloomSliceCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def bloomSliceFrame(s: SparkSession, d: String): DataFrame = {
-    graft.pm.PmQueries.evictOthers(bloomSliceCache, s, d)
-    bloomSliceCache.computeIfAbsent((s, d), _ => {
+  private def bloomSliceFrame(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "j2_bloom_slices") {
       import s.implicits._
       graft.Pinned.stageEager(Dedup.bloomSliceLines(Dedup.bloomDocLines(
         fanDocs(s, d).filter($"doc_id" % 10 =!= 0))))
-    })
-  }
+    }
 
   /** The standing sliced-Bloom POSITION set derived from [[bloomSliceFrame]]
     * — the per-line k-hash explode + distinct that round-17 stage probes
     * measured as the bloom family's dominant scan-rooted cost, previously
     * re-materialized (tracked per query) by every probe/upsert/audit
     * consumer. Once per (session, dataset), the bloomSliceFrame discipline. */
-  private val bloomPosCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def bloomPosFrame(s: SparkSession, d: String): DataFrame = {
-    graft.pm.PmQueries.evictOthers(bloomPosCache, s, d)
-    bloomPosCache.computeIfAbsent((s, d), _ =>
+  private def bloomPosFrame(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "j2_bloom_positions")(
       graft.Pinned.stageEager(Dedup.bloomSlicePositions(bloomSliceFrame(s, d))))
-  }
 
   /** The distinct-shingle-fingerprint frame (doc_id, dshings) over the FULL
     * documents table and the default-layout exploded band-signature frame
@@ -317,50 +223,33 @@ object ExtQueries {
     * built once per pass. Slicing the shared frames by a carve is
     * bit-identical to per-carve builds (signatures are per-doc row-local —
     * the incrementalNearDupState argument). */
-  private val shingleFpCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def shingleFpFrame(s: SparkSession, d: String): DataFrame = {
-    graft.pm.PmQueries.evictOthers(shingleFpCache, s, d)
-    shingleFpCache.computeIfAbsent((s, d), _ =>
+  private def shingleFpFrame(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "j2_shingle_fp")(
       graft.Pinned.stageEager(Dedup.shingleFpArrays(fanDocs(s, d))))
-  }
-  private val bandSigCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def bandSigFrame(s: SparkSession, d: String): DataFrame = {
-    graft.pm.PmQueries.evictOthers(bandSigCache, s, d)
-    bandSigCache.computeIfAbsent((s, d), _ =>
+  private def bandSigFrame(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "j2_band_sig")(
       graft.Pinned.stageEager(
         Dedup.bandSigFrom(shingleFpFrame(s, d), Dedup.Bands, Dedup.RowsPerBand)))
-  }
   private def lshBuild(s: SparkSession, d: String): (DataFrame, DataFrame) =
     (shingleFpFrame(s, d), bandSigFrame(s, d))
 
   /** Night-1 state of the composed two-night ingest (`j7_ingest_upsert2`)
     * — the standing artifact night 2's job READS, so it follows the
     * memoized-stage lifecycle (stageEager leaves per (session, dataset),
-    * dataset-switch eviction releasing every member frame). Staging is
-    * what keeps the composed query's plan DESCRIPTION bounded: these
-    * frames are referenced up to four times each by night 2's chains,
-    * and persisted-with-lineage intermediates at that depth expanded the
+    * eviction releasing every member frame). Staging is what keeps the
+    * composed query's plan DESCRIPTION bounded: these frames are
+    * referenced up to four times each by night 2's chains, and
+    * persisted-with-lineage intermediates at that depth expanded the
     * description multiplicatively (a 196-million-character plan string
     * before staging — the documented Pinned.stage rationale). */
-  private val ingestNight1Cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Pipeline.IngestNight1]()
-  private def ingestNight1Frame(s: SparkSession, d: String): Pipeline.IngestNight1 = {
-    import scala.jdk.CollectionConverters._
-    ingestNight1Cache.keySet.asScala.toList
-      .filter { case (ks, kd) => ks.sparkContext.isStopped || (ks == s && kd != d) }
-      .foreach { k =>
-        Option(ingestNight1Cache.remove(k)).foreach(v =>
-          if (!k._1.sparkContext.isStopped) v.frames.foreach(graft.Pinned.releaseFrame))
-      }
-    ingestNight1Cache.computeIfAbsent((s, d), _ =>
+  private def ingestNight1Frame(s: SparkSession, d: String): Pipeline.IngestNight1 =
+    SessionMemo.of[Pipeline.IngestNight1](s, d, "j7_ingest_night1",
+      _.frames.foreach(graft.Pinned.releaseFrame))(
       Pipeline.ingestNight1(Tables.documents(s, d),
         sliceLines0 = Some(bloomSliceFrame(s, d)),
         stager = graft.Pinned.stageEager,
         slicePos0 = Some(bloomPosFrame(s, d)),
         build0 = Some(lshBuild(s, d))))
-  }
 
   /** The semantic gate's verdict frame for the composed five-gate audit:
     * the audit batch carve's vectors probing the persisted frozen state
@@ -624,7 +513,7 @@ object ExtQueries {
     // decontamination, composed from the graded J1-J4 kernels.
     "j7_trainset" -> ((s, d) =>
       Pipeline.trainsetManifest(Tables.documents(s, d),
-        groups0 = Some(neardupGroups(s, d)))),
+        groups = neardupGroups(s, d))),
 
     // J7 — the CURATION FUNNEL (round 14): the data-card accounting
     // table — docs in/out + surviving tokens per gate under the prefix
@@ -632,7 +521,7 @@ object ExtQueries {
     // quality -> decontam); composes the graded verdicts, no new logic.
     "j7_funnel" -> ((s, d) =>
       Pipeline.curationFunnel(Tables.documents(s, d),
-        groups0 = Some(neardupGroups(s, d)),
+        groups = neardupGroups(s, d),
         imgGroups0 = Some(phashGroups(s, d)),
         dec0 = Some(decNgramFrame(s, d)))),
 
@@ -642,7 +531,7 @@ object ExtQueries {
     // stage list and oracle generated from the same FunnelStagesFull Seq.
     "j7_funnel_full" -> ((s, d) =>
       Pipeline.curationFunnelFull(Tables.documents(s, d),
-        groups0 = Some(neardupGroups(s, d)),
+        groups = neardupGroups(s, d),
         imgGroups0 = Some(phashGroups(s, d)),
         dec0 = Some(decNgramFrame(s, d)),
         ppl0 = Some(pplFrame(s, d)))),
@@ -654,7 +543,7 @@ object ExtQueries {
     // funnel, from the same flag frame and graded verdicts.
     "j7_funnel_marginal" -> ((s, d) =>
       Pipeline.funnelMarginal(Tables.documents(s, d),
-        groups0 = Some(neardupGroups(s, d)),
+        groups = neardupGroups(s, d),
         imgGroups0 = Some(phashGroups(s, d)),
         dec0 = Some(decNgramFrame(s, d)),
         ppl0 = Some(pplFrame(s, d)))),
@@ -772,14 +661,14 @@ object ExtQueries {
     // ships; per-cluster member/split counts + the leak verdict.
     "j7_split_leak" -> ((s, d) =>
       Pipeline.splitLeakAudit(Tables.documents(s, d),
-        groups0 = Some(neardupGroups(s, d)))),
+        groups = neardupGroups(s, d))),
 
     // J7 — the CROSS-MODAL manifest (round 14): the text gates AND the
     // image near-dup gate (j5_phash_groups canonical) — a doc whose image
     // is a re-encode of another's is dropped even when its text is unique.
     "j7_trainset_mm" -> ((s, d) =>
       Pipeline.trainsetManifestMm(Tables.documents(s, d),
-        groups0 = Some(neardupGroups(s, d)),
+        groups = neardupGroups(s, d),
         imgGroups0 = Some(phashGroups(s, d)))),
     "j7_decontam" -> ((s, d) =>
       Pipeline.decontam(Tables.documents(s, d))),

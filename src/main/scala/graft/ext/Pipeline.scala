@@ -32,25 +32,23 @@ object Pipeline {
   /** The training-set manifest: one row per document with each gate's
     * verdict, the composed keep flag, and the deterministic split.
     *   - dup_ok: the doc is its near-dup cluster's canonical survivor
-    *     ([[Dedup.nearDupGroups]] — non-canonical members are dropped);
+    *     (`groups` — non-canonical members are dropped);
     *   - lang_ok: metadata language is English (the curation target);
     *   - len_ok / quality_ok: token-count band and stopword-ratio floor
     *     over [[TextOps.qualityStats]]'s columns;
     *   - split: md5-bucket of doc_id — stable under corpus growth (a doc's
-    *     split never depends on other rows). */
-  /** @param groups0 precomputed [[Dedup.nearDupGroups]] output to reuse (the
-    *                 query layer passes its memoized per-dataset frame so one
-    *                 session never runs the clustering twice). */
-  def trainsetManifest(docs: DataFrame, groups0: Option[DataFrame] = None): DataFrame = {
+    *     split never depends on other rows).
+    * @param groups the near-dup clusters ([[Dedup.nearDupGroupsConverged]];
+    *               the query layer passes its session memo). */
+  def trainsetManifest(docs: DataFrame, groups: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    val groups = groups0.getOrElse(Dedup.nearDupGroups(docs))
-      .select($"doc_id", $"is_canonical")
+    val canon = groups.select($"doc_id", $"is_canonical")
     val quality = TextOps.qualityStats(docs)
       .select($"doc_id", $"n_tokens", $"stop_ratio")
     val bucket = pmod(Dedup.md5Hash32(SplitSeed, $"doc_id".cast("string")),
       lit(SplitBuckets))
     docs.select($"doc_id", $"lang")
-      .join(groups, Seq("doc_id"))
+      .join(canon, Seq("doc_id"))
       .join(quality, Seq("doc_id"))
       .select(
         $"doc_id",
@@ -85,7 +83,7 @@ object Pipeline {
     * cap-gated, converged CC) — no new shuffle grain.
     * @param imgGroups0 precomputed image-cluster frame (the query layer
     *                   passes its memoized `j5_phash_groups` result). */
-  def trainsetManifestMm(docs: DataFrame, groups0: Option[DataFrame] = None,
+  def trainsetManifestMm(docs: DataFrame, groups: DataFrame,
                          imgGroups0: Option[DataFrame] = None): DataFrame = {
     import docs.sparkSession.implicits._
     val img = imgGroups0.getOrElse(
@@ -94,7 +92,7 @@ object Pipeline {
         Multimodal.aHashHammingPairs(Multimodal.pngFixture(docs))
           .select($"doc_a", $"doc_b")))
       .select($"doc_id", $"is_canonical".as("img_ok"))
-    trainsetManifest(docs, groups0)
+    trainsetManifest(docs, groups)
       .join(img, Seq("doc_id"))
       .select($"doc_id", $"dup_ok", $"lang_ok", $"len_ok", $"quality_ok",
         $"img_ok",
@@ -119,13 +117,11 @@ object Pipeline {
     * straddling — on the harness corpus leaks exist at every SF, and the
     * audit is the query a pipeline runs to QUANTIFY what enforcing
     * canonical-only keep (j7_trainset's dup_ok gate) prevents. */
-  def splitLeakAudit(docs: DataFrame, groups0: Option[DataFrame] = None): DataFrame = {
+  def splitLeakAudit(docs: DataFrame, groups: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    val groups = groups0.getOrElse(Dedup.nearDupGroups(docs))
-      .select($"doc_id", $"cluster_id")
     val bucket = pmod(Dedup.md5Hash32(SplitSeed, $"doc_id".cast("string")),
       lit(SplitBuckets))
-    groups
+    groups.select($"doc_id", $"cluster_id")
       .withColumn("split",
         when(bucket === SplitBuckets - 1, "test")
           .when(bucket === SplitBuckets - 2, "val")
@@ -899,10 +895,10 @@ object Pipeline {
     * already produce; the funnel itself is one doc-grain join chain, one
     * aggregate to a single row, and a row-local explode to the 8-row
     * stage table. */
-  def curationFunnel(docs: DataFrame, groups0: Option[DataFrame] = None,
+  def curationFunnel(docs: DataFrame, groups: DataFrame,
                      imgGroups0: Option[DataFrame] = None,
                      dec0: Option[DataFrame] = None): DataFrame =
-    funnelOver(docs, groups0, imgGroups0, extraFlags = None,
+    funnelOver(docs, groups, imgGroups0, extraFlags = None,
       extraCols = Nil, stages0 = FunnelStages, dec0 = dec0)
 
   /** J7 — the FULL-gate funnel (round-14 verdict #4): [[curationFunnel]]
@@ -915,7 +911,7 @@ object Pipeline {
     * pass (Gopher) and the lm-bits chain (bigram-grain shuffles, shared
     * with j7_ppl_buckets' own run via the session cache), one extra
     * doc-grain join each. */
-  def curationFunnelFull(docs: DataFrame, groups0: Option[DataFrame] = None,
+  def curationFunnelFull(docs: DataFrame, groups: DataFrame,
                          imgGroups0: Option[DataFrame] = None,
                          dec0: Option[DataFrame] = None,
                          ppl0: Option[DataFrame] = None): DataFrame = {
@@ -924,7 +920,7 @@ object Pipeline {
       .join(ppl0.getOrElse(pplBuckets(docs))
         .select($"doc_id", ($"bucket" <= 2L).cast("long").as("ppl_ok")),
         Seq("doc_id"))
-    funnelOver(docs, groups0, imgGroups0, extraFlags = Some(extra),
+    funnelOver(docs, groups, imgGroups0, extraFlags = Some(extra),
       extraCols = Seq("gopher_ok", "ppl_ok"), stages0 = FunnelStagesFull,
       dec0 = dec0)
   }
@@ -941,7 +937,7 @@ object Pipeline {
     * 100 TB posture: the same one-pass flag frame as the funnels, a
     * row-local all-others-pass product per gate, ONE aggregate row,
     * row-local explode to the |gates| table. */
-  def funnelMarginal(docs: DataFrame, groups0: Option[DataFrame] = None,
+  def funnelMarginal(docs: DataFrame, groups: DataFrame,
                      imgGroups0: Option[DataFrame] = None,
                      dec0: Option[DataFrame] = None,
                      ppl0: Option[DataFrame] = None): DataFrame = {
@@ -950,7 +946,7 @@ object Pipeline {
       .join(ppl0.getOrElse(pplBuckets(docs))
         .select($"doc_id", ($"bucket" <= 2L).cast("long").as("ppl_ok")),
         Seq("doc_id"))
-    val (flags, flagCols) = funnelFlags(docs, groups0, imgGroups0,
+    val (flags, flagCols) = funnelFlags(docs, groups, imgGroups0,
       Some(extra), Seq("gopher_ok", "ppl_ok"), dec0)
     val aggs = flagCols.zipWithIndex.flatMap { case (c, i) =>
       val othersPass = flagCols.filter(_ != c).map(col).reduce(_ * _)
@@ -975,13 +971,13 @@ object Pipeline {
     * row-local explode to the stage table. */
   /** The per-doc gate-flag frame shared by the funnels and the marginal
     * attribution: (doc_id, n_tokens, one 0/1 column per gate). */
-  private def funnelFlags(docs: DataFrame, groups0: Option[DataFrame],
+  private def funnelFlags(docs: DataFrame, groups: DataFrame,
                           imgGroups0: Option[DataFrame],
                           extraFlags: Option[DataFrame],
                           extraCols: Seq[String],
                           dec0: Option[DataFrame] = None): (DataFrame, Seq[String]) = {
     import docs.sparkSession.implicits._
-    val mm = trainsetManifestMm(docs, groups0, imgGroups0)
+    val mm = trainsetManifestMm(docs, groups, imgGroups0)
       .select($"doc_id", $"dup_ok", $"img_ok", $"lang_ok", $"len_ok", $"quality_ok")
     val eh = docs.select($"doc_id", md5($"text".cast("binary")).as("h"))
     val exactOk = eh
@@ -1002,7 +998,7 @@ object Pipeline {
       "quality_ok", "decontam_ok") ++ extraCols)
   }
 
-  private def funnelOver(docs: DataFrame, groups0: Option[DataFrame],
+  private def funnelOver(docs: DataFrame, groups: DataFrame,
                          imgGroups0: Option[DataFrame],
                          extraFlags: Option[DataFrame],
                          extraCols: Seq[String],
@@ -1010,7 +1006,7 @@ object Pipeline {
                          dec0: Option[DataFrame] = None): DataFrame = {
     import docs.sparkSession.implicits._
     val (flags, flagCols) =
-      funnelFlags(docs, groups0, imgGroups0, extraFlags, extraCols, dec0)
+      funnelFlags(docs, groups, imgGroups0, extraFlags, extraCols, dec0)
     require(flagCols.size == stages0.size,
       s"funnel stages (${stages0.size}) and flags (${flagCols.size}) diverged")
     val withCum = flagCols.zipWithIndex.foldLeft(flags) { case (df, (c, i)) =>

@@ -15,70 +15,30 @@ object PmQueries {
 
   // ---------------------------------------------------------------- engine
 
-  /** The discovery pipeline output is shared by every pm/ar query in a
-    * session: memoize + persist it per (session, sfDir) so the gate/bench
-    * pay for enabled-time + segmentation once (it is one pipeline stage,
-    * not per-query work). Event-grain rows only — tiny relative to input. */
-  private val discCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  /** Evict every other entry of `cache` for this session (and any entry of a
-    * stopped session) before computing: bounds the cache to one dataset per
-    * live session instead of pinning persisted partitions forever. */
-  private[graft] def evictOthers(
-      cache: java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame],
-      s: SparkSession, d: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    cache.keySet.asScala.toList
-      .filter { case (ks, kd) => ks.sparkContext.isStopped || (ks == s && kd != d) }
-      .foreach { k =>
-        Option(cache.remove(k)).foreach(df => if (!k._1.sparkContext.isStopped) graft.Pinned.releaseFrame(df))
-      }
-  }
-
   /** Enabled-time stage (K2 output): the pipeline's FIRST natural
     * materialization point, shared by task-only discovery (disc) and the
     * full subprocess discovery (pm_sp_batches) — without it each built its
-    * own K2 sweep (+~4s per consumer at sf0.1). */
-  private val enCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private[graft] def enabledStage(s: SparkSession, d: String): DataFrame = {
-    evictOthers(enCache, s, d)
-    enCache.computeIfAbsent((s, d), { _ =>
-      graft.Pinned.stage(EnabledTime.withEnabled(EventLogOps.fromEvents(s, d)))
-    })
-  }
+    * own K2 sweep (+~4s per consumer at sf0.1). The K2 sweep emits run_no
+    * itself, so this is also the runs-annotated stage both discoveries
+    * segment. */
+  private[graft] def enabledStage(s: SparkSession, d: String): DataFrame =
+    graft.SessionMemo(s, d, "pm_enabled_stage")(
+      graft.Pinned.stage(EnabledTime.withEnabled(EventLogOps.fromEvents(s, d))))
 
-  /** Memoized [[BatchDiscovery.discoverFull]] output (see pm_sp_batches). */
-  private val spCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  /** Session-shared segmentation: ONE pass serves both task-only
+    * discovery (disc) and subprocess discovery (pm_sp_batches). */
+  private[graft] def segStage(s: SparkSession, d: String): DataFrame =
+    graft.SessionMemo(s, d, "pm_seg_stage")(
+      graft.Pinned.stage(BatchDiscovery.segment(enabledStage(s, d))))
 
-  /** Session-shared runs-annotated event stage and its segmentation —
-    * segment(runsEv) equals segment(en) plus a pass-through run_no column,
-    * so ONE segmentation pass serves both task-only discovery (disc) and
-    * subprocess discovery (pm_sp_batches); before round 8 each ran its own
-    * event-grain window chain over the same log. */
-  private[graft] def runsStage(s: SparkSession, d: String): DataFrame =
-    // the K2 sweep emits run_no itself (round 8: EvEnR) — the runs stage
-    // IS the enabled stage, no second event-grain window + checkpoint
-    enabledStage(s, d)
-  private val segCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private[graft] def segStage(s: SparkSession, d: String): DataFrame = {
-    evictOthers(segCache, s, d)
-    segCache.computeIfAbsent((s, d), { _ =>
-      graft.Pinned.stage(BatchDiscovery.segment(runsStage(s, d)))
-    })
-  }
-
-  private[graft] def disc(s: SparkSession, d: String): DataFrame = {
-    evictOthers(discCache, s, d)
-    discCache.computeIfAbsent((s, d), { _ =>
-      // STAGE boundary (graft.Pinned.stage): ~15 downstream queries plan
-      // against a leaf instead of re-printing the discovery DAG per action
-      graft.Pinned.stage(BatchDiscovery.discoverFromSeg(segStage(s, d)))
-    })
-  }
+  /** The discovery output is shared by every pm/ar query in a session, so
+    * the gate/bench pay for enabled-time + segmentation once (it is one
+    * pipeline stage, not per-query work). STAGE boundary: ~15 downstream
+    * queries plan against a leaf instead of re-printing the discovery DAG
+    * per action. Event-grain rows only — tiny relative to input. */
+  private[graft] def disc(s: SparkSession, d: String): DataFrame =
+    graft.SessionMemo(s, d, "pm_disc")(
+      graft.Pinned.stage(BatchDiscovery.discoverFromSeg(segStage(s, d))))
 
   /** EP2 report over an explicit discovered frame — shared by pm_report
     * and the scale probe's report head (which feeds an INFLATED discovery
@@ -341,9 +301,8 @@ object PmQueries {
     // blocks are released on dataset switch.
     "pm_sp_batches" -> ((s, d) => {
       import s.implicits._
-      evictOthers(spCache, s, d)
-      spCache.computeIfAbsent((s, d), { _ =>
-        BatchDiscovery.discoverFullFromStages(runsStage(s, d), segStage(s, d)) })
+      graft.SessionMemo(s, d, "pm_sp_batches")(
+        BatchDiscovery.discoverFullFromStages(enabledStage(s, d), segStage(s, d)))
         .select($"event_id", $"case_id", $"activity", $"resource",
           $"start_us", $"end_us", $"enabled_us", $"batch_id", $"batch_type")
     }),

@@ -20,15 +20,12 @@ import org.apache.spark.sql.functions._
   */
 object Features {
   /** @param disc event grain from BatchDiscovery.discover (incl. enabled_us)
-    * @param debugPart diagnostics hook (StageProbe): return an intermediate
-    *        ("instants" | "subs" | "actsfiring" | "workload") instead of the
-    *        full table
     * @param kReady `num_batch_ready_negative_events` (config.py:80): count
     *        of equally spaced non-activating instants in the ready interval
     * @param kEnabled `num_batch_enabled_negative_events` (config.py:81):
     *        max sampled case-enablement instants per batch
     * @return one row per (batch_id, instant, src) with the 15 features */
-  def featuresTable(disc: DataFrame, debugPart: String = "all",
+  def featuresTable(disc: DataFrame,
                     kReady: Int = graft.pm.PmConfig.ReadyNegEvents,
                     kEnabled: Int = graft.pm.PmConfig.EnabledNegEvents): DataFrame = {
     val spark = disc.sparkSession
@@ -46,9 +43,8 @@ object Features {
     // consumer plans against a leaf — with persist() boundaries each
     // branch re-analyzed/re-codegen'd the cached subtree (the round-4
     // bench's #1 cost was this build). Intermediates are released once
-    // the final frame is eagerly materialized; debugPart early returns
-    // skip the release (StageProbe diagnostics only). Grains are bounded
-    // by #batched cases / #batches — far below event grain.
+    // the final frame is eagerly materialized. Grains are bounded by
+    // #batched cases / #batches — far below event grain.
     val tmp = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def staged(df: DataFrame): DataFrame = { val f = graft.Pinned.stage(df); tmp += f; f }
     val bcase = staged(bev.groupBy($"batch_id", $"case_id")
@@ -148,10 +144,6 @@ object Features {
       .withColumn("wlv", sum($"d").over(ws.rowsBetween(Window.unboundedPreceding, 0)))
       .filter($"kind" === 1)
       .select($"batch_id", $"t".as("instant"), $"wlv".as("workload"))
-
-    if (debugPart == "instants") return instants
-    if (debugPart == "subs") return subs
-    if (debugPart == "workload") return wl
 
     val out = graft.Pinned.stageEager(subs
       // meta is batch grain — unbounded at 100 TB; shuffle-join, AQE

@@ -631,8 +631,8 @@ class ExtSpec extends AnyFunSuite {
 
   test("curation funnel: stages chain, counts are monotone, eval slice leaves at decontam") {
     import spark.implicits._
-    val rows = ext.Pipeline.curationFunnel(
-        Tables.documents(spark, "/root/testdata/sf0.001"))
+    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+    val rows = ext.Pipeline.curationFunnel(docs, Dedup.nearDupGroupsConverged(docs))
       .orderBy($"stage_no").collect()
     assert(rows.length == 8 && rows.head.getAs[String]("stage") == "corpus")
     assert(rows.head.getAs[Long]("docs_out") == 500L, "corpus row must count every doc")
@@ -654,11 +654,11 @@ class ExtSpec extends AnyFunSuite {
 
   test("full-gate funnel: wider list chains and is a prefix-extension of the base funnel") {
     import spark.implicits._
-    val base = ext.Pipeline.curationFunnel(
-        Tables.documents(spark, "/root/testdata/sf0.001"))
+    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+    val groups = Dedup.nearDupGroupsConverged(docs)
+    val base = ext.Pipeline.curationFunnel(docs, groups)
       .orderBy($"stage_no").collect()
-    val rows = ext.Pipeline.curationFunnelFull(
-        Tables.documents(spark, "/root/testdata/sf0.001"))
+    val rows = ext.Pipeline.curationFunnelFull(docs, groups)
       .orderBy($"stage_no").collect()
     assert(rows.length == 1 + ext.Pipeline.FunnelStagesFull.size)
     assert(rows.map(_.getAs[String]("stage")).toSeq ==
@@ -684,7 +684,8 @@ class ExtSpec extends AnyFunSuite {
   test("funnel marginal: alone <= failing per gate, and saves are bounded by total drops") {
     import spark.implicits._
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val m = ext.Pipeline.funnelMarginal(docs).orderBy($"stage_no").collect()
+    val groups = Dedup.nearDupGroupsConverged(docs)
+    val m = ext.Pipeline.funnelMarginal(docs, groups).orderBy($"stage_no").collect()
     assert(m.map(_.getAs[String]("stage")).toSeq == ext.Pipeline.FunnelStagesFull,
       "one row per full-set gate, in the shared Seq's order")
     m.foreach { r =>
@@ -694,7 +695,7 @@ class ExtSpec extends AnyFunSuite {
     // every alone-dropped doc is a distinct dropped doc (it passes all
     // other gates, so it cannot be alone-dropped by two gates): the sum
     // is bounded by the corpus minus the full funnel's survivors
-    val full = ext.Pipeline.curationFunnelFull(docs).orderBy($"stage_no").collect()
+    val full = ext.Pipeline.curationFunnelFull(docs, groups).orderBy($"stage_no").collect()
     val dropped = full.head.getAs[Long]("docs_out") - full.last.getAs[Long]("docs_out")
     assert(m.map(_.getAs[Long]("docs_dropped_alone")).sum <= dropped,
       "alone-drops must be disjoint and within total drops")
@@ -762,7 +763,7 @@ class ExtSpec extends AnyFunSuite {
     val groups = Seq((1L, 1L), (24L, 1L), (2L, 2L), (3L, 2L), (5L, 5L))
       .toDF("doc_id", "cluster_id")
     val docs = groups.select($"doc_id", lit("x y z").as("text"))
-    val got = ext.Pipeline.splitLeakAudit(docs, groups0 = Some(groups))
+    val got = ext.Pipeline.splitLeakAudit(docs, groups)
       .collect().map(r => r.getLong(0) ->
         (r.getAs[Long]("n_members"), r.getAs[Long]("n_train"),
           r.getAs[Long]("n_test"), r.getAs[Long]("leak"))).toMap
@@ -770,8 +771,8 @@ class ExtSpec extends AnyFunSuite {
     assert(got(1L) == ((2L, 1L, 1L, 1L)), s"straddling cluster must flag leak: $got")
     assert(got(2L) == ((2L, 2L, 0L, 0L)), s"single-split cluster must not flag: $got")
     // corpus-wide law: leak = 1 exactly when more than one split is hit
-    val bad = ext.Pipeline.splitLeakAudit(
-        Tables.documents(spark, "/root/testdata/sf0.001"))
+    val corpus = Tables.documents(spark, "/root/testdata/sf0.001")
+    val bad = ext.Pipeline.splitLeakAudit(corpus, Dedup.nearDupGroupsConverged(corpus))
       .filter(($"leak" === 1L) =!=
         (greatest($"n_train", $"n_val", $"n_test") < $"n_members")).count()
     assert(bad == 0L, "leak flag must equal the more-than-one-split predicate")
@@ -806,11 +807,12 @@ class ExtSpec extends AnyFunSuite {
     val imgGroups = Seq(
       (1L, 1L, 1L), (2L, 1L, 0L) // doc 2: same image cluster, not canonical
     ).toDF("doc_id", "cluster_id", "is_canonical")
-    val old = ext.Pipeline.trainsetManifest(docs)
+    val groups = Dedup.nearDupGroupsConverged(docs)
+    val old = ext.Pipeline.trainsetManifest(docs, groups)
       .select($"doc_id", $"keep").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(old == Map(1L -> 1L, 2L -> 1L),
       s"both docs must pass the text-only gates: $old")
-    val mm = ext.Pipeline.trainsetManifestMm(docs, imgGroups0 = Some(imgGroups))
+    val mm = ext.Pipeline.trainsetManifestMm(docs, groups, imgGroups0 = Some(imgGroups))
       .select($"doc_id", $"img_ok", $"keep").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(mm(1L) == ((1L, 1L)), s"canonical image must stay kept: $mm")

@@ -56,7 +56,7 @@ class GoldenReplaySpec extends AnyFunSuite {
     // instance-set diff against Production_WTs is asserted empty below —
     // plus ONE engine-only extra (the Case28/Case87 same-start pair,
     // 2012-02-19 21:25, locally indistinguishable from 352 golden-batched
-    // C links; see the C-link Scaladoc in ProcessMining.typedLinkSegments).
+    // C links; see the C-link Scaladoc in BatchDiscovery.linked).
     // Hence 486 = 485 + 1 instances, 1246 = 1244 + 2 events.
     assert(nBatches == 486L,
       s"batch instance count $nBatches drifted (round-5 pinned: 486 = golden 485 + 1 documented residual)")

@@ -422,7 +422,7 @@ class PlanSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"unreviewed product join in: ${offenders.mkString(", ")} — broadcast side must be bounded")
-    // memoized queries (j2_neardup_pairs and everything over discCache)
+    // memoized queries (j2_neardup_pairs and everything over PmQueries.disc)
     // present a checkpoint-RDD leaf to the audit above, hiding their real
     // join tree — audit the RAW lazy constructors behind them too
     val rawPlans = Seq(

@@ -96,15 +96,15 @@ class RulesSpec extends AnyFunSuite {
         (10L, "Parallel", i.toLong, "A", "r0", 1000L, 2000L, i * 100L))
       .toDF("batch_id", "batch_type", "case_id", "activity", "resource",
         "start_us", "end_us", "enabled_us")
-    val inst = graft.rules.Features
-      .featuresTable(disc, debugPart = "instants", kReady = 3, kEnabled = 2)
-      .select($"instant", $"src").collect()
+    val feats = graft.rules.Features.featuresTable(disc, kReady = 3, kEnabled = 2)
+    val inst = feats.select($"instant_us", $"src").collect()
       .map(r => (r.getLong(0), r.getInt(1)))
     // pd.date_range(400, 1000, periods=3+2)[1:-1] = 550/700/850
     assert(inst.filter(_._2 == 1).map(_._1).toSet == Set(550L, 700L, 850L))
     assert(inst.count(_._2 == 2) == 2)
     assert(inst.filter(_._2 == 2).forall(p => Set(100L, 200L, 300L, 400L)(p._1)))
     assert(inst.filter(_._2 == 0).map(_._1).toSeq == Seq(1000L))
+    graft.Pinned.releaseFrame(feats)
     graft.Pinned.release(spark)
   }
 }
