@@ -96,4 +96,13 @@ object Det {
     * DuckDB: ((id % 1000000007) * 2654435761) % 1000000007 */
   def pseudoRand(id: Column): Column =
     pmod(pmod(id, lit(1000000007L)) * lit(2654435761L), lit(1000000007L))
+
+  /** Spark's string order (`UTF8String.compareTo`, unsigned byte-wise over
+    * UTF-8; nulls first), for Scala code that must reproduce a Spark
+    * `min`, `sort_array` or struct tie-break. `String.compareTo` compares
+    * UTF-16 units and differs above U+FFFF and around the surrogates. */
+  val utf8Order: Ordering[String] = (a: String, b: String) =>
+    if (a == null || b == null) java.lang.Boolean.compare(a != null, b != null)
+    else org.apache.spark.unsafe.types.UTF8String.fromString(a)
+      .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
 }

@@ -101,7 +101,7 @@ object Ep1 {
     val outDir = args(1)
     val numFiles = sys.env.getOrElse("SPARK_GRAFT_NUM_FILES", "1").toInt
     val schema = if (args.length > 2) LogSchema(enabled = Some(args(2))) else LogSchema()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = graft.Bench.defaultCpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

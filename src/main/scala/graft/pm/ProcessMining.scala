@@ -360,9 +360,9 @@ object EnabledTime {
   *   3. events left-joined to the claims on (case_id, run_no) and clustered
   *      by (resource, activity, seg_no): per segment, the W4 split of its
   *      unclaimed cases and every event's task or subprocess batch key;
-  *   4. one [[graft.Dist.withGlobalRank]] over all keys, task keys first
-  *      (kind 0, then kind 1: discovery.py:161-181 unify order), and one
-  *      join-back.
+  *   4. W8 renumbering: the distinct keys sorted in one task, task keys
+  *      first (kind 0, then kind 1: discovery.py:161-181 unify order),
+  *      numbered in that order, and broadcast into one join-back.
   * Task-only discovery ([[discoverFromSeg]]) is passes 3–4 with no claims.
   */
 object BatchDiscovery {
@@ -416,7 +416,7 @@ object BatchDiscovery {
 
   /** Consecutive runs of equal `key` in a key-sorted iterator, one run in
     * memory at a time. */
-  private[pm] def groups[A](it: Iterator[A])(key: A => Any): Iterator[ArrayBuffer[A]] =
+  private[graft] def groups[A](it: Iterator[A])(key: A => Any): Iterator[ArrayBuffer[A]] =
     new Iterator[ArrayBuffer[A]] {
       private val b = it.buffered
       def hasNext: Boolean = b.hasNext
@@ -517,12 +517,14 @@ object BatchDiscovery {
         }
       })(Encoders.row(in.add("k_kind", IntegerType).add("k_start", LongType).add("k_grp", StringType)
         .add("k_seg", LongType).add("k_sub", IntegerType).add("batch_type", StringType)))
-    // W8 canonical renumbering: the grain is one row per batch key and the
-    // order is the full key, so the global row rank IS dense_rank — range
-    // partitioned (graft.Dist), never one single-partition window
-    val keys = keyed.filter(col("k_kind").isNotNull).select(KeyCols.map(col): _*).distinct()
-    val bid = graft.Dist.withGlobalRank(keys, "batch_id", KeyCols.map(col))
-    // one row per batch — far below the event grain it joins back to
+    // W8 canonical renumbering: one row per batch key, ordered by the full
+    // key, so the row number IS dense_rank. The key frame is batch grain and
+    // is broadcast into the join-back anyway, so one task sorts it; it stays
+    // lazy (`keyed` is recomputed, and its keys depend only on each
+    // segment's member set)
+    val bid = keyed.filter(col("k_kind").isNotNull).select(KeyCols.map(col): _*).distinct()
+      .repartition(1).sortWithinPartitions(KeyCols.map(col): _*)
+      .withColumn("batch_id", monotonically_increasing_id() + 1)
     keyed.join(broadcast(bid), KeyCols, "left")
       .select((cols :+ "batch_id" :+ "batch_type").map(col): _*)
   }

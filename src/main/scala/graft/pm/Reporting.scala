@@ -1,6 +1,6 @@
 package graft.pm
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** EP2 — the human-readable batch waiting-time report
@@ -16,98 +16,97 @@ object Reporting {
                      ptUs: Long, wtUs: Long, totalUs: Long, creationUs: Long,
                      readyUs: Long, otherUs: Long)
 
-  /** Render the full report for a discovered log. */
+  /** One batch case as collected: min resource, C2 struct-min (start,
+    * enabled), max end and its events (start, end, event_id, activity) in
+    * that order. */
+  private final case class BCase(batchId: Long, batchType: String, caseId: Long, resource: String,
+                                 start: Long, enabled: Long, end: Long,
+                                 evs: Seq[(Long, Long, Long, String)])
+
+  private val strOrd = graft.Det.utf8Order
+  private def minStr(xs: Iterable[String]): String =
+    xs.filter(_ != null).minOption(strOrd).orNull
+
+  /** Render the full report for a discovered log in two actions: one
+    * aggregate at batch-case grain, collected once and reduced in Scala to
+    * the batches, activity keys, the six WT components
+    * ([[WaitingTimes.batchCaseWT]]'s definition) and the representative
+    * sequences; then one event-grain aggregate that counts every key's
+    * occurrences. */
   def render(disc: DataFrame): String = {
     import disc.sparkSession.implicits._
-    val bev = disc.filter($"batch_id".isNotNull)
-
-    val acts = bev.groupBy($"batch_id")
-      .agg(concat_ws(",", sort_array(collect_set($"activity"))).as("activities"))
+    val bc = disc.filter($"batch_id".isNotNull)
+      .groupBy($"batch_id", $"batch_type", $"case_id")
+      .agg(min($"resource"), min(struct($"start_us", $"enabled_us")), max($"end_us"),
+        sort_array(collect_list(struct($"start_us", $"end_us", $"event_id", $"activity"))))
+      .collect().map { r =>
+        val m = r.getStruct(4)
+        BCase(r.getLong(0), r.getString(1), r.getLong(2), r.getString(3), m.getLong(0), m.getLong(1),
+          r.getLong(5), r.getSeq[Row](6).map(e => (e.getLong(0), e.getLong(1), e.getLong(2), e.getString(3))))
+      }
+    val byBatch = bc.groupBy(_.batchId)
+    // concat_ws(",", sort_array(collect_set(activity))) per batch
+    val acts = byBatch.map { case (b, cs) =>
+      b -> cs.flatMap(_.evs.map(_._4)).filter(_ != null).distinct.sorted(strOrd).mkString(",")
+    }
     // The reference iterates batch instances by its unified ids, which
     // follow BAMA's per-(resource, activity) detection: within a group,
     // (resource asc, instance start asc). Our W8 ids are global-b_start
     // ordered, so re-derive the reference order here — it decides both the
     // representative instance for occurrence counts and Counter tie order.
-    val batches = bev.groupBy($"batch_id", $"batch_type")
-      .agg(countDistinct($"case_id").as("size"),
-        min($"resource").as("resource"), min($"start_us").as("b_start"))
-      .join(acts, Seq("batch_id"))
-      .select($"activities", $"batch_type", $"batch_id", $"size".cast("long"),
-        $"resource", $"b_start")
-      .as[(String, String, Long, Long, String, Long)].collect()
-      .map(t => BatchRow(t._1, t._2, t._3, t._4, t._5, t._6))
-      .sortBy(b => (b.resource, b.bStart, b.batchId))
+    val batches = bc.groupBy(c => (c.batchId, c.batchType)).toArray.map { case ((b, t), cs) =>
+      BatchRow(acts(b), t, b, cs.length, minStr(cs.map(_.resource)), cs.map(_.start).min)
+    }.sortBy(b => (b.resource, b.bStart, b.batchId))
 
-    val cases = WaitingTimes.batchCaseWT(disc)
-      .join(acts, Seq("batch_id"))
-      .select($"activities", $"batch_type", $"batch_id",
-        $"pt_us", $"wt_us", $"total_wt_us", $"creation_wt_us", $"ready_wt_us", $"other_wt_us")
-      .as[(String, String, Long, Long, Long, Long, Long, Long, Long)].collect()
-      .map(t => CaseRow(t._1, t._2, t._3, t._4, t._5, t._6, t._7, t._8, t._9))
+    // instance enabled = max case enabled, instance start = min case start
+    val inst = byBatch.map { case (b, cs) => b -> (cs.map(_.enabled).max, cs.map(_.start).min) }
+    val cases = bc.map { c =>
+      val (iEn, iSt) = inst(c.batchId)
+      CaseRow(acts(c.batchId), c.batchType, c.batchId, c.end - c.start, c.start - c.enabled,
+        c.start - c.enabled, iEn - c.enabled, iSt - iEn, c.start - iSt)
+    }
 
     // occurrence counts per activities key (utils.py:199-229): the group's
     // REPRESENTATIVE activity sequence is the first batch instance's
-    // (ascending batch_id, mirroring the reference's groupby iteration)
-    // first case's (first LOG-ORDER row, .iloc[0]) ordered activities
-    // WITHIN the batch. A length-1 sequence counts plain activity events;
-    // length-n counts rolling-window matches over every case's full trace
-    // (W2 general-n) — a batch case that executed the activity twice makes
-    // even a single-activity group a sequence count (golden Lapping: 112
-    // 'Lapping','Lapping' windows, not 370 events).
-    val singleCounts = disc.groupBy($"activity").agg(count(lit(1)).as("n"))
-      .as[(String, Long)].collect().toMap
-    val bk = bev.join(acts.withColumnRenamed("activities", "akey"), Seq("batch_id"))
-    // first instance per group = reference numbering order (resource asc,
-    // instance start asc — see `batches` above); representative case = the
-    // case of that instance's EARLIEST event — validated 12/12 groups
-    // against the golden Production report's Num-occurrences values
-    val minB = bk.groupBy($"akey", $"batch_id")
-      .agg(min($"resource").as("r"), min($"start_us").as("bs"))
-      .groupBy($"akey")
-      .agg(min(struct($"r", $"bs", $"batch_id")).getField("batch_id").as("batch_id"))
-    val minE = bk.join(minB, Seq("akey", "batch_id"))
-      .groupBy($"akey", $"batch_id")
-      .agg(min(struct($"start_us", $"end_us", $"event_id", $"case_id"))
-        .getField("case_id").as("case_id"))
-    val repSeq = bk.join(minE, Seq("akey", "batch_id", "case_id"))
-      .groupBy($"akey")
-      .agg(transform(
-        sort_array(collect_list(struct($"start_us", $"end_us", $"event_id", $"activity"))),
-        x => x.getField("activity")).as("seq"))
-      .as[(String, Seq[String])].collect().toMap
-    // multi-activity keys: ONE window+aggregate pass counts every key's
-    // rolling-window matches together (round 18, guide §1.2/§2.4) — the
-    // per-key form ran one full event-grain window job PER KEY
-    // sequentially (~60ms fixed driver cost + a window pass each, the
-    // round-17-diagnosed pm job-count tail). Window frames of different
-    // lengths share one WindowExec (same partition/order spec); the
-    // when/sum per key is exactly the old filter+count. Counts are
-    // bit-identical — GoldenReplaySpec pins the rendered bytes.
-    val multi = repSeq.filter(_._2.length > 1).toSeq.sortBy(_._1)
-    val multiCounts: Map[String, Long] =
-      if (multi.isEmpty) Map.empty
+    // (reference numbering order: min (resource, instance start, batch_id))
+    // case of its EARLIEST event (min (start, end, event_id)) — validated
+    // 12/12 groups against the golden Production report's Num-occurrences
+    // values — ordered activities WITHIN the batch. A length-1 sequence
+    // counts plain activity events; length-n counts rolling-window matches
+    // over every case's full trace (W2 general-n) — a batch case that
+    // executed the activity twice makes even a single-activity group a
+    // sequence count (golden Lapping: 112 'Lapping','Lapping' windows, not
+    // 370 events).
+    val evOrd: Ordering[(Long, Long, Long, String)] =
+      Ordering.Tuple4(Ordering.Long, Ordering.Long, Ordering.Long, strOrd)
+    val firstKey = Ordering.Tuple3(strOrd, Ordering.Long, Ordering.Long)
+    val repSeq: Map[String, Seq[String]] = byBatch.groupBy { case (b, _) => acts(b) }.map { case (key, bs) =>
+      val (_, rep) = bs.minBy { case (b, cs) => (minStr(cs.map(_.resource)), cs.map(_.start).min, b) }(firstKey)
+      val repCase = rep.minBy { c => val (s, e, id, _) = c.evs.head; (s, e, id, c.caseId) }.caseId
+      key -> rep.filter(_.caseId == repCase).flatMap(_.evs).sorted(evOrd).map(_._4).toSeq
+    }
+    // every key's count in ONE event-grain aggregate: single-activity keys
+    // as conditional counts, multi-activity keys as rolling-window matches
+    // whose frames of different lengths share one WindowExec (same
+    // partition/order spec). The counts are bit-identical to one filter+count
+    // per key; GoldenReplaySpec pins the rendered bytes.
+    val keys = repSeq.toSeq.sortBy(_._1)
+    val lens = keys.map(_._2.length).filter(_ > 1).distinct
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("case_id").orderBy("start_us", "end_us", "event_id")
+    val withWins = lens.foldLeft(disc) { (df, l) =>
+      df.withColumn(s"_win_$l", collect_list($"activity").over(w.rowsBetween(0, l - 1)))
+    }
+    val occCounts: Map[String, Long] =
+      if (keys.isEmpty) Map.empty
       else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("case_id").orderBy("start_us", "end_us", "event_id")
-        val lens = multi.map(_._2.length).distinct
-        val withWins = lens.foldLeft(disc) { (df, l) =>
-          df.withColumn(s"_win_$l",
-            collect_list($"activity").over(w.rowsBetween(0, l - 1)))
-        }
-        val aggs = multi.zipWithIndex.map { case ((_, sq), i) =>
-          sum(when(col(s"_win_${sq.length}") === array(sq.map(lit): _*), 1L)
-            .otherwise(0L)).as(s"_k$i")
+        val aggs = keys.map {
+          case (_, Seq(a)) => count_if($"activity" === a)
+          case (_, sq) => count_if(col(s"_win_${sq.length}") === array(sq.map(lit): _*))
         }
         val row = withWins.agg(aggs.head, aggs.tail: _*).head()
-        multi.zipWithIndex.map { case ((key, _), i) =>
-          key -> (if (row.isNullAt(i)) 0L else row.getLong(i))
-        }.toMap
+        keys.zipWithIndex.map { case ((key, _), i) => key -> row.getLong(i) }.toMap
       }
-    val occCounts: Map[String, Long] = repSeq.map {
-      case (key, sq) if sq.length <= 1 =>
-        key -> singleCounts.getOrElse(sq.headOption.getOrElse(key), 0L)
-      case (key, _) => key -> multiCounts(key)
-    }
 
     val typeOrder = Seq("Parallel", "Sequential task-based", "Concurrent task-based",
       "Sequential case-based", "Concurrent case-based")

@@ -1,5 +1,7 @@
 package graft.relational
 
+import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.SparkFiles
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Det, Tables}
@@ -16,16 +18,15 @@ import graft.{Det, Tables}
   *
   * The graded query joins bucketed orders x lineitem on the order key and
   * aggregates — the ONLY exchange in the plan belongs to the final small
-  * aggregate, which PlanSpec locks. Bucketed copies are written once per
-  * (session, dataset) under the session's scratch dir and dropped from
-  * the catalog on dataset switch (same lifecycle as the other memoized
-  * per-dataset frames).
+  * aggregate, which PlanSpec locks. Bucketed copies are a session memo
+  * ([[graft.SessionMemo]]): written once per (session, dataset) into a
+  * directory under Spark's scratch dir for added files
+  * (`SparkFiles.getRootDirectory`), and on dataset switch dropped from the
+  * catalog with their directory deleted. Spark deletes the scratch dir,
+  * and with it the copies of the last dataset, when the session stops.
   */
 object Bucketing {
   val NumBuckets = 8
-
-  private val written =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Unit]()
 
   private def tableName(base: String, dataset: String): String =
     // catalog identifiers: keep [a-z0-9_]
@@ -35,8 +36,8 @@ object Bucketing {
     * for `dataset`, writing them at most once per (session, dataset). */
   def ensureBucketed(s: SparkSession, dataset: String): (String, String) = {
     val (ot, lt) = (tableName("orders", dataset), tableName("lineitem", dataset))
-    written.computeIfAbsent((s, dataset), _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft_bucketed").toString
+    graft.SessionMemo.of[Path](s, dataset, "d9_bucketed", drop(s, Seq(ot, lt))) {
+      val root = Files.createTempDirectory(Paths.get(SparkFiles.getRootDirectory()), "graft_bucketed")
       for ((name, df, key) <- Seq(
         (ot, Tables.orders(s, dataset).select("o_orderkey", "o_orderpriority"), "o_orderkey"),
         (lt, Tables.lineitem(s, dataset).select("l_orderkey", "l_quantity"), "l_orderkey"))) {
@@ -51,8 +52,15 @@ object Bucketing {
           .option("path", s"$root/$name")
           .saveAsTable(name)
       }
-    })
+      root
+    }
     (ot, lt)
+  }
+
+  /** Release of one dataset's copies: drop the tables, delete their files. */
+  private def drop(s: SparkSession, tables: Seq[String])(root: Path): Unit = {
+    tables.foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
+    org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
   }
 
   /** Bucket-co-located orders x lineitem join + per-priority aggregate.

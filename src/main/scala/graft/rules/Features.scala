@@ -1,10 +1,31 @@
 package graft.rules
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** EP3 feature engineering (activation_rules.py:33-150), fully set-based.
+/** Pass-1 input: a batched event with its case's first start in the full
+  * log and the seeded sample key of its (case, batch). */
+private[rules] final case class FEv(batch_id: Long, batch_type: String, case_id: Long,
+                                    activity: String, resource: String, start_us: Long,
+                                    enabled_us: Long, case_first: Long, sample: Long)
+
+/** One feature instant before its workload (pass 1), and after it (pass 2). */
+private[rules] final case class FInstant(batch_id: Long, batch_type: String, resource: String,
+                                         activities: String, firing_activity: String,
+                                         instant: Long, src: Int, outcome: Int, num_queue: Long,
+                                         last_en: Long, first_en: Long, min_case_first: Long,
+                                         workload: Long)
+
+/** Pass-2 input: a `[t, e]` interval of `case_id` (kind 0) or an instant
+  * at `t` (kind 1, with its row). */
+private[rules] final case class FSweep(resource: String, t: Long, kind: Int, case_id: Long, e: Long,
+                                       row: FInstant)
+
+/** EP3 feature engineering (activation_rules.py:33-150) as two key-sorted
+  * passes over plain Scala, holding one batch, or one resource's open
+  * intervals, in memory at a time.
   *
   * Per batch instance: one ACTIVATE row at the instance start; one negative
   * at the midpoint of (instance-enabled, instance-start) (the reference's
@@ -19,6 +40,8 @@ import org.apache.spark.sql.functions._
   * Times are epoch micros; day_of_week is Monday=0 (pandas origin, G1 trap).
   */
 object Features {
+  private val strOrd = graft.Det.utf8Order
+
   /** @param disc event grain from BatchDiscovery.discover (incl. enabled_us)
     * @param kReady `num_batch_ready_negative_events` (config.py:80): count
     *        of equally spaced non-activating instants in the ready interval
@@ -31,139 +54,88 @@ object Features {
     val spark = disc.sparkSession
     import spark.implicits._
 
-    val bev = disc.filter($"batch_id".isNotNull)
-      .select($"batch_id", $"batch_type", $"case_id", $"activity", $"resource",
-        $"start_us", $"end_us", $"enabled_us")
+    // pass 1, per batch_id: its instants and their case-subset features
+    val ev = disc.withColumn("case_first", min($"start_us").over(Window.partitionBy("case_id")))
+      .filter($"batch_id".isNotNull)
+      .select($"batch_id", $"batch_type", $"case_id", $"activity", $"resource", $"start_us",
+        $"enabled_us", $"case_first", graft.Det.pseudoRand($"case_id" + $"batch_id").as("sample"))
+      .as[FEv]
+    val instants = ev.repartition($"batch_id").sortWithinPartitions("batch_id")
+      .mapPartitions(it => graft.pm.BatchDiscovery.groups(it)(_.batch_id)
+        .flatMap(instantsOf(_, kReady, kEnabled)))
 
-    // batch-case grain: C2 struct-min enabled, min start.
-    // bcase and instants are each consumed by 3-6 downstream branches
-    // (subs, subev, the negative-instant generators, the workload queries,
-    // the final join): STAGE boundaries (round 7, the discoverFull
-    // treatment) so one action computes each small grain once AND every
-    // consumer plans against a leaf — with persist() boundaries each
-    // branch re-analyzed/re-codegen'd the cached subtree (the round-4
-    // bench's #1 cost was this build). Intermediates are released once
-    // the final frame is eagerly materialized. Grains are bounded by
-    // #batched cases / #batches — far below event grain.
-    val tmp = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def staged(df: DataFrame): DataFrame = { val f = graft.Pinned.stage(df); tmp += f; f }
-    val bcase = staged(bev.groupBy($"batch_id", $"case_id")
-      .agg(min(struct($"start_us".as("s"), $"enabled_us".as("e"))).as("m"))
-      .select($"batch_id", $"case_id", $"m.s".as("case_start"), $"m.e".as("case_enabled")))
+    // pass 2, per resource: every event's [enabled, end] interval swept
+    // together with the instants
+    val intervals = disc.select($"resource", $"enabled_us".as("t"), lit(0).as("kind"),
+      $"case_id".cast("long").as("case_id"), $"end_us".as("e"),
+      lit(null).cast(Encoders.product[FInstant].schema).as("row")).as[FSweep]
+    val swept = intervals.union(instants.map(i => FSweep(i.resource, i.instant, 1, 0L, 0L, i)))
+      .repartition($"resource").sortWithinPartitions("resource", "t", "kind")
+      .mapPartitions(workloads)
 
-    // instance grain — LAZY (round 8, the discoverFull lesson): inst's
-    // three consumers (pos/neg1/neg2) all sit inside the instants
-    // materialization, and meta's two sit in separate downstream jobs;
-    // both are one cheap aggregate over a staged LEAF (bcase / the disc
-    // input), so re-running them per consumer costs less than two more
-    // eager checkpoint barriers did.
-    val inst = bcase.groupBy($"batch_id")
-      .agg(min($"case_start").as("inst_start"),
-        min($"case_enabled").as("inst_first_en"),
-        max($"case_enabled").as("inst_last_en"))
-    val meta = bev.groupBy($"batch_id")
-      .agg(first($"batch_type").as("batch_type"), min($"resource").as("resource"))
+    graft.Pinned.stageEager(swept.select(
+      $"batch_id", $"batch_type", $"activities", $"firing_activity",
+      $"instant".as("instant_us"), $"src",
+      $"num_queue",
+      ($"instant" - $"last_en").as("t_ready_us"),
+      ($"instant" - $"first_en").as("t_waiting_us"),
+      ($"instant" - $"min_case_first").as("t_max_flow_us"),
+      weekday(graft.Det.tsNtz($"instant")).as("day_of_week"),
+      dayofmonth(graft.Det.tsNtz($"instant")).as("day_of_month"),
+      hour(graft.Det.tsNtz($"instant")).as("hour_of_day"),
+      minute(graft.Det.tsNtz($"instant")).as("minute_of_hour"),
+      $"workload", $"outcome"))
+  }
 
-    // instants: src 0 = activate, 1 = ready-interval points, 2 = sampled
-    // case enables. kReady equally spaced interior points of
-    // (inst_last_en, inst_start) — pd.date_range(periods=k+2)[1:-1],
-    // activation_rules.py:56-62 — and up to kEnabled seeded case-enable
-    // samples (activation_rules.py:63-71, W12 seeded replacement for
-    // random.sample). Defaults (1, 1) are the reference's config.py:80-81.
-    val pos = inst.select($"batch_id", $"inst_start".as("instant"), lit(0).as("src"), lit(1).as("outcome"))
-    val neg1 = inst
-      .select($"batch_id", explode(sequence(lit(1), lit(kReady))).as("i"),
-        $"inst_last_en", $"inst_start")
-      .select($"batch_id",
-        ($"inst_last_en" +
-          expr(s"(i * (inst_start - inst_last_en)) div ${kReady + 1}")).as("instant"),
-        lit(1).as("src"), lit(0).as("outcome"), $"inst_start")
-      .filter($"instant" < $"inst_start").drop("inst_start")
-      .distinct() // coincident interior points collapse (micros resolution)
-    val sampleKey = graft.Det.pseudoRand($"case_id" + $"batch_id")
-    val neg2 = bcase.join(inst.select($"batch_id", $"inst_start"), Seq("batch_id"))
-      .filter($"case_enabled" < $"inst_start")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("batch_id").orderBy(sampleKey, $"case_id")))
-      .filter($"rn" <= kEnabled)
-      .select($"batch_id", $"case_enabled".as("instant"), lit(2).as("src"), lit(0).as("outcome"))
-    val instants = staged(pos.unionByName(neg1).unionByName(neg2))
+  /** One batch's instants: src 0 = activate at the instance start, 1 =
+    * kReady equally spaced interior points of (instance enabled, instance
+    * start) — pd.date_range(periods=k+2)[1:-1], activation_rules.py:56-62
+    * — and 2 = up to kEnabled case enables before the start, sampled by
+    * the seeded key (activation_rules.py:63-71, W12 seeded replacement
+    * for random.sample). Coincident instants of one src collapse (micros
+    * resolution). Each instant's features are taken over the cases
+    * enabled at it (activation_rules.py:75-89); an instant with no such
+    * case has no row. */
+  private def instantsOf(batch: Iterable[FEv], kReady: Int, kEnabled: Int): Iterator[FInstant] = {
+    // batch-case grain: the C2 struct-min (start, enabled)
+    val cases = batch.groupBy(_.case_id).values.map(evs => (evs.minBy(e => (e.start_us, e.enabled_us)), evs))
+    val start = cases.map(_._1.start_us).min
+    val lastEn = cases.map(_._1.enabled_us).max
+    val ready = (1 to kReady).map(i => lastEn + i * (start - lastEn) / (kReady + 1)).filter(_ < start)
+    val sampled = cases.map(_._1).filter(_.enabled_us < start).toSeq
+      .sortBy(c => (c.sample, c.case_id)).take(kEnabled).map(_.enabled_us)
+    val h = batch.head
+    val resource = batch.map(_.resource).filter(_ != null).minOption(strOrd).orNull
+    val firing = Ordering.Tuple3(Ordering.Long, Ordering.Long, strOrd)
+    (Iterator((start, 0)) ++ ready.distinct.map((_, 1)) ++ sampled.distinct.map((_, 2))).flatMap { case (t, src) =>
+      val sub = cases.filter(_._1.enabled_us <= t)
+      val evs = sub.flatMap(_._2)
+      if (sub.isEmpty) None
+      else Some(FInstant(h.batch_id, h.batch_type, resource,
+        evs.map(_.activity).filter(_ != null).toSeq.distinct.sorted(strOrd).mkString(","),
+        evs.minBy(e => (e.start_us, e.enabled_us, e.activity))(firing).activity,
+        t, src, if (src == 0) 1 else 0, sub.size, sub.map(_._1.enabled_us).max,
+        sub.map(_._1.enabled_us).min, sub.map(_._1.case_first).min, 0L))
+    }
+  }
 
-    // subset of cases enabled at each instant + per-case first start in the FULL log
-    val caseFirst = disc.groupBy($"case_id").agg(min($"start_us").as("case_first_start"))
-    // ONE event-grain pass for the case-subset stats AND the activities/
-    // firing key (they were two aggregations over the same instants⋈bcase
-    // join, re-joined on (batch_id, instant, src) afterwards — two
-    // exchanges plus a join for values one group-by computes): every bcase
-    // row has >= 1 bev row by construction (bcase = bev.groupBy), so over
-    // the event grain num_queue = countDistinct(case_id) and the per-case-
-    // constant min/max aggregates are duplicate-row-invariant.
-    val subev = instants
-      .join(bcase, Seq("batch_id"))
-      .filter($"case_enabled" <= $"instant")
-      .join(caseFirst, Seq("case_id"))
-      .join(bev.select($"batch_id", $"case_id", $"activity", $"start_us", $"enabled_us"),
-        Seq("batch_id", "case_id"))
-    val subs = subev
-      .groupBy($"batch_id", $"instant", $"src", $"outcome")
-      .agg(countDistinct($"case_id").as("num_queue"),
-        max($"case_enabled").as("last_en"),
-        min($"case_enabled").as("first_en"),
-        min($"case_first_start").as("min_case_first"),
-        concat_ws(",", sort_array(collect_set($"activity"))).as("activities"),
-        min(struct($"start_us".as("s"), $"enabled_us".as("e"), $"activity".as("a"))).as("f"))
-      .withColumn("firing_activity", $"f.a").drop("f")
-
-    // workload = #distinct cases with an active event of the batch's
-    // resource at the instant (utils.py:179-196). The naive form is an
-    // interval join whose only equi-key is the low-cardinality resource —
-    // a quasi-cross-join. Scalable form with identical semantics over the
-    // integer-micros domain: union each case's [enabled, end] intervals per
-    // resource (K1-style sessionization), emit +1/-1 boundary deltas, and
-    // read the running sum at each query instant (deltas sort before
-    // queries at equal t, matching the inclusive bounds).
-    val wiv = Window.partitionBy("resource", "wcase").orderBy("s", "e")
-    val merged = disc
-      .select($"resource", $"case_id".as("wcase"), $"enabled_us".as("s"), $"end_us".as("e"))
-      .withColumn("rme", max($"e").over(wiv.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("flag", when($"rme".isNull || $"s" > $"rme" + 1, 1).otherwise(0))
-      .withColumn("grp", sum($"flag").over(wiv.rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy($"resource", $"wcase", $"grp")
-      .agg(min($"s").as("s"), max($"e").as("e"))
-    val deltas = merged.select($"resource", $"s".as("t"), lit(1L).as("d"))
-      .unionByName(merged.select($"resource", ($"e" + 1).as("t"), lit(-1L).as("d")))
-      .groupBy($"resource", $"t").agg(sum($"d").as("d"))
-    val qrys = instants.select($"batch_id", $"instant").distinct()
-      .join(meta.select($"batch_id", $"resource"), Seq("batch_id"))
-    val stream = deltas
-      .select($"resource", $"t", $"d", lit(0).as("kind"), lit(null).cast("long").as("batch_id"))
-      .unionByName(qrys.select($"resource", $"instant".as("t"), lit(0L).as("d"),
-        lit(1).as("kind"), $"batch_id"))
-    val ws = Window.partitionBy("resource").orderBy("t", "kind")
-    val wl = stream
-      .withColumn("wlv", sum($"d").over(ws.rowsBetween(Window.unboundedPreceding, 0)))
-      .filter($"kind" === 1)
-      .select($"batch_id", $"t".as("instant"), $"wlv".as("workload"))
-
-    val out = graft.Pinned.stageEager(subs
-      // meta is batch grain — unbounded at 100 TB; shuffle-join, AQE
-      // broadcasts at runtime when actually small
-      .join(meta, Seq("batch_id"))
-      .join(wl, Seq("batch_id", "instant"), "left")
-      .na.fill(0L, Seq("workload"))
-      .select(
-        $"batch_id", $"batch_type", $"activities", $"firing_activity",
-        $"instant".as("instant_us"), $"src",
-        $"num_queue",
-        ($"instant" - $"last_en").as("t_ready_us"),
-        ($"instant" - $"first_en").as("t_waiting_us"),
-        ($"instant" - $"min_case_first").as("t_max_flow_us"),
-        weekday(graft.Det.tsNtz($"instant")).as("day_of_week"),
-        dayofmonth(graft.Det.tsNtz($"instant")).as("day_of_month"),
-        hour(graft.Det.tsNtz($"instant")).as("hour_of_day"),
-        minute(graft.Det.tsNtz($"instant")).as("minute_of_hour"),
-        $"workload", $"outcome"))
-    tmp.foreach(graft.Pinned.releaseFrame)
-    out
+  /** workload = #distinct cases with an interval of the instant's resource
+    * that contains it, both ends inclusive (utils.py:179-196). Streams one
+    * resource's (t, kind)-sorted rows — intervals before instants at equal
+    * t — holding only the intervals still open. */
+  private def workloads(it: Iterator[FSweep]): Iterator[FInstant] = {
+    val open = mutable.PriorityQueue.empty[(Long, Long)](Ordering.by[(Long, Long), Long](_._1).reverse)
+    val live = mutable.HashMap.empty[Long, Int]
+    var res: String = null
+    var started = false
+    it.flatMap { r =>
+      if (!started || r.resource != res) { open.clear(); live.clear(); res = r.resource; started = true }
+      while (open.nonEmpty && open.head._1 < r.t) {
+        val c = open.dequeue()._2
+        if (live(c) == 1) live -= c else live(c) -= 1
+      }
+      if (r.kind == 0) { open.enqueue((r.e, r.case_id)); live(r.case_id) = live.getOrElse(r.case_id, 0) + 1; None }
+      else Some(r.row.copy(workload = live.size.toLong))
+    }
   }
 }

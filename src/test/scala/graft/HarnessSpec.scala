@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.pm.{BatchDiscovery, EnabledTime}
@@ -23,14 +24,14 @@ class HarnessSpec extends AnyFunSuite {
     // already exist in the shared session — assert we return to that set
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val en = EnabledTime.withEnabled(graft.pm.EventLogOps.fromEvents(spark, sfDir))
+    val tracked = Pinned.trackedCount(spark)
     val out = BatchDiscovery.discoverFull(en)
     out.count()
-    // discoverFull releases its segmentation and claims stages itself; the
-    // tracked persists that remain are Dist.withGlobalRank's correctness
-    // caches, dropped by the harness release. The returned
-    // frame is an EAGER stage whose lifecycle belongs to the caller
-    // (pm_sp_batches memoizes it; here we release it directly).
-    assert(Pinned.trackedCount(spark) > 0, "discoverFull should track the Dist rank persists")
+    // discoverFull releases its segmentation and claims stages itself and
+    // tracks no persists (its W8 key frame is recomputed, not cached). The
+    // returned frame is an EAGER stage whose lifecycle belongs to the
+    // caller (pm_sp_batches memoizes it; here we release it directly).
+    assert(Pinned.trackedCount(spark) == tracked, "discoverFull should track no persists")
     Pinned.release(spark)
     assert(Pinned.trackedCount(spark) == 0)
     Pinned.releaseFrame(out)
@@ -71,29 +72,47 @@ class HarnessSpec extends AnyFunSuite {
     }
   }
 
-  test("batch discovery job counts stay at or below the key-sorted kernel's") {
-    // Job counts do not depend on machine load, so they lock the pass
-    // structure: each extra shuffle, staged kernel or join-back shows up
-    // here. Counted with AQE on (one job per shuffle stage, as the graded
-    // sessions run) on the staged sf0.001 log; the ceilings are the counts
-    // of the key-sorted kernel (the staged window/join kernels it replaced
-    // ran 34 and 19).
+  /** `body` on the staged sf0.001 log with AQE on, as the graded sessions
+    * run: enabled times and segmentation staged and materialized. */
+  private def withStagedLog[A](body: (DataFrame, DataFrame) => A): A = {
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    val (full, task) = try {
+    try {
       val en = Pinned.stage(EnabledTime.withEnabled(graft.pm.EventLogOps.fromEvents(spark, sfDir)))
       val seg = Pinned.stage(BatchDiscovery.segment(en))
       seg.count()
-      val full = jobsOf(Pinned.releaseFrame(BatchDiscovery.discoverFullFromStages(en, seg)))
-      val task = jobsOf(BatchDiscovery.discoverFromSeg(seg).write.format("noop").mode("overwrite").save())
-      Seq(seg, en).foreach(Pinned.releaseFrame)
-      (full, task)
+      try body(en, seg) finally Seq(seg, en).foreach(Pinned.releaseFrame)
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", aqe)
       Pinned.release(spark)
     }
-    assert(full <= 17, s"discoverFullFromStages ran $full jobs")
-    assert(task <= 12, s"one action over discoverFromSeg ran $task jobs")
+  }
+
+  // Job counts do not depend on machine load, so they lock the pass
+  // structure: each extra shuffle, staged kernel, join or action shows up
+  // here. The ceilings are the counts of the key-sorted kernels.
+  test("batch discovery job counts stay at or below the key-sorted kernel's") {
+    val (full, task) = withStagedLog { (en, seg) =>
+      (jobsOf(Pinned.releaseFrame(BatchDiscovery.discoverFullFromStages(en, seg))),
+        jobsOf(BatchDiscovery.discoverFromSeg(seg).write.format("noop").mode("overwrite").save()))
+    }
+    assert(full <= 9, s"discoverFullFromStages ran $full jobs")
+    assert(task <= 5, s"one action over discoverFromSeg ran $task jobs")
+  }
+
+  test("report and feature table job counts stay at or below the two-action/two-pass forms'") {
+    // render runs twice on one input: a count that varies between runs
+    // means its plan depends on runtime decisions, and the lock means nothing
+    val (render1, render2, feats) = withStagedLog { (_, seg) =>
+      val disc = Pinned.stage(BatchDiscovery.discoverFromSeg(seg))
+      disc.count()
+      try (jobsOf(graft.pm.Reporting.render(disc)), jobsOf(graft.pm.Reporting.render(disc)),
+        jobsOf(Pinned.releaseFrame(graft.rules.Features.featuresTable(disc))))
+      finally Pinned.releaseFrame(disc)
+    }
+    assert(render1 <= 6, s"Reporting.render ran $render1 jobs")
+    assert(render1 == render2, s"Reporting.render ran $render1 jobs, then $render2 on the same input")
+    assert(feats <= 10, s"featuresTable ran $feats jobs")
   }
 
   test("building query DataFrames runs zero Spark jobs (no driver actions mid-plan)") {

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The session memo's contract: one build per key under concurrent
   * callers, nested builds on the one map, failed builds retried, and the
   * per-node dataset-switch eviction (blocks released, other nodes kept,
-  * stopped sessions dropped without a release). */
+  * stopped sessions dropped without a release, files of the bucketed
+  * copies deleted). */
 class SessionMemoSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
   private val sfDir = "/root/testdata/sf0.001"
@@ -108,6 +109,20 @@ class SessionMemoSpec extends AnyFunSuite {
     assert(memo.keys(other).isEmpty, "stopped session's entries must be dropped")
     assert(released.get == 0, "a stopped session's blocks are never touched")
     assert(memo.keys(spark) == Set(("d", "x")))
+  }
+
+  test("bucketed copies: a dataset switch drops their tables and deletes their files") {
+    // the same files under a second path: a distinct dataset key
+    val alias = sfDir + "/"
+    def location(t: String): java.io.File = new java.io.File(new java.net.URI(
+      spark.sql(s"DESCRIBE TABLE EXTENDED $t").collect()
+        .collectFirst { case r if r.getString(0) == "Location" => r.getString(1) }.get))
+    val (ot, lt) = relational.Bucketing.ensureBucketed(spark, sfDir)
+    val root = location(ot).getParentFile
+    assert(root.getName.startsWith("graft_bucketed") && root == location(lt).getParentFile)
+    relational.Bucketing.ensureBucketed(spark, alias)
+    assert(!root.exists(), s"$root must be deleted on a dataset switch")
+    assert(!spark.catalog.tableExists(ot) && !spark.catalog.tableExists(lt))
   }
 
   test("rule fits are evicted on a dataset switch") {

@@ -9,21 +9,23 @@ class SourcesSpec extends AnyFunSuite {
 
   test("A3 csv.gz sink roundtrips through the A1 source") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_csv").toString + "/log"
-    val df = Seq(
-      ("Case1", "A", "2024-01-01 10:00:00", "2024-01-01 11:00:00", "r1"),
-      ("Case2", "B", "2024-01-02 10:00:00.123456", "2024-01-02 11:30:00", null))
-      .toDF("case_id", "Activity", "start_time", "end_time", "Resource")
-    EventLogCsv.writeCsvGz(df, out)
-    val back = EventLogCsv.read(spark, out, LogSchema())
-    assert(back.count() == 2L)
-    val r = back.filter($"activity" === "B").collect()(0)
-    assert(r.getAs[String]("resource") == "NOT_SET") // null fill
-    assert(r.getAs[Long]("start_us") % 1000000L == 123456L) // us precision kept
-    // event ids are file-order monotonic (ordering-only contract: distinct
-    // and increasing with row position; values are partition-encoded)
-    val ids = back.select("event_id").as[Long].collect().toSeq
-    assert(ids.distinct.length == 2)
+    SparkSuite.withTempDir("graft_csv") { base =>
+      val out = base + "/log"
+      val df = Seq(
+        ("Case1", "A", "2024-01-01 10:00:00", "2024-01-01 11:00:00", "r1"),
+        ("Case2", "B", "2024-01-02 10:00:00.123456", "2024-01-02 11:30:00", null))
+        .toDF("case_id", "Activity", "start_time", "end_time", "Resource")
+      EventLogCsv.writeCsvGz(df, out)
+      val back = EventLogCsv.read(spark, out, LogSchema())
+      assert(back.count() == 2L)
+      val r = back.filter($"activity" === "B").collect()(0)
+      assert(r.getAs[String]("resource") == "NOT_SET") // null fill
+      assert(r.getAs[Long]("start_us") % 1000000L == 123456L) // us precision kept
+      // event ids are file-order monotonic (ordering-only contract: distinct
+      // and increasing with row position; values are partition-encoded)
+      val ids = back.select("event_id").as[Long].collect().toSeq
+      assert(ids.distinct.length == 2)
+    }
   }
 
   test("harness interface contract: every table carries the columns/types the engine consumes") {
@@ -80,73 +82,72 @@ class SourcesSpec extends AnyFunSuite {
       1704103200123456L, // 2024-01-01T10:00:00.123456Z
       1704189600999999L, // 2024-01-02T10:00:00.999999Z
       0L)                // epoch
-    def mkDir(tag: String): String =
-      java.nio.file.Files.createTempDirectory(s"graft_enc_$tag").toString
-
     // (a) legacy TIMESTAMP(NANOS): Spark cannot write it — craft the file with
     // parquet-mr directly, adding sub-microsecond noise the loader must truncate
-    val nanosDir = mkDir("nanos")
-    locally {
-      import org.apache.parquet.schema.MessageTypeParser
-      import org.apache.parquet.example.data.simple.SimpleGroupFactory
-      import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
-      val schema = MessageTypeParser.parseMessageType(
-        "message events { optional int64 event_id; optional int64 ts (TIMESTAMP(NANOS,false)); }")
-      val conf = new org.apache.hadoop.conf.Configuration()
-      GroupWriteSupport.setSchema(schema, conf)
-      val w = ExampleParquetWriter.builder(
-          new org.apache.hadoop.fs.Path(s"$nanosDir/events.parquet"))
-        .withConf(conf).withType(schema).build()
-      val gf = new SimpleGroupFactory(schema)
-      microsUtc.zipWithIndex.foreach { case (us, i) =>
-        val g = gf.newGroup()
-        g.add("event_id", i.toLong)
-        g.add("ts", us * 1000L + 789L) // ns, with sub-us residue to truncate
-        w.write(g)
+    SparkSuite.withTempDir("graft_enc") { root =>
+      val nanosDir = s"$root/nanos"
+      locally {
+        import org.apache.parquet.schema.MessageTypeParser
+        import org.apache.parquet.example.data.simple.SimpleGroupFactory
+        import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
+        val schema = MessageTypeParser.parseMessageType(
+          "message events { optional int64 event_id; optional int64 ts (TIMESTAMP(NANOS,false)); }")
+        val conf = new org.apache.hadoop.conf.Configuration()
+        GroupWriteSupport.setSchema(schema, conf)
+        val w = ExampleParquetWriter.builder(
+            new org.apache.hadoop.fs.Path(s"$nanosDir/events.parquet"))
+          .withConf(conf).withType(schema).build()
+        val gf = new SimpleGroupFactory(schema)
+        microsUtc.zipWithIndex.foreach { case (us, i) =>
+          val g = gf.newGroup()
+          g.add("event_id", i.toLong)
+          g.add("ts", us * 1000L + 789L) // ns, with sub-us residue to truncate
+          w.write(g)
+        }
+        w.close()
       }
-      w.close()
+
+      // (b) MICROS isAdjustedToUTC=false: what Spark writes for TIMESTAMP_NTZ
+      // (the current harness generation)
+      val ntzDir = s"$root/ntz"
+      microsUtc.zipWithIndex.toDF("us", "event_id")
+        .select($"event_id".cast("long"),
+          expr("convert_timezone('UTC', cast(timestamp_micros(us) as timestamp_ntz))").as("ts"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$ntzDir/events.parquet")
+
+      // (c) MICROS isAdjustedToUTC=true: what Spark writes for TIMESTAMP when
+      // outputTimestampType=TIMESTAMP_MICROS (instant semantics)
+      val utcDir = s"$root/utc"
+      val prevOut = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
+      spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      try microsUtc.zipWithIndex.toDF("us", "event_id")
+        .select($"event_id".cast("long"), timestamp_micros($"us").as("ts"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$utcDir/events.parquet")
+      finally prevOut.foreach(spark.conf.set("spark.sql.parquet.outputTimestampType", _))
+
+      // collect the NTZ values as LocalDateTime and reduce to epoch micros in
+      // the test itself — session-timezone-proof on the assertion side too
+      def loadedMicros(dir: String): Map[Long, Long] =
+        Tables.events(spark, dir)
+          .select($"event_id", $"ts")
+          .collect().map { r =>
+            val t = r.getAs[java.time.LocalDateTime]("ts")
+            r.getLong(0) ->
+              (t.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + t.getNano / 1000L)
+          }.toMap
+
+      val expected = microsUtc.zipWithIndex.map { case (us, i) => i.toLong -> us }.toMap
+      assert(loadedMicros(nanosDir) == expected, "nanos-as-long encoding")
+      assert(loadedMicros(ntzDir) == expected, "MICROS-NTZ encoding")
+      assert(loadedMicros(utcDir) == expected, "MICROS-UTC encoding")
+
+      // the instant (isAdjustedToUTC=true) path must be session-timezone
+      // invariant — a bare NTZ cast would shift by the session tz
+      val prevTz = spark.conf.get("spark.sql.session.timeZone")
+      spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+      try assert(loadedMicros(utcDir) == expected, "MICROS-UTC under non-UTC session tz")
+      finally spark.conf.set("spark.sql.session.timeZone", prevTz)
     }
-
-    // (b) MICROS isAdjustedToUTC=false: what Spark writes for TIMESTAMP_NTZ
-    // (the current harness generation)
-    val ntzDir = mkDir("ntz")
-    microsUtc.zipWithIndex.toDF("us", "event_id")
-      .select($"event_id".cast("long"),
-        expr("convert_timezone('UTC', cast(timestamp_micros(us) as timestamp_ntz))").as("ts"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$ntzDir/events.parquet")
-
-    // (c) MICROS isAdjustedToUTC=true: what Spark writes for TIMESTAMP when
-    // outputTimestampType=TIMESTAMP_MICROS (instant semantics)
-    val utcDir = mkDir("utc")
-    val prevOut = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try microsUtc.zipWithIndex.toDF("us", "event_id")
-      .select($"event_id".cast("long"), timestamp_micros($"us").as("ts"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$utcDir/events.parquet")
-    finally prevOut.foreach(spark.conf.set("spark.sql.parquet.outputTimestampType", _))
-
-    // collect the NTZ values as LocalDateTime and reduce to epoch micros in
-    // the test itself — session-timezone-proof on the assertion side too
-    def loadedMicros(dir: String): Map[Long, Long] =
-      Tables.events(spark, dir)
-        .select($"event_id", $"ts")
-        .collect().map { r =>
-          val t = r.getAs[java.time.LocalDateTime]("ts")
-          r.getLong(0) ->
-            (t.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + t.getNano / 1000L)
-        }.toMap
-
-    val expected = microsUtc.zipWithIndex.map { case (us, i) => i.toLong -> us }.toMap
-    assert(loadedMicros(nanosDir) == expected, "nanos-as-long encoding")
-    assert(loadedMicros(ntzDir) == expected, "MICROS-NTZ encoding")
-    assert(loadedMicros(utcDir) == expected, "MICROS-UTC encoding")
-
-    // the instant (isAdjustedToUTC=true) path must be session-timezone
-    // invariant — a bare NTZ cast would shift by the session tz
-    val prevTz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-    try assert(loadedMicros(utcDir) == expected, "MICROS-UTC under non-UTC session tz")
-    finally spark.conf.set("spark.sql.session.timeZone", prevTz)
   }
 
   test("EP1 sharded sink (numFiles=0, the 100-TB mode) re-reads identical to the single-file artifact") {
@@ -163,37 +164,40 @@ class SourcesSpec extends AnyFunSuite {
       val log = EventLogCsv.read(spark, path)
       val view = graft.pm.Ep1.wtLogView(graft.pm.Ep1.analyze(log)).persist()
       try {
-        val base = java.nio.file.Files.createTempDirectory("graft_ep1_shard").toString
-        EventLogCsv.writeCsvGz(view, s"$base/one", numFiles = 1)
-        EventLogCsv.writeCsvGz(view.repartition(4), s"$base/sharded", numFiles = 0)
-        val parts = new java.io.File(s"$base/sharded").listFiles()
-          .count(_.getName.endsWith(".csv.gz"))
-        assert(parts >= 2, s"numFiles=0 should keep multiple shards, found $parts")
-        def rows(dir: String): Seq[String] = {
-          val df = spark.read.option("header", "true").csv(dir)
-          df.collect().map(_.toString).sorted.toSeq
+        SparkSuite.withTempDir("graft_ep1_shard") { base =>
+          EventLogCsv.writeCsvGz(view, s"$base/one", numFiles = 1)
+          EventLogCsv.writeCsvGz(view.repartition(4), s"$base/sharded", numFiles = 0)
+          val parts = new java.io.File(s"$base/sharded").listFiles()
+            .count(_.getName.endsWith(".csv.gz"))
+          assert(parts >= 2, s"numFiles=0 should keep multiple shards, found $parts")
+          def rows(dir: String): Seq[String] = {
+            val df = spark.read.option("header", "true").csv(dir)
+            df.collect().map(_.toString).sorted.toSeq
+          }
+          val a = rows(s"$base/one")
+          val b = rows(s"$base/sharded")
+          assert(a.size == b.size, s"row count drift: ${a.size} vs ${b.size}")
+          assert(a == b, "sharded artifact content differs from single-file artifact")
         }
-        val a = rows(s"$base/one")
-        val b = rows(s"$base/sharded")
-        assert(a.size == b.size, s"row count drift: ${a.size} vs ${b.size}")
-        assert(a == b, "sharded artifact content differs from single-file artifact")
       } finally view.unpersist()
     }
   }
 
   test("sharded sink: numFiles > 1 writes that many part files, same rows back") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_csv_sharded").toString + "/log"
-    val df = spark.range(0L, 100L).select(
-      concat(lit("Case"), $"id").as("case_id"), lit("A").as("Activity"),
-      lit("2024-01-01 10:00:00").as("start_time"),
-      lit("2024-01-01 11:00:00").as("end_time"), lit("r1").as("Resource"))
-    EventLogCsv.writeCsvGz(df, out, numFiles = 4)
-    val parts = new java.io.File(out).listFiles().count(_.getName.endsWith(".csv.gz"))
-    assert(parts == 4, s"expected 4 shards, found $parts")
-    val back = EventLogCsv.read(spark, out, LogSchema())
-    assert(back.count() == 100L)
-    assert(back.select("case_str").distinct().count() == 100L)
+    SparkSuite.withTempDir("graft_csv_sharded") { base =>
+      val out = base + "/log"
+      val df = spark.range(0L, 100L).select(
+        concat(lit("Case"), $"id").as("case_id"), lit("A").as("Activity"),
+        lit("2024-01-01 10:00:00").as("start_time"),
+        lit("2024-01-01 11:00:00").as("end_time"), lit("r1").as("Resource"))
+      EventLogCsv.writeCsvGz(df, out, numFiles = 4)
+      val parts = new java.io.File(out).listFiles().count(_.getName.endsWith(".csv.gz"))
+      assert(parts == 4, s"expected 4 shards, found $parts")
+      val back = EventLogCsv.read(spark, out, LogSchema())
+      assert(back.count() == 100L)
+      assert(back.select("case_str").distinct().count() == 100L)
+    }
   }
 
   test("A11 compaction: 8 files/day bin-pack to the ceil(rows/target) bound, content intact") {

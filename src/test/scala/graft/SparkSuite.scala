@@ -33,4 +33,11 @@ object SparkSuite {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Runs `body` on a fresh temp dir named `prefix*`, deleted afterwards. */
+  def withTempDir[A](prefix: String)(body: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir.toString)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
 }

@@ -26,26 +26,27 @@ class StreamingSpec extends AnyFunSuite {
         sum(round($"value" * 100d).cast("long")).as("s"))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
 
-    val staged = java.nio.file.Files.createTempDirectory("graft_state").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      java.nio.file.Paths.get(s"$staged/events.parquet"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(s"$dir/events.parquet").schema)
-      .parquet(staged)
-    val q = StreamOps.runningUserCounts(stream)
-      .writeStream.outputMode("update")
-      .format("memory").queryName("graft_state_test")
-      .start()
-    try {
-      q.processAllAvailable()
-      // latest state per user = final running totals
-      val got = spark.sql(
-        """SELECT user_id, max_by(n, n) AS n, max_by(sum_value_e2, n) AS s
-          |FROM graft_state_test GROUP BY user_id""".stripMargin)
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-      assert(got == expected)
-    } finally q.stop()
+    SparkSuite.withTempDir("graft_state") { staged =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$dir/events.parquet"),
+        java.nio.file.Paths.get(s"$staged/events.parquet"))
+      val stream = spark.readStream
+        .schema(spark.read.parquet(s"$dir/events.parquet").schema)
+        .parquet(staged)
+      val q = StreamOps.runningUserCounts(stream)
+        .writeStream.outputMode("update")
+        .format("memory").queryName("graft_state_test")
+        .start()
+      try {
+        q.processAllAvailable()
+        // latest state per user = final running totals
+        val got = spark.sql(
+          """SELECT user_id, max_by(n, n) AS n, max_by(sum_value_e2, n) AS s
+            |FROM graft_state_test GROUP BY user_id""".stripMargin)
+          .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+        assert(got == expected)
+      } finally q.stop()
+    }
   }
 
   test("streaming tumbling counts equal batch tumbling counts") {
@@ -57,24 +58,25 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.get(0).toString, r.getString(1)) -> r.getLong(2)).toMap
 
     // readStream needs a directory source: stage the single parquet file
-    val staged = java.nio.file.Files.createTempDirectory("graft_stream").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      java.nio.file.Paths.get(s"$staged/events.parquet"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(s"$dir/events.parquet").schema)
-      .parquet(staged)
-      .transform(Tables.normalizeTs)
-    val q = StreamOps.tumblingStream(stream)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("graft_stream_test")
-      .start()
-    try {
-      q.processAllAvailable()
-      val got = spark.sql("SELECT win_start, event_type, n FROM graft_stream_test")
-        .collect().map(r => (r.get(0).toString, r.getString(1)) -> r.getLong(2)).toMap
-      assert(got == expected)
-    } finally q.stop()
+    SparkSuite.withTempDir("graft_stream") { staged =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$dir/events.parquet"),
+        java.nio.file.Paths.get(s"$staged/events.parquet"))
+      val stream = spark.readStream
+        .schema(spark.read.parquet(s"$dir/events.parquet").schema)
+        .parquet(staged)
+        .transform(Tables.normalizeTs)
+      val q = StreamOps.tumblingStream(stream)
+        .writeStream.outputMode("complete")
+        .format("memory").queryName("graft_stream_test")
+        .start()
+      try {
+        q.processAllAvailable()
+        val got = spark.sql("SELECT win_start, event_type, n FROM graft_stream_test")
+          .collect().map(r => (r.get(0).toString, r.getString(1)) -> r.getLong(2)).toMap
+        assert(got == expected)
+      } finally q.stop()
+    }
   }
 
   test("stream-then-rank top-k equals batch windowed top-k") {
@@ -84,27 +86,28 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.get(0).toString, r.getInt(1)) ->
         (r.getString(2), r.getLong(3))).toMap
 
-    val staged = java.nio.file.Files.createTempDirectory("graft_topk").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      java.nio.file.Paths.get(s"$staged/events.parquet"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(s"$dir/events.parquet").schema)
-      .parquet(staged)
-      .transform(Tables.normalizeTs)
-    // aggregate in the stream, rank over the sink at serve time — the
-    // production continuous-top-k split (rankWindows scaladoc)
-    val q = StreamOps.tumblingStream(stream)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("graft_topk_test")
-      .start()
-    try {
-      q.processAllAvailable()
-      val got = StreamOps.rankWindows(spark.table("graft_topk_test"))
-        .collect().map(r => (r.get(0).toString, r.getInt(1)) ->
-          (r.getString(2), r.getLong(3))).toMap
-      assert(got == expected)
-    } finally q.stop()
+    SparkSuite.withTempDir("graft_topk") { staged =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$dir/events.parquet"),
+        java.nio.file.Paths.get(s"$staged/events.parquet"))
+      val stream = spark.readStream
+        .schema(spark.read.parquet(s"$dir/events.parquet").schema)
+        .parquet(staged)
+        .transform(Tables.normalizeTs)
+      // aggregate in the stream, rank over the sink at serve time — the
+      // production continuous-top-k split (rankWindows scaladoc)
+      val q = StreamOps.tumblingStream(stream)
+        .writeStream.outputMode("complete")
+        .format("memory").queryName("graft_topk_test")
+        .start()
+      try {
+        q.processAllAvailable()
+        val got = StreamOps.rankWindows(spark.table("graft_topk_test"))
+          .collect().map(r => (r.get(0).toString, r.getInt(1)) ->
+            (r.getString(2), r.getLong(3))).toMap
+        assert(got == expected)
+      } finally q.stop()
+    }
   }
 
   test("streaming windowed HLL registers equal batch registers (sketch state merge)") {
@@ -113,23 +116,24 @@ class StreamingSpec extends AnyFunSuite {
     val expected = StreamOps.windowedHll(Tables.events(spark, dir))
       .collect().map(r => (r.get(0).toString, r.getLong(1)) -> r.getLong(2)).toMap
 
-    val staged = java.nio.file.Files.createTempDirectory("graft_hll").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      java.nio.file.Paths.get(s"$staged/events.parquet"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(s"$dir/events.parquet").schema)
-      .parquet(staged)
-    val q = StreamOps.windowedHllStream(stream)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("graft_hll_test")
-      .start()
-    try {
-      q.processAllAvailable()
-      val got = spark.sql("SELECT win_start, bucket, max_rho FROM graft_hll_test")
-        .collect().map(r => (r.get(0).toString, r.getLong(1)) -> r.getLong(2)).toMap
-      assert(got == expected)
-    } finally q.stop()
+    SparkSuite.withTempDir("graft_hll") { staged =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$dir/events.parquet"),
+        java.nio.file.Paths.get(s"$staged/events.parquet"))
+      val stream = spark.readStream
+        .schema(spark.read.parquet(s"$dir/events.parquet").schema)
+        .parquet(staged)
+      val q = StreamOps.windowedHllStream(stream)
+        .writeStream.outputMode("complete")
+        .format("memory").queryName("graft_hll_test")
+        .start()
+      try {
+        q.processAllAvailable()
+        val got = spark.sql("SELECT win_start, bucket, max_rho FROM graft_hll_test")
+          .collect().map(r => (r.get(0).toString, r.getLong(1)) -> r.getLong(2)).toMap
+        assert(got == expected)
+      } finally q.stop()
+    }
   }
 
   test("streaming drift bin registers equal batch registers (KS state merge)") {
@@ -139,26 +143,27 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.get(0).toString, r.getLong(1)) ->
         (r.getLong(2), r.getLong(3))).toMap
 
-    val staged = java.nio.file.Files.createTempDirectory("graft_drift").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      java.nio.file.Paths.get(s"$staged/events.parquet"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(s"$dir/events.parquet").schema)
-      .parquet(staged)
-    val q = StreamOps.windowedDriftBinsStream(stream)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("graft_drift_test")
-      .start()
-    try {
-      q.processAllAvailable()
-      val got = spark.sql("SELECT win_start, bucket, ca, cb FROM graft_drift_test")
-        .collect().map(r => (r.get(0).toString, r.getLong(1)) ->
-          (r.getLong(2), r.getLong(3))).toMap
-      assert(got == expected)
-      // and the graded KS view is a pure function of those registers
-      assert(StreamOps.windowedKs(Tables.events(spark, dir)).count() > 0)
-    } finally q.stop()
+    SparkSuite.withTempDir("graft_drift") { staged =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$dir/events.parquet"),
+        java.nio.file.Paths.get(s"$staged/events.parquet"))
+      val stream = spark.readStream
+        .schema(spark.read.parquet(s"$dir/events.parquet").schema)
+        .parquet(staged)
+      val q = StreamOps.windowedDriftBinsStream(stream)
+        .writeStream.outputMode("complete")
+        .format("memory").queryName("graft_drift_test")
+        .start()
+      try {
+        q.processAllAvailable()
+        val got = spark.sql("SELECT win_start, bucket, ca, cb FROM graft_drift_test")
+          .collect().map(r => (r.get(0).toString, r.getLong(1)) ->
+            (r.getLong(2), r.getLong(3))).toMap
+        assert(got == expected)
+        // and the graded KS view is a pure function of those registers
+        assert(StreamOps.windowedKs(Tables.events(spark, dir)).count() > 0)
+      } finally q.stop()
+    }
   }
 
   test("streaming sliding counts+sums equal batch sliding (overlapping windows)") {
@@ -168,24 +173,25 @@ class StreamingSpec extends AnyFunSuite {
     val expected = StreamOps.sliding(batch)
       .collect().map(_.toString).sorted.toSeq
 
-    val staged = java.nio.file.Files.createTempDirectory("graft_slide").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      java.nio.file.Paths.get(s"$staged/events.parquet"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(s"$dir/events.parquet").schema)
-      .parquet(staged)
-      .transform(Tables.normalizeTs)
-    val q = StreamOps.slidingStream(stream)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("graft_slide_test")
-      .start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("graft_slide_test")
-        .collect().map(_.toString).sorted.toSeq
-      assert(got == expected)
-    } finally q.stop()
+    SparkSuite.withTempDir("graft_slide") { staged =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$dir/events.parquet"),
+        java.nio.file.Paths.get(s"$staged/events.parquet"))
+      val stream = spark.readStream
+        .schema(spark.read.parquet(s"$dir/events.parquet").schema)
+        .parquet(staged)
+        .transform(Tables.normalizeTs)
+      val q = StreamOps.slidingStream(stream)
+        .writeStream.outputMode("complete")
+        .format("memory").queryName("graft_slide_test")
+        .start()
+      try {
+        q.processAllAvailable()
+        val got = spark.table("graft_slide_test")
+          .collect().map(_.toString).sorted.toSeq
+        assert(got == expected)
+      } finally q.stop()
+    }
   }
 
   test("streaming watermarked dedup equals batch distinct") {
@@ -194,24 +200,25 @@ class StreamingSpec extends AnyFunSuite {
     val expected = StreamOps.dedup(Tables.events(spark, dir))
       .collect().map(_.toString).sorted.toSeq
 
-    val staged = java.nio.file.Files.createTempDirectory("graft_dedup").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      java.nio.file.Paths.get(s"$staged/events.parquet"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(s"$dir/events.parquet").schema)
-      .parquet(staged)
-      .transform(Tables.normalizeTs)
-    val q = StreamOps.dedupStream(stream)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_dedup_test")
-      .start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("graft_dedup_test")
-        .collect().map(_.toString).sorted.toSeq
-      assert(got == expected)
-    } finally q.stop()
+    SparkSuite.withTempDir("graft_dedup") { staged =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$dir/events.parquet"),
+        java.nio.file.Paths.get(s"$staged/events.parquet"))
+      val stream = spark.readStream
+        .schema(spark.read.parquet(s"$dir/events.parquet").schema)
+        .parquet(staged)
+        .transform(Tables.normalizeTs)
+      val q = StreamOps.dedupStream(stream)
+        .writeStream.outputMode("append")
+        .format("memory").queryName("graft_dedup_test")
+        .start()
+      try {
+        q.processAllAvailable()
+        val got = spark.table("graft_dedup_test")
+          .collect().map(_.toString).sorted.toSeq
+        assert(got == expected)
+      } finally q.stop()
+    }
   }
 
   test("streaming windows are timezone-invariant (non-slide-multiple offset)") {
@@ -223,28 +230,29 @@ class StreamingSpec extends AnyFunSuite {
     // shifted boundaries by 15 min before the ntzAsUtcInstant conversion).
     val expected = StreamOps.sliding(Tables.events(spark, dir))
       .collect().map(_.toString).sorted.toSeq
-    val staged = java.nio.file.Files.createTempDirectory("graft_tz").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      java.nio.file.Paths.get(s"$staged/events.parquet"))
-    val priorTz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "Asia/Kathmandu")
-    try {
-      val stream = spark.readStream
-        .schema(spark.read.parquet(s"$dir/events.parquet").schema)
-        .parquet(staged)
-        .transform(Tables.normalizeTs)
-      val q = StreamOps.slidingStream(stream)
-        .writeStream.outputMode("complete")
-        .format("memory").queryName("graft_tz_test")
-        .start()
+    SparkSuite.withTempDir("graft_tz") { staged =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$dir/events.parquet"),
+        java.nio.file.Paths.get(s"$staged/events.parquet"))
+      val priorTz = spark.conf.get("spark.sql.session.timeZone")
+      spark.conf.set("spark.sql.session.timeZone", "Asia/Kathmandu")
       try {
-        q.processAllAvailable()
-        val got = spark.table("graft_tz_test").collect().map(_.toString).sorted.toSeq
-        assert(got == expected,
-          "streaming sliding under Asia/Kathmandu must equal the timezone-free batch form")
-      } finally q.stop()
-    } finally spark.conf.set("spark.sql.session.timeZone", priorTz)
+        val stream = spark.readStream
+          .schema(spark.read.parquet(s"$dir/events.parquet").schema)
+          .parquet(staged)
+          .transform(Tables.normalizeTs)
+        val q = StreamOps.slidingStream(stream)
+          .writeStream.outputMode("complete")
+          .format("memory").queryName("graft_tz_test")
+          .start()
+        try {
+          q.processAllAvailable()
+          val got = spark.table("graft_tz_test").collect().map(_.toString).sorted.toSeq
+          assert(got == expected,
+            "streaming sliding under Asia/Kathmandu must equal the timezone-free batch form")
+        } finally q.stop()
+      } finally spark.conf.set("spark.sql.session.timeZone", priorTz)
+    }
   }
 
   test("late-beyond-watermark events: dedup drops them, sessions never emit them") {
@@ -262,63 +270,65 @@ class StreamingSpec extends AnyFunSuite {
 
     // --- dedup: a duplicate arriving after the 2h watermark horizon is
     // DROPPED (not re-emitted even though its dedup state has expired)
-    val dDir = java.nio.file.Files.createTempDirectory("graft_late_dedup").toString
-    writeBatch(dDir, 1,
-      (1L, "a", 1.0, "2026-01-01 00:00:00"),
-      (1L, "a", 1.0, "2026-01-01 12:00:00")) // watermark after batch: 10:00
-    val dStream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(s"$dDir/b*")
-    val dq = StreamOps.dedupStream(dStream)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_late_dedup")
-      .start()
-    try {
-      dq.processAllAvailable()
-      // late duplicate of the expired 00:00 key + one fresh row
-      writeBatch(dDir, 2,
-        (1L, "a", 1.0, "2026-01-01 00:00:00"),  // LATE: < watermark 10:00
-        (2L, "b", 1.0, "2026-01-01 12:30:00"))
-      dq.processAllAvailable()
-      val got = spark.table("graft_late_dedup")
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-      val us = (h: Int, m: Int) =>
-        java.time.LocalDateTime.of(2026, 1, 1, h, m)
-          .toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L
-      assert(got == Set((1L, "a", us(0, 0)), (1L, "a", us(12, 0)), (2L, "b", us(12, 30))),
-        s"late duplicate must be dropped, fresh row emitted: $got")
-    } finally dq.stop()
+    SparkSuite.withTempDir("graft_late_dedup") { dDir =>
+      writeBatch(dDir, 1,
+        (1L, "a", 1.0, "2026-01-01 00:00:00"),
+        (1L, "a", 1.0, "2026-01-01 12:00:00")) // watermark after batch: 10:00
+      val dStream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+        .parquet(s"$dDir/b*")
+      val dq = StreamOps.dedupStream(dStream)
+        .writeStream.outputMode("append")
+        .format("memory").queryName("graft_late_dedup")
+        .start()
+      try {
+        dq.processAllAvailable()
+        // late duplicate of the expired 00:00 key + one fresh row
+        writeBatch(dDir, 2,
+          (1L, "a", 1.0, "2026-01-01 00:00:00"),  // LATE: < watermark 10:00
+          (2L, "b", 1.0, "2026-01-01 12:30:00"))
+        dq.processAllAvailable()
+        val got = spark.table("graft_late_dedup")
+          .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+        val us = (h: Int, m: Int) =>
+          java.time.LocalDateTime.of(2026, 1, 1, h, m)
+            .toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L
+        assert(got == Set((1L, "a", us(0, 0)), (1L, "a", us(12, 0)), (2L, "b", us(12, 30))),
+          s"late duplicate must be dropped, fresh row emitted: $got")
+      } finally dq.stop()
 
-    // --- flatMapGroupsWithState sessions: a closed session is emitted via
-    // event-time timeout once the watermark passes; an event arriving
-    // beyond the watermark never produces a session
-    val sDir = java.nio.file.Files.createTempDirectory("graft_late_sess").toString
-    writeBatch(sDir, 1,
-      (1L, "a", 1.0, "2026-01-01 00:00:00"),
-      (1L, "a", 2.0, "2026-01-01 00:05:00")) // one open session [00:00, 00:15)
-    val sStream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(s"$sDir/b*")
-    val sq = StreamOps.sessionsViaFlatMapGroups(sStream)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_late_sess")
-      .start()
-    try {
-      sq.processAllAvailable()
-      // advance the watermark to 10:00 (12:00 - 2h)
-      writeBatch(sDir, 2, (2L, "b", 1.0, "2026-01-01 12:00:00"))
-      sq.processAllAvailable()
-      // user 3's event is far below the 10:00 watermark -> filtered before
-      // the stateful operator (its session must never appear); user 1's
-      // session times out (close 00:15 < watermark) in this batch
-      writeBatch(sDir, 3, (3L, "c", 1.0, "2026-01-01 01:00:00"))
-      sq.processAllAvailable()
-      val got = spark.table("graft_late_sess")
-        .as[graft.streaming.SessionOut].collect().toSet
-      val t0 = java.time.LocalDateTime.of(2026, 1, 1, 0, 0)
-        .toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L
-      assert(got == Set(graft.streaming.SessionOut(
-        1L, t0, t0 + 15L * 60 * 1000000L, 2L, 300L)),
-        s"exactly user 1's timed-out session; late user 3 dropped, user 2 still open: $got")
-    } finally sq.stop()
+      // --- flatMapGroupsWithState sessions: a closed session is emitted via
+      // event-time timeout once the watermark passes; an event arriving
+      // beyond the watermark never produces a session
+      SparkSuite.withTempDir("graft_late_sess") { sDir =>
+        writeBatch(sDir, 1,
+          (1L, "a", 1.0, "2026-01-01 00:00:00"),
+          (1L, "a", 2.0, "2026-01-01 00:05:00")) // one open session [00:00, 00:15)
+        val sStream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+          .parquet(s"$sDir/b*")
+        val sq = StreamOps.sessionsViaFlatMapGroups(sStream)
+          .writeStream.outputMode("append")
+          .format("memory").queryName("graft_late_sess")
+          .start()
+        try {
+          sq.processAllAvailable()
+          // advance the watermark to 10:00 (12:00 - 2h)
+          writeBatch(sDir, 2, (2L, "b", 1.0, "2026-01-01 12:00:00"))
+          sq.processAllAvailable()
+          // user 3's event is far below the 10:00 watermark -> filtered before
+          // the stateful operator (its session must never appear); user 1's
+          // session times out (close 00:15 < watermark) in this batch
+          writeBatch(sDir, 3, (3L, "c", 1.0, "2026-01-01 01:00:00"))
+          sq.processAllAvailable()
+          val got = spark.table("graft_late_sess")
+            .as[graft.streaming.SessionOut].collect().toSet
+          val t0 = java.time.LocalDateTime.of(2026, 1, 1, 0, 0)
+            .toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L
+          assert(got == Set(graft.streaming.SessionOut(
+            1L, t0, t0 + 15L * 60 * 1000000L, 2L, 300L)),
+            s"exactly user 1's timed-out session; late user 3 dropped, user 2 still open: $got")
+        } finally sq.stop()
+      }
+    }
   }
 
   test("stream-stream attribution join equals batch; late rows are dropped") {
@@ -328,61 +338,64 @@ class StreamingSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.01"
     val expected = StreamOps.attributionJoin(Tables.events(spark, dir))
       .collect().map(_.toString).sorted.toSeq
-    val staged = java.nio.file.Files.createTempDirectory("graft_ssj").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      java.nio.file.Paths.get(s"$staged/events.parquet"))
-    val schema0 = spark.read.parquet(s"$dir/events.parquet").schema
-    def leg(tpe: String) = spark.readStream.schema(schema0).parquet(staged)
-      .transform(Tables.normalizeTs).filter($"event_type" === tpe)
-    val q = StreamOps.attributionJoinStream(leg("click"), leg("purchase"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_ssj_test")
-      .start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("graft_ssj_test").collect().map(_.toString).sorted.toSeq
-      assert(got == expected, s"stream-stream join must equal batch join")
-    } finally q.stop()
+    SparkSuite.withTempDir("graft_ssj") { staged =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$dir/events.parquet"),
+        java.nio.file.Paths.get(s"$staged/events.parquet"))
+      val schema0 = spark.read.parquet(s"$dir/events.parquet").schema
+      def leg(tpe: String) = spark.readStream.schema(schema0).parquet(staged)
+        .transform(Tables.normalizeTs).filter($"event_type" === tpe)
+      val q = StreamOps.attributionJoinStream(leg("click"), leg("purchase"))
+        .writeStream.outputMode("append")
+        .format("memory").queryName("graft_ssj_test")
+        .start()
+      try {
+        q.processAllAvailable()
+        val got = spark.table("graft_ssj_test").collect().map(_.toString).sorted.toSeq
+        assert(got == expected, s"stream-stream join must equal batch join")
+      } finally q.stop()
 
-    // --- late drop: a purchase below its leg's watermark must not match
-    // an in-window click whose state is still live
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("user_id", LongType),
-      StructField("event_type", StringType), StructField("value", DoubleType),
-      StructField("ts", TimestampNTZType)))
-    def writeBatch(d: String, n: Int, rows: (Long, Long, String, String)*): Unit =
-      rows.toDF("event_id", "user_id", "event_type", "s")
-        .select($"event_id", $"user_id", $"event_type", lit(1.0).as("value"),
-          to_timestamp_ntz($"s").as("ts"))
-        .coalesce(1).write.parquet(s"$d/b$n")
-    val cDir = java.nio.file.Files.createTempDirectory("graft_ssj_c").toString
-    val pDir = java.nio.file.Files.createTempDirectory("graft_ssj_p").toString
-    writeBatch(cDir, 1, (1L, 1L, "click", "2026-01-01 00:00:00"))
-    writeBatch(pDir, 1, (2L, 1L, "purchase", "2026-01-01 00:10:00"))
-    def lateLeg(d: String) = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$d/b*")
-    val lq = StreamOps.attributionJoinStream(lateLeg(cDir), lateLeg(pDir))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_ssj_late")
-      .start()
-    try {
-      lq.processAllAvailable() // emits (1,2) match; watermarks at 00:00/00:10
-      // advance both watermarks to ~10:00 (12:00 - 2h)
-      writeBatch(cDir, 2, (3L, 9L, "click", "2026-01-01 12:00:00"))
-      writeBatch(pDir, 2, (4L, 9L, "purchase", "2026-01-01 12:00:00"))
-      lq.processAllAvailable()
-      // LATE purchase at 00:05 (< watermark 10:00): in-window for click 1,
-      // but must be dropped by the purchase leg
-      writeBatch(pDir, 3, (5L, 1L, "purchase", "2026-01-01 00:05:00"))
-      lq.processAllAvailable()
-      val got = spark.table("graft_ssj_late")
-        .select($"click_event_id", $"purchase_event_id")
-        .as[(Long, Long)].collect().toSet
-      assert(got == Set((1L, 2L), (3L, 4L)),
-        s"late purchase 5 must be dropped, matches 1-2 and 3-4 kept: $got")
-    } finally lq.stop()
+      // --- late drop: a purchase below its leg's watermark must not match
+      // an in-window click whose state is still live
+      import org.apache.spark.sql.types._
+      val schema = StructType(Seq(
+        StructField("event_id", LongType), StructField("user_id", LongType),
+        StructField("event_type", StringType), StructField("value", DoubleType),
+        StructField("ts", TimestampNTZType)))
+      def writeBatch(d: String, n: Int, rows: (Long, Long, String, String)*): Unit =
+        rows.toDF("event_id", "user_id", "event_type", "s")
+          .select($"event_id", $"user_id", $"event_type", lit(1.0).as("value"),
+            to_timestamp_ntz($"s").as("ts"))
+          .coalesce(1).write.parquet(s"$d/b$n")
+      SparkSuite.withTempDir("graft_ssj_c") { cDir =>
+        SparkSuite.withTempDir("graft_ssj_p") { pDir =>
+          writeBatch(cDir, 1, (1L, 1L, "click", "2026-01-01 00:00:00"))
+          writeBatch(pDir, 1, (2L, 1L, "purchase", "2026-01-01 00:10:00"))
+          def lateLeg(d: String) = spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1").parquet(s"$d/b*")
+          val lq = StreamOps.attributionJoinStream(lateLeg(cDir), lateLeg(pDir))
+            .writeStream.outputMode("append")
+            .format("memory").queryName("graft_ssj_late")
+            .start()
+          try {
+            lq.processAllAvailable() // emits (1,2) match; watermarks at 00:00/00:10
+            // advance both watermarks to ~10:00 (12:00 - 2h)
+            writeBatch(cDir, 2, (3L, 9L, "click", "2026-01-01 12:00:00"))
+            writeBatch(pDir, 2, (4L, 9L, "purchase", "2026-01-01 12:00:00"))
+            lq.processAllAvailable()
+            // LATE purchase at 00:05 (< watermark 10:00): in-window for click 1,
+            // but must be dropped by the purchase leg
+            writeBatch(pDir, 3, (5L, 1L, "purchase", "2026-01-01 00:05:00"))
+            lq.processAllAvailable()
+            val got = spark.table("graft_ssj_late")
+              .select($"click_event_id", $"purchase_event_id")
+              .as[(Long, Long)].collect().toSet
+            assert(got == Set((1L, 2L), (3L, 4L)),
+              s"late purchase 5 must be dropped, matches 1-2 and 3-4 kept: $got")
+          } finally lq.stop()
+        }
+      }
+    }
   }
 
   test("flatMapGroupsWithState sessions equal batch island-detection sessions") {
@@ -408,30 +421,31 @@ class StreamingSpec extends AnyFunSuite {
     val batchSessions = StreamOps.sessionsViaFlatMapGroups(Tables.events(spark, dir))
       .collect().map(s => (s.user_id, s.sess_start_us) -> s).toMap
 
-    val staged = java.nio.file.Files.createTempDirectory("graft_fmg").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      java.nio.file.Paths.get(s"$staged/events.parquet"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(s"$dir/events.parquet").schema)
-      .parquet(staged)
-      .transform(Tables.normalizeTs)
-    val q = StreamOps.sessionsViaFlatMapGroups(stream)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_fmg_test")
-      .start()
-    try {
-      q.processAllAvailable()
-      // a single microbatch closes sessions whose successor event is in the
-      // same batch; open sessions wait on the event-time timeout (watermark
-      // driven) — everything emitted must match the batch result exactly
-      val got = spark.table("graft_fmg_test").as[graft.streaming.SessionOut].collect()
-      assert(got.nonEmpty, "stream emitted no closed sessions")
-      got.foreach { s =>
-        val b = batchSessions.get((s.user_id, s.sess_start_us))
-        assert(b.contains(s), s"stream session $s disagrees with batch ${b.orNull}")
-      }
-    } finally q.stop()
+    SparkSuite.withTempDir("graft_fmg") { staged =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$dir/events.parquet"),
+        java.nio.file.Paths.get(s"$staged/events.parquet"))
+      val stream = spark.readStream
+        .schema(spark.read.parquet(s"$dir/events.parquet").schema)
+        .parquet(staged)
+        .transform(Tables.normalizeTs)
+      val q = StreamOps.sessionsViaFlatMapGroups(stream)
+        .writeStream.outputMode("append")
+        .format("memory").queryName("graft_fmg_test")
+        .start()
+      try {
+        q.processAllAvailable()
+        // a single microbatch closes sessions whose successor event is in the
+        // same batch; open sessions wait on the event-time timeout (watermark
+        // driven) — everything emitted must match the batch result exactly
+        val got = spark.table("graft_fmg_test").as[graft.streaming.SessionOut].collect()
+        assert(got.nonEmpty, "stream emitted no closed sessions")
+        got.foreach { s =>
+          val b = batchSessions.get((s.user_id, s.sess_start_us))
+          assert(b.contains(s), s"stream session $s disagrees with batch ${b.orNull}")
+        }
+      } finally q.stop()
+    }
   }
 
   test("stream-static incremental probe equals the batch probe (append mode, zero state)") {
@@ -444,24 +458,25 @@ class StreamingSpec extends AnyFunSuite {
     // static side: the standing corpus index (batch-built, as a nightly
     // job maintains it); stream side: the incoming carve arriving as files
     val idx = ext.Dedup.corpusProbeIndex(docs.filter($"doc_id" % 10 =!= 0))
-    val staged = java.nio.file.Files.createTempDirectory("graft_incprobe").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/documents.parquet"),
-      java.nio.file.Paths.get(s"$staged/documents.parquet"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(s"$dir/documents.parquet").schema)
-      .parquet(staged)
-      .filter($"doc_id" % 10 === 0)
-    val q = StreamOps.incProbeStream(stream, idx)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_incprobe_test")
-      .start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("graft_incprobe_test")
-        .collect().map(_.toString).sorted.toSeq
-      assert(got == expected, s"stream ${got.size} rows vs batch ${expected.size}")
-    } finally q.stop()
+    SparkSuite.withTempDir("graft_incprobe") { staged =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$dir/documents.parquet"),
+        java.nio.file.Paths.get(s"$staged/documents.parquet"))
+      val stream = spark.readStream
+        .schema(spark.read.parquet(s"$dir/documents.parquet").schema)
+        .parquet(staged)
+        .filter($"doc_id" % 10 === 0)
+      val q = StreamOps.incProbeStream(stream, idx)
+        .writeStream.outputMode("append")
+        .format("memory").queryName("graft_incprobe_test")
+        .start()
+      try {
+        q.processAllAvailable()
+        val got = spark.table("graft_incprobe_test")
+          .collect().map(_.toString).sorted.toSeq
+        assert(got == expected, s"stream ${got.size} rows vs batch ${expected.size}")
+      } finally q.stop()
+    }
   }
 
   test("stream-static FIVE-gate composed probe equals the batch probe (append mode, zero state)") {
@@ -492,25 +507,26 @@ class StreamingSpec extends AnyFunSuite {
     val hashes = corpus.select(md5($"text".cast("binary")).as("h")).distinct()
     val filters = StreamOps.bloomScaleFilters(ext.Dedup.bloomDocLines(corpus))
     val idx = ext.Dedup.corpusProbeIndex(corpus)
-    val staged = java.nio.file.Files.createTempDirectory("graft_stingestmm").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/documents.parquet"),
-      java.nio.file.Paths.get(s"$staged/documents.parquet"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(s"$dir/documents.parquet").schema)
-      .parquet(staged)
-      .filter($"doc_id" % 10 === 0)
-    val q = StreamOps.ingestProbeStreamMm(stream, hashes, filters, idx,
-        emb, cents, keptM, labels)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_stingestmm_test")
-      .start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("graft_stingestmm_test")
-        .collect().map(_.toString).sorted.toSeq
-      assert(got == expected, s"stream ${got.size} rows vs batch ${expected.size}")
-    } finally q.stop()
+    SparkSuite.withTempDir("graft_stingestmm") { staged =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$dir/documents.parquet"),
+        java.nio.file.Paths.get(s"$staged/documents.parquet"))
+      val stream = spark.readStream
+        .schema(spark.read.parquet(s"$dir/documents.parquet").schema)
+        .parquet(staged)
+        .filter($"doc_id" % 10 === 0)
+      val q = StreamOps.ingestProbeStreamMm(stream, hashes, filters, idx,
+          emb, cents, keptM, labels)
+        .writeStream.outputMode("append")
+        .format("memory").queryName("graft_stingestmm_test")
+        .start()
+      try {
+        q.processAllAvailable()
+        val got = spark.table("graft_stingestmm_test")
+          .collect().map(_.toString).sorted.toSeq
+        assert(got == expected, s"stream ${got.size} rows vs batch ${expected.size}")
+      } finally q.stop()
+    }
   }
 
   test("stream-static image probe equals the batch probe (append mode, zero state)") {
@@ -525,24 +541,25 @@ class StreamingSpec extends AnyFunSuite {
     // hashed row-locally per micro-batch
     val idx = ext.Multimodal.imgIndex(ext.Multimodal.aHashLocal(
       ext.Multimodal.pngFixture(docs.filter($"doc_id" % 10 =!= 0))))
-    val staged = java.nio.file.Files.createTempDirectory("graft_imgprobe").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/documents.parquet"),
-      java.nio.file.Paths.get(s"$staged/documents.parquet"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(s"$dir/documents.parquet").schema)
-      .parquet(staged)
-      .filter($"doc_id" % 10 === 0)
-    val q = StreamOps.imgProbeStream(stream, idx)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_imgprobe_test")
-      .start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("graft_imgprobe_test")
-        .collect().map(_.toString).sorted.toSeq
-      assert(got == expected, s"stream ${got.size} rows vs batch ${expected.size}")
-    } finally q.stop()
+    SparkSuite.withTempDir("graft_imgprobe") { staged =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$dir/documents.parquet"),
+        java.nio.file.Paths.get(s"$staged/documents.parquet"))
+      val stream = spark.readStream
+        .schema(spark.read.parquet(s"$dir/documents.parquet").schema)
+        .parquet(staged)
+        .filter($"doc_id" % 10 === 0)
+      val q = StreamOps.imgProbeStream(stream, idx)
+        .writeStream.outputMode("append")
+        .format("memory").queryName("graft_imgprobe_test")
+        .start()
+      try {
+        q.processAllAvailable()
+        val got = spark.table("graft_imgprobe_test")
+          .collect().map(_.toString).sorted.toSeq
+        assert(got == expected, s"stream ${got.size} rows vs batch ${expected.size}")
+      } finally q.stop()
+    }
   }
 
   test("stream-static composed ingest audit equals the batch probe (append mode, zero state)") {
@@ -562,24 +579,25 @@ class StreamingSpec extends AnyFunSuite {
     val hashes = corpus.select(md5($"text".cast("binary")).as("h")).distinct()
     val filters = StreamOps.bloomScaleFilters(ext.Dedup.bloomDocLines(corpus))
     val idx = ext.Dedup.corpusProbeIndex(corpus)
-    val staged = java.nio.file.Files.createTempDirectory("graft_stingest").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/documents.parquet"),
-      java.nio.file.Paths.get(s"$staged/documents.parquet"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(s"$dir/documents.parquet").schema)
-      .parquet(staged)
-      .filter($"doc_id" % 10 === 0)
-    val q = StreamOps.ingestProbeStream(stream, hashes, filters, idx)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_stingest_test")
-      .start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("graft_stingest_test")
-        .collect().map(_.toString).sorted.toSeq
-      assert(got == expected, s"stream ${got.size} rows vs batch ${expected.size}")
-    } finally q.stop()
+    SparkSuite.withTempDir("graft_stingest") { staged =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$dir/documents.parquet"),
+        java.nio.file.Paths.get(s"$staged/documents.parquet"))
+      val stream = spark.readStream
+        .schema(spark.read.parquet(s"$dir/documents.parquet").schema)
+        .parquet(staged)
+        .filter($"doc_id" % 10 === 0)
+      val q = StreamOps.ingestProbeStream(stream, hashes, filters, idx)
+        .writeStream.outputMode("append")
+        .format("memory").queryName("graft_stingest_test")
+        .start()
+      try {
+        q.processAllAvailable()
+        val got = spark.table("graft_stingest_test")
+          .collect().map(_.toString).sorted.toSeq
+        assert(got == expected, s"stream ${got.size} rows vs batch ${expected.size}")
+      } finally q.stop()
+    }
   }
 
   test("stream-static sliced-bloom probe equals the batch probe (append mode, zero state)") {
@@ -601,24 +619,25 @@ class StreamingSpec extends AnyFunSuite {
     val corpus = ext.Dedup.bloomDocLines(docs.filter($"doc_id" % 10 =!= 0))
     val filters = StreamOps.bloomScaleFilters(corpus)
     val corpusLines = corpus.select($"line").distinct()
-    val staged = java.nio.file.Files.createTempDirectory("graft_stbscale").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/documents.parquet"),
-      java.nio.file.Paths.get(s"$staged/documents.parquet"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(s"$dir/documents.parquet").schema)
-      .parquet(staged)
-      .filter($"doc_id" % 10 === 0)
-    val q = StreamOps.bloomScaleProbeStream(stream, filters, corpusLines)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_stbscale_test")
-      .start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("graft_stbscale_test")
-        .collect().map(_.toString).sorted.toSeq
-      assert(got == expected, s"stream ${got.size} rows vs batch ${expected.size}")
-    } finally q.stop()
+    SparkSuite.withTempDir("graft_stbscale") { staged =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$dir/documents.parquet"),
+        java.nio.file.Paths.get(s"$staged/documents.parquet"))
+      val stream = spark.readStream
+        .schema(spark.read.parquet(s"$dir/documents.parquet").schema)
+        .parquet(staged)
+        .filter($"doc_id" % 10 === 0)
+      val q = StreamOps.bloomScaleProbeStream(stream, filters, corpusLines)
+        .writeStream.outputMode("append")
+        .format("memory").queryName("graft_stbscale_test")
+        .start()
+      try {
+        q.processAllAvailable()
+        val got = spark.table("graft_stbscale_test")
+          .collect().map(_.toString).sorted.toSeq
+        assert(got == expected, s"stream ${got.size} rows vs batch ${expected.size}")
+      } finally q.stop()
+    }
   }
 
   test("stream-static semantic probe equals the batch probe (append mode, zero state)") {
@@ -632,39 +651,40 @@ class StreamingSpec extends AnyFunSuite {
     // j3 upsert maintains); stream side: the incoming carve as files
     val Seq(cents, keptM) = ext.Similarity.semStateTables(spark, dir, emb)
     val cutoff = emb.agg(expr("(max(vec_id) + 1) * 90 div 100")).head.getLong(0)
-    val staged = java.nio.file.Files.createTempDirectory("graft_semprobe").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/embeddings.parquet"),
-      java.nio.file.Paths.get(s"$staged/embeddings.parquet"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(s"$dir/embeddings.parquet").schema)
-      .parquet(staged)
-      .filter($"vec_id" >= cutoff)
-    val q = StreamOps.semProbeStream(stream, cents, keptM)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_semprobe_test")
-      .start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("graft_semprobe_test")
-        .collect().map(_.toString).sorted.toSeq
-      assert(got == expected, s"stream ${got.size} rows vs batch ${expected.size}")
-    } finally q.stop()
-    // rank-at-serve closure: the pair grain's top-1 per vector (cos DESC,
-    // mid ASC) must reproduce j3_semdedup_inc_state's best match exactly
-    val served = ext.Similarity.semProbeBatch(spark, dir, emb)
-      .withColumn("rn", org.apache.spark.sql.functions.row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy($"vec_id").orderBy($"cos_sim_e6".desc, $"mid")))
-      .filter($"rn" === 1)
-      .select($"vec_id", $"mid", $"cos_sim_e6")
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val state = ext.Similarity.semDedupIncrementalState(spark, dir, emb)
-      .filter($"best_match" =!= -1L)
-      .select($"vec_id", $"best_match", $"best_cos_e6")
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(state.nonEmpty && served == state,
-      s"rank-at-serve over the pair grain diverged from the batch best-match (${served.size} vs ${state.size})")
+    SparkSuite.withTempDir("graft_semprobe") { staged =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$dir/embeddings.parquet"),
+        java.nio.file.Paths.get(s"$staged/embeddings.parquet"))
+      val stream = spark.readStream
+        .schema(spark.read.parquet(s"$dir/embeddings.parquet").schema)
+        .parquet(staged)
+        .filter($"vec_id" >= cutoff)
+      val q = StreamOps.semProbeStream(stream, cents, keptM)
+        .writeStream.outputMode("append")
+        .format("memory").queryName("graft_semprobe_test")
+        .start()
+      try {
+        q.processAllAvailable()
+        val got = spark.table("graft_semprobe_test")
+          .collect().map(_.toString).sorted.toSeq
+        assert(got == expected, s"stream ${got.size} rows vs batch ${expected.size}")
+      } finally q.stop()
+      // rank-at-serve closure: the pair grain's top-1 per vector (cos DESC,
+      // mid ASC) must reproduce j3_semdedup_inc_state's best match exactly
+      val served = ext.Similarity.semProbeBatch(spark, dir, emb)
+        .withColumn("rn", org.apache.spark.sql.functions.row_number().over(
+          org.apache.spark.sql.expressions.Window
+            .partitionBy($"vec_id").orderBy($"cos_sim_e6".desc, $"mid")))
+        .filter($"rn" === 1)
+        .select($"vec_id", $"mid", $"cos_sim_e6")
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      val state = ext.Similarity.semDedupIncrementalState(spark, dir, emb)
+        .filter($"best_match" =!= -1L)
+        .select($"vec_id", $"best_match", $"best_cos_e6")
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      assert(state.nonEmpty && served == state,
+        s"rank-at-serve over the pair grain diverged from the batch best-match (${served.size} vs ${state.size})")
+    }
   }
 
   test("inc-probe witness: a cap-gated earlier band does not suppress a later match") {
@@ -716,23 +736,24 @@ class StreamingSpec extends AnyFunSuite {
     val corpus = ext.Dedup.bloomDocLines(docs.filter($"doc_id" % 10 =!= 0))
     val positions = ext.Dedup.bloomPositionSet(corpus)
     val corpusLines = corpus.select($"line").distinct()
-    val staged = java.nio.file.Files.createTempDirectory("graft_stbloom").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/documents.parquet"),
-      java.nio.file.Paths.get(s"$staged/documents.parquet"))
-    val stream = spark.readStream
-      .schema(spark.read.parquet(s"$dir/documents.parquet").schema)
-      .parquet(staged)
-      .filter($"doc_id" % 10 === 0)
-    val q = StreamOps.bloomProbeStream(stream, positions, corpusLines)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_stbloom_test")
-      .start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("graft_stbloom_test")
-        .collect().map(_.toString).sorted.toSeq
-      assert(got == expected, s"stream ${got.size} rows vs batch ${expected.size}")
-    } finally q.stop()
+    SparkSuite.withTempDir("graft_stbloom") { staged =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$dir/documents.parquet"),
+        java.nio.file.Paths.get(s"$staged/documents.parquet"))
+      val stream = spark.readStream
+        .schema(spark.read.parquet(s"$dir/documents.parquet").schema)
+        .parquet(staged)
+        .filter($"doc_id" % 10 === 0)
+      val q = StreamOps.bloomProbeStream(stream, positions, corpusLines)
+        .writeStream.outputMode("append")
+        .format("memory").queryName("graft_stbloom_test")
+        .start()
+      try {
+        q.processAllAvailable()
+        val got = spark.table("graft_stbloom_test")
+          .collect().map(_.toString).sorted.toSeq
+        assert(got == expected, s"stream ${got.size} rows vs batch ${expected.size}")
+      } finally q.stop()
+    }
   }
 }
