@@ -141,7 +141,7 @@ object Bench {
     }.toMap
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", s"${Fixtures.testdata}/sf0.1")
     val cpus = defaultCpus
     val passes = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt)
     var calibStart = -1.0

@@ -1,22 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for selected queries — the plan-review
   * loop (SURVEY §4 posture: pushdown visible, dims broadcast, no stray
-  * exchanges). Usage: tools/run.sh graft.Explain [sfDir] [q1 q2 ...] */
+  * exchanges), on the shared `Bench.newSession` setup.
+  * Usage: tools/run.sh graft.Explain [sfDir] [q1 q2 ...] */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
+    val sfDir = args.headOption.getOrElse(s"${Fixtures.testdata}/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxPlanStringLength", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.newSession(sfDir)
     names.foreach { n =>
       SparkEntry.queries.get(n).foreach { fn =>
         println(s"\n========== $n ==========")

@@ -17,7 +17,7 @@ package graft
   */
 object LshRecallProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    val sfDir = args.headOption.getOrElse(s"${Fixtures.testdata}/sf0.1")
     val spark = Bench.newSession(sfDir)
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -26,7 +26,7 @@ object LshRecallProbe {
     val configs = Seq((2, 2), (4, 4), (8, 2), (16, 1))
     def run(b: Int, r: Int): (Set[(Long, Long)], Double) = {
       val t0 = System.nanoTime()
-      val pairs = ext.Dedup.nearDupPairs(docs, bands = b, rows = r)
+      val pairs = ext.Dedup.nearDupPairs(ext.Dedup.shingleBands(docs, b, r))
         .filter($"jaccard" >= ext.Dedup.NearDupGroupJaccard)
         .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
       val secs = (System.nanoTime() - t0) / 1e9

@@ -14,7 +14,7 @@ import java.nio.file.{Files, Paths}
   */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    val sfDir = args.headOption.getOrElse(s"${Fixtures.testdata}/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
     val spark = Bench.newSession(sfDir)
     def sysLoad: Double =

@@ -11,7 +11,7 @@ package graft
   */
 object QueryProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    val sfDir = args.headOption.getOrElse(s"${Fixtures.testdata}/sf0.1")
     val names = args.drop(1).toSeq
     names.foreach { n =>
       // Bench's warmed session, so the first job isn't charged startup cost

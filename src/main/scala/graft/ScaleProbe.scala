@@ -167,7 +167,7 @@ object ScaleProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    val sfDir = args.headOption.getOrElse(s"${Fixtures.testdata}/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val spark = Harness.tmpfsLocalDir(SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
@@ -195,28 +195,47 @@ object ScaleProbe {
     val ev0 = Tables.events(spark, sfDir)
     def eventsAt(f: Int): DataFrame = inflatedEvents(ev0, f)
 
+    // the kernels' shared inputs, built per head as the query layer's
+    // memo nodes build them: the sliced-Bloom (line, slice) state with its
+    // tracked position set, and the tracked fused aHash frame
+    def slicedBloomState(d: DataFrame): (DataFrame, DataFrame) = {
+      val sl = ext.Dedup.bloomSliceLines(ext.Dedup.bloomDocLines(d.filter($"doc_id" % 10 =!= 0)))
+      (sl, Pinned.track(ext.Dedup.bloomSlicePositions(sl)))
+    }
+    def aHashes(d: DataFrame): DataFrame =
+      Pinned.track(ext.Multimodal.aHashLocal(ext.Multimodal.pngFixture(d)))
+    def imgProbe(d: DataFrame): DataFrame = {
+      val h = aHashes(d)
+      ext.Multimodal.incrementalImages(d, h,
+        ext.Multimodal.imgIndex(h.filter($"doc_id" % 10 =!= 0)))
+    }
+
     // ------------------------------------------------------------- heads
     def pmLog(f: Int): DataFrame =
       pm.EventLogOps.fromEventsDf(eventsAt(f))
 
     final case class Head(name: String, run: Int => DataFrame)
     val heads = Seq(
-      Head("j2_neardup_pairs", f => ext.Dedup.nearDupPairs(docsAt(f))),
+      Head("j2_neardup_pairs", f =>
+        ext.Dedup.nearDupPairs(ext.Dedup.shingleBands(docsAt(f)))),
       Head("j2_neardup_groups", f => {
         val d = docsAt(f)
         // the graded path since round 10: convergence-checked CC
         ext.Dedup.nearDupGroupsConverged(d,
-          pairs0 = Some(Pinned.stageEager(ext.Dedup.nearDupPairs(d))))
+          Pinned.stageEager(ext.Dedup.nearDupPairs(ext.Dedup.shingleBands(d))))
       }),
-      Head("j2_jaccard_ngram", f => ext.Dedup.jaccardNgramPairs(docsAt(f))),
+      Head("j2_jaccard_ngram", f => ext.Dedup.jaccardNgramPairs(
+        Pinned.track(ext.Dedup.shingleFpArrays(docsAt(f))))),
       // round-11 additions: the span-scrub transform (gram-grain shuffle +
       // row-local reconstruction) and SemDeDup (sqrt(N) cells — the
       // intra-cell pair stage must scale ~N*sqrt(N), never quadratic)
-      Head("j2_scrub_spans", f => ext.Dedup.scrubSpans(docsAt(f))),
+      Head("j2_scrub_spans", f =>
+        ext.Dedup.scrubSpans(Pinned.track(ext.Dedup.dupStarts(docsAt(f))))),
       // round-13: the >=50-token long-run scrub shares the scrub chain
       // (one extra row-local run filter) — measured, not argued, since it
       // is a top-5 bench query
-      Head("j2_scrub_long_runs", f => ext.Dedup.scrubLongRuns(docsAt(f))),
+      Head("j2_scrub_long_runs", f =>
+        ext.Dedup.scrubLongRuns(Pinned.track(ext.Dedup.dupStarts(docsAt(f))))),
       Head("j3_semdedup", f => ext.Similarity.semDedup(embAt(f))),
       // round-12 additions: the line-grain dedup transform, the 64-bit
       // banded image near-dup (real PNG decode under it), the global
@@ -235,25 +254,36 @@ object ScaleProbe {
       // sum_i k_i over O(log corpus) slices, so the wall must stay
       // sublinear two decades up (the constant-slice chain's O(slices)
       // per-position fan-out would not have)
-      Head("j2_bloom_scale_probe", f => ext.Dedup.bloomScaleProbe(docsAt(f))),
+      Head("j2_bloom_scale_probe", f => {
+        val d = docsAt(f)
+        ext.Dedup.bloomScaleProbe(d, slicedBloomState(d)._2)
+      }),
       // round-16: the WRITE paths join the probe — the sliced filter's
       // single-step upsert (rank-continued novel-line insert; the most
       // expensive bench query, so its scaling must be measured) and the
       // lexical two-batch evolution (two probe rounds + cap re-gates)
-      Head("j2_bloom_scale_upsert", f => ext.Dedup.bloomScaleUpsert(docsAt(f))),
-      Head("j2_incremental_upsert2", f =>
-        ext.Dedup.incrementalNearDupUpsert2(docsAt(f))),
+      Head("j2_bloom_scale_upsert", f => {
+        val d = docsAt(f)
+        val (sl, sp) = slicedBloomState(d)
+        ext.Dedup.bloomScaleUpsert(d, sl, sp)
+      }),
+      Head("j2_incremental_upsert2", f => {
+        val d = docsAt(f)
+        ext.Dedup.incrementalNearDupUpsert2(d, ext.Dedup.shingleBands(d))
+      }),
       Head("j5_phash_hamming", f =>
-        ext.Multimodal.aHashHammingPairs(ext.Multimodal.pngFixture(docsAt(f)))),
+        ext.Multimodal.aHashHammingPairs(aHashes(docsAt(f)))),
       // round-17: the image family's incremental probe joins the write/
       // probe heads — fused row-local decode+hash, banded equi-join
       // against the cap-gated standing index (its fixed-batch state twin
       // is probed separately below)
-      Head("j5_incremental", f =>
-        ext.Multimodal.incrementalImages(docsAt(f))),
+      Head("j5_incremental", f => imgProbe(docsAt(f))),
       Head("j7_shuffle", f => ext.Pipeline.globalShuffle(docsAt(f))),
       Head("j4_quality_clf", f => ext.TextOps.qualityClassifier(docsAt(f))),
-      Head("j3_semdedup_inc", f => ext.Similarity.semDedupIncremental(embAt(f))),
+      Head("j3_semdedup_inc", f => {
+        val e = embAt(f)
+        ext.Similarity.semDedupIncremental(e, ext.Similarity.semIncCells(e))
+      }),
       Head("j7_span_corrupt", f => ext.Pipeline.spanCorrupt(docsAt(f))),
       // round-13 addition: the FFD packing pipeline (global rank, window
       // folds, bin-count cumsum) over whitespace counts — the orchestration
@@ -265,7 +295,10 @@ object ScaleProbe {
       // round-14: the anneal-order capstone (lm-bits chain + tercile
       // staging + two-phase rank/cumsum over ONE range shuffle) — the
       // heaviest new round-13 head after pack_fit, measured not argued
-      Head("j7_curriculum", f => ext.Pipeline.curriculum(docsAt(f))),
+      Head("j7_curriculum", f => {
+        val d = docsAt(f)
+        ext.Pipeline.curriculum(d, ext.Pipeline.pplBuckets(d))
+      }),
       Head("j7_decontam_sem", f => ext.Similarity.semDecontam(embAt(f))),
       Head("j7_gopher_gate", f => ext.Pipeline.gopherGate(docsAt(f))),
       Head("j3_pq_adc", f => ext.Similarity.annPq(embAt(f))),
@@ -357,10 +390,12 @@ object ScaleProbe {
     // telescoped 2^(1-k0) budget at every factor. This is the tripwire
     // whose absence let the round-14 chain ship with a 55% measured FPR.
     def bloomScaleState(f: Int): (Long, Long, Long, Long, Long) = {
-      val st = ext.Dedup.bloomScaleStats(docsAt(f))
+      val d = docsAt(f)
+      val (sl, sp) = slicedBloomState(d)
+      val st = ext.Dedup.bloomScaleStats(sl, sp)
         .agg(count(lit(1)).as("n_slices"), max($"fill_e6").as("max_fill"))
         .head
-      val cs = ext.Dedup.bloomScaleStatsCompound(docsAt(f))
+      val cs = ext.Dedup.bloomScaleStatsCompound(d, sl, sp)
         .select($"predicted_fpr_e6", $"measured_fpr_e6", $"n_false_neg")
         .head
       Pinned.release(spark)
@@ -423,7 +458,8 @@ object ScaleProbe {
     }
     def scrubWall(m: Int, t: Int): Double = {
       val t0 = System.nanoTime()
-      ext.Dedup.scrubSpans(worstDocs(m, t)).agg(sum($"n_removed")).collect()
+      ext.Dedup.scrubSpans(Pinned.track(ext.Dedup.dupStarts(worstDocs(m, t))))
+        .agg(sum($"n_removed")).collect()
       val s = (System.nanoTime() - t0) / 1e9
       Pinned.release(spark); s
     }
@@ -463,9 +499,13 @@ object ScaleProbe {
       val st = (1 to 2).map(_ => semWall(
         ext.Similarity.semDedupIncrementalState(spark,
           s"graft_probe_semstate_f$f", embStateProbe(f), corpusPct = 50L))).min
-      semWall(ext.Similarity.semDedupIncremental(embStateProbe(f), corpusPct = 50L))
-      val re = (1 to 2).map(_ => semWall(
-        ext.Similarity.semDedupIncremental(embStateProbe(f), corpusPct = 50L))).min
+      def recompute: DataFrame = {
+        val e = embStateProbe(f)
+        ext.Similarity.semDedupIncremental(e,
+          ext.Similarity.semIncCells(e, corpusPct = 50L), corpusPct = 50L)
+      }
+      semWall(recompute)
+      val re = (1 to 2).map(_ => semWall(recompute)).min
       (st, re)
     }
     val (semSt1, semRe1) = semStatePoint(1)
@@ -482,8 +522,11 @@ object ScaleProbe {
         s"graft_probe_semstate_f$f", embStateProbe(f), corpusPct = 50L))
       val st = (1 to 2).map(_ => semWall(ext.Similarity.cellDriftState(spark,
         s"graft_probe_semstate_f$f", embStateProbe(f), corpusPct = 50L))).min
-      val re = (1 to 2).map(_ => semWall(
-        ext.Similarity.cellDrift(embStateProbe(f), corpusPct = 50L))).min
+      val re = (1 to 2).map { _ =>
+        val e = embStateProbe(f)
+        semWall(ext.Similarity.cellDrift(e,
+          ext.Similarity.semIncCells(e, corpusPct = 50L), corpusPct = 50L))
+      }.min
       (st, re)
     }
     val (psiSt1, psiRe1) = cellPsiPoint(1)
@@ -508,9 +551,12 @@ object ScaleProbe {
         s"graft_probe_ingeststate_f$f", ingestStateDocs(f)))
       val st = (1 to 2).map(_ => semWall(ext.Pipeline.ingestAuditState(spark,
         s"graft_probe_ingeststate_f$f", ingestStateDocs(f)))).min
-      semWall(ext.Pipeline.ingestAudit(ingestStateDocs(f)))
-      val re = (1 to 2).map(_ => semWall(
-        ext.Pipeline.ingestAudit(ingestStateDocs(f)))).min
+      def recompute: DataFrame = {
+        val d = ingestStateDocs(f)
+        ext.Pipeline.ingestAudit(d, slicedBloomState(d)._2, ext.Dedup.shingleBands(d))
+      }
+      semWall(recompute)
+      val re = (1 to 2).map(_ => semWall(recompute)).min
       (st, re)
     }
     val (ingSt1, ingRe1) = ingestStatePoint(1)
@@ -522,13 +568,20 @@ object ScaleProbe {
     // so it must stay ~flat while the recompute twin re-decodes the grown
     // corpus (same remapped-corpus carve as the composed ingest head)
     def imgStatePoint(f: Int): (Double, Double) = {
-      semWall(ext.Multimodal.incrementalImagesState(spark,
-        s"graft_probe_imgstate_f$f", ingestStateDocs(f)))
-      val st = (1 to 2).map(_ => semWall(ext.Multimodal.incrementalImagesState(
-        spark, s"graft_probe_imgstate_f$f", ingestStateDocs(f)))).min
-      semWall(ext.Multimodal.incrementalImages(ingestStateDocs(f)))
-      val re = (1 to 2).map(_ => semWall(
-        ext.Multimodal.incrementalImages(ingestStateDocs(f)))).min
+      // the batch alone is decoded; the corpus index is built only when
+      // this factor's state table is first written
+      def state: DataFrame = {
+        val d = ingestStateDocs(f)
+        def hashes(carve: org.apache.spark.sql.Column) =
+          ext.Multimodal.aHashLocal(ext.Multimodal.pngFixture(d.filter(carve)))
+        ext.Multimodal.incrementalImagesState(spark, s"graft_probe_imgstate_f$f",
+          d, hashes($"doc_id" % 10 === 0),
+          ext.Multimodal.imgIndex(hashes($"doc_id" % 10 =!= 0)))
+      }
+      semWall(state)
+      val st = (1 to 2).map(_ => semWall(state)).min
+      semWall(imgProbe(ingestStateDocs(f)))
+      val re = (1 to 2).map(_ => semWall(imgProbe(ingestStateDocs(f)))).min
       (st, re)
     }
     val (imgSt1, imgRe1) = imgStatePoint(1)

@@ -11,7 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    queries("q1_agg")(spark, "/root/testdata/sf0.001")
+    queries("q1_agg")(spark, s"${Fixtures.testdata}/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

@@ -7,7 +7,7 @@ package graft
   */
 object StageProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    val sfDir = args.headOption.getOrElse(s"${Fixtures.testdata}/sf0.1")
     val spark = Bench.newSession(sfDir)
 
     def time[A](name: String)(f: => A): A = {

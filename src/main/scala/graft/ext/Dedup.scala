@@ -146,7 +146,7 @@ object Dedup {
     * into it on pushdown (evaluated once more per row, interpreted); the
     * token-count form is an equivalent plain-expression predicate that
     * stays in whole-stage codegen at the scan. */
-  private[ext] def shingleFpArrays(docs: DataFrame): DataFrame =
+  private[graft] def shingleFpArrays(docs: DataFrame): DataFrame =
     shingleArrays(docs.filter(size(split(col("text"), " ")) >= 3))
       .select(col("doc_id"),
         // native digest ([[graft.functions.Md5Head60]]) — bit-identical to
@@ -191,8 +191,8 @@ object Dedup {
     * rows). The sig is the struct of the band's raw minhash values —
     * tuple EQUALITY, not a re-hash, so the candidate set is bit-identical
     * to the per-band form. */
-  private[graft] def shingleBands(docs: DataFrame, bands: Int,
-                           rows: Int): (DataFrame, DataFrame) = {
+  private[graft] def shingleBands(docs: DataFrame, bands: Int = Bands,
+                                  rows: Int = RowsPerBand): (DataFrame, DataFrame) = {
     val sa = graft.Pinned.track(shingleFpArrays(docs))
     (sa, bandSigFrom(sa, bands, rows))
   }
@@ -226,17 +226,12 @@ object Dedup {
   }
 
   /** LSH candidate pairs (docs sharing any band bucket) verified with exact
-    * Jaccard over distinct shingle sets. */
-  /** @param sa0 an already-materialized [[shingleFpArrays]] frame to reuse
-    *            (the ExtQueries session memo); `bandSig0` likewise an
-    *            already-built band frame FOR THIS (bands, rows) layout. */
-  def nearDupPairs(docs: DataFrame, bands: Int = Bands, rows: Int = RowsPerBand,
-                   bucketCap: Int = BucketCap,
-                   sa0: Option[DataFrame] = None,
-                   bandSig0: Option[DataFrame] = None): DataFrame = {
-    import docs.sparkSession.implicits._
-    val sa = sa0.getOrElse(graft.Pinned.track(shingleFpArrays(docs)))
-    val bandSig = bandSig0.getOrElse(bandSigFrom(sa, bands, rows))
+    * Jaccard over distinct shingle sets, from a [[shingleBands]] build
+    * (sa, bandSig) of one (bands, rows) layout. */
+  def nearDupPairs(build: (DataFrame, DataFrame),
+                   bucketCap: Int = BucketCap): DataFrame = {
+    val (sa, bandSig) = build
+    import sa.sparkSession.implicits._
     val cand = candidatePairsOf(bandSig, bucketCap)
     // distinct shingle sets come straight off the per-row arrays — the
     // exploded .distinct() + groupBy-count this replaces shuffled the full
@@ -293,19 +288,16 @@ object Dedup {
     * is the prefix-filter join the repo already bounds; the compare is
     * two pair-grain semi-join counts folded into bounded 1-row aggregates
     * (broadcast-crossed — the `j2_bloom_stats` summary-row shape). */
-  def lshRecall(docs: DataFrame,
+  def lshRecall(sa: DataFrame,
                 truthT: Double = NearDupGroupJaccard,
-                bucketCap: Int = BucketCap,
-                sa0: Option[DataFrame] = None): DataFrame = {
-    import docs.sparkSession.implicits._
-    // ONE tracked shingle build, shared STRUCTURALLY by the truth side and
+                bucketCap: Int = BucketCap): DataFrame = {
+    import sa.sparkSession.implicits._
+    // ONE shingle build `sa`, shared STRUCTURALLY by the truth side and
     // both band layouts (round-16 advice: the sharing previously leaned on
     // the cache manager's same-plan persist dedup, an implementation
-    // accident, not a guarantee); sa0 = the session-memoized frame
-    val sa = sa0.getOrElse(graft.Pinned.track(shingleFpArrays(docs)))
+    // accident, not a guarantee)
     val truth = graft.Pinned.track(
-      jaccardNgramPairs(docs, truthT, bucketCap, sa0 = Some(sa))
-        .select($"doc_a", $"doc_b"))
+      jaccardNgramPairs(sa, truthT, bucketCap).select($"doc_a", $"doc_b"))
     def rowFor(cfg: String, bands: Int, rows: Int): DataFrame = {
       val cand = graft.Pinned.track(
         candidatePairsOf(bandSigFrom(sa, bands, rows), bucketCap))
@@ -353,15 +345,12 @@ object Dedup {
     * whole operator stays one declarative plan with a DuckDB twin —
     * the recursive-CTE oracle computes EXACT components, so an
     * insufficient round count fails the gate rather than passing quietly). */
-  def nearDupGroups(docs: DataFrame, threshold: Double = NearDupGroupJaccard,
-                    rounds: Int = CcRounds,
-                    pairs0: Option[DataFrame] = None): DataFrame = {
+  def nearDupGroups(docs: DataFrame, pairs: DataFrame,
+                    threshold: Double = NearDupGroupJaccard,
+                    rounds: Int = CcRounds): DataFrame = {
     import docs.sparkSession.implicits._
-    // pairs0: a caller-memoized [[nearDupPairs]] result (ExtQueries shares
-    // one staged pairs frame between the pairs query and this clustering)
-    val pairs = pairs0.getOrElse(nearDupPairs(docs)).filter($"jaccard" >= threshold)
-      .select($"doc_a", $"doc_b")
-    ccGroups(docs.select($"doc_id".as("v")), pairs, rounds)
+    val edges = pairs.filter($"jaccard" >= threshold).select($"doc_a", $"doc_b")
+    ccGroups(docs.select($"doc_id".as("v")), edges, rounds)
   }
 
   /** [[nearDupGroups]] with the round count replaced by a CONVERGENCE
@@ -372,14 +361,12 @@ object Dedup {
     * see [[ccGroupsConverged]]. The fixed-unroll [[nearDupGroups]] stays
     * as the single-declarative-plan form (its recursive-CTE oracle is the
     * tripwire that proves under-iteration cannot pass silently). */
-  def nearDupGroupsConverged(docs: DataFrame,
+  def nearDupGroupsConverged(docs: DataFrame, pairs: DataFrame,
                              threshold: Double = NearDupGroupJaccard,
-                             maxRounds: Int = 30,
-                             pairs0: Option[DataFrame] = None): DataFrame = {
+                             maxRounds: Int = 30): DataFrame = {
     import docs.sparkSession.implicits._
-    val pairs = pairs0.getOrElse(nearDupPairs(docs)).filter($"jaccard" >= threshold)
-      .select($"doc_a", $"doc_b")
-    ccGroupsConverged(docs.select($"doc_id".as("v")), pairs, maxRounds)
+    val edges = pairs.filter($"jaccard" >= threshold).select($"doc_a", $"doc_b")
+    ccGroupsConverged(docs.select($"doc_id".as("v")), edges, maxRounds)
   }
 
   /** One min-label propagation + pointer-jump superstep. `lab` and `edges`
@@ -585,15 +572,13 @@ object Dedup {
         coalesce($"ss", typedLit(Seq.empty[Long])).as("ss"))
   }
 
-  def scrubSpans(docs: DataFrame, n: Int = DupNgramN,
-                 starts0: Option[DataFrame] = None): DataFrame = {
-    import docs.sparkSession.implicits._
-    // collapse barrier (the winnow rule): toks and ss must be SCAN
-    // attributes before the per-element coverage lambdas below — an
-    // inlined split(text) inside transform() re-splits per element.
-    // starts0: a caller-memoized [[dupStarts]] frame (already a staged
-    // leaf) shared across the scrub family.
-    val base = starts0.getOrElse(graft.Pinned.track(dupStarts(docs, n)))
+  /** `starts` is the [[dupStarts]] index for the same `n`. */
+  def scrubSpans(starts: DataFrame, n: Int = DupNgramN): DataFrame = {
+    import starts.sparkSession.implicits._
+    // collapse barrier (the winnow rule): pass `starts` staged or tracked,
+    // so toks and ss are SCAN attributes before the per-element coverage
+    // lambdas below — an inlined split(text) inside transform() re-splits
+    // per element.
     // token position p is covered iff some duplicated run starts in
     // [p-n+1, p] — equivalently p is in the union of the [s, s+n-1]
     // intervals. LINEAR form (the sorted-starts two-pointer, expressed in
@@ -607,7 +592,7 @@ object Dedup {
     // (array_except's membership test is not hash-based here — the
     // equal-mass doubled-length probe fixture ran 2.7x, now ~1x).
     // ni = 1-based indices into ss where a new run begins.
-    val withGaps = base.select($"doc_id", $"toks",
+    val withGaps = starts.select($"doc_id", $"toks",
         // two guards: sequence(1, 0) is DESCENDING [1, 0] in Spark, so an
         // empty ss needs the case branch; and greatest() keeps the lagged
         // lookup index >= 1 (element_at(x, 0) throws even when the left
@@ -663,12 +648,10 @@ object Dedup {
     * Scale shape: identical to [[scrubSpans]] minus the reconstruction —
     * one gram-grain shuffle for df, starts back per doc on the same key,
     * then O(dup-starts) row-local run arithmetic; no second doc shuffle. */
-  def dupRunLength(docs: DataFrame, n: Int = DupNgramN,
-                   gateTokens: Long = DupRunGateTokens,
-                   starts0: Option[DataFrame] = None): DataFrame = {
-    import docs.sparkSession.implicits._
-    val base = starts0.getOrElse(graft.Pinned.track(dupStarts(docs, n)))
-      .select($"doc_id", size($"toks").cast("long").as("n_tokens"), $"ss")
+  def dupRunLength(starts: DataFrame, n: Int = DupNgramN,
+                   gateTokens: Long = DupRunGateTokens): DataFrame = {
+    import starts.sparkSession.implicits._
+    val base = starts.select($"doc_id", size($"toks").cast("long").as("n_tokens"), $"ss")
     // run k spans [ss[ni[k]], lastStart_k + n - 1] where lastStart_k is the
     // start just before the next run begins — the scrubSpans gap derivation
     // with lengths emitted instead of gaps. Same two expression guards:
@@ -708,18 +691,15 @@ object Dedup {
     * Scale shape: identical to [[scrubSpans]] — one gram-grain shuffle,
     * starts back per doc on the same key, O(dup-starts + kept tokens)
     * row-local reconstruction. */
-  def scrubLongRuns(docs: DataFrame, n: Int = DupNgramN,
-                    gateTokens: Long = DupRunGateTokens,
-                    starts0: Option[DataFrame] = None): DataFrame = {
-    import docs.sparkSession.implicits._
-    // collapse barrier (the winnow rule), as in scrubSpans; starts0 = the
-    // caller-memoized shared [[dupStarts]] frame
-    val base = starts0.getOrElse(graft.Pinned.track(dupStarts(docs, n)))
+  def scrubLongRuns(starts: DataFrame, n: Int = DupNgramN,
+                    gateTokens: Long = DupRunGateTokens): DataFrame = {
+    import starts.sparkSession.implicits._
+    // `starts` staged or tracked (the winnow rule), as in scrubSpans.
     // merged runs as (rs, re) intervals, then the LENGTH GATE — everything
     // after the filter is scrubSpans' gap slicing over the surviving runs.
     // Same two expression guards as the siblings (descending sequence(1,0)
     // on empty input; lagged element_at index pinned >= 1).
-    val withRuns = base.select($"doc_id", $"toks",
+    val withRuns = starts.select($"doc_id", $"toks",
         expr(s"""case when size(ss) = 0 then array()
                 |else filter(sequence(1, size(ss)),
                 |  i -> i = 1 OR element_at(ss, i) > element_at(ss, greatest(i - 1, 1)) + $n) end""".stripMargin)
@@ -1159,18 +1139,13 @@ object Dedup {
     * slices as immutable broadcast bitmaps — which is exactly the shape
     * the stream probe ([[graft.streaming.StreamOps.bloomScaleFilters]])
     * materializes. */
-  def bloomScaleStats(docs: DataFrame, mod: Int = 10, w: Int = LineTokens,
-                      cap0: Long = BloomSliceCap0, k0: Int = BloomSliceK0,
-                      sliceLines0: Option[DataFrame] = None,
-                      slicePos0: Option[DataFrame] = None): DataFrame = {
-    import docs.sparkSession.implicits._
-    val sl = sliceLines0.getOrElse(bloomSliceLines(
-      bloomDocLines(docs.filter($"doc_id" % mod =!= 0), w), cap0, k0))
-    val nl = sl.groupBy($"slice").agg(count(lit(1)).as("n_lines"))
-    val np = slicePos0.getOrElse(bloomSlicePositions(sl, cap0, k0))
-      .groupBy($"slice").agg(count(lit(1)).as("n_set_positions"))
+  def bloomScaleStats(sliceLines: DataFrame, slicePos: DataFrame,
+                      cap0: Long = BloomSliceCap0, k0: Int = BloomSliceK0): DataFrame = {
+    import sliceLines.sparkSession.implicits._
+    val nl = sliceLines.groupBy($"slice").agg(count(lit(1)).as("n_lines"))
+    val np = slicePos.groupBy($"slice").agg(count(lit(1)).as("n_set_positions"))
     nl.join(np, Seq("slice"))
-      .join(broadcast(bloomParamsDf(docs.sparkSession, cap0, k0)
+      .join(broadcast(bloomParamsDf(sliceLines.sparkSession, cap0, k0)
         .select($"slice", $"m", $"k")), Seq("slice"))
       .select($"slice".as("slice_id"), $"n_lines", $"n_set_positions",
         $"m".as("m_bits"), $"k".cast("long").as("k_hashes"),
@@ -1231,17 +1206,14 @@ object Dedup {
     * — exact duplicates the sliced filter MISSED, which the construction
     * guarantees to be 0; the column makes the guarantee a graded artifact
     * rather than a comment. */
-  def bloomScaleProbe(docs: DataFrame, mod: Int = 10, w: Int = LineTokens,
+  /** `slicePos` is the standing position set, staged or tracked:
+    * [[bloomScaleMembers]] reads it twice. */
+  def bloomScaleProbe(docs: DataFrame, slicePos: DataFrame, mod: Int = 10,
+                      w: Int = LineTokens,
                       cap0: Long = BloomSliceCap0, k0: Int = BloomSliceK0,
-                      dropE6: Long = BloomDropE6,
-                      sliceLines0: Option[DataFrame] = None,
-                      slicePos0: Option[DataFrame] = None): DataFrame = {
+                      dropE6: Long = BloomDropE6): DataFrame = {
     import docs.sparkSession.implicits._
     val corpus = bloomDocLines(docs.filter($"doc_id" % mod =!= 0), w)
-    // tracked: bloomScaleMembers consumes the position set twice (the
-    // standing-slice broadcast and the probe equi-join)
-    val slicePos = slicePos0.getOrElse(graft.Pinned.track(bloomSlicePositions(
-      sliceLines0.getOrElse(bloomSliceLines(corpus, cap0, k0)), cap0, k0)))
     val corpusLines = corpus.select($"line").distinct().withColumn("ex", lit(1))
     val batch = bloomDocLines(docs.filter($"doc_id" % mod === 0), w)
     val hits = bloomScaleMembers(batch, slicePos, cap0, k0)
@@ -1279,15 +1251,14 @@ object Dedup {
     * the construction shows up as measured blowing past predicted, and
     * a broken model shows up as predicted blowing past the 2^(1-k0)
     * budget ExtSpec pins. */
-  def bloomScaleStatsCompound(docs: DataFrame, mod: Int = 10,
+  def bloomScaleStatsCompound(docs: DataFrame, sliceLines: DataFrame,
+                              slicePos: DataFrame, mod: Int = 10,
                               w: Int = LineTokens,
                               cap0: Long = BloomSliceCap0,
                               k0: Int = BloomSliceK0,
-                              dropE6: Long = BloomDropE6,
-                              sliceLines0: Option[DataFrame] = None,
-                              slicePos0: Option[DataFrame] = None): DataFrame = {
+                              dropE6: Long = BloomDropE6): DataFrame = {
     import docs.sparkSession.implicits._
-    val lifecycle = bloomScaleStats(docs, mod, w, cap0, k0, sliceLines0, slicePos0)
+    val lifecycle = bloomScaleStats(sliceLines, slicePos, cap0, k0)
       .agg(count(lit(1)).as("n_slices"),
         sum($"n_lines").as("n_corpus_lines"),
         sort_array(collect_list(struct($"slice_id", $"fpr_e6"))).as("fa"))
@@ -1295,8 +1266,7 @@ object Dedup {
         (lit(1000000L) - expr("aggregate(fa, cast(1000000 as bigint), " +
           "(acc, x) -> (acc * (1000000 - x.fpr_e6)) div 1000000)"))
           .as("predicted_fpr_e6"))
-    val probe = bloomScaleProbe(docs, mod, w, cap0, k0, dropE6, sliceLines0,
-        slicePos0)
+    val probe = bloomScaleProbe(docs, slicePos, mod, w, cap0, k0, dropE6)
       .agg(sum($"n_lines").as("n_batch_lines"),
         sum($"n_bloom_dup").as("n_bloom_hits"),
         sum($"n_exact_dup").as("n_exact_dups"),
@@ -1322,17 +1292,32 @@ object Dedup {
     * Almeida insert discipline at batch grain, with the 1-row standing
     * count broadcast and an empty standing state degrading to rank-from-
     * zero. Exposed for the ExtSpec capacity-continuity pin. */
-  private[graft] def bloomScaleNewLineSlices(docs: DataFrame, mod: Int = 10,
+  private[graft] def bloomScaleNewLineSlices(docs: DataFrame, sliceLines: DataFrame,
+                                             mod: Int = 10,
                                              w: Int = LineTokens,
                                              cap0: Long = BloomSliceCap0,
                                              k0: Int = BloomSliceK0,
-                                             dropE6: Long = BloomDropE6,
-                                             sliceLines0: Option[DataFrame] = None): DataFrame = {
+                                             dropE6: Long = BloomDropE6): DataFrame = {
     import docs.sparkSession.implicits._
-    val corpus = bloomDocLines(docs.filter($"doc_id" % mod =!= 0), w)
-    val sliceLines = sliceLines0.getOrElse(bloomSliceLines(corpus, cap0, k0))
     val batch = bloomDocLines(docs.filter($"doc_id" % mod === 0), w)
-    bloomScaleIngestNewSlices(sliceLines, batch, cap0, k0, dropE6)
+    val members = bloomScaleMembers(batch,
+      bloomSlicePositions(sliceLines, cap0, k0), cap0, k0)
+    bloomScaleIngestNewSlices(sliceLines, batch, members,
+      bloomKeptDocs(batch, members, dropE6), cap0, k0)
+  }
+
+  /** The sliced filter's per-doc drop rule over one batch's membership
+    * rows: docs whose member-line fraction stays under `dropE6` — the
+    * same count and frac arithmetic as [[bloomScaleProbe]]'s verdict. */
+  private[graft] def bloomKeptDocs(batch: DataFrame, members: DataFrame,
+                                   dropE6: Long = BloomDropE6): DataFrame = {
+    import batch.sparkSession.implicits._
+    batch.join(members.withColumn("bh", lit(1)), Seq("doc_id", "line"), "left")
+      .groupBy($"doc_id")
+      .agg(count(lit(1)).as("n_lines"),
+        sum(coalesce($"bh", lit(0))).cast("long").as("n_dup"))
+      .filter(expr("(n_dup * 1000000) div greatest(n_lines, 1)") < dropE6)
+      .select($"doc_id")
   }
 
   /** The write path's batch-generic core: against an arbitrary standing
@@ -1341,39 +1326,20 @@ object Dedup {
     * their rank-continued slice assignment — the Almeida insert discipline
     * at batch grain, reusable across consecutive ingests
     * ([[bloomScaleUpsert2]]) and against the composed keep
-    * ([[graft.ext.Pipeline.ingestUpsert]], which passes `keptDocs0`). */
+    * ([[graft.ext.Pipeline.ingestUpsert]]). `members` is this batch's
+    * [[bloomScaleMembers]] frame against the standing positions, and
+    * `keptDocs` the docs the batch keeps ([[bloomKeptDocs]] or a composed
+    * decision). */
   private[graft] def bloomScaleIngestNewSlices(sliceLines: DataFrame,
                                                batch: DataFrame,
+                                               members: DataFrame,
+                                               keptDocs: DataFrame,
                                                cap0: Long = BloomSliceCap0,
-                                               k0: Int = BloomSliceK0,
-                                               dropE6: Long = BloomDropE6,
-                                               keptDocs0: Option[DataFrame] = None,
-                                               slicePos0: Option[DataFrame] = None,
-                                               members0: Option[DataFrame] = None): DataFrame = {
+                                               k0: Int = BloomSliceK0): DataFrame = {
     import batch.sparkSession.implicits._
-    // slicePos0: a caller-tracked position frame — the standing distinct
-    // is the step's dominant cost, so multi-consumer callers (upsert,
-    // upsert2, the composed ingest) materialize it ONCE and pass it in.
-    // members0: a caller-tracked membership frame over exactly this
-    // batch's lines against `slicePos` — the per-line digest explode +
-    // position probe is the write step's other dominant cost, and the
-    // gate side of every composed caller evaluates the SAME probe; one
-    // tracked frame serves the keep rollup, the non-member anti-join,
-    // and the caller's gate verdicts (guide §1.2 step 1).
-    val slicePos = slicePos0.getOrElse(bloomSlicePositions(sliceLines, cap0, k0))
     val nStanding = sliceLines.agg(count(lit(1)).as("n_standing"))
-    val members = members0.getOrElse(bloomScaleMembers(batch, slicePos, cap0, k0))
-    // per-doc drop rule from the membership rollup — identical to
-    // bloomScaleProbe's verdict (same count, same frac arithmetic)
-    val kept = keptDocs0.getOrElse(
-      batch.join(members.withColumn("bh", lit(1)), Seq("doc_id", "line"), "left")
-        .groupBy($"doc_id")
-        .agg(count(lit(1)).as("n_lines"),
-          sum(coalesce($"bh", lit(0))).cast("long").as("n_dup"))
-        .filter(expr("(n_dup * 1000000) div greatest(n_lines, 1)") < dropE6)
-        .select($"doc_id"))
     val newLines = batch
-      .join(kept, Seq("doc_id"), "left_semi")
+      .join(keptDocs, Seq("doc_id"), "left_semi")
       .join(members, Seq("doc_id", "line"), "left_anti")
       .groupBy($"line").agg(min($"doc_id").as("first_doc"))
     graft.Dist.withGlobalRank(newLines, "rn", Seq($"first_doc", $"line"))
@@ -1419,7 +1385,9 @@ object Dedup {
                            cap0: Long = BloomSliceCap0, k0: Int = BloomSliceK0,
                            dropE6: Long = BloomDropE6): DataFrame = {
     val sliceLines = bloomStateTable(s, key, docs, mod, w, cap0, k0)
-    bloomScaleProbe(docs, mod, w, cap0, k0, dropE6, Some(sliceLines))
+    bloomScaleProbe(docs,
+      graft.Pinned.track(bloomSlicePositions(sliceLines, cap0, k0)),
+      mod, w, cap0, k0, dropE6)
   }
 
   /** J2 — the SCALABLE Bloom filter's WRITE step, closing the sliced
@@ -1432,20 +1400,15 @@ object Dedup {
     * slice is ever filled past its capacity's design point by the write
     * path either. Still O(sum_i m_i) rows after any number of ingests,
     * per-slice bounded by its own m. */
-  def bloomScaleUpsert(docs: DataFrame, mod: Int = 10, w: Int = LineTokens,
+  /** `sliceLines`/`slicePos` are the standing state, `slicePos` staged or
+    * tracked: the probe, the novel-position anti-join and the output union
+    * all read it. */
+  def bloomScaleUpsert(docs: DataFrame, sliceLines: DataFrame, slicePos: DataFrame,
+                       mod: Int = 10, w: Int = LineTokens,
                        cap0: Long = BloomSliceCap0,
                        k0: Int = BloomSliceK0,
-                       dropE6: Long = BloomDropE6,
-                       sliceLines0: Option[DataFrame] = None,
-                       slicePos0: Option[DataFrame] = None): DataFrame = {
+                       dropE6: Long = BloomDropE6): DataFrame = {
     import docs.sparkSession.implicits._
-    val sl = sliceLines0.getOrElse(bloomSliceLines(
-      bloomDocLines(docs.filter($"doc_id" % mod =!= 0), w), cap0, k0))
-    // ONE materialization of the standing distinct — consumed by the
-    // probe, the novel-position anti-join, and the output union (the
-    // un-tracked form recomputed the heaviest stage three times)
-    val standing = slicePos0.getOrElse(
-      graft.Pinned.track(bloomSlicePositions(sl, cap0, k0)))
     val batch = bloomDocLines(docs.filter($"doc_id" % mod === 0), w)
     // NOT shared via a tracked members frame (round-18 A/B): the write
     // step's two members consumers are cheap streamed pipelines here, and
@@ -1453,11 +1416,12 @@ object Dedup {
     // than the double evaluation it saves (full-bench A/B: upsert +0.2s,
     // upsert2 +5.3s wall / +5.7 cpu) — the sharing pays only where the
     // position frames are staged leaves (the composed ingest family).
+    val members = bloomScaleMembers(batch, slicePos, cap0, k0)
     val newPos = bloomSlicePositions(
-        bloomScaleIngestNewSlices(sl, batch, cap0, k0, dropE6,
-          slicePos0 = Some(standing)), cap0, k0)
-      .join(standing, Seq("slice", "p"), "left_anti")
-    standing.withColumn("is_new", lit(0L))
+        bloomScaleIngestNewSlices(sliceLines, batch, members,
+          bloomKeptDocs(batch, members, dropE6), cap0, k0), cap0, k0)
+      .join(slicePos, Seq("slice", "p"), "left_anti")
+    slicePos.withColumn("is_new", lit(0L))
       .unionByName(newPos.withColumn("is_new", lit(1L)))
   }
 
@@ -1479,38 +1443,35 @@ object Dedup {
     * 100 TB posture: each step is the single-step upsert's plan (bounded
     * (slice, p) state, one rank over the novel-line grain, broadcast dial
     * table); the composition adds nothing super-linear. */
-  def bloomScaleUpsert2(docs: DataFrame, mod: Int = 10, w: Int = LineTokens,
+  def bloomScaleUpsert2(docs: DataFrame, sliceLines: DataFrame, slicePos: DataFrame,
+                        mod: Int = 10, w: Int = LineTokens,
                         cap0: Long = BloomSliceCap0,
                         k0: Int = BloomSliceK0,
-                        dropE6: Long = BloomDropE6,
-                        sliceLines0: Option[DataFrame] = None,
-                        slicePos0: Option[DataFrame] = None): DataFrame = {
+                        dropE6: Long = BloomDropE6): DataFrame = {
     import docs.sparkSession.implicits._
-    val sl0 = sliceLines0.getOrElse(bloomSliceLines(
-      bloomDocLines(docs.filter($"doc_id" % mod =!= 0), w), cap0, k0))
     val batch1 = bloomDocLines(
       docs.filter($"doc_id" % (2L * mod) === mod.toLong), w)
     val batch2 = bloomDocLines(docs.filter($"doc_id" % (2L * mod) === 0L), w)
-    // each state's position set materializes ONCE (tracked): pos0 feeds
-    // the step-1 probe, both anti-joins, and the output; sp1 (= v1) feeds
-    // the step-2 probe and the step-2 anti-join
-    val pos0 = slicePos0.getOrElse(
-      graft.Pinned.track(bloomSlicePositions(sl0, cap0, k0)))
+    // each state's position set materializes ONCE (staged or tracked):
+    // slicePos feeds the step-1 probe, both anti-joins, and the output; sp1
+    // (= v1) feeds the step-2 probe and the step-2 anti-join
     // per-step members NOT shared via tracked persists here — measured
     // regression (see bloomScaleUpsert note): with pos1/ns1 carrying full
     // lineage, two extra cache entries cost +5.3s wall / +5.7 cpu on the
     // full bench vs the streamed double evaluation.
+    val m1 = bloomScaleMembers(batch1, slicePos, cap0, k0)
     val ns1 = graft.Pinned.track(bloomScaleIngestNewSlices(
-      sl0, batch1, cap0, k0, dropE6, slicePos0 = Some(pos0)))
+      sliceLines, batch1, m1, bloomKeptDocs(batch1, m1, dropE6), cap0, k0))
     val pos1 = graft.Pinned.track(bloomSlicePositions(ns1, cap0, k0)
-      .join(pos0, Seq("slice", "p"), "left_anti"))
-    val sl1 = sl0.select($"line", $"slice").unionByName(ns1)
-    val sp1 = pos0.unionByName(pos1) // v1 positions, disjoint by construction
-    val ns2 = bloomScaleIngestNewSlices(sl1, batch2, cap0, k0, dropE6,
-      slicePos0 = Some(sp1))
+      .join(slicePos, Seq("slice", "p"), "left_anti"))
+    val sl1 = sliceLines.select($"line", $"slice").unionByName(ns1)
+    val sp1 = slicePos.unionByName(pos1) // v1 positions, disjoint by construction
+    val m2 = bloomScaleMembers(batch2, sp1, cap0, k0)
+    val ns2 = bloomScaleIngestNewSlices(sl1, batch2, m2,
+      bloomKeptDocs(batch2, m2, dropE6), cap0, k0)
     val pos2 = bloomSlicePositions(ns2, cap0, k0)
       .join(sp1, Seq("slice", "p"), "left_anti")
-    pos0.withColumn("batch_no", lit(0L))
+    slicePos.withColumn("batch_no", lit(0L))
       .unionByName(pos1.withColumn("batch_no", lit(1L)))
       .unionByName(pos2.withColumn("batch_no", lit(2L)))
   }
@@ -1528,9 +1489,9 @@ object Dedup {
     * hot-key cap needed — the key's multiplicity is the SOURCE count,
     * never the doc count), and a broadcast |sources|²-row matrix
     * assembly. */
-  def sourceOverlap(docs: DataFrame, sa0: Option[DataFrame] = None): DataFrame = {
+  def sourceOverlap(docs: DataFrame, sa: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    val fps = sa0.getOrElse(shingleFpArrays(docs))
+    val fps = sa
       .join(docs.select($"doc_id", $"source"), Seq("doc_id"))
       .select($"source", explode($"dshings").as("fp")).distinct()
     val sizes = fps.groupBy($"source").agg(count(lit(1)).as("n"))
@@ -1573,18 +1534,16 @@ object Dedup {
     * incoming doc probing a dropped bucket falls back to exact dedup,
     * J1, as everywhere else); no >=2 gate — a single corpus occupant is
     * a valid match. */
-  def incrementalNearDup(docs: DataFrame, mod: Int = 10,
-                         bands: Int = Bands, rows: Int = RowsPerBand,
+  def incrementalNearDup(docs: DataFrame, build: (DataFrame, DataFrame),
+                         mod: Int = 10,
                          bucketCap: Int = BucketCap,
-                         dropE6: Long = IncrementalDropE6,
-                         build0: Option[(DataFrame, DataFrame)] = None): DataFrame = {
+                         dropE6: Long = IncrementalDropE6): DataFrame = {
     import docs.sparkSession.implicits._
-    // ONE shared shingle/signature build over all docs (signatures are
-    // per-doc row-local, so slicing the shared frames is bit-identical to
-    // building each side separately — the property the state form relies
-    // on), split by the deterministic carve. build0 = the session-memoized
-    // (sa, bandSig) pair.
-    val (sa, bandSig) = build0.getOrElse(shingleBands(docs, bands, rows))
+    // ONE shared [[shingleBands]] build (sa, bandSig) over all docs
+    // (signatures are per-doc row-local, so slicing the shared frames is
+    // bit-identical to building each side separately — the property the
+    // state form relies on), split by the deterministic carve.
+    val (sa, bandSig) = build
     val corpB = bandSig.filter($"doc_id" % mod =!= 0)
     val ok = corpB.groupBy($"band", $"sig").agg(count(lit(1)).as("cnt"))
       .filter($"cnt" <= bucketCap).select($"band", $"sig")
@@ -1802,13 +1761,13 @@ object Dedup {
     * three ways, two band-grain equi-join probe rounds, cap gates as
     * bounded (band, sig) aggregates — per-ingest cost scales with that
     * ingest's batch, exactly the single-step family's plan twice. */
-  def incrementalNearDupUpsert2(docs: DataFrame, mod: Int = 10,
-                                bands: Int = Bands, rows: Int = RowsPerBand,
+  def incrementalNearDupUpsert2(docs: DataFrame, build: (DataFrame, DataFrame),
+                                mod: Int = 10, rows: Int = RowsPerBand,
                                 bucketCap: Int = BucketCap,
-                                dropE6: Long = IncrementalDropE6,
-                                build0: Option[(DataFrame, DataFrame)] = None): DataFrame = {
+                                dropE6: Long = IncrementalDropE6): DataFrame = {
     import docs.sparkSession.implicits._
-    val (sa, bandSig) = build0.getOrElse(shingleBands(docs, bands, rows))
+    // `build` is a [[shingleBands]] (sa, bandSig) pair with `rows` per band
+    val (sa, bandSig) = build
     def gate(idx: DataFrame): DataFrame = {
       val ok = idx.groupBy($"band", $"sig").agg(count(lit(1)).as("cnt"))
         .filter($"cnt" <= bucketCap).select($"band", $"sig")
@@ -1855,26 +1814,19 @@ object Dedup {
     * kept batch docs (is_new = 1) — [[incrementalNearDupUpsert]]'s emitted
     * shape with the keep decision injected instead of the LSH gate's own
     * verdict. Sub-shingle docs contribute no rows, identically on both
-    * engines. */
-  /** @param bandSig0 an already-built whole-corpus band-signature frame to
-    *                  slice by the carve instead of re-running the two
-    *                  shingle/minhash builds (signatures are per-doc
-    *                  row-local, so the slices are bit-identical to
-    *                  per-carve builds — the incrementalNearDupState
-    *                  argument). */
-  private[graft] def bandIndexUpsert(docs: DataFrame, keptDocs: DataFrame,
-                                     mod: Int = 10,
-                                     bands: Int = Bands, rows: Int = RowsPerBand,
-                                     bucketCap: Int = BucketCap,
-                                     bandSig0: Option[DataFrame] = None): DataFrame = {
-    import docs.sparkSession.implicits._
-    val corpB = bandSig0.map(_.filter($"doc_id" % mod =!= 0)).getOrElse(
-      shingleBands(docs.filter($"doc_id" % mod =!= 0), bands, rows)._2)
+    * engines. `bandSig` is the whole-corpus band-signature frame, sliced
+    * by the carve (signatures are per-doc row-local, so the slices are
+    * bit-identical to per-carve builds — the incrementalNearDupState
+    * argument). */
+  private[graft] def bandIndexUpsert(bandSig: DataFrame, keptDocs: DataFrame,
+                                     mod: Int = 10, rows: Int = RowsPerBand,
+                                     bucketCap: Int = BucketCap): DataFrame = {
+    import bandSig.sparkSession.implicits._
+    val corpB = bandSig.filter($"doc_id" % mod =!= 0)
     val ok = corpB.groupBy($"band", $"sig").agg(count(lit(1)).as("cnt"))
       .filter($"cnt" <= bucketCap).select($"band", $"sig")
     val corpIdx = corpB.join(ok, Seq("band", "sig"), "left_semi")
-    val bandN = bandSig0.map(_.filter($"doc_id" % mod === 0)).getOrElse(
-      shingleBands(docs.filter($"doc_id" % mod === 0), bands, rows)._2)
+    val bandN = bandSig.filter($"doc_id" % mod === 0)
     // signature columns are sk* (not the graded incrementalNearDupUpsert
     // shape's k*): the one consumer is the composed ingest's normalized
     // union, whose k1..k4 projection must not read like a self-reference
@@ -1927,14 +1879,10 @@ object Dedup {
     * construction. `bucketCap` guards the adversarial all-identical-docs
     * corpus exactly as in [[nearDupPairs]] (dropped buckets are recovered
     * by exact dedup, J1). */
-  /** @param sa0 an already-tracked [[shingleFpArrays]] frame to reuse
-    *            ([[lshRecall]] shares one build across the truth side and
-    *            both band layouts). */
-  def jaccardNgramPairs(docs: DataFrame, t: Double = JaccardJoinThreshold,
-                        bucketCap: Int = BucketCap,
-                        sa0: Option[DataFrame] = None): DataFrame = {
-    import docs.sparkSession.implicits._
-    val sa = sa0.getOrElse(graft.Pinned.track(shingleFpArrays(docs)))
+  /** `sa` is a [[shingleFpArrays]] frame (doc_id, dshings). */
+  def jaccardNgramPairs(sa: DataFrame, t: Double = JaccardJoinThreshold,
+                        bucketCap: Int = BucketCap): DataFrame = {
+    import sa.sparkSession.implicits._
     val ds = sa.select($"doc_id", explode($"dshings").as("shingle"))
     val sizes = sa.select($"doc_id", size($"dshings").as("n"))
     val freq = ds.groupBy($"shingle").agg(count(lit(1)).as("cnt"))

@@ -25,8 +25,7 @@ object ExtQueries {
     // (diameters <= 2) — the recursive-CTE oracle checks EXACT components
     // either way.
     SessionMemo(s, d, "j2_neardup_groups")(
-      Dedup.nearDupGroupsConverged(Tables.documents(s, d),
-        pairs0 = Some(neardupPairs(s, d))))
+      Dedup.nearDupGroupsConverged(Tables.documents(s, d), neardupPairs(s, d)))
 
   /** Fan an unsplittable single-row-group harness scan out to the
     * session's shuffle parallelism by its primary key (guide §2.5 input
@@ -49,9 +48,7 @@ object ExtQueries {
     * consumer. */
   private def neardupPairs(s: SparkSession, d: String): DataFrame =
     SessionMemo(s, d, "j2_neardup_pairs")(
-      graft.Pinned.stageEager(Dedup.nearDupPairs(Tables.documents(s, d),
-        sa0 = Some(shingleFpFrame(s, d)),
-        bandSig0 = Some(bandSigFrame(s, d)))))
+      graft.Pinned.stageEager(Dedup.nearDupPairs(lshBuild(s, d))))
 
   /** SemDeDup decision surface: the converged-CC kernel inside runs eager
     * supersteps at construction time, so memoize it (same lifecycle as
@@ -98,13 +95,11 @@ object ExtQueries {
 
   /** Image hamming-pair graph feeds TWO graded queries (j5_phash_hamming
     * and the j5_phash_groups clustering): memoize the eagerly-staged pairs
-    * frame. Round-18: the builder reads the memoized fused-aHash frame
-    * (hashes0) instead of running its own decode+hash pass — bit-identical
-    * input by construction (same memo the incremental family probes). */
+    * frame, built from the memoized fused-aHash frame — the same memo
+    * the incremental family probes. */
   private def phashHamPairs(s: SparkSession, d: String): DataFrame =
     SessionMemo(s, d, "j5_phash_pairs")(graft.Pinned.stageEager(
-      Multimodal.aHashHammingPairs(pngFrame(s, d),
-        hashes0 = Some(imgHashFrame(s, d)))))
+      Multimodal.aHashHammingPairs(imgHashFrame(s, d))))
 
   /** Image near-dup clusters: converged CC over the hamming-pair graph —
     * eager supersteps at construction, so memoized like the lexical and
@@ -245,11 +240,8 @@ object ExtQueries {
   private def ingestNight1Frame(s: SparkSession, d: String): Pipeline.IngestNight1 =
     SessionMemo.of[Pipeline.IngestNight1](s, d, "j7_ingest_night1",
       _.frames.foreach(graft.Pinned.releaseFrame))(
-      Pipeline.ingestNight1(Tables.documents(s, d),
-        sliceLines0 = Some(bloomSliceFrame(s, d)),
-        stager = graft.Pinned.stageEager,
-        slicePos0 = Some(bloomPosFrame(s, d)),
-        build0 = Some(lshBuild(s, d))))
+      Pipeline.ingestNight1(Tables.documents(s, d), bloomSliceFrame(s, d),
+        bloomPosFrame(s, d), lshBuild(s, d)))
 
   /** The semantic gate's verdict frame for the composed five-gate audit:
     * the audit batch carve's vectors probing the persisted frozen state
@@ -286,9 +278,10 @@ object ExtQueries {
     // row over the same four minhashes (P(candidate) = 1-(1-j)^4 vs the
     // default 2x2's 1-(1-j^2)^2) — the graded second point of the
     // recall/precision trade every LSH deployment tunes.
-    "j2_neardup_pairs_b4r1" -> ((s, d) =>
-      Dedup.nearDupPairs(Tables.documents(s, d), bands = 4, rows = 1,
-        sa0 = Some(shingleFpFrame(s, d)))),
+    "j2_neardup_pairs_b4r1" -> ((s, d) => {
+      val sa = shingleFpFrame(s, d)
+      Dedup.nearDupPairs((sa, Dedup.bandSigFrom(sa, bands = 4, rows = 1)))
+    }),
     "j2_simhash" -> ((s, d) =>
       Dedup.simhash(Tables.documents(s, d))),
     // Manku-style simhash near-dup pairs (byte-block pigeonhole, exact
@@ -299,8 +292,7 @@ object ExtQueries {
     // J2 — EXACT n-gram Jaccard similarity join (prefix filter): the
     // no-false-negative complement to the LSH candidate path.
     "j2_jaccard_ngram" -> ((s, d) =>
-      Dedup.jaccardNgramPairs(Tables.documents(s, d),
-        sa0 = Some(shingleFpFrame(s, d)))),
+      Dedup.jaccardNgramPairs(shingleFpFrame(s, d))),
 
     // J2 — text-LSH recall/precision vs the IN-REPO exact ground truth
     // (round-15 verdict #2): the banded candidate stage graded against
@@ -308,8 +300,7 @@ object ExtQueries {
     // at BOTH banding dial points in one table — the j3_ann_recall
     // convention applied to the text family.
     "j2_lsh_recall" -> ((s, d) =>
-      Dedup.lshRecall(Tables.documents(s, d),
-        sa0 = Some(shingleFpFrame(s, d)))),
+      Dedup.lshRecall(shingleFpFrame(s, d))),
 
     // J2 — near-dup CLUSTERS: connected components over the verified pair
     // graph; the dedup decision surface (keep is_canonical, drop the rest).
@@ -320,8 +311,7 @@ object ExtQueries {
     // deciding whether two crawls get mixed, cross-deduped, or dropped;
     // full upper triangle incl. zero-overlap pairs.
     "j2_source_overlap" -> ((s, d) =>
-      Dedup.sourceOverlap(Tables.documents(s, d),
-        sa0 = Some(shingleFpFrame(s, d)))),
+      Dedup.sourceOverlap(Tables.documents(s, d), shingleFpFrame(s, d))),
 
     // J2 — CROSS-document duplicated-10-gram fraction + the >30% scrub
     // verdict (the MassiveText/RefinedWeb boilerplate signal; catches
@@ -367,8 +357,7 @@ object ExtQueries {
     // token/char accounting; removed_frac_e6 is the published
     // MassiveText-convention duplicated-character-mass fraction.
     "j2_scrub_spans" -> ((s, d) =>
-      Dedup.scrubSpans(Tables.documents(s, d),
-        starts0 = Some(dupStartsFrame(s, d)))),
+      Dedup.scrubSpans(dupStartsFrame(s, d))),
 
     // J2 — LINE-grain exact dedup: the CCNet first-pass transform —
     // remove every fixed-width line whose hash occurs in >= 2 documents;
@@ -381,8 +370,7 @@ object ExtQueries {
     // probes the standing corpus LSH index; per-batch cost scales with
     // the batch, not the corpus.
     "j2_incremental" -> ((s, d) =>
-      Dedup.incrementalNearDup(Tables.documents(s, d),
-        build0 = Some(lshBuild(s, d)))),
+      Dedup.incrementalNearDup(Tables.documents(s, d), lshBuild(s, d))),
 
     // J2 — the STATE-TABLE form of the incremental lookup (round 13): the
     // standing corpus LSH index (cap-gated band rows + corpus shingle
@@ -409,8 +397,7 @@ object ExtQueries {
     // shingle sets — a batch-2 near-dup of a batch-1-kept doc is caught
     // across the ingest boundary. batch_no attribution per row.
     "j2_incremental_upsert2" -> ((s, d) =>
-      Dedup.incrementalNearDupUpsert2(Tables.documents(s, d),
-        build0 = Some(lshBuild(s, d)))),
+      Dedup.incrementalNearDupUpsert2(Tables.documents(s, d), lshBuild(s, d))),
 
     // J2 — BLOOM-FILTER line-membership probe (the Dolma bounded-memory
     // ingest filter): k=3 md5 positions in a fixed 2^19-bit array over the
@@ -442,17 +429,14 @@ object ExtQueries {
     // One row per slice: lines, set positions, (m, k) dials, fill, and
     // the slice's own predicted FPR fill^k.
     "j2_bloom_scale" -> ((s, d) =>
-      Dedup.bloomScaleStats(Tables.documents(s, d),
-        sliceLines0 = Some(bloomSliceFrame(s, d)))),
+      Dedup.bloomScaleStats(bloomSliceFrame(s, d), bloomPosFrame(s, d))),
 
     // J2 — the sliced filter's batch probe: membership = all k_s
     // positions set in slice s for SOME single slice, under each slice's
     // own (m_s, k_s); per-doc rollup with the exact twin AND n_false_neg
     // (= 0 by the slice construction, graded in-row).
     "j2_bloom_scale_probe" -> ((s, d) =>
-      Dedup.bloomScaleProbe(Tables.documents(s, d),
-        sliceLines0 = Some(bloomSliceFrame(s, d)),
-        slicePos0 = Some(bloomPosFrame(s, d)))),
+      Dedup.bloomScaleProbe(Tables.documents(s, d), bloomPosFrame(s, d))),
 
     // J2 — the sliced probe from the PERSISTED (line, slice) state TABLE
     // (round 16, completing the state-table convention across all three
@@ -469,8 +453,7 @@ object ExtQueries {
     // budget; ScaleProbe re-measures at 10x/30x.
     "j2_bloom_scale_stats" -> ((s, d) =>
       Dedup.bloomScaleStatsCompound(Tables.documents(s, d),
-        sliceLines0 = Some(bloomSliceFrame(s, d)),
-        slicePos0 = Some(bloomPosFrame(s, d)))),
+        bloomSliceFrame(s, d), bloomPosFrame(s, d))),
 
     // J2 — the sliced filter's WRITE step (read-probe-write parity with
     // the fixed-filter upsert): standing (slice, p) rows + kept batch
@@ -479,8 +462,7 @@ object ExtQueries {
     // the Almeida insert discipline.
     "j2_bloom_scale_upsert" -> ((s, d) =>
       Dedup.bloomScaleUpsert(Tables.documents(s, d),
-        sliceLines0 = Some(bloomSliceFrame(s, d)),
-        slicePos0 = Some(bloomPosFrame(s, d)))),
+        bloomSliceFrame(s, d), bloomPosFrame(s, d))),
 
     // J2 — TWO-consecutive-ingest state evolution (round-15 verdict #3):
     // the batch carve halves (doc_id % 20 == 10, then % 20 == 0); batch 1
@@ -490,24 +472,21 @@ object ExtQueries {
     // write path's composition as a graded artifact.
     "j2_bloom_scale_upsert2" -> ((s, d) =>
       Dedup.bloomScaleUpsert2(Tables.documents(s, d),
-        sliceLines0 = Some(bloomSliceFrame(s, d)),
-        slicePos0 = Some(bloomPosFrame(s, d)))),
+        bloomSliceFrame(s, d), bloomPosFrame(s, d))),
 
     // J2 — maximal duplicated-run length per doc (Lee et al. 2022's
     // headline signal): merged duplicated-10-gram runs surfaced as run
     // count / longest run / total duplicated tokens + the >=50-token
     // wholesale-copy verdict; same df>=2 fingerprints as the scrub.
     "j2_dup_run_len" -> ((s, d) =>
-      Dedup.dupRunLength(Tables.documents(s, d),
-        starts0 = Some(dupStartsFrame(s, d)))),
+      Dedup.dupRunLength(dupStartsFrame(s, d))),
 
     // J2 — the LONG-RUN scrub TRANSFORM (Lee et al. 2022's convention):
     // remove only merged duplicated runs >= 50 tokens (wholesale copying),
     // KEEPING the short shared spans the full scrub strips — the published
     // fluency-preserving dedup transform.
     "j2_scrub_long_runs" -> ((s, d) =>
-      Dedup.scrubLongRuns(Tables.documents(s, d),
-        starts0 = Some(dupStartsFrame(s, d)))),
+      Dedup.scrubLongRuns(dupStartsFrame(s, d))),
 
     // J7 — the curation capstones: keep/drop/split manifest and benchmark
     // decontamination, composed from the graded J1-J4 kernels.
@@ -522,8 +501,8 @@ object ExtQueries {
     "j7_funnel" -> ((s, d) =>
       Pipeline.curationFunnel(Tables.documents(s, d),
         groups = neardupGroups(s, d),
-        imgGroups0 = Some(phashGroups(s, d)),
-        dec0 = Some(decNgramFrame(s, d)))),
+        imgGroups = phashGroups(s, d),
+        dec = decNgramFrame(s, d))),
 
     // J7 — the FULL-gate funnel (round-14 verdict #4): the base funnel
     // plus the Gopher rule bundle and the CCNet perplexity tercile gate
@@ -532,9 +511,9 @@ object ExtQueries {
     "j7_funnel_full" -> ((s, d) =>
       Pipeline.curationFunnelFull(Tables.documents(s, d),
         groups = neardupGroups(s, d),
-        imgGroups0 = Some(phashGroups(s, d)),
-        dec0 = Some(decNgramFrame(s, d)),
-        ppl0 = Some(pplFrame(s, d)))),
+        imgGroups = phashGroups(s, d),
+        dec = decNgramFrame(s, d),
+        ppl = pplFrame(s, d))),
 
     // J7 — per-gate MARGINAL attribution (the prefix funnel's complement,
     // round-14 verdict #7): for each gate over the FULL set, docs/tokens
@@ -544,9 +523,9 @@ object ExtQueries {
     "j7_funnel_marginal" -> ((s, d) =>
       Pipeline.funnelMarginal(Tables.documents(s, d),
         groups = neardupGroups(s, d),
-        imgGroups0 = Some(phashGroups(s, d)),
-        dec0 = Some(decNgramFrame(s, d)),
-        ppl0 = Some(pplFrame(s, d)))),
+        imgGroups = phashGroups(s, d),
+        dec = decNgramFrame(s, d),
+        ppl = pplFrame(s, d))),
 
     // J7 — the INGEST-gate audit (round 15): one batch through the three
     // standing dedup modalities (exact hash, sliced-Bloom lines, LSH
@@ -554,10 +533,8 @@ object ExtQueries {
     // the cheap-to-expensive production order, and the final keep — the
     // incremental complement of j7_funnel's whole-corpus accounting.
     "j7_ingest_audit" -> ((s, d) =>
-      Pipeline.ingestAudit(Tables.documents(s, d),
-        sliceLines0 = Some(bloomSliceFrame(s, d)),
-        slicePos0 = Some(bloomPosFrame(s, d)),
-        build0 = Some(lshBuild(s, d)))),
+      Pipeline.ingestAudit(Tables.documents(s, d), bloomPosFrame(s, d),
+        lshBuild(s, d))),
 
     // J7 — the COMPOSED ingest upsert (round-15 verdict #1): the write
     // step driven by the audit's production keep (exact AND bloom AND
@@ -566,10 +543,8 @@ object ExtQueries {
     // ANY gate enters NO standing state; the per-family upserts stay as
     // the single-modality twins.
     "j7_ingest_upsert" -> ((s, d) =>
-      Pipeline.ingestUpsert(Tables.documents(s, d),
-        sliceLines0 = Some(bloomSliceFrame(s, d)),
-        slicePos0 = Some(bloomPosFrame(s, d)),
-        build0 = Some(lshBuild(s, d)))),
+      Pipeline.ingestUpsert(Tables.documents(s, d), bloomSliceFrame(s, d),
+        bloomPosFrame(s, d), lshBuild(s, d))),
 
     // J7 — the COMPOSED ingest loop over TWO consecutive nights (round
     // 16 capstone): batch 1 (% 20 = 10) through the full three-gate
@@ -578,9 +553,7 @@ object ExtQueries {
     // modality's near-miss of a batch-1 insert drops across the
     // boundary. Normalized (family, k1..k4, batch_no) state table.
     "j7_ingest_upsert2" -> ((s, d) =>
-      Pipeline.ingestUpsert2(Tables.documents(s, d),
-        sliceLines0 = Some(bloomSliceFrame(s, d)),
-        night1 = Some(ingestNight1Frame(s, d)))),
+      Pipeline.ingestUpsert2(Tables.documents(s, d), ingestNight1Frame(s, d))),
 
     // J7 — the composed audit from PERSISTED state tables (round 17): the
     // nightly job READS its standing states — the per-family StateStore
@@ -598,7 +571,8 @@ object ExtQueries {
     // second night's production read. Graded by the upsert2 oracle's
     // own step-2 relations.
     "j7_ingest_state2" -> ((s, d) =>
-      Pipeline.ingestAuditState2(s, d, Tables.documents(s, d))),
+      Pipeline.ingestAuditState2(s, d, Tables.documents(s, d),
+        ingestNight1Frame(s, d))),
 
     // J7 — the FIVE-modality ingest audit (round 17): exact ∧ bloom ∧
     // text-LSH ∧ semantic (persisted frozen-quantizer state probe,
@@ -606,10 +580,8 @@ object ExtQueries {
     // gate attribution in cheap-to-expensive order and the composed keep.
     "j7_ingest_audit_mm" -> ((s, d) =>
       Pipeline.ingestAuditMm(Tables.documents(s, d),
-        semGateFrame(s, d), phashGroups(s, d),
-        sliceLines0 = Some(bloomSliceFrame(s, d)),
-        slicePos0 = Some(bloomPosFrame(s, d)),
-        build0 = Some(lshBuild(s, d)))),
+        semGateFrame(s, d), phashGroups(s, d), bloomPosFrame(s, d),
+        lshBuild(s, d))),
 
     // J7 — the FIVE-gate audit from PERSISTED state tables (round 17):
     // every modality's standing state read as a TABLE — the lexical
@@ -620,7 +592,7 @@ object ExtQueries {
     // j7_ingest_audit_mm (shared presentation + shared oracle).
     "j7_ingest_state_mm" -> ((s, d) =>
       Pipeline.ingestAuditStateMm(s, d, Tables.documents(s, d),
-        semGateFrame(s, d), imgGroups0 = Some(phashGroups(s, d)))),
+        semGateFrame(s, d), phashGroups(s, d))),
 
     // J7 — the FIVE-gate composed UPSERT (round 17): the three lexical
     // write legs under the five-modality keep PLUS the semantic member
@@ -630,10 +602,8 @@ object ExtQueries {
     "j7_ingest_upsert_mm" -> ((s, d) =>
       Pipeline.ingestUpsertMm(Tables.documents(s, d),
         Similarity.semStateTables(s, d, Tables.embeddings(s, d))(1),
-        semGateFrame(s, d), phashGroups(s, d),
-        sliceLines0 = Some(bloomSliceFrame(s, d)),
-        slicePos0 = Some(bloomPosFrame(s, d)),
-        build0 = Some(lshBuild(s, d)))),
+        semGateFrame(s, d), phashGroups(s, d), bloomSliceFrame(s, d),
+        bloomPosFrame(s, d), lshBuild(s, d))),
 
     // J7 — STATE RETRACTION (round 17): the takedown batch — remove the
     // doc_id % 25 == 11 carve from EVERY maintained state and emit the
@@ -646,7 +616,7 @@ object ExtQueries {
       Pipeline.retract(docs, phashGroups(s, d),
         decodedFrame(s, d),
         Similarity.semStateTables(s, d, Tables.embeddings(s, d))(1),
-        sliceLines0 = Some(bloomSliceFrame(s, d)))
+        bloomSliceFrame(s, d))
     }),
 
     // J3 — the QUANTIZER RETRAIN (round 17): centroids retrained on the
@@ -669,7 +639,7 @@ object ExtQueries {
     "j7_trainset_mm" -> ((s, d) =>
       Pipeline.trainsetManifestMm(Tables.documents(s, d),
         groups = neardupGroups(s, d),
-        imgGroups0 = Some(phashGroups(s, d)))),
+        imgGroups = phashGroups(s, d))),
     "j7_decontam" -> ((s, d) =>
       Pipeline.decontam(Tables.documents(s, d))),
 
@@ -751,29 +721,27 @@ object ExtQueries {
     // J3 scale path #2 — IVF coarse-quantizer ANN (probe-limited search;
     // multi-probe by default: nprobe = IvfProbes = 4 nearest cells).
     "j3_ivf_ann" -> ((s, d) =>
-      Similarity.annIvf(Tables.embeddings(s, d),
-        cents0 = Some(ivfCentsFrame(s, d)))),
+      Similarity.annIvf(Tables.embeddings(s, d), ivfCentsFrame(s, d))),
 
     // the probe dial's LOW point (nprobe = 1): same trained quantizer,
     // single probed cell — graded so the recall/cost trade has two
     // measured points (ExtSpec asserts recall@3 multi >= single).
     "j3_ivf_np1" -> ((s, d) =>
-      Similarity.annIvf(Tables.embeddings(s, d), nProbes = 1,
-        cents0 = Some(ivfCentsFrame(s, d)))),
+      Similarity.annIvf(Tables.embeddings(s, d), ivfCentsFrame(s, d),
+        nProbes = 1)),
 
     // J3 — ANN recall@k graded in-query (the ann-benchmarks metric): per
     // query, |IVF top-k ∩ brute-force top-k| / k — the approximate path's
     // QUALITY as a driver-hash-graded artifact next to its cost dial.
     "j3_ann_recall" -> ((s, d) =>
-      Similarity.annRecall(Tables.embeddings(s, d),
-        cents0 = Some(ivfCentsFrame(s, d)))),
+      Similarity.annRecall(Tables.embeddings(s, d), ivfCentsFrame(s, d))),
 
     // the dial's LOW point: recall at nprobe = 1 — with j3_ann_recall this
     // grades BOTH ends of the published recall/cost trade (ExtSpec pins
     // multi >= single on the same corpus).
     "j3_ann_recall_np1" -> ((s, d) =>
-      Similarity.annRecall(Tables.embeddings(s, d), nProbes = 1,
-        cents0 = Some(ivfCentsFrame(s, d)))),
+      Similarity.annRecall(Tables.embeddings(s, d), ivfCentsFrame(s, d),
+        nProbes = 1)),
 
     // J3 — SEMANTIC dedup (SemDeDup): sqrt(N) embedding cells from the
     // Lloyd coarse quantizer, intra-cell exact-integer cosine near-sets,
@@ -795,15 +763,14 @@ object ExtQueries {
     // the batch, not the corpus.
     "j3_semdedup_inc" -> ((s, d) =>
       Similarity.semDedupIncremental(Tables.embeddings(s, d),
-        cells0 = Some(semIncCellsFrame(s, d)))),
+        semIncCellsFrame(s, d))),
 
     // J8/J3 — embedding drift at the QUANTIZER-CELL grain (round 14): PSI
     // of the batch's cell-occupancy histogram vs the standing corpus's
     // over the frozen centroids — catches topic/mode shift that leaves
     // every per-dimension mean in place; j8_psi's smoothing + decimal sum.
     "j8_cell_psi" -> ((s, d) =>
-      Similarity.cellDrift(Tables.embeddings(s, d),
-        cells0 = Some(semIncCellsFrame(s, d)))),
+      Similarity.cellDrift(Tables.embeddings(s, d), semIncCellsFrame(s, d))),
 
     // J8/J3 — the cell-PSI STATE form (round-14 verdict #3): batch
     // histogram vs the PERSISTED standing histogram over the PERSISTED
@@ -918,8 +885,7 @@ object ExtQueries {
     // seeded shuffle within each stage; exact global rank + token prefix
     // sum via the two-phase distributed cumsum.
     "j7_curriculum" -> ((s, d) =>
-      Pipeline.curriculum(Tables.documents(s, d),
-        ppl0 = Some(pplFrame(s, d)))),
+      Pipeline.curriculum(Tables.documents(s, d), pplFrame(s, d))),
 
     "j7_ppl_buckets" -> ((s, d) => pplFrame(s, d)),
 
@@ -1032,7 +998,7 @@ object ExtQueries {
       Pipeline.packFitStats(
         Tables.documents(s, d).select($"doc_id", $"source")
           .join(bpeEncoded(s, d).select($"doc_id", $"n_tokens"), Seq("doc_id")),
-        fit0 = Some(packFitFrame(s, d, wide = false)))
+        packFitFrame(s, d, wide = false))
     }),
 
     // J7 — the packing WINDOW dial's wide point (round 14): the same FFD
@@ -1051,12 +1017,9 @@ object ExtQueries {
         decodedFrame(s, d),
         phashGroups(s, d))),
 
-    "j7_pack_fit_wdial" -> ((s, d) => {
-      import s.implicits._
-      Pipeline.packFitWindowDial(bpeEncoded(s, d).select($"doc_id", $"n_tokens"),
-        fitSmall0 = Some(packFitFrame(s, d, wide = false)),
-        fitLarge0 = Some(packFitFrame(s, d, wide = true)))
-    }),
+    "j7_pack_fit_wdial" -> ((s, d) =>
+      Pipeline.packFitWindowDial(packFitFrame(s, d, wide = false),
+        packFitFrame(s, d, wide = true))),
 
     // J7 — span corruption at the TOKEN-ID grain (round 13): the T5 prep
     // masks AFTER tokenization — 8-ID blocks of the memoized BPE doc
@@ -1127,7 +1090,7 @@ object ExtQueries {
     // hamming-3 radius; per-batch cost scales with the batch.
     "j5_incremental" -> ((s, d) =>
       Multimodal.incrementalImages(Tables.documents(s, d),
-        hashes0 = Some(imgHashFrame(s, d)), idx0 = Some(imgIdxFrame(s, d)))),
+        imgHashFrame(s, d), imgIdxFrame(s, d))),
 
     // J5 — the STATE-TABLE form of the incremental image lookup: the
     // standing aHash index is PERSISTED as parquet once per (process,
@@ -1136,7 +1099,7 @@ object ExtQueries {
     // probe tail + shared oracle; ExtSpec pins row equality).
     "j5_phash_state" -> ((s, d) =>
       Multimodal.incrementalImagesState(s, d, Tables.documents(s, d),
-        hashes0 = Some(imgHashFrame(s, d)), idx0 = Some(imgIdxFrame(s, d)))),
+        imgHashFrame(s, d), imgIdxFrame(s, d))),
 
     // J5 — the image state UPSERT: the aHash-index WRITE step — the
     // post-ingest index (standing cap-gated block rows + kept batch docs'
@@ -1144,7 +1107,7 @@ object ExtQueries {
     // against the same probe chain as the verdict twin.
     "j5_phash_upsert" -> ((s, d) =>
       Multimodal.incrementalImagesUpsert(Tables.documents(s, d),
-        hashes0 = Some(imgHashFrame(s, d)), idx0 = Some(imgIdxFrame(s, d)))),
+        imgHashFrame(s, d), imgIdxFrame(s, d))),
 
     // J5 — TWO-consecutive-ingest evolution of the image index: batch 1
     // (% 20 = 10) probes the cap-gated corpus index and appends its kept
@@ -1154,7 +1117,7 @@ object ExtQueries {
     // attribution per row.
     "j5_phash_upsert2" -> ((s, d) =>
       Multimodal.incrementalImagesUpsert2(Tables.documents(s, d),
-        hashes0 = Some(imgHashFrame(s, d)))),
+        imgHashFrame(s, d))),
 
     // J6 — sketches. No DuckDB-equivalent oracle exists (HLL registers and
     // quantile sketches are engine-specific), so the row is SELF-CHECKING
@@ -1297,7 +1260,7 @@ object ExtQueries {
     // relation + k hash joins + array_intersect — append-mode, ZERO state.
     "st_bloom_scale" -> ((s, d) =>
       graft.streaming.StreamOps.bloomScaleProbeLines(Tables.documents(s, d),
-        sliceLines0 = Some(bloomSliceFrame(s, d)))),
+        bloomSliceFrame(s, d))),
 
     // I + J3 — STREAM-STATIC semantic ingest probe (round 14): incoming
     // vectors (as a stream in the semProbeStream twin) probe the PERSISTED
@@ -1322,8 +1285,7 @@ object ExtQueries {
       val emb = Tables.embeddings(s, d)
       val Seq(cents, keptM) = Similarity.semStateTables(s, d, emb)
       graft.streaming.StreamOps.ingestProbeMm(Tables.documents(s, d), emb,
-        cents, keptM, phashGroups(s, d),
-        sliceLines0 = Some(bloomSliceFrame(s, d)))
+        cents, keptM, phashGroups(s, d), bloomSliceFrame(s, d))
     }),
 
     // I + J5 — STREAM-STATIC image ingest probe (round 17): incoming docs
@@ -1335,7 +1297,7 @@ object ExtQueries {
     // carried hashes + gated-block mask — append-mode with ZERO state.
     "st_phash_probe" -> ((s, d) =>
       graft.streaming.StreamOps.imgProbe(Tables.documents(s, d),
-        idx0 = Some(imgIdxFrame(s, d)), hashes0 = Some(imgHashFrame(s, d)))),
+        imgIdxFrame(s, d), imgHashFrame(s, d))),
 
     // I + J7 — the STREAM-STATIC COMPOSED ingest audit (round 17):
     // incoming docs run the first-firing-gate attribution against the
@@ -1347,7 +1309,7 @@ object ExtQueries {
     // batch by j7_ingest_audit.
     "st_ingest" -> ((s, d) =>
       graft.streaming.StreamOps.ingestProbe(Tables.documents(s, d),
-        sliceLines0 = Some(bloomSliceFrame(s, d))))
+        bloomSliceFrame(s, d)))
   )
 
   // ------------------------------------------------------------ oracle SQL

@@ -1,8 +1,7 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing (SURVEY J5): media payloads as opaque
   * BinaryType columns with typed metadata alongside.
@@ -64,30 +63,6 @@ object Multimodal {
           .otherwise(expr(s"src_w * $box div src_h")).cast("long").as("out_w"),
         when($"src_w" >= $"src_h", expr(s"src_h * $box div src_w"))
           .otherwise(lit(box.toLong)).cast("long").as("out_h"))
-  }
-
-  private val featSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("n_bytes", LongType),
-    StructField("fake_width", LongType),
-    StructField("fake_height", LongType)))
-
-  /** Batched per-partition "decode": iterates payload batches exactly like a
-    * mapInPandas UDF would — one partition in, one iterator of feature rows
-    * out, no driver involvement. Replace the body with a real codec when
-    * the runtime has one. */
-  def decodeStub(docsWithPayload: DataFrame): DataFrame = {
-    val spark = docsWithPayload.sparkSession
-    val rdd = docsWithPayload.select("doc_id", "payload").rdd.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val bytes = r.getAs[Array[Byte]](1)
-        // deterministic fake decode: pretend bytes are a (w, h) image
-        val w = (bytes.length % 64) + 1
-        Row(id, bytes.length.toLong, w.toLong, (bytes.length / w + 1).toLong)
-      }
-    }
-    spark.createDataFrame(rdd, featSchema)
   }
 
   /** Minimal deterministic PNG writer: 8-bit RGB (color type 2), one
@@ -373,21 +348,14 @@ object Multimodal {
     * 100 TB posture: 4 small rows per image, one equi-shuffle on the
     * (block, value) key, verification touches candidates only; the
     * dial is blocks-vs-radius, the cap bounds any hot block. */
-  /** @param hashes0 an already-built (doc_id, ahash) frame over the same
-    *                 payloads (the query layer's memoized [[aHashLocal]]
-    *                 build) — spares this builder its own decode+hash
-    *                 pass; `payloads` is unused when supplied. */
-  def aHashHammingPairs(payloads: DataFrame, p: Int = 8,
+  /** `hashes` is the (doc_id, ahash) frame of the FUSED row-local kernel
+    * [[aHashLocal]] (bit-identical to the aHash chain — ExtSpec pins row
+    * equality), staged or tracked. */
+  def aHashHammingPairs(hashes: DataFrame,
                         maxHamming: Int = AHashHamMaxHamming,
-                        cap: Int = AHashHamBucketCap,
-                        hashes0: Option[DataFrame] = None): DataFrame = {
-    val spark = payloads.sparkSession
-    import spark.implicits._
-    // hashes via the FUSED row-local kernel (bit-identical to the aHash
-    // chain — ExtSpec pins row equality): spares the pooled-grain exchange
-    // and its two groupBys per build, the aHashLocal scale rationale
-    val h = hashes0.getOrElse(graft.Pinned.track(aHashLocal(payloads, p)))
-    val bands = h.select($"doc_id", $"ahash",
+                        cap: Int = AHashHamBucketCap): DataFrame = {
+    import hashes.sparkSession.implicits._
+    val bands = hashes.select($"doc_id", $"ahash",
         explode(sequence(lit(0), lit(3))).as("blk"))
       .select($"doc_id", $"ahash", $"blk",
         // arithmetic vs logical shift is mask-invisible here: & 65535
@@ -542,19 +510,14 @@ object Multimodal {
     * established): a new batch (doc_id % `mod` == 0) probes the standing
     * corpus's cap-gated 16-bit-block aHash index at the hamming-3 radius;
     * per-batch cost scales with the batch (one batch decode + one
-    * banded equi-join), not the corpus.
-    * @param hashes0 an already-built (doc_id, ahash) frame over ALL docs
-    *                to slice (the query layer's memoized build);
-    * @param idx0    an already-built standing index to probe. */
-  def incrementalImages(docs: DataFrame, mod: Int = 10,
-                        cap: Int = AHashHamBucketCap,
-                        maxHamming: Int = AHashHamMaxHamming,
-                        hashes0: Option[DataFrame] = None,
-                        idx0: Option[DataFrame] = None): DataFrame = {
+    * banded equi-join), not the corpus. `hashes` is the (doc_id, ahash)
+    * frame over ALL docs, sliced to the batch; `idx` the standing
+    * [[imgIndex]] to probe. */
+  def incrementalImages(docs: DataFrame, hashes: DataFrame, idx: DataFrame,
+                        mod: Int = 10,
+                        maxHamming: Int = AHashHamMaxHamming): DataFrame = {
     import docs.sparkSession.implicits._
-    lazy val hashes = graft.Pinned.track(aHashLocal(pngFixture(docs)))
-    val idx = idx0.getOrElse(imgIndex(hashes.filter($"doc_id" % mod =!= 0), cap))
-    val batchHashes = hashes0.getOrElse(hashes).filter($"doc_id" % mod === 0)
+    val batchHashes = hashes.filter($"doc_id" % mod === 0)
     imgProbeTail(docs.filter($"doc_id" % mod === 0).select($"doc_id"),
       aHashBlockRows(batchHashes), idx, maxHamming)
   }
@@ -565,15 +528,8 @@ object Multimodal {
     * shared by the state probe, the upsert, and the streaming twin, so no
     * two paths can persist diverging state for one dataset. */
   private[graft] def imgStateTables(s: org.apache.spark.sql.SparkSession,
-                                    key: String, docs: DataFrame,
-                                    mod: Int = 10, cap: Int = AHashHamBucketCap,
-                                    idx0: Option[DataFrame] = None): Seq[DataFrame] = {
-    import docs.sparkSession.implicits._
-    StateStore.tables(s, "graft_j5_imgstate", key, Seq("ahash_index")) {
-      Seq(idx0.getOrElse(imgIndex(
-        aHashLocal(pngFixture(docs.filter($"doc_id" % mod =!= 0))), cap)))
-    }
-  }
+                                    key: String, idx: DataFrame): Seq[DataFrame] =
+    StateStore.tables(s, "graft_j5_imgstate", key, Seq("ahash_index"))(Seq(idx))
 
   /** J5 — the STATE-TABLE form of the incremental image lookup: the
     * standing aHash index is read from its persisted parquet table and the
@@ -582,17 +538,14 @@ object Multimodal {
     * [[incrementalImages]] (shared probe tail + shared oracle; ExtSpec
     * pins row equality). */
   def incrementalImagesState(s: org.apache.spark.sql.SparkSession, key: String,
-                             docs: DataFrame, mod: Int = 10,
-                             cap: Int = AHashHamBucketCap,
-                             maxHamming: Int = AHashHamMaxHamming,
-                             hashes0: Option[DataFrame] = None,
-                             idx0: Option[DataFrame] = None): DataFrame = {
+                             docs: DataFrame, hashes: DataFrame, idx: DataFrame,
+                             mod: Int = 10,
+                             maxHamming: Int = AHashHamMaxHamming): DataFrame = {
     import docs.sparkSession.implicits._
-    val Seq(idx) = imgStateTables(s, key, docs, mod, cap, idx0)
+    val Seq(stateIdx) = imgStateTables(s, key, idx)
     val batch = docs.filter($"doc_id" % mod === 0)
-    val batchHashes = hashes0.getOrElse(aHashLocal(pngFixture(batch)))
-      .filter($"doc_id" % mod === 0)
-    imgProbeTail(batch.select($"doc_id"), aHashBlockRows(batchHashes), idx,
+    val batchHashes = hashes.filter($"doc_id" % mod === 0)
+    imgProbeTail(batch.select($"doc_id"), aHashBlockRows(batchHashes), stateIdx,
       maxHamming)
   }
 
@@ -602,16 +555,11 @@ object Multimodal {
     * batch docs the probe KEEPS (is_new = 1; dropped near-duplicates never
     * enter the index). Graded against the same probe chain as the verdict
     * twin, so read and write paths cannot disagree about index contents. */
-  def incrementalImagesUpsert(docs: DataFrame, mod: Int = 10,
-                              cap: Int = AHashHamBucketCap,
-                              maxHamming: Int = AHashHamMaxHamming,
-                              hashes0: Option[DataFrame] = None,
-                              idx0: Option[DataFrame] = None): DataFrame = {
+  def incrementalImagesUpsert(docs: DataFrame, hashes: DataFrame, idx: DataFrame,
+                              mod: Int = 10,
+                              maxHamming: Int = AHashHamMaxHamming): DataFrame = {
     import docs.sparkSession.implicits._
-    lazy val hashes = graft.Pinned.track(aHashLocal(pngFixture(docs)))
-    val idx = idx0.getOrElse(imgIndex(hashes.filter($"doc_id" % mod =!= 0), cap))
-    val batchBlocks = aHashBlockRows(
-      hashes0.getOrElse(hashes).filter($"doc_id" % mod === 0))
+    val batchBlocks = aHashBlockRows(hashes.filter($"doc_id" % mod === 0))
     val verdicts = imgProbeTail(docs.filter($"doc_id" % mod === 0).select($"doc_id"),
       batchBlocks, idx, maxHamming)
     val keptIds = verdicts.filter($"verdict" === "keep").select($"doc_id")
@@ -635,16 +583,11 @@ object Multimodal {
     * 100 TB posture: ONE decode/hash pass sliced three ways, two
     * block-grain equi-join probe rounds, cap gates as bounded (blk, val)
     * aggregates — per-ingest cost is the single-step family's plan twice.
-    * @param payloads0 a crafted (doc_id, payload) frame replacing the
-    *                  closed-form PNG fixture (spec fixtures only). */
-  def incrementalImagesUpsert2(docs: DataFrame, mod: Int = 10,
+    * `hashes` is the (doc_id, ahash) frame over ALL docs. */
+  def incrementalImagesUpsert2(docs: DataFrame, hashes: DataFrame, mod: Int = 10,
                                cap: Int = AHashHamBucketCap,
-                               maxHamming: Int = AHashHamMaxHamming,
-                               payloads0: Option[DataFrame] = None,
-                               hashes0: Option[DataFrame] = None): DataFrame = {
+                               maxHamming: Int = AHashHamMaxHamming): DataFrame = {
     import docs.sparkSession.implicits._
-    val hashes = hashes0.getOrElse(graft.Pinned.track(
-      aHashLocal(payloads0.getOrElse(pngFixture(docs)))))
     val blocks = graft.Pinned.track(aHashBlockRows(hashes))
     def gate(bl: DataFrame): DataFrame = {
       val ok = bl.groupBy($"blk", $"val").agg(count(lit(1)).as("cnt"))
@@ -678,15 +621,9 @@ object Multimodal {
     * state-read form of that audit ([[Pipeline.ingestAuditStateMm]])
     * consults a TABLE like every other gate, not a session cache. */
   private[graft] def imgGroupsTable(s: org.apache.spark.sql.SparkSession,
-                                    key: String, docs: DataFrame,
-                                    groups0: Option[DataFrame] = None): DataFrame = {
-    import docs.sparkSession.implicits._
-    StateStore.tables(s, "graft_j5_imggroups", key, Seq("cluster_labels")) {
-      Seq(groups0.getOrElse(Dedup.ccGroupsConverged(
-        docs.select($"doc_id".as("v")),
-        aHashHammingPairs(pngFixture(docs)).select($"doc_a", $"doc_b"))))
-    }.head
-  }
+                                    key: String, groups: DataFrame): DataFrame =
+    StateStore.tables(s, "graft_j5_imggroups", key, Seq("cluster_labels"))(
+      Seq(groups)).head
 
   /** Samples per energy window for [[audioEnergy]]. */
   val AudioWindow = 64

@@ -80,18 +80,12 @@ object Pipeline {
     *
     * Scale posture: one extra doc_id-grain join against the image cluster
     * labels the image family already bounds (banded hamming candidates,
-    * cap-gated, converged CC) — no new shuffle grain.
-    * @param imgGroups0 precomputed image-cluster frame (the query layer
-    *                   passes its memoized `j5_phash_groups` result). */
+    * cap-gated, converged CC) — no new shuffle grain. `imgGroups` is the
+    * image-cluster frame (`j5_phash_groups`). */
   def trainsetManifestMm(docs: DataFrame, groups: DataFrame,
-                         imgGroups0: Option[DataFrame] = None): DataFrame = {
+                         imgGroups: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    val img = imgGroups0.getOrElse(
-      Dedup.ccGroupsConverged(
-        docs.select($"doc_id".as("v")),
-        Multimodal.aHashHammingPairs(Multimodal.pngFixture(docs))
-          .select($"doc_a", $"doc_b")))
-      .select($"doc_id", $"is_canonical".as("img_ok"))
+    val img = imgGroups.select($"doc_id", $"is_canonical".as("img_ok"))
     trainsetManifest(docs, groups)
       .join(img, Seq("doc_id"))
       .select($"doc_id", $"dup_ok", $"lang_ok", $"len_ok", $"quality_ok",
@@ -153,43 +147,41 @@ object Pipeline {
     *
     * 100 TB posture: the exact gate is one hash semi-join, the other two
     * are the probes' own bounded plans; the audit adds two doc-grain
-    * equi-joins at the batch grain. */
-  def ingestAudit(docs: DataFrame, mod: Int = 10,
-                  sliceLines0: Option[DataFrame] = None,
-                  slicePos0: Option[DataFrame] = None,
-                  build0: Option[(DataFrame, DataFrame)] = None): DataFrame =
-    auditFrom(ingestGateVerdicts(docs, mod, sliceLines0, slicePos0, build0))
+    * equi-joins at the batch grain. `slicePos` is the standing sliced-Bloom
+    * position set and `build` the whole-corpus [[Dedup.shingleBands]]
+    * pair. */
+  def ingestAudit(docs: DataFrame, slicePos: DataFrame,
+                  build: (DataFrame, DataFrame), mod: Int = 10): DataFrame =
+    auditFrom(ingestGateVerdicts(docs, build, batchMembers(docs, slicePos, mod), mod))
+
+  /** The batch carve's (doc_id, line) rows that are members of the
+    * standing sliced filter `slicePos` ([[Dedup.bloomScaleMembers]]). */
+  private def batchMembers(docs: DataFrame, slicePos: DataFrame, mod: Int): DataFrame = {
+    import docs.sparkSession.implicits._
+    gateMembers(docs.filter($"doc_id" % mod === 0), slicePos)
+  }
+
+  private def gateMembers(bDocs: DataFrame, slPos: DataFrame): DataFrame =
+    Dedup.bloomScaleMembers(Dedup.bloomDocLines(bDocs), slPos, Dedup.BloomSliceCap0)
 
   /** The three-gate verdict frame of [[ingestAudit]] with the standing
     * states derived in-query from the corpus carve — the recompute form
     * shared by the audit, the five-modality audit ([[ingestAuditMm]]),
-    * and the composed upserts. */
-  /** @param slicePos0 an already-TRACKED standing (slice, p) position set
-    *                    to reuse — the positions chain (per-line k-hash
-    *                    explode + distinct) is the audit's dominant
-    *                    scan-rooted cost and [[gateVerdicts]] consumes it
-    *                    twice, so single-audit callers default to one
-    *                    tracked materialization and the upserts pass the
-    *                    frame their write legs already hold.
-    * @param build0 an already-built [[Dedup.shingleBands]] pair to reuse
-    *               (the upserts' write legs need the same signatures). */
-  private[graft] def ingestGateVerdicts(docs: DataFrame, mod: Int = 10,
-                                        sliceLines0: Option[DataFrame] = None,
-                                        slicePos0: Option[DataFrame] = None,
-                                        build0: Option[(DataFrame, DataFrame)] = None,
-                                        members0: Option[DataFrame] = None): DataFrame = {
+    * and the composed upserts. `build` is the whole-corpus
+    * [[Dedup.shingleBands]] pair (the upserts' write legs read the same
+    * signatures) and `members` the batch's [[batchMembers]]. */
+  private[graft] def ingestGateVerdicts(docs: DataFrame,
+                                        build: (DataFrame, DataFrame),
+                                        members: DataFrame,
+                                        mod: Int = 10): DataFrame = {
     import docs.sparkSession.implicits._
     val corpus = docs.filter($"doc_id" % mod =!= 0)
     val batch = docs.filter($"doc_id" % mod === 0)
-    val (sa, bandSig) = build0.getOrElse(
-      Dedup.shingleBands(docs, Dedup.Bands, Dedup.RowsPerBand))
-    val slPos = slicePos0.getOrElse(graft.Pinned.track(
-      Dedup.bloomSlicePositions(sliceLines0.getOrElse(
-        Dedup.bloomSliceLines(Dedup.bloomDocLines(corpus))))))
+    val (sa, bandSig) = build
     val h0 = corpus.select(md5($"text".cast("binary")).as("h")).distinct()
     gateVerdicts(batch, sa, bandSig,
       bandSig.filter($"doc_id" % mod =!= 0), sa.filter($"doc_id" % mod =!= 0),
-      slPos, h0, members0)
+      members, h0)
   }
 
   /** J7 — the FIVE-modality ingest audit (round-17 verdict #1, widening
@@ -211,13 +203,10 @@ object Pipeline {
     * against the bounded image cluster labels — two extra doc-grain
     * equi-joins over [[ingestAudit]]'s bill. */
   def ingestAuditMm(docs: DataFrame, semVerdicts: DataFrame,
-                    imgGroups: DataFrame, mod: Int = 10,
-                    sliceLines0: Option[DataFrame] = None,
-                    slicePos0: Option[DataFrame] = None,
-                    build0: Option[(DataFrame, DataFrame)] = None,
-                    members0: Option[DataFrame] = None): DataFrame =
-    auditMmFrom(ingestGateVerdicts(docs, mod, sliceLines0, slicePos0, build0,
-      members0), semVerdicts, imgGroups)
+                    imgGroups: DataFrame, slicePos: DataFrame,
+                    build: (DataFrame, DataFrame), mod: Int = 10): DataFrame =
+    auditMmFrom(ingestGateVerdicts(docs, build, batchMembers(docs, slicePos, mod), mod),
+      semVerdicts, imgGroups)
 
   /** The five-gate presentation over [[gateVerdicts]]' columns — the ONE
     * place the composed five-modality rule is spelled (the audit and its
@@ -326,11 +315,12 @@ object Pipeline {
         .select(md5($"text".cast("binary")).as("h")).distinct())
     }
     val batch = docs.filter($"doc_id" % mod === 0)
-    val (saN, bandN) = Dedup.shingleBands(batch, Dedup.Bands, Dedup.RowsPerBand)
+    val (saN, bandN) = Dedup.shingleBands(batch)
     auditFrom(gateVerdicts(batch, saN, bandN,
       corpIdx.select($"doc_c".as("doc_id"), $"band", $"sig"),
       corpSh.select($"doc_c".as("doc_id"), $"shb".as("dshings")),
-      graft.Pinned.track(Dedup.bloomSlicePositions(sliceLines)), hSet))
+      gateMembers(batch, graft.Pinned.track(Dedup.bloomSlicePositions(sliceLines))),
+      hSet))
   }
 
   /** J7 — the FIVE-gate audit from PERSISTED state tables (the
@@ -346,8 +336,7 @@ object Pipeline {
     * presentation + shared oracle; ExtSpec pins row equality). */
   def ingestAuditStateMm(s: org.apache.spark.sql.SparkSession, key: String,
                          docs: DataFrame, semVerdicts: DataFrame,
-                         mod: Int = 10,
-                         imgGroups0: Option[DataFrame] = None): DataFrame = {
+                         imgGroups: DataFrame, mod: Int = 10): DataFrame = {
     import docs.sparkSession.implicits._
     val Seq(corpIdx, corpSh) = Dedup.incStateTables(s, key, docs, mod)
     val sliceLines = Dedup.bloomStateTable(s, key, docs, mod)
@@ -356,14 +345,14 @@ object Pipeline {
       Seq(docs.filter($"doc_id" % mod =!= 0)
         .select(md5($"text".cast("binary")).as("h")).distinct())
     }
-    val img = Multimodal.imgGroupsTable(s, key, docs, imgGroups0)
+    val img = Multimodal.imgGroupsTable(s, key, imgGroups)
     val batch = docs.filter($"doc_id" % mod === 0)
-    val (saN, bandN) = Dedup.shingleBands(batch, Dedup.Bands, Dedup.RowsPerBand)
+    val (saN, bandN) = Dedup.shingleBands(batch)
     auditMmFrom(gateVerdicts(batch, saN, bandN,
       corpIdx.select($"doc_c".as("doc_id"), $"band", $"sig"),
       corpSh.select($"doc_c".as("doc_id"), $"shb".as("dshings")),
-      graft.Pinned.track(Dedup.bloomSlicePositions(sliceLines)), hSet),
-      semVerdicts, img)
+      gateMembers(batch, graft.Pinned.track(Dedup.bloomSlicePositions(sliceLines))),
+      hSet), semVerdicts, img)
   }
 
   /** J7 — night 2's audit from the PERSISTED POST-NIGHT-1 state v1
@@ -379,14 +368,16 @@ object Pipeline {
     * the night-2 verdicts inside [[ingestUpsert2]] (same states, same
     * tail; the upsert2 oracle's own step-2 relations grade it), so the
     * in-query loop and the persisted-state read can never disagree
-    * about night 2. */
+    * about night 2. `night1` is evaluated only when the tables are not
+    * yet written. */
   def ingestAuditState2(s: org.apache.spark.sql.SparkSession, key: String,
-                        docs: DataFrame, mod: Int = 10): DataFrame = {
+                        docs: DataFrame, night1: => IngestNight1,
+                        mod: Int = 10): DataFrame = {
     import docs.sparkSession.implicits._
     val Seq(idx1, memberSh1, sl1, h1) = StateStore.tables(s,
       "graft_j7_ingeststate2", key,
       Seq("band_index", "member_shingles", "slice_lines", "exact_hashes")) {
-      val n1 = ingestNight1(docs, mod)
+      val n1 = night1
       val b1 = docs.filter($"doc_id" % (2L * mod) === mod.toLong)
       Seq(
         n1.corpIdx.unionByName(
@@ -398,15 +389,16 @@ object Pipeline {
           .select(md5($"text".cast("binary")).as("h"))).distinct())
     }
     val b2 = docs.filter($"doc_id" % (2L * mod) === 0L)
-    val (sa2, band2) = Dedup.shingleBands(b2, Dedup.Bands, Dedup.RowsPerBand)
+    val (sa2, band2) = Dedup.shingleBands(b2)
     auditFrom(gateVerdicts(b2, sa2, band2, idx1, memberSh1,
-      graft.Pinned.track(Dedup.bloomSlicePositions(sl1)), h1))
+      gateMembers(b2, graft.Pinned.track(Dedup.bloomSlicePositions(sl1))), h1))
   }
 
-  def ingestUpsert(docs: DataFrame, mod: Int = 10,
-                   sliceLines0: Option[DataFrame] = None,
-                   slicePos0: Option[DataFrame] = None,
-                   build0: Option[(DataFrame, DataFrame)] = None): DataFrame = {
+  /** `sliceLines`/`slicePos` are the standing sliced-Bloom state and
+    * `build` the whole-corpus [[Dedup.shingleBands]] pair; the audit and
+    * the write legs share all three. */
+  def ingestUpsert(docs: DataFrame, sliceLines: DataFrame, slicePos: DataFrame,
+                   build: (DataFrame, DataFrame), mod: Int = 10): DataFrame = {
     import docs.sparkSession.implicits._
     // ONE shared signature build, ONE tracked standing position set, ONE
     // tracked keep set: the un-shared form evaluated the full audit chain
@@ -415,52 +407,36 @@ object Pipeline {
     // optimization's headline recompute waste (guide §1.2 step 1). ONE
     // tracked membership probe (round 18): the bloom gate and the bloom
     // write leg probe the same batch lines against the same positions.
-    val sl0 = sliceLines0.getOrElse(graft.Pinned.track(
-      Dedup.bloomSliceLines(Dedup.bloomDocLines(docs.filter($"doc_id" % mod =!= 0)))))
-    val standing = slicePos0.getOrElse(
-      graft.Pinned.track(Dedup.bloomSlicePositions(sl0)))
-    val build = build0.getOrElse(
-      Dedup.shingleBands(docs, Dedup.Bands, Dedup.RowsPerBand))
-    val members = graft.Pinned.track(Dedup.bloomScaleMembers(
-      Dedup.bloomDocLines(docs.filter($"doc_id" % mod === 0)), standing,
-      Dedup.BloomSliceCap0))
+    val members = graft.Pinned.track(batchMembers(docs, slicePos, mod))
     val kept = graft.Pinned.track(
-      auditFrom(ingestGateVerdicts(docs, mod, Some(sl0), Some(standing),
-        Some(build), Some(members)))
+      auditFrom(ingestGateVerdicts(docs, build, members, mod))
         .filter($"kept" === 1L).select($"doc_id"))
-    upsertLegs(docs, kept, mod, Some(sl0), Some(standing), Some(build),
-      Some(members))
+    upsertLegs(docs, kept, mod, sliceLines, slicePos, build, members)
   }
 
   /** The three lexical write legs under a CALLER-SUPPLIED keep set — the
     * normalized (family ∈ {bloom, lsh, member}, k1..k4, is_new) state
     * union shared by [[ingestUpsert]] (three-gate keep) and
-    * [[ingestUpsertMm]] (five-gate keep + the sem leg on top).
-    * `slicePos0`/`build0`: the caller's already-materialized standing
-    * positions and signature build (see [[ingestGateVerdicts]]). */
+    * [[ingestUpsertMm]] (five-gate keep + the sem leg on top), over the
+    * caller's standing state, signature build and batch membership rows
+    * (see [[ingestUpsert]]). */
   private def upsertLegs(docs: DataFrame, kept: DataFrame, mod: Int,
-                         sliceLines0: Option[DataFrame],
-                         slicePos0: Option[DataFrame] = None,
-                         build0: Option[(DataFrame, DataFrame)] = None,
-                         members0: Option[DataFrame] = None): DataFrame = {
+                         sliceLines: DataFrame, slicePos: DataFrame,
+                         build: (DataFrame, DataFrame),
+                         members: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     val neg = lit(-1L)
     // bloom leg: the single-step upsert with the composed keep injected
-    val sl0 = sliceLines0.getOrElse(Dedup.bloomSliceLines(
-      Dedup.bloomDocLines(docs.filter($"doc_id" % mod =!= 0))))
-    val standing = slicePos0.getOrElse(
-      graft.Pinned.track(Dedup.bloomSlicePositions(sl0)))
     val batch = Dedup.bloomDocLines(docs.filter($"doc_id" % mod === 0))
     val newPos = Dedup.bloomSlicePositions(
-        Dedup.bloomScaleIngestNewSlices(sl0, batch, keptDocs0 = Some(kept),
-          slicePos0 = Some(standing), members0 = members0))
-      .join(standing, Seq("slice", "p"), "left_anti")
-    val bloom = standing.withColumn("is_new", lit(0L))
+        Dedup.bloomScaleIngestNewSlices(sliceLines, batch, members, kept))
+      .join(slicePos, Seq("slice", "p"), "left_anti")
+    val bloom = slicePos.withColumn("is_new", lit(0L))
       .unionByName(newPos.withColumn("is_new", lit(1L)))
       .select(lit("bloom").as("family"), $"slice".as("k1"), $"p".as("k2"),
         neg.as("k3"), neg.as("k4"), $"is_new")
     // lsh leg: band index written under the composed keep
-    val lsh = Dedup.bandIndexUpsert(docs, kept, mod, bandSig0 = build0.map(_._2))
+    val lsh = Dedup.bandIndexUpsert(build._2, kept, mod)
       .select(lit("lsh").as("family"), $"doc_id".as("k1"), $"band".as("k2"),
         $"sk0".as("k3"), $"sk1".as("k4"), $"is_new")
     // membership leg: the post-ingest corpus roster
@@ -490,27 +466,17 @@ object Pipeline {
     * the bounded kept-member relation. */
   def ingestUpsertMm(docs: DataFrame, semKeptM: DataFrame,
                      semVerdicts: DataFrame, imgGroups: DataFrame,
-                     mod: Int = 10,
-                     sliceLines0: Option[DataFrame] = None,
-                     slicePos0: Option[DataFrame] = None,
-                     build0: Option[(DataFrame, DataFrame)] = None): DataFrame = {
+                     sliceLines: DataFrame, slicePos: DataFrame,
+                     build: (DataFrame, DataFrame), mod: Int = 10): DataFrame = {
     import docs.sparkSession.implicits._
     val neg = lit(-1L)
-    // ONE shared signature build + tracked standing position set (the
+    // ONE shared signature build + standing position set (the
     // ingestUpsert discipline), and the five-gate keep materialized once —
     // it is consumed by all four legs
-    val sl0 = sliceLines0.getOrElse(graft.Pinned.track(
-      Dedup.bloomSliceLines(Dedup.bloomDocLines(docs.filter($"doc_id" % mod =!= 0)))))
-    val standing = slicePos0.getOrElse(
-      graft.Pinned.track(Dedup.bloomSlicePositions(sl0)))
-    val build = build0.getOrElse(
-      Dedup.shingleBands(docs, Dedup.Bands, Dedup.RowsPerBand))
-    val members = graft.Pinned.track(Dedup.bloomScaleMembers(
-      Dedup.bloomDocLines(docs.filter($"doc_id" % mod === 0)), standing,
-      Dedup.BloomSliceCap0))
+    val members = graft.Pinned.track(batchMembers(docs, slicePos, mod))
     val kept = graft.Pinned.track(
-      ingestAuditMm(docs, semVerdicts, imgGroups, mod, Some(sl0),
-        Some(standing), Some(build), Some(members))
+      auditMmFrom(ingestGateVerdicts(docs, build, members, mod), semVerdicts,
+        imgGroups)
         .filter($"kept" === 1L).select($"doc_id"))
     val sem = semKeptM.select($"mid".as("k1"), $"cid".as("k2"))
       .withColumn("is_new", lit(0L))
@@ -520,8 +486,7 @@ object Pipeline {
         .withColumn("is_new", lit(1L)))
       .select(lit("sem").as("family"), $"k1", $"k2", neg.as("k3"),
         neg.as("k4"), $"is_new")
-    upsertLegs(docs, kept, mod, Some(sl0), Some(standing), Some(build),
-      Some(members))
+    upsertLegs(docs, kept, mod, sliceLines, slicePos, build, members)
       .unionByName(sem)
   }
 
@@ -550,34 +515,17 @@ object Pipeline {
     * job READS. Members are [[ingestNight1]]'s staged artifacts: the
     * shared lexical build (shingle sets, band rows), the v0 states
     * (cap-gated band index, bloom (line, slice) + position set, exact
-    * hash set), night 1's composed keep, and its bloom inserts. */
-  /** @param externalSl0 true when `sl0` was supplied by the caller (e.g.
-    *                     the query layer's memoized bloom-slice frame):
-    *                     [[frames]] then excludes it, so a holder's
-    *                     eviction only releases frames THIS constructor
-    *                     created — releasing a localCheckpointed frame
-    *                     another cache still serves would leave it with
-    *                     unrecomputable missing blocks. */
-  /** `externalBuild`/`externalPos`: like `externalSl0`, mark the shared
-    * signature build (sa, bandSig) and the standing position set as
-    * CALLER-owned (session memo frames), so eviction only releases frames
-    * this constructor created. */
-  /** `mem1`: night 1's staged batch-1 line-membership probe against the
-    * v0 positions — shared by the night-1 gate and write leg at
-    * construction time; carried only so eviction releases its blocks. */
+    * hash set), night 1's composed keep, and its bloom inserts. `mem1`
+    * is night 1's staged batch-1 line-membership probe against the v0
+    * positions, shared by the night-1 gate and write leg. */
   final case class IngestNight1(sl0: DataFrame, sa: DataFrame,
                                 bandSig: DataFrame, corpIdx: DataFrame,
                                 pos0: DataFrame, h0: DataFrame,
                                 kept1: DataFrame, ns1: DataFrame,
-                                pos1new: DataFrame, mem1: DataFrame,
-                                externalSl0: Boolean = false,
-                                externalBuild: Boolean = false,
-                                externalPos: Boolean = false) {
-    def frames: Seq[DataFrame] =
-      (if (externalSl0) Seq.empty[DataFrame] else Seq(sl0)) ++
-        (if (externalBuild) Seq.empty[DataFrame] else Seq(sa, bandSig)) ++
-        (if (externalPos) Seq.empty[DataFrame] else Seq(pos0)) ++
-        Seq(corpIdx, h0, kept1, ns1, pos1new, mem1)
+                                pos1new: DataFrame, mem1: DataFrame) {
+    /** Night 1 releases only what it creates: the inputs it was handed
+      * (`sl0`, `sa`, `bandSig`, `pos0`) belong to their callers. */
+    def frames: Seq[DataFrame] = Seq(corpIdx, h0, kept1, ns1, pos1new, mem1)
   }
 
   private def gateIdx(idx: DataFrame): DataFrame = {
@@ -599,20 +547,16 @@ object Pipeline {
     * `idxStored` — the standing band index, UNgated (the bucket cap
     * re-applies here at probe time — the grown-bucket re-gate the upsert2
     * family relies on; re-gating an already-gated index is the identity);
-    * `memberSh` — standing members' shingle sets; `slPos` — the standing
-    * sliced-Bloom (slice, p) position set; `hSet` — the standing distinct
+    * `memberSh` — standing members' shingle sets; `members` — the batch's
+    * sliced-Bloom membership rows against the standing position set
+    * ([[gateMembers]]; the composed upserts' write legs read the SAME
+    * frame, guide §1.2 step 1); `hSet` — the standing distinct
     * text-hash set (h). One row per batch doc, every gate's own verdict
     * columns. */
-  /** @param members0 a caller-tracked [[Dedup.bloomScaleMembers]] frame
-    *                  over exactly this batch's lines against `slPos` —
-    *                  the composed upserts' write legs probe the SAME
-    *                  membership, so one tracked frame serves both sides
-    *                  (guide §1.2 step 1). */
   private[graft] def gateVerdicts(bDocs: DataFrame, sa: DataFrame,
                                   bandSig: DataFrame, idxStored: DataFrame,
-                                  memberSh: DataFrame, slPos: DataFrame,
-                                  hSet: DataFrame,
-                                  members0: Option[DataFrame] = None): DataFrame = {
+                                  memberSh: DataFrame, members: DataFrame,
+                                  hSet: DataFrame): DataFrame = {
     import bDocs.sparkSession.implicits._
     val bIds = bDocs.select($"doc_id")
     val ex = bDocs.select($"doc_id", md5($"text".cast("binary")).as("h"))
@@ -620,10 +564,7 @@ object Pipeline {
       .select($"doc_id", coalesce($"e", lit(0L)).as("exact_dup"))
     val bLines = Dedup.bloomDocLines(bDocs)
     val bl = bLines
-      .join(members0.getOrElse(
-            Dedup.bloomScaleMembers(bLines, slPos, Dedup.BloomSliceCap0))
-          .withColumn("bh", lit(1)),
-        Seq("doc_id", "line"), "left")
+      .join(members.withColumn("bh", lit(1)), Seq("doc_id", "line"), "left")
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("nl"),
         sum(coalesce($"bh", lit(0))).cast("long").as("nd"))
@@ -650,91 +591,70 @@ object Pipeline {
     * [[gateVerdicts]] reduced to the surviving ids. */
   private def composedKeep(bDocs: DataFrame, sa: DataFrame, bandSig: DataFrame,
                            idxStored: DataFrame, memberSh: DataFrame,
-                           slPos: DataFrame, hSet: DataFrame,
-                           members0: Option[DataFrame] = None): DataFrame = {
+                           members: DataFrame, hSet: DataFrame): DataFrame = {
     import bDocs.sparkSession.implicits._
-    gateVerdicts(bDocs, sa, bandSig, idxStored, memberSh, slPos, hSet, members0)
+    gateVerdicts(bDocs, sa, bandSig, idxStored, memberSh, members, hSet)
       .filter($"exact_dup" === 0L && $"bloom_drop" === 0L &&
         $"neardup_drop" === 0L)
       .select($"doc_id")
   }
 
-  /** Night 1 of the composed loop: the v0 states plus batch 1's composed
-    * keep and bloom inserts, each passed through `stager` in dependency
-    * order. The graded query passes the ExtQueries memoizing stager
-    * ([[graft.Pinned.stageEager]] per (session, dataset) with
-    * dataset-switch eviction — these nine frames are referenced up to
-    * four times each by night 2's chains, and persisted-with-lineage
-    * intermediates at that depth blow the plan DESCRIPTION up
-    * multiplicatively, the documented Pinned.stage rationale: a run
-    * without staging generated a 196-MILLION-character plan string);
-    * direct callers default to plain tracked persists. */
-  def ingestNight1(docs: DataFrame, mod: Int = 10,
-                   sliceLines0: Option[DataFrame] = None,
-                   stager: DataFrame => DataFrame = graft.Pinned.track,
-                   slicePos0: Option[DataFrame] = None,
-                   build0: Option[(DataFrame, DataFrame)] = None): IngestNight1 = {
+  /** Night 1 of the composed loop over the v0 states `sl0`/`pos0` and the
+    * whole-corpus [[Dedup.shingleBands]] pair `build`: batch 1's composed
+    * keep and bloom inserts, each eagerly staged
+    * ([[graft.Pinned.stageEager]]) in dependency order — these frames are
+    * referenced up to four times each by night 2's chains, and
+    * persisted-with-lineage intermediates at that depth blow the plan
+    * DESCRIPTION up multiplicatively, the documented Pinned.stage
+    * rationale: a run without staging generated a 196-MILLION-character
+    * plan string. */
+  def ingestNight1(docs: DataFrame, sl0: DataFrame, pos0: DataFrame,
+                   build: (DataFrame, DataFrame), mod: Int = 10): IngestNight1 = {
     import docs.sparkSession.implicits._
     val corpus = docs.filter($"doc_id" % mod =!= 0)
     val b1 = docs.filter($"doc_id" % (2L * mod) === mod.toLong)
-    val (sa, bandSig) = build0.getOrElse {
-      val (sa0, bandSig0) = Dedup.shingleBands(docs, Dedup.Bands, Dedup.RowsPerBand)
-      (stager(sa0), stager(bandSig0))
-    }
-    val sl0 = sliceLines0.getOrElse(
-      stager(Dedup.bloomSliceLines(Dedup.bloomDocLines(corpus))))
-    val pos0 = slicePos0.getOrElse(stager(Dedup.bloomSlicePositions(sl0)))
+    val (sa, bandSig) = build
     // corpIdx, h0 and mem1 are mutually independent given the shared
-    // build/position leaves, and each stager call is an EAGER
-    // materialization in the memoized path — overlap them from a small
-    // thread pool (guide §2.6: actions are only sequential because the
-    // driver calls them sequentially; concurrent jobs back-fill each
-    // other's task tails). With a lazy stager (direct callers) the
-    // futures complete instantly and nothing changes.
+    // build/position leaves, and each stage is an EAGER
+    // materialization — overlap them from a small thread pool (guide
+    // §2.6: actions are only sequential because the driver calls them
+    // sequentially; concurrent jobs back-fill each other's task tails).
     val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
     val (corpIdx, h0, mem1) =
       try {
         val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
         val corpIdxF = scala.concurrent.Future(
-          stager(gateIdx(bandSig.filter($"doc_id" % mod =!= 0))))(ec)
+          graft.Pinned.stageEager(gateIdx(bandSig.filter($"doc_id" % mod =!= 0))))(ec)
         val h0F = scala.concurrent.Future(
-          stager(corpus.select(md5($"text".cast("binary")).as("h")).distinct()))(ec)
+          graft.Pinned.stageEager(corpus.select(md5($"text".cast("binary")).as("h")).distinct()))(ec)
         // ONE staged batch-1 membership probe: the night-1 gate
         // (composedKeep's bloom leg) and write leg (the non-member
         // anti-join inside bloomScaleIngestNewSlices) evaluate the same
         // per-line digest probe
-        val mem1F = scala.concurrent.Future(
-          stager(Dedup.bloomScaleMembers(Dedup.bloomDocLines(b1), pos0,
-            Dedup.BloomSliceCap0)))(ec)
+        val mem1F = scala.concurrent.Future(graft.Pinned.stageEager(gateMembers(b1, pos0)))(ec)
         import scala.concurrent.duration.Duration
         (scala.concurrent.Await.result(corpIdxF, Duration.Inf),
          scala.concurrent.Await.result(h0F, Duration.Inf),
          scala.concurrent.Await.result(mem1F, Duration.Inf))
       } finally pool.shutdown()
-    val kept1 = stager(composedKeep(b1, sa, bandSig, corpIdx,
-      sa.filter($"doc_id" % mod =!= 0), pos0, h0, Some(mem1)))
-    val ns1 = stager(Dedup.bloomScaleIngestNewSlices(
-      sl0, Dedup.bloomDocLines(b1), keptDocs0 = Some(kept1),
-      slicePos0 = Some(pos0), members0 = Some(mem1)))
-    val pos1new = stager(Dedup.bloomSlicePositions(ns1)
+    val kept1 = graft.Pinned.stageEager(composedKeep(b1, sa, bandSig, corpIdx,
+      sa.filter($"doc_id" % mod =!= 0), mem1, h0))
+    val ns1 = graft.Pinned.stageEager(Dedup.bloomScaleIngestNewSlices(
+      sl0, Dedup.bloomDocLines(b1), mem1, kept1))
+    val pos1new = graft.Pinned.stageEager(Dedup.bloomSlicePositions(ns1)
       .join(pos0, Seq("slice", "p"), "left_anti"))
     IngestNight1(sl0, sa, bandSig, corpIdx, pos0, h0, kept1, ns1, pos1new,
-      mem1,
-      externalSl0 = sliceLines0.isDefined,
-      externalBuild = build0.isDefined,
-      externalPos = slicePos0.isDefined)
+      mem1)
   }
 
-  def ingestUpsert2(docs: DataFrame, mod: Int = 10,
-                    sliceLines0: Option[DataFrame] = None,
-                    night1: Option[IngestNight1] = None): DataFrame = {
+  def ingestUpsert2(docs: DataFrame, night1: IngestNight1,
+                    mod: Int = 10): DataFrame = {
     import docs.sparkSession.implicits._
     val neg = lit(-1L)
     val corpus = docs.filter($"doc_id" % mod =!= 0)
     val b1 = docs.filter($"doc_id" % (2L * mod) === mod.toLong)
     val b2 = docs.filter($"doc_id" % (2L * mod) === 0L)
-    val n1 = night1.getOrElse(ingestNight1(docs, mod, sliceLines0))
-    import n1._
+    import night1._
     // v1 states
     val sl1 = sl0.select($"line", $"slice").unionByName(ns1)
     val sp1 = pos0.unionByName(pos1new)
@@ -746,12 +666,11 @@ object Pipeline {
       .select(md5($"text".cast("binary")).as("h"))).distinct()
     // step 2 against v1 — ONE tracked batch-2 membership probe shared by
     // night 2's gate and write leg (the night-1 discipline, round 18)
-    val mem2 = graft.Pinned.track(Dedup.bloomScaleMembers(
-      Dedup.bloomDocLines(b2), sp1, Dedup.BloomSliceCap0))
+    val mem2 = graft.Pinned.track(gateMembers(b2, sp1))
     val kept2 = graft.Pinned.track(
-      composedKeep(b2, sa, bandSig, idx1, memberSh1, sp1, h1, Some(mem2)))
+      composedKeep(b2, sa, bandSig, idx1, memberSh1, mem2, h1))
     val ns2 = Dedup.bloomScaleIngestNewSlices(sl1, Dedup.bloomDocLines(b2),
-      keptDocs0 = Some(kept2), slicePos0 = Some(sp1), members0 = Some(mem2))
+      mem2, kept2)
     val pos2new = Dedup.bloomSlicePositions(ns2)
       .join(sp1, Seq("slice", "p"), "left_anti")
     // normalized union
@@ -829,8 +748,8 @@ object Pipeline {
     * already bounds; the img re-election is the bounded cluster-grain
     * argmin. */
   def retract(docs: DataFrame, imgGroups: DataFrame, decoded: DataFrame,
-              semKeptM: DataFrame, mod: Int = 10,
-              sliceLines0: Option[DataFrame] = None): DataFrame = {
+              semKeptM: DataFrame, sliceLines: DataFrame,
+              mod: Int = 10): DataFrame = {
     import docs.sparkSession.implicits._
     val neg = lit(-1L)
     val corpus = docs.filter($"doc_id" % mod =!= 0)
@@ -841,7 +760,7 @@ object Pipeline {
       .select(lit("member").as("family"), $"doc_id".as("k1"), neg.as("k2"),
         neg.as("k3"), neg.as("k4"))
     // lsh: the cap-gated standing index minus the removed docs' rows
-    val (_, corpB) = Dedup.shingleBands(corpus, Dedup.Bands, Dedup.RowsPerBand)
+    val (_, corpB) = Dedup.shingleBands(corpus)
     val lsh = gateIdx(corpB)
       .join(removed, Seq("doc_id"), "left_anti")
       .select(lit("lsh").as("family"), $"doc_id".as("k1"),
@@ -852,11 +771,9 @@ object Pipeline {
       .select(lit("sem").as("family"), $"mid".as("k1"), $"cid".as("k2"),
         neg.as("k3"), neg.as("k4"))
     // bloom: rebuild from the (line, slice) state minus retired lines
-    val sl = sliceLines0.getOrElse(
-      Dedup.bloomSliceLines(Dedup.bloomDocLines(corpus)))
     val survLines = Dedup.bloomDocLines(surviving).select($"line").distinct()
     val bloom = Dedup.bloomSlicePositions(
-        sl.select($"line", $"slice").join(survLines, Seq("line"), "left_semi"))
+        sliceLines.select($"line", $"slice").join(survLines, Seq("line"), "left_semi"))
       .select(lit("bloom").as("family"), $"slice".as("k1"), $"p".as("k2"),
         neg.as("k3"), neg.as("k4"))
     // img: keep-best re-elected over each cluster's surviving members
@@ -895,11 +812,10 @@ object Pipeline {
     * already produce; the funnel itself is one doc-grain join chain, one
     * aggregate to a single row, and a row-local explode to the 8-row
     * stage table. */
-  def curationFunnel(docs: DataFrame, groups: DataFrame,
-                     imgGroups0: Option[DataFrame] = None,
-                     dec0: Option[DataFrame] = None): DataFrame =
-    funnelOver(docs, groups, imgGroups0, extraFlags = None,
-      extraCols = Nil, stages0 = FunnelStages, dec0 = dec0)
+  def curationFunnel(docs: DataFrame, groups: DataFrame, imgGroups: DataFrame,
+                     dec: DataFrame): DataFrame =
+    funnelOver(docs, groups, imgGroups, extraFlags = None,
+      extraCols = Nil, stages0 = FunnelStages, dec = dec)
 
   /** J7 — the FULL-gate funnel (round-14 verdict #4): [[curationFunnel]]
     * extended with the Gopher rule bundle and the CCNet perplexity gate
@@ -912,17 +828,19 @@ object Pipeline {
     * with j7_ppl_buckets' own run via the session cache), one extra
     * doc-grain join each. */
   def curationFunnelFull(docs: DataFrame, groups: DataFrame,
-                         imgGroups0: Option[DataFrame] = None,
-                         dec0: Option[DataFrame] = None,
-                         ppl0: Option[DataFrame] = None): DataFrame = {
-    import docs.sparkSession.implicits._
-    val extra = gopherGate(docs).select($"doc_id", $"kept".as("gopher_ok"))
-      .join(ppl0.getOrElse(pplBuckets(docs))
-        .select($"doc_id", ($"bucket" <= 2L).cast("long").as("ppl_ok")),
-        Seq("doc_id"))
-    funnelOver(docs, groups, imgGroups0, extraFlags = Some(extra),
+                         imgGroups: DataFrame, dec: DataFrame,
+                         ppl: DataFrame): DataFrame =
+    funnelOver(docs, groups, imgGroups, extraFlags = Some(fullGateFlags(docs, ppl)),
       extraCols = Seq("gopher_ok", "ppl_ok"), stages0 = FunnelStagesFull,
-      dec0 = dec0)
+      dec = dec)
+
+  /** The FULL funnel's two extra gate flags: Gopher `kept` and the
+    * [[pplBuckets]] head+middle verdict. */
+  private def fullGateFlags(docs: DataFrame, ppl: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
+    gopherGate(docs).select($"doc_id", $"kept".as("gopher_ok"))
+      .join(ppl.select($"doc_id", ($"bucket" <= 2L).cast("long").as("ppl_ok")),
+        Seq("doc_id"))
   }
 
   /** J7 — per-gate MARGINAL attribution (round-14 verdict #7, the other
@@ -938,16 +856,11 @@ object Pipeline {
     * row-local all-others-pass product per gate, ONE aggregate row,
     * row-local explode to the |gates| table. */
   def funnelMarginal(docs: DataFrame, groups: DataFrame,
-                     imgGroups0: Option[DataFrame] = None,
-                     dec0: Option[DataFrame] = None,
-                     ppl0: Option[DataFrame] = None): DataFrame = {
+                     imgGroups: DataFrame, dec: DataFrame,
+                     ppl: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    val extra = gopherGate(docs).select($"doc_id", $"kept".as("gopher_ok"))
-      .join(ppl0.getOrElse(pplBuckets(docs))
-        .select($"doc_id", ($"bucket" <= 2L).cast("long").as("ppl_ok")),
-        Seq("doc_id"))
-    val (flags, flagCols) = funnelFlags(docs, groups, imgGroups0,
-      Some(extra), Seq("gopher_ok", "ppl_ok"), dec0)
+    val (flags, flagCols) = funnelFlags(docs, groups, imgGroups,
+      Some(fullGateFlags(docs, ppl)), Seq("gopher_ok", "ppl_ok"), dec)
     val aggs = flagCols.zipWithIndex.flatMap { case (c, i) =>
       val othersPass = flagCols.filter(_ != c).map(col).reduce(_ * _)
       Seq(
@@ -972,24 +885,23 @@ object Pipeline {
   /** The per-doc gate-flag frame shared by the funnels and the marginal
     * attribution: (doc_id, n_tokens, one 0/1 column per gate). */
   private def funnelFlags(docs: DataFrame, groups: DataFrame,
-                          imgGroups0: Option[DataFrame],
+                          imgGroups: DataFrame,
                           extraFlags: Option[DataFrame],
                           extraCols: Seq[String],
-                          dec0: Option[DataFrame] = None): (DataFrame, Seq[String]) = {
+                          dec: DataFrame): (DataFrame, Seq[String]) = {
     import docs.sparkSession.implicits._
-    val mm = trainsetManifestMm(docs, groups, imgGroups0)
+    val mm = trainsetManifestMm(docs, groups, imgGroups)
       .select($"doc_id", $"dup_ok", $"img_ok", $"lang_ok", $"len_ok", $"quality_ok")
     val eh = docs.select($"doc_id", md5($"text".cast("binary")).as("h"))
     val exactOk = eh
       .join(eh.groupBy($"h").agg(min($"doc_id").as("kid")), Seq("h"))
       .select($"doc_id", ($"doc_id" === $"kid").cast("long").as("exact_ok"))
-    val dec = dec0.getOrElse(decontamNgram(docs))
-      .select($"doc_id", $"contaminated")
+    val contaminated = dec.select($"doc_id", $"contaminated")
     val flags0 = docs
       .select($"doc_id", size(split($"text", " ")).cast("long").as("n_tokens"))
       .join(exactOk, Seq("doc_id"))
       .join(mm, Seq("doc_id"))
-      .join(dec, Seq("doc_id"), "left")
+      .join(contaminated, Seq("doc_id"), "left")
       .withColumn("decontam_ok",
         when($"doc_id" < EvalDocs, 0L)
           .otherwise(lit(1L) - coalesce($"contaminated", lit(0L))))
@@ -999,14 +911,14 @@ object Pipeline {
   }
 
   private def funnelOver(docs: DataFrame, groups: DataFrame,
-                         imgGroups0: Option[DataFrame],
+                         imgGroups: DataFrame,
                          extraFlags: Option[DataFrame],
                          extraCols: Seq[String],
                          stages0: Seq[String],
-                         dec0: Option[DataFrame] = None): DataFrame = {
+                         dec: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     val (flags, flagCols) =
-      funnelFlags(docs, groups, imgGroups0, extraFlags, extraCols, dec0)
+      funnelFlags(docs, groups, imgGroups, extraFlags, extraCols, dec)
     require(flagCols.size == stages0.size,
       s"funnel stages (${stages0.size}) and flags (${flagCols.size}) diverged")
     val withCum = flagCols.zipWithIndex.foldLeft(flags) { case (df, (c, i)) =>
@@ -1724,11 +1636,10 @@ object Pipeline {
     * prefix sum in that order, both from [[graft.Dist.withGlobalCumSums]]'
     * two-phase distributed cumsum — ONE range shuffle on
     * (stage, shuffle_key), no single-task window anywhere. */
-  def curriculum(docs: DataFrame, seed: Int = ShuffleSeed,
-                 seqLen: Long = PackSeqLen,
-                 ppl0: Option[DataFrame] = None): DataFrame = {
+  def curriculum(docs: DataFrame, ppl: DataFrame, seed: Int = ShuffleSeed,
+                 seqLen: Long = PackSeqLen): DataFrame = {
     import docs.sparkSession.implicits._
-    val kept = ppl0.getOrElse(pplBuckets(docs)).filter($"bucket" <= 2L)
+    val kept = ppl.filter($"bucket" <= 2L)
       .select($"doc_id", $"lang", $"bucket", $"bucket_label",
         // middle (bucket 2) -> stage 1 first; head (bucket 1) -> stage 2 last
         (lit(3L) - $"bucket").as("stage"))
@@ -1848,14 +1759,11 @@ object Pipeline {
     * the measured (not asserted) fit-side straddle count — 0 unless a doc
     * exceeds the bin and must occupy one alone. `counts` needs
     * (source, doc_id, n_tokens): concat-chunk packs per source in doc_id
-    * order, exactly `j7_pack_bpe`'s layout. */
-  def packFitStats(counts: DataFrame, seqLen: Long = PackSeqLen,
-                   windowDocs: Long = PackFitWindowDocs,
-                   seed: Int = ShuffleSeed,
-                   fit0: Option[DataFrame] = None): DataFrame = {
+    * order, exactly `j7_pack_bpe`'s layout; `fit` is the [[packFit]]
+    * manifest over the same counts and `seqLen`. */
+  def packFitStats(counts: DataFrame, fit: DataFrame,
+                   seqLen: Long = PackSeqLen): DataFrame = {
     import counts.sparkSession.implicits._
-    val fit = fit0.getOrElse(
-      packFit(counts.select($"doc_id", $"n_tokens"), seqLen, windowDocs, seed))
     val fitAgg = fit.agg(count(lit(1)).as("n_docs"),
       sum($"n_tokens").as("total_tokens"),
       (max($"seq_id") + 1).as("n_bins_fit"),
@@ -1885,18 +1793,17 @@ object Pipeline {
     * in-gate. fill(W_large) >= fill(W_small) is the expected direction
     * (wider windows approach global FFD) and is pinned in ExtSpec, not
     * asserted in-query — a pathological count distribution CAN invert FFD
-    * locality, and the dial's job is to MEASURE, not assume. */
-  def packFitWindowDial(counts: DataFrame, seqLen: Long = PackSeqLen,
+    * locality, and the dial's job is to MEASURE, not assume. `fitSmall`
+    * and `fitLarge` are the [[packFit]] manifests at `wSmall`/`wLarge`. */
+  def packFitWindowDial(fitSmall: DataFrame, fitLarge: DataFrame,
+                        seqLen: Long = PackSeqLen,
                         wSmall: Long = PackFitWindowDocs,
-                        wLarge: Long = PackFitWindowDial,
-                        seed: Int = ShuffleSeed,
-                        fitSmall0: Option[DataFrame] = None,
-                        fitLarge0: Option[DataFrame] = None): DataFrame = {
-    import counts.sparkSession.implicits._
-    val a = fitSmall0.getOrElse(packFit(counts, seqLen, wSmall, seed))
+                        wLarge: Long = PackFitWindowDial): DataFrame = {
+    import fitSmall.sparkSession.implicits._
+    val a = fitSmall
       .agg(sum($"n_tokens").as("total_tokens"),
         (max($"seq_id") + 1).as("n_bins_w_small"))
-    val b = fitLarge0.getOrElse(packFit(counts, seqLen, wLarge, seed))
+    val b = fitLarge
       .agg((max($"seq_id") + 1).as("n_bins_w_large"))
     a.crossJoin(broadcast(b))
       .select(lit(wSmall).as("w_small"), lit(wLarge).as("w_large"),

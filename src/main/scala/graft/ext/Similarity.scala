@@ -77,7 +77,7 @@ object Similarity {
 
   /** (vec_id, qv: array<long>, nq: long) — quantized vector + norm, one
     * narrow pass, no explode, nothing cached. */
-  private def base(emb: DataFrame): DataFrame = {
+  private[graft] def base(emb: DataFrame): DataFrame = {
     import emb.sparkSession.implicits._
     emb.select($"vec_id", qvec($"embedding").as("qv"))
       .withColumn("nq", idot($"qv", $"qv"))
@@ -110,11 +110,12 @@ object Similarity {
     * dial (measured: 1 table x 8 planes gave ~0 top-5 recall on 500 random
     * vectors; 2 x 4 recovers usable recall at ~13% of the brute-force pair
     * count). Planes are literal arrays — the projection is a zip_with per
-    * (row, plane), no join, no explode. */
-  def lshBuckets(emb: DataFrame, nTables: Int = NTables, nPlanes: Int = NPlanes,
-                 b0: Option[DataFrame] = None): DataFrame = {
-    import emb.sparkSession.implicits._
-    val withBuckets = b0.getOrElse(base(emb)).withColumn("buckets",
+    * (row, plane), no join, no explode. `b` is the quantized [[base]]
+    * view (vec_id, qv, nq). */
+  def lshBuckets(b: DataFrame, nTables: Int = NTables,
+                 nPlanes: Int = NPlanes): DataFrame = {
+    import b.sparkSession.implicits._
+    val withBuckets = b.withColumn("buckets",
       array((0 until nTables).map { t =>
         (0 until nPlanes).map { j =>
           val p = t.toLong * nPlanes + j
@@ -137,7 +138,7 @@ object Similarity {
     // query side and the re-rank join — each branch otherwise re-runs the
     // unsplittable 1-task embedding scan + quantization
     val b = graft.Pinned.track(base(emb))
-    val bkt = lshBuckets(emb, b0 = Some(b))
+    val bkt = lshBuckets(b)
     val cand = broadcast(bkt.filter($"vec_id" < nQueries).select($"vec_id".as("qid"), $"tbl", $"bucket"))
       .join(bkt.select($"vec_id".as("vid"), $"tbl", $"bucket"), Seq("tbl", "bucket"))
       .filter($"qid" =!= $"vid")
@@ -166,7 +167,7 @@ object Similarity {
     import emb.sparkSession.implicits._
     // tracked (see annLsh): bucket build + both pair-side joins
     val b = graft.Pinned.track(base(emb))
-    val bkt0 = lshBuckets(emb, b0 = Some(b))
+    val bkt0 = lshBuckets(b)
     // keep buckets with 2..cap vectors: <2 yields no pairs, >cap is the
     // identical-cluster mega-bucket (quadratic guard, as in the text path)
     val ok = bkt0.groupBy($"tbl", $"bucket").agg(count(lit(1)).as("cnt"))
@@ -270,17 +271,14 @@ object Similarity {
     else graft.Pinned.track((1 to iters).foldLeft(seed)((c, _) => refineCents(trainB, c)))
   }
 
-  def annIvf(emb: DataFrame, nQueries: Int = AnnQueries, k: Int = AnnK,
-             nCells: Int = IvfCells, nProbes: Int = IvfProbes,
-             iters: Int = IvfIters,
-             cents0: Option[DataFrame] = None): DataFrame = {
+  /** `cents` is the trained quantizer ([[ivfCents]]), referenced by the
+    * assignment AND probe branches — staged or tracked, so one action
+    * trains once. */
+  def annIvf(emb: DataFrame, cents: DataFrame, nQueries: Int = AnnQueries,
+             k: Int = AnnK, nProbes: Int = IvfProbes): DataFrame = {
     import emb.sparkSession.implicits._
     // tracked: assignment scan, broadcast query side and re-rank join
     val b = graft.Pinned.track(base(emb))
-    // the trained quantizer (<= nCells rows behind 2 shuffled rounds) is
-    // referenced by the assignment AND probe branches — tracked inside
-    // ivfCents so one action trains once; cents0 = the session memo.
-    val cents = cents0.getOrElse(ivfCents(emb, nCells, iters))
     val vcos = centCos(b, cents)
     val cells = assignCells(vcos)
     // probe lists: top-nProbes cells per query
@@ -602,19 +600,15 @@ object Similarity {
     * — assignment is |batch| x sqrt(N) against the broadcast frozen
     * centroids, and the candidate join touches only the matching cell's
     * kept members (<= cellCap each); the corpus is never re-clustered. */
-  /** @param cells0 an already-materialized (cents, cells) pair for the
-    *               corpus carve (the ExtQueries session memo —
-    *               [[semIncCells]] staged once per dataset): the Lloyd
-    *               train + full-corpus assignment is the recompute twin's
-    *               dominant cost and the SAME derivation feeds
-    *               [[cellDrift]]. */
-  def semDedupIncremental(emb: DataFrame, thresholdE6: Long = SemDedupCosE6,
-                          iters: Int = IvfIters, cellCap: Int = SemCellCap,
-                          corpusPct: Long = SemIncCorpusPct,
-                          cells0: Option[(DataFrame, DataFrame)] = None): DataFrame = {
+  /** `cells` is the corpus carve's [[semIncCells]] (cents, cells) pair —
+    * the Lloyd train + full-corpus assignment, the SAME derivation
+    * [[cellDrift]] reads. */
+  def semDedupIncremental(emb: DataFrame, cells: (DataFrame, DataFrame),
+                          thresholdE6: Long = SemDedupCosE6,
+                          cellCap: Int = SemCellCap,
+                          corpusPct: Long = SemIncCorpusPct): DataFrame = {
     val (corpus, batch) = semIncSplit(emb, corpusPct)
-    val (cents, keptM) = semIncCorpusState(corpus, thresholdE6, iters, cellCap,
-      cells0)
+    val (cents, keptM) = semIncCorpusState(corpus, cells, thresholdE6, cellCap)
     semIncBatch(batch, cents, keptM, thresholdE6)
   }
 
@@ -642,15 +636,15 @@ object Similarity {
 
   /** The FROZEN corpus state of the incremental pass: the trained centroid
     * frame (cid, cv, nc) and the kept cap-passing cell members with their
-    * vectors (mid, cid, mv, mn) — everything the batch side needs. */
-  private def semIncCorpusState(corpus: DataFrame, thresholdE6: Long,
-                                iters: Int, cellCap: Int,
-                                cells0: Option[(DataFrame, DataFrame)] = None): (DataFrame, DataFrame) = {
+    * vectors (mid, cid, mv, mn) — everything the batch side needs, from
+    * the corpus carve's trained (cents, cells) pair. */
+  private def semIncCorpusState(corpus: DataFrame, centsCells: (DataFrame, DataFrame),
+                                thresholdE6: Long, cellCap: Int): (DataFrame, DataFrame) = {
     import corpus.sparkSession.implicits._
-    // tracked: the corpus-state build + both pair sides + the kept-member
-    // vector join all read the quantized corpus view
+    // tracked: both pair sides + the kept-member vector join read the
+    // quantized corpus view
     val bc = graft.Pinned.track(base(corpus))
-    val (cents, cells) = cells0.getOrElse(semCells(bc, corpus, iters))
+    val (cents, cells) = centsCells
     val state = semDedupFrom(corpus, bc, cells, thresholdE6, cellCap)
     val okc = cells.groupBy($"cid").agg(count(lit(1)).as("n"))
       .filter($"n" <= cellCap).select($"cid")
@@ -739,7 +733,8 @@ object Similarity {
     StateStore.tables(s, "graft_j3_semstate", key,
       Seq("centroids", "kept_members")) {
       val (corpus, _) = semIncSplit(emb, corpusPct)
-      val (c, k) = semIncCorpusState(corpus, thresholdE6, iters, cellCap)
+      val (c, k) = semIncCorpusState(corpus, semIncCells(emb, iters, corpusPct),
+        thresholdE6, cellCap)
       Seq(c, k)
     }
 
@@ -1032,13 +1027,11 @@ object Similarity {
     * 100 TB posture (recompute twin): two |population| × √N broadcast
     * assignment passes plus the Lloyd retrain; two bounded cell-grain
     * aggregates, one 1-row total. */
-  def cellDrift(emb: DataFrame, iters: Int = IvfIters,
-                corpusPct: Long = SemIncCorpusPct,
-                cells0: Option[(DataFrame, DataFrame)] = None): DataFrame = {
+  def cellDrift(emb: DataFrame, centsCells: (DataFrame, DataFrame),
+                corpusPct: Long = SemIncCorpusPct): DataFrame = {
     import emb.sparkSession.implicits._
-    val (corpus, batch) = semIncSplit(emb, corpusPct)
-    val (cents, cells) = cells0.getOrElse(
-      semCells(graft.Pinned.track(base(corpus)), corpus, iters))
+    val (_, batch) = semIncSplit(emb, corpusPct)
+    val (cents, cells) = centsCells
     cellPsi(cents, cells.groupBy($"cid").agg(count(lit(1)).as("ca")), batch)
   }
 
@@ -1241,12 +1234,11 @@ object Similarity {
     * (the same allowlisted broadcast as j3_knn_cosine — at fleet scale
     * ground truth comes from a held-out sample exactly like this); the
     * compare is one tiny (nQueries x k) join. */
-  def annRecall(emb: DataFrame, nQueries: Int = AnnQueries, k: Int = AnnK,
-                nProbes: Int = IvfProbes,
-                cents0: Option[DataFrame] = None): DataFrame = {
+  def annRecall(emb: DataFrame, cents: DataFrame, nQueries: Int = AnnQueries,
+                k: Int = AnnK, nProbes: Int = IvfProbes): DataFrame = {
     import emb.sparkSession.implicits._
     val truth = knnCosine(emb, nQueries, k).select($"qid", $"vid")
-    val approx = annIvf(emb, nQueries, k, nProbes = nProbes, cents0 = cents0)
+    val approx = annIvf(emb, cents, nQueries, k, nProbes)
       .select($"qid", $"vid").withColumn("hit", lit(1L))
     truth.join(approx, Seq("qid", "vid"), "left")
       .groupBy($"qid")

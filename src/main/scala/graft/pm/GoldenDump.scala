@@ -35,9 +35,9 @@ object GoldenDump {
       graft.Pinned.release(spark)
     }
 
-    dump(EventLogCsv.read(spark, "/root/reference/logs/Production.csv.gz"), 2, "production")
+    dump(EventLogCsv.read(spark, s"${graft.Fixtures.reference}/logs/Production.csv.gz"), 2, "production")
     if (args.length > 1 && args(1) == "loan")
-      dump(EventLogCsv.read(spark, "/root/reference/logs/Loan_Application_batched.csv.gz",
+      dump(EventLogCsv.read(spark, s"${graft.Fixtures.reference}/logs/Loan_Application_batched.csv.gz",
         LogSchema(enabled = Some("enabled_time"), cleanActivity = true)), 10, "loan")
     spark.stop()
   }

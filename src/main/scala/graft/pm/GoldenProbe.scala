@@ -32,7 +32,7 @@ object GoldenProbe {
     }
 
     if (args.contains("report")) {
-      val log = EventLogCsv.read(spark, "/root/reference/logs/Production.csv.gz")
+      val log = EventLogCsv.read(spark, s"${graft.Fixtures.reference}/logs/Production.csv.gz")
       val en = EnabledTime.withEnabled(
         log.select($"event_id", $"case_id", $"activity", $"resource", $"start_us", $"end_us"))
       val d = graft.Pinned.stage(BatchDiscovery.discoverFull(en))
@@ -44,10 +44,10 @@ object GoldenProbe {
       spark.stop(); return
     }
     run("Production (golden 485 inst / 1244 ev)",
-      EventLogCsv.read(spark, "/root/reference/logs/Production.csv.gz"), 2)
+      EventLogCsv.read(spark, s"${graft.Fixtures.reference}/logs/Production.csv.gz"), 2)
     if (args.contains("loan"))
       run("Loan (golden 587 inst / 7635 ev)",
-        EventLogCsv.read(spark, "/root/reference/logs/Loan_Application_batched.csv.gz",
+        EventLogCsv.read(spark, s"${graft.Fixtures.reference}/logs/Loan_Application_batched.csv.gz",
           LogSchema(enabled = Some("enabled_time"), cleanActivity = true)), 10)
     spark.stop()
   }

@@ -34,28 +34,4 @@ object Layout {
     (0 until bits).map { b =>
       s"((($x >> $b) & 1) << ${2 * b}) + ((($y >> $b) & 1) << ${2 * b + 1})"
     }.mkString(" + ")
-
-  /** Small-file COMPACTION (the OPTIMIZE maintenance op): rewrite a
-    * parquet directory into ~`targetBytes`-sized files. Streaming sinks
-    * and fine-grained ingestion leave thousands of KB-scale files whose
-    * per-file open/footer cost dominates scans; compaction is the
-    * periodic rewrite every table format schedules.
-    *
-    * The output file count is computed from the ACTUAL input bytes
-    * (ceil(bytes/target)), and the rewrite is one `repartition(n)` —
-    * a single round-robin shuffle, no skew (size-based, not row-based,
-    * so wide-row tables don't overshoot). Returns the file count written.
-    * At 100 TB this runs per-partition-directory, embarrassingly
-    * parallel across partitions. */
-  def compact(spark: org.apache.spark.sql.SparkSession, inDir: String,
-              outDir: String, targetBytes: Long = 128L * 1024 * 1024): Int = {
-    val in = new java.io.File(inDir)
-    val bytes = Option(in.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.endsWith(".parquet")).map(_.length()).sum
-    val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    spark.read.parquet(inDir).repartition(n)
-      .write.mode("overwrite").parquet(outDir)
-    new java.io.File(outDir).listFiles()
-      .count(f => f.isFile && f.getName.endsWith(".parquet"))
-  }
 }

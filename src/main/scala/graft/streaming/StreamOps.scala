@@ -514,21 +514,13 @@ object StreamOps {
     * but was cap-gated out never produced an index row, so it must not
     * suppress the later cap-passing hit). Pair-grain output with verdicts;
     * best-match is rank-at-serve (`j5_incremental` grades that reduction
-    * in batch).
-    * @param idx0 an already-built standing index (the query layer's
-    *             memoized/persisted frame). */
-  def imgProbe(docs: DataFrame, mod: Int = 10,
-               cap: Int = graft.ext.Multimodal.AHashHamBucketCap,
-               idx0: Option[DataFrame] = None,
-               hashes0: Option[DataFrame] = None): DataFrame = {
+    * in batch). `idx` is the standing [[graft.ext.Multimodal.imgIndex]]
+    * and `hashes` the (doc_id, ahash) frame covering the batch carve. */
+  def imgProbe(docs: DataFrame, idx: DataFrame, hashes: DataFrame,
+               mod: Int = 10): DataFrame = {
     import docs.sparkSession.implicits._
-    val idx = idx0.getOrElse(graft.ext.Multimodal.imgIndex(
-      graft.ext.Multimodal.aHashLocal(graft.ext.Multimodal.pngFixture(
-        docs.filter($"doc_id" % mod =!= 0))), cap))
-    val batchHashes = hashes0
-      .getOrElse(graft.ext.Multimodal.aHashLocal(graft.ext.Multimodal.pngFixture(docs)))
-      .filter($"doc_id" % mod === 0)
-    imgProbeJoin(graft.ext.Multimodal.aHashBlockRows(batchHashes), idx)
+    imgProbeJoin(graft.ext.Multimodal.aHashBlockRows(
+      hashes.filter($"doc_id" % mod === 0)), idx)
   }
 
   /** Streaming form of [[imgProbe]]: `incoming` is a STREAMING documents
@@ -613,37 +605,34 @@ object StreamOps {
     * membership, with no stateful aggregation, no watermark, no state
     * store, and O(sum_i k_i) = O(log^2 corpus) hash work per line.
     * Per-(doc, line) bloom/exact/FP verdicts, the `st_bloom` shape. */
-  def bloomScaleProbeLines(docs: DataFrame, mod: Int = 10,
-                           sliceLines0: Option[DataFrame] = None): DataFrame = {
+  def bloomScaleProbeLines(docs: DataFrame, sliceLines: DataFrame,
+                           mod: Int = 10): DataFrame = {
     import docs.sparkSession.implicits._
     val corpus = graft.ext.Dedup.bloomDocLines(docs.filter($"doc_id" % mod =!= 0))
     bloomScaleJoin(
       graft.ext.Dedup.bloomDocLines(docs.filter($"doc_id" % mod === 0)),
-      bloomScaleFilters(corpus, sliceLines0),
+      bloomScaleFilters(sliceLines),
       corpus.select($"line").distinct())
   }
 
   /** The static ONE-ROW packed-filter relation the sliced stream probe
     * joins: every standing slice as (slice, m, k, bits) with `bits` the
     * slice's m-bit set packed into m/64 longs — built in batch from the
-    * standing (slice, position) state via a bounded per-(slice, word)
+    * standing (line, slice) state via a bounded per-(slice, word)
     * `bit_or` aggregate, total size O(sum_i m_i) bits regardless of
     * corpus size. */
-  def bloomScaleFilters(corpusLines: DataFrame,
-                        sliceLines0: Option[DataFrame] = None,
+  def bloomScaleFilters(sliceLines: DataFrame,
                         cap0: Long = graft.ext.Dedup.BloomSliceCap0,
                         k0: Int = graft.ext.Dedup.BloomSliceK0): DataFrame = {
-    import corpusLines.sparkSession.implicits._
-    val slicePos = graft.ext.Dedup.bloomSlicePositions(
-      sliceLines0.getOrElse(
-        graft.ext.Dedup.bloomSliceLines(corpusLines, cap0, k0)), cap0, k0)
+    import sliceLines.sparkSession.implicits._
+    val slicePos = graft.ext.Dedup.bloomSlicePositions(sliceLines, cap0, k0)
     val words = slicePos
       .select($"slice", shiftright($"p", 6).as("w"),
         expr("shiftleft(cast(1 as bigint), cast(p % 64 as int))").as("b"))
       .groupBy($"slice", $"w").agg(expr("bit_or(b)").as("wv"))
     val packed = words.groupBy($"slice")
       .agg(map_from_entries(collect_list(struct($"w", $"wv"))).as("wm"))
-      .join(broadcast(graft.ext.Dedup.bloomParamsDf(corpusLines.sparkSession, cap0, k0)
+      .join(broadcast(graft.ext.Dedup.bloomParamsDf(sliceLines.sparkSession, cap0, k0)
         .select($"slice", $"m", $"k")), Seq("slice"))
       .select($"slice", $"m", $"k",
         expr("transform(sequence(0, greatest(m div 64, 1) - 1), " +
@@ -702,14 +691,14 @@ object StreamOps {
     * (hash set, packed O(sum m_i)-bit filter row, cap-gated index
     * table); per micro-batch cost is row-local hashing plus two hash
     * joins — the canonical stream-static enrichment. */
-  def ingestProbe(docs: DataFrame, mod: Int = 10,
-                  sliceLines0: Option[DataFrame] = None): DataFrame = {
+  def ingestProbe(docs: DataFrame, sliceLines: DataFrame,
+                  mod: Int = 10): DataFrame = {
     import docs.sparkSession.implicits._
     val D = graft.ext.Dedup
     val corpus = docs.filter($"doc_id" % mod =!= 0)
     ingestProbeJoin(docs.filter($"doc_id" % mod === 0),
       corpus.select(md5($"text".cast("binary")).as("h")).distinct(),
-      bloomScaleFilters(D.bloomDocLines(corpus), sliceLines0),
+      bloomScaleFilters(sliceLines),
       D.corpusProbeIndex(corpus))
   }
 
@@ -734,14 +723,14 @@ object StreamOps {
     * state; pair grain with the five-gate first-firing attribution,
     * doc-grain reduction graded in batch by `j7_ingest_audit_mm`. */
   def ingestProbeMm(docs: DataFrame, emb: DataFrame, cents: DataFrame,
-                    keptM: DataFrame, imgLabels: DataFrame, mod: Int = 10,
-                    sliceLines0: Option[DataFrame] = None): DataFrame = {
+                    keptM: DataFrame, imgLabels: DataFrame, sliceLines: DataFrame,
+                    mod: Int = 10): DataFrame = {
     import docs.sparkSession.implicits._
     val D = graft.ext.Dedup
     val corpus = docs.filter($"doc_id" % mod =!= 0)
     ingestProbeJoinMm(docs.filter($"doc_id" % mod === 0),
       corpus.select(md5($"text".cast("binary")).as("h")).distinct(),
-      bloomScaleFilters(D.bloomDocLines(corpus), sliceLines0),
+      bloomScaleFilters(sliceLines),
       D.corpusProbeIndex(corpus), emb, cents, keptM, imgLabels)
   }
 

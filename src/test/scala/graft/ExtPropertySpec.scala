@@ -33,7 +33,7 @@ class ExtPropertySpec extends AnyFunSuite {
         (id.toLong, Seq.fill(n)(vocab(rnd.nextInt(vocab.length))).mkString(" "))
       }
       val df = docs.toDF("doc_id", "text")
-      val got = ext.Dedup.jaccardNgramPairs(df, t).collect()
+      val got = ext.Dedup.jaccardNgramPairs(ext.Dedup.shingleFpArrays(df), t).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       val sets = ext.Dedup.shingles(df).collect()
         .map(r => (r.getLong(0), r.getString(2)))
@@ -79,7 +79,10 @@ class ExtPropertySpec extends AnyFunSuite {
       // 1..9/21.. are % 10 != 0; give the probe doc id 10 with a corpus line)
       val corpusLine = s1.keys.head
       val all = (base ++ more) :+ (10L -> corpusLine)
-      val probe = ext.Dedup.bloomScaleProbe(all.toDF("doc_id", "text"), cap0 = cap)
+      val allDf = all.toDF("doc_id", "text")
+      val slicePos = ext.Dedup.bloomSlicePositions(ext.Dedup.bloomSliceLines(
+        ext.Dedup.bloomDocLines(allDf.filter($"doc_id" % 10 =!= 0)), cap), cap)
+      val probe = ext.Dedup.bloomScaleProbe(allDf, slicePos, cap0 = cap)
         .agg(sum($"n_false_neg")).head.getLong(0)
       assert(probe == 0L, s"[sample $sample cap=$cap] sliced filter missed a member")
       graft.Pinned.release(spark)
@@ -160,7 +163,7 @@ class ExtPropertySpec extends AnyFunSuite {
             .partitionBy($"vec_id").orderBy($"cos_sim_e6".desc, $"mid")))
         .filter($"rn" === 1)
         .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-      val batch = ext.Similarity.semDedupIncremental(emb)
+      val batch = ext.Similarity.semDedupIncremental(emb, ext.Similarity.semIncCells(emb))
         .filter($"best_match" =!= -1L)
         .collect().map(r => r.getLong(0) -> (r.getLong(2), r.getLong(3))).toMap
       assert(pair == batch,
@@ -212,7 +215,7 @@ class ExtPropertySpec extends AnyFunSuite {
         (id.toLong, Seq.fill(len)(vocab(rnd.nextInt(vocab.length))).mkString(" "))
       }
       val df = docs.toDF("doc_id", "text")
-      val got = ext.Dedup.scrubSpans(df, n = n).collect()
+      val got = ext.Dedup.scrubSpans(ext.Dedup.dupStarts(df, n), n = n).collect()
         .map(r => r.getLong(0) ->
           ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5), r.getString(6))))
         .toMap
@@ -281,8 +284,8 @@ class ExtPropertySpec extends AnyFunSuite {
 
   test("curriculum: stages ordered middle-then-head, bijective ranks, exact prefix sum") {
     import spark.implicits._
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val got = ext.Pipeline.curriculum(docs).collect()
+    val docs = Tables.documents(spark, s"${Fixtures.testdata}/sf0.001")
+    val got = ext.Pipeline.curriculum(docs, ext.Pipeline.pplBuckets(docs)).collect()
       .map(r => (r.getLong(0), r.getString(2), r.getLong(3), r.getLong(4),
         r.getLong(5), r.getLong(6)))
     val n = got.length

@@ -131,27 +131,4 @@ class FunctionsSpec extends AnyFunSuite {
       .select(relational.Layout.zorder2($"x", $"y")).as[Long].collect().toSeq
     assert(edge == Seq(0L, (1L << 20) - 1))
   }
-
-  test("compact: fragmented table rewrites to size-derived file count, content intact") {
-    import spark.implicits._
-    SparkSuite.withTempDir("graft_frag") { frag =>
-      SparkSuite.withTempDir("graft_compact") { out =>
-        // 40 tiny files
-        (1L to 4000L).map(i => (i, s"row_$i")).toDF("id", "s")
-          .repartition(40).write.mode("overwrite").parquet(frag)
-        val written = Option(new java.io.File(frag).listFiles()).get
-          .count(f => f.getName.endsWith(".parquet"))
-        assert(written == 40, s"fixture should be fragmented: $written files")
-        val totalBytes = new java.io.File(frag).listFiles()
-          .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
-        val target = totalBytes / 4 // expect ceil(bytes/target) = 4-5 files
-        val n = relational.Layout.compact(spark, frag, out, target)
-        assert(n >= 4 && n <= 5, s"expected ~4 size-derived files, got $n")
-        // content identical
-        val a = spark.read.parquet(frag).collect().map(_.toString).sorted.toSeq
-        val b = spark.read.parquet(out).collect().map(_.toString).sorted.toSeq
-        assert(a == b)
-      }
-    }
-  }
 }

@@ -19,7 +19,7 @@ import graft.sources.{EventLogCsv, LogSchema}
 class GoldenReplaySpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
 
-  private val Reference = "/root/reference"
+  private val Reference = Fixtures.reference
   private val ProductionLog = s"$Reference/logs/Production.csv.gz"
   private val ProductionWTs = s"$Reference/outputs/Production_WTs.csv.gz"
   private val LoanLog = s"$Reference/logs/Loan_Application_batched.csv.gz"

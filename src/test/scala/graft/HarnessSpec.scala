@@ -17,7 +17,7 @@ import graft.rules.{Cond, Rule, RuleSet}
   */
 class HarnessSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
-  private val sfDir = "/root/testdata/sf0.001"
+  private val sfDir = s"${Fixtures.testdata}/sf0.001"
 
   test("Pinned.release + releaseFrame drop every block discoverFull creates") {
     // memoized STAGE caches from other suites (untracked by design) may
@@ -142,7 +142,7 @@ class HarnessSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     try {
       BatchDiscovery.discover(en) // plan only — no action
-      graft.ext.Similarity.annIvf(emb) // plan only
+      graft.ext.Similarity.annIvf(emb, graft.ext.Similarity.ivfCents(emb)) // plan only
       // listener events are queued async; give the bus a moment to drain
       // (a job-start event would land well within this window)
       Thread.sleep(2000)

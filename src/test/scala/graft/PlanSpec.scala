@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * refactor can't silently lose them. */
 class PlanSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
-  private val sfDir = "/root/testdata/sf0.001"
+  private val sfDir = s"${Fixtures.testdata}/sf0.001"
 
   private def planOf(name: String): String =
     SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
@@ -158,7 +158,8 @@ class PlanSpec extends AnyFunSuite {
     // happens once in the memo builder), so its pruning lock moves to the
     // KERNEL's own plan, which is the shape the memo builder materializes.
     val rsJ = raw"ReadSchema: struct<(.*)>".r.findAllMatchIn(
-      ext.Dedup.jaccardNgramPairs(Tables.documents(spark, sfDir))
+      ext.Dedup.jaccardNgramPairs(
+          ext.Dedup.shingleFpArrays(Tables.documents(spark, sfDir)))
         .queryExecution.executedPlan.toString).map(_.group(1)).toSeq
     assert(rsJ.nonEmpty && rsJ.toSet.subsetOf(
       Set("doc_id:bigint,text:string", "text:string")),
@@ -427,9 +428,10 @@ class PlanSpec extends AnyFunSuite {
     // join tree — audit the RAW lazy constructors behind them too
     val rawPlans = Seq(
       "raw:nearDupPairs" ->
-        ext.Dedup.nearDupPairs(Tables.documents(spark, sfDir)),
+        ext.Dedup.nearDupPairs(ext.Dedup.shingleBands(Tables.documents(spark, sfDir))),
       "raw:jaccardNgramPairs" ->
-        ext.Dedup.jaccardNgramPairs(Tables.documents(spark, sfDir)))
+        ext.Dedup.jaccardNgramPairs(
+          ext.Dedup.shingleFpArrays(Tables.documents(spark, sfDir))))
     val rawOffenders = rawPlans.flatMap { case (n, df) =>
       val p = df.queryExecution.executedPlan.toString
       if (p.contains("CartesianProduct") || p.contains("BroadcastNestedLoopJoin"))

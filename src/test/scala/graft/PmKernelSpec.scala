@@ -389,7 +389,7 @@ class PmKernelSpec extends AnyFunSuite {
     // This makes that invariant EXECUTABLE: if a future W5 edit lets a
     // batch mix resources, this fails before min() silently picks one.
     import org.apache.spark.sql.functions._
-    for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
+    for (dir <- Seq(s"${Fixtures.testdata}/sf0.001", s"${Fixtures.testdata}/sf0.01")) {
       val d = BatchDiscovery.discover(EnabledTime.withEnabled(
         pm.EventLogOps.fromEvents(spark, dir)).transform(Pinned.track))
       val bad = d.filter($"batch_id".isNotNull)

@@ -13,13 +13,13 @@ import org.apache.spark.sql.functions._
   */
 class ScaleInvariantSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = s"${Fixtures.testdata}/sf0.001"
   private val factor = 4
 
   test("near-dup pipeline under inflation: no quadratic joins, bucket cap holds") {
     import spark.implicits._
     val docs = ScaleProbe.inflatedDocs(Tables.documents(spark, dir), factor)
-    val pairs = ext.Dedup.nearDupPairs(docs)
+    val pairs = ext.Dedup.nearDupPairs(ext.Dedup.shingleBands(docs))
     assert(pairs.count() > 0)
     val (quad, _) = ScaleProbe.joinCounts(pairs)
     assert(quad == 0, s"quadratic join shape in inflated nearDupPairs plan ($quad)")
@@ -32,10 +32,11 @@ class ScaleInvariantSpec extends AnyFunSuite {
   test("inflated docs preserve the near-dup rate and isolate copies") {
     import spark.implicits._
     val base = Tables.documents(spark, dir)
-    val n1 = ext.Dedup.nearDupPairs(base)
+    val n1 = ext.Dedup.nearDupPairs(ext.Dedup.shingleBands(base))
       .filter($"jaccard" >= ext.Dedup.NearDupGroupJaccard).count()
     val stride = base.agg(max($"doc_id")).head.getLong(0) + 1
-    val pf = ext.Dedup.nearDupPairs(ScaleProbe.inflatedDocs(base, factor))
+    val pf = ext.Dedup.nearDupPairs(
+        ext.Dedup.shingleBands(ScaleProbe.inflatedDocs(base, factor)))
       .filter($"jaccard" >= ext.Dedup.NearDupGroupJaccard)
     // zero cross-copy pairs: token renaming is bijective per copy, so every
     // verified pair stays inside one copy's id stripe
@@ -68,11 +69,11 @@ class ScaleInvariantSpec extends AnyFunSuite {
     // And on the real corpus the graded converged path is bit-identical to
     // the fixed-unroll form (the hash-unchanged condition for the reroute).
     val docs = Tables.documents(spark, dir)
-    val pairs = Pinned.stageEager(ext.Dedup.nearDupPairs(docs))
+    val pairs = Pinned.stageEager(ext.Dedup.nearDupPairs(ext.Dedup.shingleBands(docs)))
     def asSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val u = asSet(ext.Dedup.nearDupGroups(docs, pairs0 = Some(pairs)))
-    val c = asSet(ext.Dedup.nearDupGroupsConverged(docs, pairs0 = Some(pairs)))
+    val u = asSet(ext.Dedup.nearDupGroups(docs, pairs))
+    val c = asSet(ext.Dedup.nearDupGroupsConverged(docs, pairs))
     assert(u == c, "converged CC must match the unrolled form on the corpus")
     Pinned.releaseFrame(pairs)
     Pinned.release(spark)

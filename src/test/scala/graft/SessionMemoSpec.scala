@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * copies deleted). */
 class SessionMemoSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
-  private val sfDir = "/root/testdata/sf0.001"
+  private val sfDir = s"${Fixtures.testdata}/sf0.001"
 
   private def liveMemo = new SessionMemo(_.sparkContext.isStopped)
 
@@ -141,5 +141,27 @@ class SessionMemoSpec extends AnyFunSuite {
       assert(keys.contains((alias, n)) && !keys.contains((sfDir, n)), s"node $n: $keys")
     }
     assert(first == second, "the same files must score the same")
+  }
+
+  test("releasing night 1 leaves the memo frames it was handed readable") {
+    // j7_ingest_night1 is built over the shared j2_bloom_slices,
+    // j2_bloom_positions and LSH-build memo frames; releasing it must free
+    // only the frames night 1 created — a released checkpoint another
+    // memo still serves has missing blocks that cannot be recomputed
+    val q = ext.ExtQueries.queries
+    def rows(name: String): Seq[String] =
+      q(name)(spark, sfDir).collect().map(_.toString).sorted.toSeq
+    q("j7_ingest_upsert2")(spark, sfDir).collect()
+    assert(SessionMemo.keys(spark).contains((sfDir, "j7_ingest_night1")))
+    val before = rows("j7_ingest_upsert")
+    // accessing the node for another dataset releases this dataset's entry
+    SessionMemo.of[ext.Pipeline.IngestNight1](spark, sfDir + "#release",
+      "j7_ingest_night1", _ => ())(null)
+    assert(!SessionMemo.keys(spark).contains((sfDir, "j7_ingest_night1")))
+    Seq("j2_bloom_slices", "j2_bloom_positions", "j2_shingle_fp", "j2_band_sig")
+      .foreach(n => assert(SessionMemo.keys(spark).contains((sfDir, n)), s"node $n"))
+    assert(rows("j7_ingest_upsert") == before,
+      "a shared memo frame lost its blocks with night 1")
+    Pinned.release(spark)
   }
 }

@@ -36,7 +36,7 @@ class SourcesSpec extends AnyFunSuite {
     // dtypes (Tables.events normalizes ts), so any accepted physical
     // encoding passes; genuinely new encodings fail here first.
     import org.apache.spark.sql.types._
-    val dir = "/root/testdata/sf0.001"
+    val dir = s"${Fixtures.testdata}/sf0.001"
     val required: Map[String, Map[String, DataType]] = Map(
       "region" -> Map("r_regionkey" -> IntegerType, "r_name" -> StringType),
       "nation" -> Map("n_nationkey" -> IntegerType, "n_name" -> StringType,
@@ -157,8 +157,8 @@ class SourcesSpec extends AnyFunSuite {
     // to the default single-file write. The claim does not depend on the
     // log, so it runs on the repo-generated CSV twin of the harness events
     // log, and also on the reference Production log wherever that exists.
-    val reference = java.nio.file.Paths.get("/root/reference/logs/Production.csv.gz")
-    val logs = sources.CsvQueries.eventsCsv(spark, "/root/testdata/sf0.001") +:
+    val reference = java.nio.file.Paths.get(s"${Fixtures.reference}/logs/Production.csv.gz")
+    val logs = sources.CsvQueries.eventsCsv(spark, s"${Fixtures.testdata}/sf0.001") +:
       (if (java.nio.file.Files.isRegularFile(reference)) Seq(reference.toString) else Nil)
     for (path <- logs) {
       val log = EventLogCsv.read(spark, path)
@@ -202,7 +202,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("A11 compaction: 8 files/day bin-pack to the ceil(rows/target) bound, content intact") {
     import spark.implicits._
-    val d = "/root/testdata/sf0.001"
+    val d = s"${Fixtures.testdata}/sf0.001"
     val rows = sources.SchemaQueries.queries("a11_compact")(spark, d).collect()
     assert(rows.length == 30, "one row per day partition")
     assert(rows.forall(_.getBoolean(3)), "every partition within the bin-pack bound")

@@ -10,8 +10,13 @@ import graft.streaming.StreamOps
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
 
+  /** The standing sliced-Bloom (line, slice) state of the corpus carve
+    * (doc_id % 10 != 0) — the input of every sliced-filter probe here. */
+  private def sliceLinesOf(docs: org.apache.spark.sql.DataFrame) =
+    ext.Dedup.bloomSliceLines(ext.Dedup.bloomDocLines(docs.filter(col("doc_id") % 10 =!= 0)))
+
   test("island-detection sessions equal session_window sessions") {
-    val e = Tables.events(spark, "/root/testdata/sf0.001")
+    val e = Tables.events(spark, s"${Fixtures.testdata}/sf0.001")
     val a = StreamOps.sessions(e).collect().map(_.toString).sorted.toSeq
     val b = StreamOps.sessionsViaSessionWindow(e).collect().map(_.toString).sorted.toSeq
     assert(a == b)
@@ -19,7 +24,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("mapGroupsWithState running counts match batch aggregation (streaming)") {
     import spark.implicits._
-    val dir = "/root/testdata/sf0.001"
+    val dir = s"${Fixtures.testdata}/sf0.001"
     val batch = Tables.events(spark, dir)
     val expected = batch.groupBy($"user_id")
       .agg(count(lit(1)).as("n"),
@@ -51,7 +56,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming tumbling counts equal batch tumbling counts") {
     import spark.implicits._
-    val dir = "/root/testdata/sf0.001"
+    val dir = s"${Fixtures.testdata}/sf0.001"
     val batch = Tables.events(spark, dir)
     val expected = StreamOps.tumbling(batch)
       .select($"win_start", $"event_type", $"n")
@@ -81,7 +86,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stream-then-rank top-k equals batch windowed top-k") {
     import spark.implicits._
-    val dir = "/root/testdata/sf0.001"
+    val dir = s"${Fixtures.testdata}/sf0.001"
     val expected = StreamOps.topkPerWindow(Tables.events(spark, dir))
       .collect().map(r => (r.get(0).toString, r.getInt(1)) ->
         (r.getString(2), r.getLong(3))).toMap
@@ -112,7 +117,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming windowed HLL registers equal batch registers (sketch state merge)") {
     import spark.implicits._
-    val dir = "/root/testdata/sf0.001"
+    val dir = s"${Fixtures.testdata}/sf0.001"
     val expected = StreamOps.windowedHll(Tables.events(spark, dir))
       .collect().map(r => (r.get(0).toString, r.getLong(1)) -> r.getLong(2)).toMap
 
@@ -138,7 +143,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming drift bin registers equal batch registers (KS state merge)") {
     import spark.implicits._
-    val dir = "/root/testdata/sf0.001"
+    val dir = s"${Fixtures.testdata}/sf0.001"
     val expected = StreamOps.windowedDriftBins(Tables.events(spark, dir))
       .collect().map(r => (r.get(0).toString, r.getLong(1)) ->
         (r.getLong(2), r.getLong(3))).toMap
@@ -168,7 +173,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming sliding counts+sums equal batch sliding (overlapping windows)") {
     import spark.implicits._
-    val dir = "/root/testdata/sf0.001"
+    val dir = s"${Fixtures.testdata}/sf0.001"
     val batch = Tables.events(spark, dir)
     val expected = StreamOps.sliding(batch)
       .collect().map(_.toString).sorted.toSeq
@@ -196,7 +201,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming watermarked dedup equals batch distinct") {
     import spark.implicits._
-    val dir = "/root/testdata/sf0.001"
+    val dir = s"${Fixtures.testdata}/sf0.001"
     val expected = StreamOps.dedup(Tables.events(spark, dir))
       .collect().map(_.toString).sorted.toSeq
 
@@ -223,7 +228,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming windows are timezone-invariant (non-slide-multiple offset)") {
     import spark.implicits._
-    val dir = "/root/testdata/sf0.001"
+    val dir = s"${Fixtures.testdata}/sf0.001"
     // batch sliding windows the NTZ column directly — timezone-free by
     // construction. The streaming form must agree even when the session
     // timezone's offset is NOT a multiple of the 30-min slide (+05:45
@@ -335,7 +340,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     // --- equality: both legs stream the same parquet, join output must
     // equal the batch attribution join (sf0.01: 23 matched pairs)
-    val dir = "/root/testdata/sf0.01"
+    val dir = s"${Fixtures.testdata}/sf0.01"
     val expected = StreamOps.attributionJoin(Tables.events(spark, dir))
       .collect().map(_.toString).sorted.toSeq
     SparkSuite.withTempDir("graft_ssj") { staged =>
@@ -400,7 +405,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("flatMapGroupsWithState sessions equal batch island-detection sessions") {
     import spark.implicits._
-    val dir = "/root/testdata/sf0.001"
+    val dir = s"${Fixtures.testdata}/sf0.001"
     val batch = Tables.events(spark, dir)
     // batch sessions() emits sum_value as an exact 2-decimal double —
     // compare in cents, the typed operator's exact representation
@@ -417,7 +422,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("flatMapGroupsWithState sessions on a stream emit only closed, consistent sessions") {
     import spark.implicits._
-    val dir = "/root/testdata/sf0.001"
+    val dir = s"${Fixtures.testdata}/sf0.001"
     val batchSessions = StreamOps.sessionsViaFlatMapGroups(Tables.events(spark, dir))
       .collect().map(s => (s.user_id, s.sess_start_us) -> s).toMap
 
@@ -450,7 +455,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stream-static incremental probe equals the batch probe (append mode, zero state)") {
     import spark.implicits._
-    val dir = "/root/testdata/sf0.001"
+    val dir = s"${Fixtures.testdata}/sf0.001"
     val docs = Tables.documents(spark, dir)
     val expected = StreamOps.incProbe(docs)
       .collect().map(_.toString).sorted.toSeq
@@ -481,31 +486,33 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stream-static FIVE-gate composed probe equals the batch probe (append mode, zero state)") {
     import spark.implicits._
-    val dir = "/root/testdata/sf0.001"
+    val dir = s"${Fixtures.testdata}/sf0.001"
     val docs = Tables.documents(spark, dir)
     val emb = Tables.embeddings(spark, dir)
     val Seq(cents, keptM) = ext.Similarity.semStateTables(spark, dir, emb)
     val labels = ext.Dedup.ccGroupsConverged(
       docs.select($"doc_id".as("v")),
-      ext.Multimodal.aHashHammingPairs(ext.Multimodal.pngFixture(docs))
+      ext.Multimodal.aHashHammingPairs(
+          ext.Multimodal.aHashLocal(ext.Multimodal.pngFixture(docs)))
         .select($"doc_a", $"doc_b"))
-    val expected = StreamOps.ingestProbeMm(docs, emb, cents, keptM, labels)
+    val sl = sliceLinesOf(docs)
+    val expected = StreamOps.ingestProbeMm(docs, emb, cents, keptM, labels, sl)
       .collect().map(_.toString).sorted.toSeq
     assert(expected.nonEmpty, "the five-gate composed probe must emit rows")
     assert(expected.exists(_.contains("semantic")) ||
       expected.exists(_.contains("image")) ||
-      StreamOps.ingestProbeMm(docs, emb, cents, keptM, labels)
+      StreamOps.ingestProbeMm(docs, emb, cents, keptM, labels, sl)
         .filter($"sem_drop" === 1L || $"img_drop" === 1L).count() > 0,
       "at least one doc must exercise a non-lexical gate on the harness corpus")
     // every batch doc surfaces (pair rows or candidate-less band rows)
-    val docsCovered = StreamOps.ingestProbeMm(docs, emb, cents, keptM, labels)
+    val docsCovered = StreamOps.ingestProbeMm(docs, emb, cents, keptM, labels, sl)
       .select($"doc_id").distinct().count()
     assert(docsCovered == docs.filter($"doc_id" % 10 === 0).count(),
       "a doc with no lexical candidates must still report its five gates")
     // static sides: the standing states a nightly job maintains
     val corpus = docs.filter($"doc_id" % 10 =!= 0)
     val hashes = corpus.select(md5($"text".cast("binary")).as("h")).distinct()
-    val filters = StreamOps.bloomScaleFilters(ext.Dedup.bloomDocLines(corpus))
+    val filters = StreamOps.bloomScaleFilters(sl)
     val idx = ext.Dedup.corpusProbeIndex(corpus)
     SparkSuite.withTempDir("graft_stingestmm") { staged =>
       java.nio.file.Files.copy(
@@ -531,16 +538,17 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stream-static image probe equals the batch probe (append mode, zero state)") {
     import spark.implicits._
-    val dir = "/root/testdata/sf0.001"
+    val dir = s"${Fixtures.testdata}/sf0.001"
     val docs = Tables.documents(spark, dir)
-    val expected = StreamOps.imgProbe(docs)
-      .collect().map(_.toString).sorted.toSeq
-    assert(expected.nonEmpty, "the image probe must find candidate pairs on the harness corpus")
     // static side: the standing aHash index (as the state table persists
     // it); stream side: the incoming carve arriving as files, decoded and
     // hashed row-locally per micro-batch
     val idx = ext.Multimodal.imgIndex(ext.Multimodal.aHashLocal(
       ext.Multimodal.pngFixture(docs.filter($"doc_id" % 10 =!= 0))))
+    val expected = StreamOps.imgProbe(docs, idx,
+        ext.Multimodal.aHashLocal(ext.Multimodal.pngFixture(docs)))
+      .collect().map(_.toString).sorted.toSeq
+    assert(expected.nonEmpty, "the image probe must find candidate pairs on the harness corpus")
     SparkSuite.withTempDir("graft_imgprobe") { staged =>
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$dir/documents.parquet"),
@@ -564,20 +572,21 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stream-static composed ingest audit equals the batch probe (append mode, zero state)") {
     import spark.implicits._
-    val dir = "/root/testdata/sf0.001"
+    val dir = s"${Fixtures.testdata}/sf0.001"
     val docs = Tables.documents(spark, dir)
-    val expected = StreamOps.ingestProbe(docs)
+    val sl = sliceLinesOf(docs)
+    val expected = StreamOps.ingestProbe(docs, sl)
       .collect().map(_.toString).sorted.toSeq
     assert(expected.nonEmpty, "the composed probe must emit rows")
     // every batch doc surfaces (pair rows or candidate-less band rows)
-    val docsCovered = StreamOps.ingestProbe(docs)
+    val docsCovered = StreamOps.ingestProbe(docs, sl)
       .select($"doc_id").distinct().count()
     assert(docsCovered == docs.filter($"doc_id" % 10 === 0).count(),
       "a doc with no lexical candidates must still report its gates")
     // static sides: the standing states a nightly job maintains
     val corpus = docs.filter($"doc_id" % 10 =!= 0)
     val hashes = corpus.select(md5($"text".cast("binary")).as("h")).distinct()
-    val filters = StreamOps.bloomScaleFilters(ext.Dedup.bloomDocLines(corpus))
+    val filters = StreamOps.bloomScaleFilters(sl)
     val idx = ext.Dedup.corpusProbeIndex(corpus)
     SparkSuite.withTempDir("graft_stingest") { staged =>
       java.nio.file.Files.copy(
@@ -602,22 +611,23 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stream-static sliced-bloom probe equals the batch probe (append mode, zero state)") {
     import spark.implicits._
-    val dir = "/root/testdata/sf0.001"
+    val dir = s"${Fixtures.testdata}/sf0.001"
     val docs = Tables.documents(spark, dir)
-    val expected = StreamOps.bloomScaleProbeLines(docs)
+    val sl = sliceLinesOf(docs)
+    val expected = StreamOps.bloomScaleProbeLines(docs, sl)
       .collect().map(_.toString).sorted.toSeq
     assert(expected.nonEmpty, "the sliced probe must emit line verdicts")
     // the batch form must also agree with the doc-grain graded rollup
-    val perDoc = StreamOps.bloomScaleProbeLines(docs)
+    val perDoc = StreamOps.bloomScaleProbeLines(docs, sl)
       .groupBy($"doc_id")
       .agg(sum($"bloom").as("nb"), sum($"exact").as("ne"))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val graded = ext.Dedup.bloomScaleProbe(docs)
+    val graded = ext.Dedup.bloomScaleProbe(docs, ext.Dedup.bloomSlicePositions(sl))
       .select($"doc_id", $"n_bloom_dup", $"n_exact_dup")
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(perDoc == graded, "line-grain rollup diverged from the graded doc grain")
     val corpus = ext.Dedup.bloomDocLines(docs.filter($"doc_id" % 10 =!= 0))
-    val filters = StreamOps.bloomScaleFilters(corpus)
+    val filters = StreamOps.bloomScaleFilters(sl)
     val corpusLines = corpus.select($"line").distinct()
     SparkSuite.withTempDir("graft_stbscale") { staged =>
       java.nio.file.Files.copy(
@@ -642,7 +652,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stream-static semantic probe equals the batch probe (append mode, zero state)") {
     import spark.implicits._
-    val dir = "/root/testdata/sf0.001"
+    val dir = s"${Fixtures.testdata}/sf0.001"
     val emb = Tables.embeddings(spark, dir)
     val expected = ext.Similarity.semProbeBatch(spark, dir, emb)
       .collect().map(_.toString).sorted.toSeq
@@ -725,7 +735,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stream-static bloom probe equals the batch probe (append mode, zero state)") {
     import spark.implicits._
-    val dir = "/root/testdata/sf0.001"
+    val dir = s"${Fixtures.testdata}/sf0.001"
     val docs = Tables.documents(spark, dir)
     val expected = StreamOps.bloomProbe(docs)
       .collect().map(_.toString).sorted.toSeq
