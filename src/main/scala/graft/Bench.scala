@@ -35,6 +35,14 @@ import java.nio.file.{Files, Paths}
   * artifact reports the per-query MINIMUM across passes. A transient core
   * grind would have to hit the same query in every pass to survive into
   * the headline numbers; per-pass totals are kept for transparency.
+  *
+  * Each query runs in a [[Telemetry.span]], and every session-memo build in
+  * its own `memo:<node>` span. Their rows (jobs, stages, tasks, shuffle and
+  * spill bytes, driver gap, planning phases, plan node counts, a failed
+  * query's error) go to a side file named after the bench file
+  * (`graft_bench.telemetry.json` next to `graft_bench.json`), one row per
+  * span and pass. A single query's cold cost:
+  * `SPARK_GRAFT_BENCH_ONLY=q SPARK_GRAFT_BENCH_PASSES=1 graft.Bench`.
   */
 object Bench {
   /** Process CPU time in nanoseconds (-1 when the platform bean is absent). */
@@ -70,7 +78,7 @@ object Bench {
   /** Fixed-work calibration: hash-reduce 200M longs across all cores. The
     * work is constant across rounds, so its wall time is a pure
     * machine-contention signal a judge can normalize artifacts with. */
-  private def calibrate(spark: SparkSession): Double = {
+  private[graft] def calibrate(spark: SparkSession): Double = {
     val t0 = System.nanoTime()
     // bit_xor, not sum: summing 200M uniform longs overflows under ANSI
     spark.range(0, 200000000L, 1, 32).selectExpr("bit_xor(xxhash64(id)) AS s").collect()
@@ -85,8 +93,8 @@ object Bench {
   private[graft] def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
     math.min(Runtime.getRuntime.availableProcessors(), 32).toString)
 
-  /** A fresh, warmed local session: the one session setup of Bench and the
-    * diagnostic mains (Probe, QueryProbe, StageProbe, LshRecallProbe). */
+  /** A fresh, warmed local session in UTC: the one session setup of the
+    * mains (Bench, Verify, Explain, ScaleProbe). */
   private[graft] def newSession(sfDir: String, cpus: String = defaultCpus): SparkSession = {
     // after spark.stop() the builder would hand back the stopped singleton;
     // clearing both references forces a genuinely fresh context
@@ -95,6 +103,7 @@ object Bench {
     val spark = Harness.tmpfsLocalDir(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.maxPlanStringLength", "65536")
       .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.ui.enabled", "false"))
@@ -129,7 +138,7 @@ object Bench {
       val g0 = gcMs
       val j0 = jitMs
       var ok = true
-      try { fn(spark, sfDir).count() }
+      try Telemetry.span(spark, name)(fn(spark, sfDir).count())
       catch { case e: Throwable =>
         ok = false
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
@@ -146,11 +155,17 @@ object Bench {
     val passes = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt)
     var calibStart = -1.0
     var calibEnd = -1.0
+    val spans = Seq.newBuilder[String]
     val perPass = (1 to passes).map { p =>
       val spark = newSession(sfDir, cpus)
+      val telemetry = Telemetry.attach(spark)
       if (p == 1) calibStart = calibrate(spark)
       val res = runPass(spark, sfDir, p)
       if (p == passes) calibEnd = calibrate(spark)
+      // best effort: a bus that does not drain in time loses this pass's
+      // rows, never the bench line
+      try spans ++= telemetry.json("\"pass\":" + p)
+      catch { case e: Throwable => System.err.println(s"[bench] pass $p telemetry lost: $e") }
       spark.stop()
       res
     }
@@ -184,8 +199,12 @@ object Bench {
       if (sys.env.contains("SPARK_GRAFT_BENCH_ONLY")) "graft_bench_partial.json"
       else "graft_bench.json"
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_FILE", defaultFile)
+    val spanFile = outFile.stripSuffix(".json") + ".telemetry.json"
     try Files.writeString(Paths.get(outFile), json + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] file write failed: $e") }
+    try Files.writeString(Paths.get(spanFile),
+      "{\"sf\":" + Telemetry.jsonString(sfDir) + ",\"rows\":" + spans.result().mkString("[\n", ",\n", "\n]}\n"))
+    catch { case e: Throwable => System.err.println(s"[bench] telemetry write failed: $e") }
     // flush logs first so the JSON line is the last thing on stdout
     System.out.flush(); System.err.flush()
     println(json)

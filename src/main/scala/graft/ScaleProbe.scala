@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthetic scale-stress probe for the heavy pipeline families —
@@ -45,35 +45,14 @@ import org.apache.spark.sql.functions._
   * invariant.
   */
 object ScaleProbe {
-  private def calibrate(spark: SparkSession): Double = {
-    val t0 = System.nanoTime()
-    spark.range(0, 200000000L, 1, 32).selectExpr("bit_xor(xxhash64(id)) AS s").collect()
-    (System.nanoTime() - t0) / 1e9
-  }
-
   /** (quadratic, equi-shuffle) join-operator counts in the executed (final
     * adaptive) plan. Quadratic shapes fail the probe if they grow;
     * equi-shuffle counts are reported (see the scaladoc rationale).
-    * Counted by TREE WALK (descending into AQE stages and subqueries),
-    * not by plan-string matching — toString truncates at
-    * spark.sql.maxPlanStringLength and would silently undercount.
+    * Counted by [[Telemetry.planCounts]]' tree walk.
     * Public: ScaleInvariantSpec reuses it as a standing tripwire. */
   def joinCounts(df: DataFrame): (Int, Int) = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def walk(p: SparkPlan): Seq[String] = {
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case other => other.children
-      }
-      (p.nodeName +: kids.flatMap(walk)) ++
-        p.subqueries.flatMap(walk)
-    }
-    val names = walk(df.queryExecution.executedPlan)
-    def n(ops: Seq[String]) = names.count(nm => ops.exists(nm.contains))
-    (n(Seq("CartesianProduct", "BroadcastNestedLoopJoin")),
-      n(Seq("SortMergeJoin", "ShuffledHashJoin")))
+    val c = Telemetry.planCounts(df.queryExecution.executedPlan)
+    (c.cartesian + c.bnlj, c.smj + c.shj)
   }
 
   /** Bounded-frame ceiling for [[realQuadJoins]]: the reviewed PlanSpec
@@ -95,26 +74,16 @@ object ScaleProbe {
     * with no reachable metric counts as REAL (fail loud, never silent). */
   def realQuadJoins(df: DataFrame, cap: Long = QuadBoundedRows): Int = {
     import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
     import org.apache.spark.sql.catalyst.optimizer.BuildLeft
-    def resolved(p: SparkPlan): SparkPlan = p match {
-      case a: AdaptiveSparkPlanExec => resolved(a.executedPlan)
-      case q: QueryStageExec => resolved(q.plan)
-      case other => other
-    }
-    def walk(p: SparkPlan): Seq[SparkPlan] = {
-      val r = resolved(p)
-      (r +: r.children.flatMap(walk)) ++ r.subqueries.flatMap(walk)
-    }
     // descend through metric-less wrappers (WholeStageCodegen, reused
     // exchanges) to the nearest node that measured its output rows
     def rowsOf(p: SparkPlan): Option[Long] = {
-      val r = resolved(p)
+      val r = Telemetry.unwrap(p)
       r.metrics.get("numOutputRows").map(_.value)
         .orElse(if (r.children.size == 1) rowsOf(r.children.head) else None)
     }
-    walk(df.queryExecution.executedPlan).count {
+    Telemetry.planNodes(df.queryExecution.executedPlan).count {
       case j: BroadcastNestedLoopJoinExec =>
         val build = if (j.buildSide == BuildLeft) j.left else j.right
         rowsOf(build).forall(_ > cap)
@@ -169,12 +138,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(s"${Fixtures.testdata}/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
-    val spark = Harness.tmpfsLocalDir(SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxPlanStringLength", "4000000")
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.newSession(sfDir, "32")
     import spark.implicits._
 
     // ---------------------------------------------------------- inflation
@@ -339,7 +303,7 @@ object ScaleProbe {
       (n, secs, quad, shuf)
     }
 
-    val calibStart = calibrate(spark)
+    val calibStart = Bench.calibrate(spark)
     val results = heads.map { h =>
       timed(h, 1) // warmup: parquet footers, codegen, JIT for this head
       val (n1, w1, q1, s1) = timed(h, 1)
@@ -588,7 +552,7 @@ object ScaleProbe {
     val (imgStF, imgReF) = imgStatePoint(factor)
     println(f"image probe fixed batch: state $imgSt1%.2fs -> $imgStF%.2fs (x${imgStF / imgSt1}%.2f) | recompute $imgRe1%.2fs -> $imgReF%.2fs (x${imgReF / imgRe1}%.2f)")
 
-    val calibEnd = calibrate(spark)
+    val calibEnd = Bench.calibrate(spark)
 
     var failed = List.empty[String]
     if (maxBucketF > ext.Dedup.BucketCap)

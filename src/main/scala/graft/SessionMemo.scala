@@ -23,6 +23,10 @@ import scala.jdk.CollectionConverters._
   *
   * Staging stays with each builder (`Pinned.stage`, `stageEager` or none):
   * the memo only decides when a value is built and released.
+  *
+  * Each build runs in a [[Telemetry.span]] named `memo:<node>`, so its jobs
+  * are charged to the node and not to the query that touched it first; a
+  * caller waiting for another thread's build runs no job of it.
   */
 class SessionMemo private[graft] (stopped: SparkSession => Boolean) {
   private final class Cell[V](build: => V, free: V => Unit) {
@@ -44,7 +48,8 @@ class SessionMemo private[graft] (stopped: SparkSession => Boolean) {
       if (stopped(ks)) cells.remove(k)
       else if (ks == s && kn == node && kd != d) Option(cells.remove(k)).foreach(_.release())
     }
-    cells.computeIfAbsent((s, d, node), _ => new Cell[V](build, release))
+    cells.computeIfAbsent((s, d, node),
+      _ => new Cell[V](Telemetry.span(s, s"memo:$node")(build), release))
       .asInstanceOf[Cell[V]].value
   }
 

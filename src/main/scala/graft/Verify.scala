@@ -1,23 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB compare (tools/check.py). Each
+  * query runs in a [[Telemetry.span]]; the rows go to telemetry.json. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors(), 32).toString)
-    val spark = Harness.tmpfsLocalDir(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxPlanStringLength", "65536")
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Bench.newSession(sfDir)
     spark.sparkContext.setLogLevel("WARN")
+    val telemetry = Telemetry.attach(spark)
     new java.io.File(outDir).mkdirs()
     // Optional subset for fast local iteration: SPARK_GRAFT_ONLY=q1,q2
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -33,8 +25,8 @@ object Verify {
       pool.submit(new Runnable {
         def run(): Unit =
           try {
-            fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-              .parquet(s"$outDir/$name")
+            Telemetry.span(spark, name)(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+              .parquet(s"$outDir/$name"))
             done.add(name)
           } catch { case e: Throwable =>
             failures.add((name, String.valueOf(e.getMessage)))
@@ -56,18 +48,9 @@ object Verify {
           System.err.println(s"[verify] $n TIMED OUT")
         }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // every control char escaped: a tab or CR in an oracle SQL string
+    // would otherwise make the compare's json.load fail
+    import Telemetry.{jsonString => q}
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
@@ -80,6 +63,11 @@ object Verify {
     val failJson = failList.sortBy(_._1)
       .map { case (n, m) => s"${q(n)}: ${q(m)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/failures.json"), failJson)
+    // best effort: a bus that does not drain in time (threads of timed-out
+    // queries may still run jobs) loses the rows, never the verdict
+    try Files.writeString(Paths.get(s"$outDir/telemetry.json"),
+      telemetry.json().mkString("{\"rows\":[\n", ",\n", "\n]}\n"))
+    catch { case e: Throwable => System.err.println(s"[verify] telemetry lost: $e") }
     spark.stop()
     if (failList.nonEmpty)
       System.err.println(s"[verify] ${failList.size} queries FAILED: " +

@@ -156,15 +156,16 @@ object Dedup {
         array_distinct(transform(col("shings"),
           s => graft.functions.Md5Head60(s))).as("dshings"))
 
-  /** MinHash signatures: bands*rowsPerBand independent 32-bit hashes,
+  /** MinHash signatures (doc_id, h0..h{n-1}) of a distinct shingle-set
+    * frame ([[shingleFpArrays]]): `nHashes` independent 32-bit hashes,
     * computed row-locally over the shingle array (no explode, no shuffle —
     * min over a set equals min over the multiset). Docs with no shingles
-    * (< 3 tokens) emit no signature, as in the exploded+groupBy form. */
-  def minhash(docs: DataFrame, nHashes: Int = Bands * RowsPerBand): DataFrame = {
-    import docs.sparkSession.implicits._
-    val cols = (0 until nHashes).map(s =>
-      array_min(transform($"dshings", x => md5Hash32(s, x))).as(s"h$s"))
-    shingleFpArrays(docs).select(($"doc_id" +: cols): _*)
+    * (< 3 tokens) have no row in `sa`, so they emit no signature, as in the
+    * exploded+groupBy form. */
+  def minhash(sa: DataFrame, nHashes: Int = Bands * RowsPerBand): DataFrame = {
+    import sa.sparkSession.implicits._
+    sa.select(($"doc_id" +: (0 until nHashes).map(s =>
+      array_min(transform($"dshings", x => md5Hash32(s, x))).as(s"h$s"))): _*)
   }
 
   /** Distinct shingle sets + exploded (band, sig) signature rows — the
@@ -198,15 +199,13 @@ object Dedup {
   }
 
   /** The exploded (band, sig) rows from an ALREADY-BUILT (tracked) distinct
-    * shingle-set frame — lets multi-layout consumers ([[lshRecall]]'s two
-    * dial points) share ONE shingle build structurally instead of relying
-    * on the cache manager's same-plan persist dedup. */
+    * shingle-set frame — lets several layouts (the `j2_band_sig` and
+    * `j2_band_sig_b4r1` memo nodes) share ONE shingle build structurally
+    * instead of relying on the cache manager's same-plan persist dedup. */
   private[graft] def bandSigFrom(sa: DataFrame, bands: Int,
                                  rows: Int): DataFrame = {
     import sa.sparkSession.implicits._
-    val sigCols = (0 until bands * rows).map(s =>
-      array_min(transform($"dshings", x => md5Hash32(s, x))).as(s"h$s"))
-    val mh = graft.Pinned.track(sa.select(($"doc_id" +: sigCols): _*))
+    val mh = graft.Pinned.track(minhash(sa, bands * rows))
     mh.select($"doc_id", explode(array((0 until bands).map { b =>
         struct(lit(b).as("band"),
           struct((0 until rows).map(r => col(s"h${b * rows + r}").as(s"k$r")): _*).as("sig"))
@@ -283,24 +282,20 @@ object Dedup {
     * IS pipeline recall); precision is the verify-cost number (what
     * fraction of exact-Jaccard verifications the banding wastes).
     *
-    * 100 TB posture: both dial points share ONE shingle/minhash build
-    * (row-local signatures off the same tracked frames); the truth side
-    * is the prefix-filter join the repo already bounds; the compare is
-    * two pair-grain semi-join counts folded into bounded 1-row aggregates
+    * 100 TB posture: `bandSig` (the default layout) and `bandSigB4r1`
+    * (4 bands of 1) are [[bandSigFrom]] frames over the one shingle build
+    * `sa` that the truth side reads too; the truth side is the
+    * prefix-filter join the repo already bounds; the compare is two
+    * pair-grain semi-join counts folded into bounded 1-row aggregates
     * (broadcast-crossed — the `j2_bloom_stats` summary-row shape). */
-  def lshRecall(sa: DataFrame,
+  def lshRecall(sa: DataFrame, bandSig: DataFrame, bandSigB4r1: DataFrame,
                 truthT: Double = NearDupGroupJaccard,
                 bucketCap: Int = BucketCap): DataFrame = {
     import sa.sparkSession.implicits._
-    // ONE shingle build `sa`, shared STRUCTURALLY by the truth side and
-    // both band layouts (round-16 advice: the sharing previously leaned on
-    // the cache manager's same-plan persist dedup, an implementation
-    // accident, not a guarantee)
     val truth = graft.Pinned.track(
       jaccardNgramPairs(sa, truthT, bucketCap).select($"doc_a", $"doc_b"))
-    def rowFor(cfg: String, bands: Int, rows: Int): DataFrame = {
-      val cand = graft.Pinned.track(
-        candidatePairsOf(bandSigFrom(sa, bands, rows), bucketCap))
+    def rowFor(cfg: String, bands: Int, rows: Int, layout: DataFrame): DataFrame = {
+      val cand = graft.Pinned.track(candidatePairsOf(layout, bucketCap))
       val hits = truth.join(cand, Seq("doc_a", "doc_b"), "left_semi")
         .agg(count(lit(1)).as("n_hit"))
       truth.agg(count(lit(1)).as("n_truth"))
@@ -312,8 +307,8 @@ object Dedup {
           expr("(n_hit * 1000000) div greatest(n_truth, 1)").as("recall_e6"),
           expr("(n_hit * 1000000) div greatest(n_cand, 1)").as("precision_e6"))
     }
-    rowFor("default", Bands, RowsPerBand)
-      .unionByName(rowFor("b4r1", 4, 1))
+    rowFor("default", Bands, RowsPerBand, bandSig)
+      .unionByName(rowFor("b4r1", 4, 1, bandSigB4r1))
   }
 
   /** Verified-pair Jaccard threshold for clustering ([[nearDupGroups]]) —

@@ -225,6 +225,10 @@ object ExtQueries {
     SessionMemo(s, d, "j2_band_sig")(
       graft.Pinned.stageEager(
         Dedup.bandSigFrom(shingleFpFrame(s, d), Dedup.Bands, Dedup.RowsPerBand)))
+  /** The high-recall 4x1 layout over the same shingle frame. */
+  private def bandSigB4r1Frame(s: SparkSession, d: String): DataFrame =
+    SessionMemo(s, d, "j2_band_sig_b4r1")(
+      graft.Pinned.stageEager(Dedup.bandSigFrom(shingleFpFrame(s, d), bands = 4, rows = 1)))
   private def lshBuild(s: SparkSession, d: String): (DataFrame, DataFrame) =
     (shingleFpFrame(s, d), bandSigFrame(s, d))
 
@@ -271,17 +275,15 @@ object ExtQueries {
 
     // J2 — MinHash signatures, LSH candidate pairs with exact Jaccard, SimHash.
     "j2_minhash_sigs" -> ((s, d) =>
-      Dedup.minhash(Tables.documents(s, d))),
+      Dedup.minhash(shingleFpFrame(s, d))),
     "j2_neardup_pairs" -> ((s, d) => neardupPairs(s, d)),
 
     // J2 — the LSH banding dial at its HIGH-RECALL point: 4 bands of 1
     // row over the same four minhashes (P(candidate) = 1-(1-j)^4 vs the
     // default 2x2's 1-(1-j^2)^2) — the graded second point of the
     // recall/precision trade every LSH deployment tunes.
-    "j2_neardup_pairs_b4r1" -> ((s, d) => {
-      val sa = shingleFpFrame(s, d)
-      Dedup.nearDupPairs((sa, Dedup.bandSigFrom(sa, bands = 4, rows = 1)))
-    }),
+    "j2_neardup_pairs_b4r1" -> ((s, d) =>
+      Dedup.nearDupPairs((shingleFpFrame(s, d), bandSigB4r1Frame(s, d)))),
     "j2_simhash" -> ((s, d) =>
       Dedup.simhash(Tables.documents(s, d))),
     // Manku-style simhash near-dup pairs (byte-block pigeonhole, exact
@@ -300,7 +302,7 @@ object ExtQueries {
     // at BOTH banding dial points in one table — the j3_ann_recall
     // convention applied to the text family.
     "j2_lsh_recall" -> ((s, d) =>
-      Dedup.lshRecall(shingleFpFrame(s, d))),
+      Dedup.lshRecall(shingleFpFrame(s, d), bandSigFrame(s, d), bandSigB4r1Frame(s, d))),
 
     // J2 — near-dup CLUSTERS: connected components over the verified pair
     // graph; the dedup decision surface (keep is_canonical, drop the rest).

@@ -516,7 +516,8 @@ class ExtSpec extends AnyFunSuite {
     assert(sh.map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet ==
       Set((1L, 1, "a b c"), (1L, 2, "b c d"), (4L, 1, "x y z")))
     // short docs emit no signature row (same contract as the grouped form)
-    assert(Dedup.minhash(docs).select("doc_id").as[Long].collect().toSet == Set(1L, 4L))
+    assert(Dedup.minhash(Dedup.shingleFpArrays(docs)).select("doc_id").as[Long].collect().toSet ==
+      Set(1L, 4L))
     val fps = Dedup.winnow(docs).collect().map(r => r.getLong(0)).toSet
     assert(fps == Set(1L, 4L))
     // winnow window min: doc 1's two right-aligned windows collapse to the
@@ -1034,8 +1035,11 @@ class ExtSpec extends AnyFunSuite {
 
   test("lsh recall row: truth non-empty, counts consistent, high-recall dial dominates") {
     import spark.implicits._
-    val r = ext.Dedup.lshRecall(graft.Pinned.track(ext.Dedup.shingleFpArrays(
-        Tables.documents(spark, s"${Fixtures.testdata}/sf0.001"))))
+    val sa = graft.Pinned.track(ext.Dedup.shingleFpArrays(
+      Tables.documents(spark, s"${Fixtures.testdata}/sf0.001")))
+    val r = ext.Dedup.lshRecall(sa,
+        ext.Dedup.bandSigFrom(sa, ext.Dedup.Bands, ext.Dedup.RowsPerBand),
+        ext.Dedup.bandSigFrom(sa, bands = 4, rows = 1))
       .collect().map(x => x.getAs[String]("config") -> x).toMap
     val d = r("default"); val h = r("b4r1")
     assert(d.getAs[Long]("n_truth") > 0L, "exact ground truth must be non-empty")

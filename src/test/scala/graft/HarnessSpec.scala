@@ -42,34 +42,14 @@ class HarnessSpec extends AnyFunSuite {
     assert(leaked.isEmpty, s"persistent RDDs leaked after release: $leaked")
   }
 
-  /** Jobs `body` starts, counted by a listener. A marker job in its own
-    * group follows the body: listener events arrive in order, so once the
-    * marker's start is seen every job of the body has been counted. */
+  /** Jobs `body` starts, counted by a [[Telemetry]] span. */
   private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"counted-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val marked = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(g) if g == s"$group-marker" => marked.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
+    val telemetry = Telemetry.attach(spark)
+    val name = s"counted-${System.nanoTime()}"
     try {
-      sc.setJobGroup(group, "counted")
-      body
-      sc.setJobGroup(s"$group-marker", "marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(marked.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener never saw the marker job")
-      jobs.get()
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+      Telemetry.span(spark, name)(body)
+      telemetry.rows().filter(_.name == name).map(_.jobs).sum
+    } finally telemetry.close()
   }
 
   /** `body` on the staged sf0.001 log with AQE on, as the graded sessions

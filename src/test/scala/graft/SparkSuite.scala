@@ -17,8 +17,8 @@ object SparkSuite {
       // suite run spent 27+ CPU-minutes inside generateTreeString
       .config("spark.sql.maxPlanStringLength", "65536")
       .config("spark.sql.codegen.cache.maxEntries", "1000")
-      // AQE OFF for the semantics suites (and only here — Bench/Verify/
-      // Probe keep it, that's the graded scale posture). AQE posts a
+      // AQE OFF for the semantics suites (and only here — Bench and
+      // Verify keep it, that's the graded scale posture). AQE posts a
       // SparkListenerSQLAdaptiveExecutionUpdate on every stage completion,
       // and each post rebuilds SparkPlanInfo for the WHOLE plan —
       // an object-tree expansion that maxPlanStringLength does not cap.
