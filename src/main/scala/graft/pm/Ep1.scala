@@ -10,38 +10,22 @@ import graft.sources.{EventLogCsv, LogSchema}
   * (+ checkpoint columns when requested, config.py:40-42,82).
   */
 object Ep1 {
-  private val wtCols = Seq("batch_pt_us", "batch_wt_us", "batch_total_wt_us",
-    "batch_creation_wt_us", "batch_ready_wt_us", "batch_other_wt_us")
-
   /** Stages 2–6 on a canonical log: enabled times (computed unless already
-    * present), batch discovery, naive-variant WT decomposition joined back
-    * to every event of its (batch, case) — the reference's write-back at
-    * analysis.py:82-95 as one broadcast join. Unbatched events carry zero
-    * durations (analysis.py:53-58 initialization). */
+    * present), batch discovery, then the naive-variant WT decomposition
+    * written to every event of its (batch, case) inside the one key-sorted
+    * WT pass ([[WaitingTimes.eventWT]]) — the reference's write-back at
+    * analysis.py:82-95 with no join. Unbatched events carry zero durations
+    * (analysis.py:53-58 initialization). */
   def analyze(log: DataFrame, checkpoints: Boolean = false): DataFrame = {
-    import log.sparkSession.implicits._
     val en = if (log.columns.contains("enabled_us")) log else EnabledTime.withEnabled(log)
-    val d = BatchDiscovery.discoverFull(en)
-    val wt = WaitingTimes.batchCaseWT(d)
-    val cp = if (checkpoints)
-      Seq($"case_enabled_us".as("batch_case_enabled_us"),
-        $"instance_enabled_us".as("batch_instance_enabled_us"),
-        $"instance_start_us".as("batch_start_us"))
-    else Nil
-    val perCase = wt.select(Seq($"batch_id", $"case_id",
-      $"pt_us".as("batch_pt_us"), $"wt_us".as("batch_wt_us"),
-      $"total_wt_us".as("batch_total_wt_us"),
-      $"creation_wt_us".as("batch_creation_wt_us"),
-      $"ready_wt_us".as("batch_ready_wt_us"),
-      $"other_wt_us".as("batch_other_wt_us")) ++ cp: _*)
-    // shuffle join on (batch_id, case_id): perCase is batch-case grain —
-    // unbounded at 100 TB, so no broadcast hint; AQE broadcasts when small
-    val out = d.join(perCase, Seq("batch_id", "case_id"), "left")
-      .na.fill(0L, wtCols)
+    val wt = WaitingTimes.eventWT(BatchDiscovery.discoverFull(en), checkpoints)
+    // the numeric artifact's column order: the batch-case key first
+    val keys = Seq("batch_id", "case_id")
+    val out = wt.select((keys ++ wt.columns.filterNot(keys.contains)).map(col): _*)
     // the enabled-time kernel keeps only canonical columns; re-attach the
     // original case string (collision-free id for external output) by event
     if (log.columns.contains("case_str") && !out.columns.contains("case_str"))
-      out.join(log.select($"event_id", $"case_str"), Seq("event_id"))
+      out.join(log.select(col("event_id"), col("case_str")), Seq("event_id"))
     else out
   }
 

@@ -312,24 +312,11 @@ object PmQueries {
     // *_WTs.csv.gz artifact (Ep1.wtLogView renders the reference layout).
     "pm_wt_log" -> ((s, d) => {
       import s.implicits._
-      val dd = disc(s, d)
-      val wt = WaitingTimes.batchCaseWT(dd).select($"batch_id", $"case_id",
-        $"pt_us".as("batch_pt_us"), $"wt_us".as("batch_wt_us"),
-        $"total_wt_us".as("batch_total_wt_us"),
-        $"creation_wt_us".as("batch_creation_wt_us"),
-        $"ready_wt_us".as("batch_ready_wt_us"),
-        $"other_wt_us".as("batch_other_wt_us"))
-      // shuffle join on (batch_id, case_id): the WT table is batch-case
-      // grain — proportional to batched cases, NOT bounded at 100 TB, so a
-      // forced broadcast is a driver/executor OOM there. AQE still picks a
-      // broadcast at runtime when the side is actually small.
-      dd.join(wt, Seq("batch_id", "case_id"), "left")
+      WaitingTimes.eventWT(disc(s, d))
         .select($"event_id", $"case_id", $"activity", $"resource",
           $"enabled_us", $"start_us", $"end_us", $"batch_id", $"batch_type",
           $"batch_pt_us", $"batch_wt_us", $"batch_total_wt_us",
           $"batch_creation_wt_us", $"batch_ready_wt_us", $"batch_other_wt_us")
-        .na.fill(0L, Seq("batch_pt_us", "batch_wt_us", "batch_total_wt_us",
-          "batch_creation_wt_us", "batch_ready_wt_us", "batch_other_wt_us"))
     }),
 
     // Checkpoint columns (config.py:40-42, analysis.py:96-105): the
@@ -338,13 +325,7 @@ object PmQueries {
     // (NULL outside batches).
     "pm_checkpoints" -> ((s, d) => {
       import s.implicits._
-      val dd = disc(s, d)
-      val cp = WaitingTimes.batchCaseWT(dd).select($"batch_id", $"case_id",
-        $"case_enabled_us".as("batch_case_enabled_us"),
-        $"instance_enabled_us".as("batch_instance_enabled_us"),
-        $"instance_start_us".as("batch_start_us"))
-      // shuffle join, same unbounded-grain rationale as pm_wt_log above
-      dd.join(cp, Seq("batch_id", "case_id"), "left")
+      WaitingTimes.eventWT(disc(s, d), checkpoints = true)
         .select($"event_id", $"case_id", $"activity", $"batch_id",
           $"batch_case_enabled_us", $"batch_instance_enabled_us", $"batch_start_us")
     }),

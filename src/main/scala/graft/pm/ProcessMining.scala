@@ -2,10 +2,10 @@ package graft.pm
 
 import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StringType, StructField, StructType}
 import graft.Tables
 
 /** An activity instance in the canonical event log (times in epoch micros). */
@@ -33,6 +33,10 @@ case class RunEv(case_id: Long, run_no: Long, resource: String, activity: String
   * its C2 enabled time and the bit set of its events' task-level types. */
 case class SpUnit(case_id: Long, run_no: Long, resource: String, subseq: String,
                   unit_start: Long, unit_end: Long, unit_enabled: Long, tk_mask: Int)
+
+/** A per-partition count of [[EnabledTime]]'s counting pass: kind 0 a
+  * directly-follows pair (a, b), kind 1 an `a, b, a` trigram. */
+case class PairN(kind: Int, a: String, b: String, n: Long)
 
 /** A unit's claim by a W6-clean candidate chain: chain, W4 generation,
   * case-based type, batch start, and whether the batch reaches min size. */
@@ -110,10 +114,14 @@ object EventLogOps {
   *    zero-duration events, which otherwise enable THEMSELVES (end == start)
   *    — 9 of the 13 round-3 golden enabled-time mismatches.
   *
-  * Scale posture: phase 1 is a pair aggregation (tiny result, collected &
-  * closure-broadcast); phase 2 shuffles once on case_id and runs an
-  * O(n·|activities|) sweep per case — bounded by trace length, no
-  * cross-case state, spill-safe at 100 TB.
+  * Scale posture: phase 1 is one pass clustered by case_id that counts the
+  * directly-follows pairs (and trigrams, with the l2l gate) per partition;
+  * the driver merges each partition's counts into one map, bounded by
+  * |activities|^2, as its task ends, and closure-broadcasts it (one
+  * shuffle, one action).
+  * Phase 2 shuffles once on case_id and runs an O(n·|activities|) sweep
+  * per case — bounded by trace length, no cross-case state, spill-safe at
+  * 100 TB.
   */
 object EnabledTime {
   /** Heuristics-miner dependency threshold (the reference's oracle is the
@@ -146,27 +154,46 @@ object EnabledTime {
     * the 1.0.0-package semantics (the Loan golden replay does). */
   val L2lThreshold = 0.9
 
+  /** The one counting pass behind [[dfPairs]], [[l2Pairs]] and
+    * [[concurrencySet]]: events clustered by case_id and sorted by
+    * (start_us, event_id) — same-start ties break by input order, NOT end
+    * time (see the object Scaladoc, golden-validated). Per partition, every
+    * directly-follows pair (a, b) counts under kind 0 and, with `trigrams`,
+    * every in-case `a, b, a` trigram under kind 1 keyed (a, b). A pair seen
+    * in several partitions has one row per partition. A null activity is
+    * counted as SQL's lag counts it: never as a predecessor, in no trigram. */
+  private def pairCounts(log: DataFrame, trigrams: Boolean): Dataset[PairN] = {
+    import log.sparkSession.implicits._
+    log.select($"case_id", $"activity", $"start_us", $"event_id")
+      .repartition($"case_id").sortWithinPartitions("case_id", "start_us", "event_id")
+      .mapPartitions { it =>
+        val n = mutable.HashMap.empty[(Int, String, String), Long].withDefaultValue(0L)
+        var c: Any = None // before the first case
+        var p1, p2: String = null
+        it.foreach { r =>
+          val a = r.getString(1)
+          if (c != r.get(0)) { c = r.get(0); p1 = null; p2 = null }
+          if (p1 != null) n((0, p1, a)) += 1
+          if (trigrams && a != null && p1 != null && a == p2 && a != p1) n((1, p2, p1)) += 1
+          p2 = p1; p1 = a
+        }
+        n.iterator.map { case ((k, a, b), v) => PairN(k, a, b, v) }
+      }
+  }
+
+  /** Directly-follows counts (a, b, n) over each case's (start_us,
+    * event_id) order. */
   def dfPairs(log: DataFrame): DataFrame = {
     import log.sparkSession.implicits._
-    // (start_us, event_id): same-start ties break by input order, NOT end
-    // time — see the object Scaladoc (golden-validated)
-    val w = Window.partitionBy("case_id").orderBy("start_us", "event_id")
-    log.withColumn("prev_act", lag($"activity", 1).over(w))
-      .filter($"prev_act".isNotNull)
-      .groupBy($"prev_act".as("a"), $"activity".as("b"))
-      .agg(count(lit(1)).as("n"))
+    pairCounts(log, trigrams = false).groupBy($"a", $"b").agg(sum($"n").as("n"))
   }
 
   /** Length-2-loop trigram counts: rows where the in-case sequence reads
     * `a, b, a` (same ordering + tie-break as [[dfPairs]]), keyed (a, b). */
   def l2Pairs(log: DataFrame): DataFrame = {
     import log.sparkSession.implicits._
-    val w = Window.partitionBy("case_id").orderBy("start_us", "event_id")
-    log.withColumn("p1", lag($"activity", 1).over(w))
-      .withColumn("p2", lag($"activity", 2).over(w))
-      .filter($"p2" === $"activity" && $"p1" =!= $"activity")
-      .groupBy($"p2".as("a"), $"p1".as("b"))
-      .agg(count(lit(1)).as("nl"))
+    pairCounts(log, trigrams = true).filter($"kind" === 1)
+      .groupBy($"a", $"b").agg(sum($"n").as("nl"))
   }
 
   /** Symmetric length-2-loop evidence per ordered pair: (a, b, ll) with
@@ -229,21 +256,23 @@ object EnabledTime {
           .otherwise(0L).as("l2l_vetoed"))
   }
 
-  /** Driver-side concurrency set from ONE directly-follows pass (plus one
-    * trigram pass when the l2l gate is on). The pair relation is bounded by
-    * |activities|^2 (a schema-sized constant, never data-sized), so the
-    * threshold rule runs on the collected maps — the DataFrame self-join
-    * form (kept above as the oracle-facing query) evaluated the full
-    * directly-follows window aggregation twice. */
-  private def concurrencySet(log: DataFrame, depThreshold: Double,
-                             l2lThreshold: Option[Double]): Set[(String, String)] = {
-    val df = dfPairs(log).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val l2: Map[(String, String), Long] = l2lThreshold match {
-      case None => Map.empty
-      case Some(_) => l2Pairs(log).collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    }
+  /** Driver-side concurrency set from ONE counting pass ([[pairCounts]],
+    * trigrams included when the l2l gate is on) and one action that merges
+    * each partition's counts into one map as its task ends, so the driver
+    * holds that map and never the per-partition rows. The pair relation is
+    * bounded by |activities|^2 (a schema-sized constant, never data-sized),
+    * so the threshold rule runs on the merged map. */
+  private[graft] def concurrencySet(log: DataFrame, depThreshold: Double,
+                                    l2lThreshold: Option[Double]): Set[(String, String)] = {
+    type Counts = Map[(Int, String, String), Long]
+    def add(m: Counts, k: (Int, String, String), n: Long): Counts = m.updated(k, m.getOrElse(k, 0L) + n)
+    val counts = pairCounts(log, l2lThreshold.isDefined).rdd.aggregate(Map.empty: Counts)(
+      (m, p) => add(m, (p.kind, p.a, p.b), p.n),
+      (m, o) => o.foldLeft(m) { case (acc, (k, n)) => add(acc, k, n) })
+    def merged(kind: Int): Map[(String, String), Long] =
+      counts.collect { case ((`kind`, a, b), n) => (a, b) -> n }
+    val df = merged(0)
+    val l2 = merged(1)
     df.keysIterator.filter { case (a, b) =>
       a != b && df.contains((b, a)) && {
         val n = df((a, b)); val n2 = df((b, a))
@@ -351,18 +380,22 @@ object EnabledTime {
   * is the one implementation of both rules; it serves the event grain
   * ([[segment]]) and the subsequence-unit grain ([[SubprocessBatches]]).
   *
-  * The passes of [[discoverFullFromStages]]:
+  * [[segment]] carries each segment's task link `tk` (the shared link of
+  * its non-boundary rows), so no later pass recomputes it. The passes of
+  * [[discoverFullFromStages]]:
   *   1. units per (case_id, run_no), each with the set of its events'
-  *      task-level types ([[SubprocessBatches]]);
+  *      task-level types (their `tk`, [[SubprocessBatches]]);
   *   2. units clustered by (resource, subseq) and chained; per closed chain:
   *      candidacy, W6, W4 split, min size — one claim row per unit (the
   *      only staged intermediate, at unit grain);
-  *   3. events left-joined to the claims on (case_id, run_no) and clustered
-  *      by (resource, activity, seg_no): per segment, the W4 split of its
-  *      unclaimed cases and every event's task or subprocess batch key;
-  *   4. W8 renumbering: the distinct keys sorted in one task, task keys
-  *      first (kind 0, then kind 1: discovery.py:161-181 unify order),
-  *      numbered in that order, and broadcast into one join-back.
+  *   3. events left-joined to the broadcast claims on (case_id, run_no),
+  *      read in the partitions [[segment]] clustered them in (no exchange)
+  *      and sorted by segment: per segment, the W4 split of its unclaimed
+  *      cases and every event's task or subprocess batch key;
+  *   4. W8 renumbering: the distinct keys coalesced into one task that
+  *      runs their final aggregate and sorts them, task keys first (kind 0,
+  *      then kind 1: discovery.py:161-181 unify order), numbered in that
+  *      order, and broadcast into one join-back.
   * Task-only discovery ([[discoverFromSeg]]) is passes 3–4 with no claims.
   */
 object BatchDiscovery {
@@ -371,15 +404,18 @@ object BatchDiscovery {
   private val KeyCols = Seq("k_kind", "k_start", "resource", "k_grp", "k_seg", "k_sub")
 
   /** Streams the typed-link chain rule over a key-sorted iterator: every
-    * element with its (lnk, bnd, seg_no); seg_no counts boundaries within
-    * the key, from 1. */
+    * element with its (lnk, bnd, seg_no, tk); seg_no counts boundaries
+    * within the key, from 1, and tk is the segment's task link — the link
+    * every non-boundary row of the segment shares, null for a singleton. A
+    * boundary row takes the next row's link (one row is read ahead): a row
+    * after a boundary continues its segment exactly when it has a link. */
   private[pm] def linked[A](it: Iterator[A], seqGapUs: Long)(key: A => Any,
-      start: A => Long, end: A => Long): Iterator[(A, String, Boolean, Long)] = {
+      start: A => Long, end: A => Long): Iterator[(A, String, Boolean, Long, String)] = {
     var k: Any = null
     var ps, pe, segNo = 0L
     var lnk: String = null
     var bnd = false
-    it.map { a =>
+    val rows = it.map { a =>
       val s = start(a); val e = end(a); val ka = key(a)
       val first = k == null || k != ka
       val l =
@@ -411,6 +447,9 @@ object BatchDiscovery {
       if (bnd) segNo += 1
       lnk = l; ps = s; pe = e
       (a, l, bnd, segNo)
+    }.buffered
+    rows.map { case (a, l, b, n) =>
+      (a, l, b, n, if (!b) l else if (rows.hasNext) rows.head._2 else null)
     }
   }
 
@@ -458,7 +497,7 @@ object BatchDiscovery {
     out.result()
   }
 
-  /** Adds lnk / bnd / seg_no within (resource, activity). Ordered by
+  /** Adds lnk / bnd / seg_no / tk within (resource, activity). Ordered by
     * (start_us, end_us, event_id) — round 5: same-start ties break by END
     * time, then input order. The end tie-break is what reproduces golden
     * instances 314 and 334 (both contain a same-start pair whose SHORTER
@@ -473,33 +512,39 @@ object BatchDiscovery {
       .sortWithinPartitions("resource", "activity", "start_us", "end_us", "event_id")
       .mapPartitions(it => linked(it, seqGapUs)(r => (r.getString(iR), r.getString(iA)),
           _.getLong(iS), _.getLong(iE))
-        .map { case (r, l, b, n) => Row.fromSeq(r.toSeq :+ l :+ b :+ n) })(Encoders.row(in
-        .add("lnk", StringType).add("bnd", BooleanType).add("seg_no", LongType)))
+        .map { case (r, l, b, n, tk) => Row.fromSeq(r.toSeq :+ l :+ b :+ n :+ tk) })(Encoders.row(in
+        .add("lnk", StringType).add("bnd", BooleanType).add("seg_no", LongType).add("tk", StringType)))
   }
 
   /** Passes 3 and 4 over the segmented events `ev` (with the claim columns
     * of [[SubprocessBatches.claims]] when case-based discovery ran): per
-    * segment, the task type (the shared link of its non-boundary rows;
-    * singletons get null), the W4 split of the UNCLAIMED cases (reference
+    * segment, the task type (its `tk` from [[segment]]; singletons get
+    * null), the W4 split of the UNCLAIMED cases (reference
     * W4/min-size filter on isna(subprocess_type)) and each event's batch
     * key and type; then W8 dense renumbering and the join-back. A claimed
     * event carries its subprocess batch key, or none when that batch is
     * undersized — it then loses its task batch too (the NULLIFICATION
     * path, discovery.py:128-147); a "task-based" subprocess batch keeps
-    * the event's task-level type (discovery.py:183-187). */
+    * the event's task-level type (discovery.py:183-187).
+    *
+    * `ev` keeps [[segment]]'s clustering: all rows of a (resource,
+    * activity) in one partition. [[segment]]'s output as it leaves the
+    * pass, staged or persisted, has it, and so does that output streamed
+    * through a broadcast join. */
   private def assign(ev: DataFrame, minSize: Int, cols: Seq[String]): DataFrame = {
     val in = ev.schema
-    val Seq(iR, iA, iG, iC, iS, iEn, iL, iB) = Seq("resource", "activity", "seg_no", "case_id",
-      "start_us", "enabled_us", "lnk", "bnd").map(in.fieldIndex)
+    val Seq(iR, iA, iG, iC, iS, iEn, iK) = Seq("resource", "activity", "seg_no", "case_id",
+      "start_us", "enabled_us", "tk").map(in.fieldIndex)
     val Seq(iT, iQ, iP, iU, iBs, iOk) =
       if (in.fieldNames.contains("sp_type"))
         Seq("sp_type", "subseq", "sp_seg", "sp_sub", "sp_start", "sp_ok").map(in.fieldIndex)
       else Seq.fill(6)(-1)
     val none = Seq.fill(6)(null) // the five key fields + batch_type
-    val keyed = ev.repartition(col("resource"), col("activity"), col("seg_no"))
-      .sortWithinPartitions("resource", "activity", "seg_no")
+    // ev is clustered (see above): a local sort, not an exchange, makes
+    // each segment one run of rows
+    val keyed = ev.sortWithinPartitions("resource", "activity", "seg_no")
       .mapPartitions(it => groups(it)(r => (r.getString(iR), r.getString(iA), r.getLong(iG))).flatMap { seg =>
-        val tk = seg.collectFirst { case r if !r.getBoolean(iB) => TaskLabels(r.getString(iL)) }.orNull
+        val tk = Option(seg.head.getString(iK)).map(TaskLabels).orNull
         def claimed(r: Row) = iT >= 0 && !r.isNullAt(iT)
         val g = gens(seg.iterator.filterNot(claimed).map(r => (r.getLong(iC), r.getLong(iS), r.getLong(iEn))),
           minSize)
@@ -519,11 +564,12 @@ object BatchDiscovery {
         .add("k_seg", LongType).add("k_sub", IntegerType).add("batch_type", StringType)))
     // W8 canonical renumbering: one row per batch key, ordered by the full
     // key, so the row number IS dense_rank. The key frame is batch grain and
-    // is broadcast into the join-back anyway, so one task sorts it; it stays
-    // lazy (`keyed` is recomputed, and its keys depend only on each
-    // segment's member set)
+    // is broadcast into the join-back anyway, so one task runs the final
+    // aggregate and sorts it (coalesce, no second exchange); it stays lazy
+    // (`keyed` is recomputed, and its keys depend only on each segment's
+    // member set)
     val bid = keyed.filter(col("k_kind").isNotNull).select(KeyCols.map(col): _*).distinct()
-      .repartition(1).sortWithinPartitions(KeyCols.map(col): _*)
+      .coalesce(1).sortWithinPartitions(KeyCols.map(col): _*)
       .withColumn("batch_id", monotonically_increasing_id() + 1)
     keyed.join(broadcast(bid), KeyCols, "left")
       .select((cols :+ "batch_id" :+ "batch_type").map(col): _*)
@@ -541,10 +587,13 @@ object BatchDiscovery {
     * should be a persisted or staged leaf; PmQueries passes the
     * session-memoized segmentation stage shared with [[discoverFull]]. A
     * `run_no` column is dropped so the output schema matches
-    * discover(en)'s exactly. */
+    * discover(en)'s exactly; so is [[segment]]'s `tk`. `seg` must be
+    * [[segment]]'s output as that pass leaves it (staged, persisted or
+    * lazy; not re-partitioned or joined): each (resource, activity) is read
+    * in the partition [[segment]] put it in, with no exchange. */
   def discoverFromSeg(seg: DataFrame, minSize: Int = 2): DataFrame = {
     val front = Seq("resource", "activity", "seg_no", "case_id")
-    assign(seg, minSize, front ++ seg.columns.filterNot((front :+ "run_no").contains))
+    assign(seg, minSize, front ++ seg.columns.filterNot((front :+ "run_no" :+ "tk").contains))
   }
 
   /** Full pipeline INCLUDING case-based (subprocess) batches, mirroring the
@@ -561,7 +610,8 @@ object BatchDiscovery {
   }
 
   /** [[discoverFull]] over caller-owned stages: `seg` is the segmentation of
-    * `runsEv` (run_no is read from `runsEv` only when `seg` lacks it) and a
+    * `runsEv` as [[segment]] leaves it (see [[discoverFromSeg]]; run_no is
+    * read from `runsEv` only when `seg` lacks it) and a
     * reusable leaf, NOT released here — PmQueries owns it via its
     * dataset-switch eviction, so one session segments the log once for
     * task-only AND subprocess discovery. Returns an EAGER stage (the claims
@@ -569,14 +619,16 @@ object BatchDiscovery {
   def discoverFullFromStages(runsEv: DataFrame, seg: DataFrame,
                              minSize: Int = 2,
                              seqGapUs: Long = PmConfig.SeqGapUs): DataFrame = {
+    // the join loses segment's clustering, which assign reads: re-cluster
     val ev = if (seg.columns.contains("run_no")) seg
       else seg.join(runsEv.select("event_id", "run_no"), "event_id")
+        .repartition(col("resource"), col("activity"))
     val claims = graft.Pinned.stage(SubprocessBatches.claims(ev, minSize, seqGapUs))
     val front = Seq("event_id", "resource", "activity", "seg_no", "case_id")
     // claims are unit grain and only the units of candidate chains
     val out = graft.Pinned.stageEager(assign(
       ev.join(broadcast(claims), Seq("case_id", "run_no"), "left"), minSize,
-      front ++ seg.columns.filterNot(front.contains)))
+      front ++ seg.columns.filterNot((front :+ "tk").contains)))
     graft.Pinned.releaseFrame(claims)
     out
   }
@@ -652,10 +704,10 @@ object SubprocessBatches {
   }
 
   /** Pass 2, per closed chain of units: candidacy, W6, W4 + min size. */
-  private def chainClaims(chain: ArrayBuffer[(SpUnit, String, Boolean, Long)],
+  private def chainClaims(chain: ArrayBuffer[(SpUnit, String, Boolean, Long, String)],
                           minSize: Int): Iterator[SpClaim] = {
     val units = chain.map(_._1)
-    val typ = if (chain.size > 1) Labels(chain(1)._2) else null
+    val typ = Option(chain.head._5).map(Labels).orNull
     if (typ == null || units.map(_.case_id).distinct.size < 2 ||
         Integer.bitCount(units.foldLeft(0)(_ | _.tk_mask)) > 1) Iterator.empty
     else {
@@ -668,14 +720,13 @@ object SubprocessBatches {
   }
 
   /** Passes 1 and 2 over segmented events with run_no: one claim row per
-    * unit of every W6-clean candidate chain, keyed (case_id, run_no). */
+    * unit of every W6-clean candidate chain, keyed (case_id, run_no). An
+    * event's task-level type is its segment's `tk` ([[BatchDiscovery.segment]]). */
   private[pm] def claims(seg: DataFrame, minSize: Int, seqGapUs: Long): DataFrame = {
     val spark = seg.sparkSession
     import spark.implicits._
-    // the event's task-level type: its segment's shared link
-    val tk = min(when(!$"bnd", $"lnk")).over(Window.partitionBy("resource", "activity", "seg_no"))
     seg.select($"case_id", $"run_no", $"resource", $"activity", $"start_us", $"end_us",
-        $"event_id", $"enabled_us", tk.as("tk")).as[RunEv]
+        $"event_id", $"enabled_us", $"tk").as[RunEv]
       .repartition($"case_id", $"run_no")
       .sortWithinPartitions("case_id", "run_no", "start_us", "end_us", "event_id")
       .mapPartitions(it => BatchDiscovery.groups(it)(e => (e.case_id, e.run_no)).flatMap(unit))
@@ -694,38 +745,86 @@ object SubprocessBatches {
 /** Waiting-time decomposition (analysis.py:51-105) and the K3 sweep-line
   * PT/WT (utils.py:127-176), both at batch-case grain, in micros. */
 object WaitingTimes {
-  /** Six-way decomposition per (batch_id, case_id). Deterministic variant of
-    * the reference: the batch-case enabled time is the C2 struct-min (the
-    * reference's iloc[0] row-order tie-break is replaced by the documented
-    * (start, enabled) lexicographic minimum).
-    * Invariant: total = creation + ready + other. */
+  /** One batch case's instants and its instance's: the case starts at its
+    * events' lexicographically minimal (start, enabled) and is enabled by
+    * it (C2 struct-min; the reference's iloc[0] row-order tie-break is
+    * replaced by this documented minimum), ends at its max end; the
+    * instance is enabled by its last-enabled case and starts with its
+    * first-starting case. Invariant: total = creation + ready + other. */
+  private final case class Wt(caseStart: Long, caseEnabled: Long, caseEnd: Long,
+                              instEnabled: Long, instStart: Long) {
+    def total: Long = caseStart - caseEnabled
+    def creation: Long = instEnabled - caseEnabled
+    def ready: Long = instStart - instEnabled
+    def other: Long = caseStart - instStart
+    def pt: Long = caseEnd - caseStart
+  }
+
+  /** The WT kernel: one key-sorted pass. Rows are clustered by batch_id —
+    * unbatched rows by event_id, so they spread over the tasks — and sorted
+    * by (batch_id, batch_type, case_id); one batch is held in memory. `emit`
+    * gets each batch case's rows with their [[Wt]], and each unbatched row
+    * alone with none. */
+  private def pass(discovered: DataFrame, out: StructType)(
+      emit: (ArrayBuffer[Row], Option[Wt]) => Iterator[Row]): DataFrame = {
+    val in = discovered.schema
+    val Seq(iB, iT, iC, iS, iEn, iE, iId) = Seq("batch_id", "batch_type", "case_id",
+      "start_us", "enabled_us", "end_us", "event_id").map(in.fieldIndex)
+    discovered.repartition(coalesce(col("batch_id"), col("event_id")))
+      .sortWithinPartitions("batch_id", "batch_type", "case_id")
+      .mapPartitions(it => BatchDiscovery.groups(it)(r =>
+          if (r.isNullAt(iB)) (false, r.getLong(iId)) else (true, r.getLong(iB))).flatMap { batch =>
+        if (batch.head.isNullAt(iB)) emit(batch, None)
+        else {
+          val cases = BatchDiscovery.groups(batch.iterator)(r => (r.getString(iT), r.getLong(iC))).map { rows =>
+            val first = rows.minBy(r => (r.getLong(iS), r.getLong(iEn)))
+            (rows, first.getLong(iS), first.getLong(iEn), rows.map(_.getLong(iE)).max)
+          }.toSeq
+          val instEnabled = cases.map(_._3).max
+          val instStart = cases.map(_._2).min
+          cases.iterator.flatMap { case (rows, s, en, e) => emit(rows, Some(Wt(s, en, e, instEnabled, instStart))) }
+        }
+      })(Encoders.row(out))
+  }
+
+  /** Six-way decomposition per (batch_id, batch_type, case_id), with the
+    * instance instants and the case's checkpoint instants
+    * (config.py:40-42, analysis.py:96-105). */
   def batchCaseWT(discovered: DataFrame): DataFrame = {
-    import discovered.sparkSession.implicits._
-    val bc = discovered.filter($"batch_id".isNotNull)
-      .groupBy("batch_id", "batch_type", "case_id")
-      .agg(
-        min(struct($"start_us".as("s"), $"enabled_us".as("e"))).as("m"),
-        max($"end_us").as("case_end"))
-      .select($"batch_id", $"batch_type", $"case_id",
-        $"m.s".as("case_start"), $"m.e".as("case_enabled"), $"case_end")
-    val w = Window.partitionBy("batch_id")
-    bc.withColumn("inst_enabled", max($"case_enabled").over(w))
-      .withColumn("inst_start", min($"case_start").over(w))
-      .select(
-        $"batch_id", $"batch_type", $"case_id",
-        ($"case_start" - $"case_enabled").as("total_wt_us"),
-        ($"inst_enabled" - $"case_enabled").as("creation_wt_us"),
-        ($"inst_start" - $"inst_enabled").as("ready_wt_us"),
-        ($"case_start" - $"inst_start").as("other_wt_us"),
-        ($"case_end" - $"case_start").as("pt_us"),
-        ($"case_start" - $"case_enabled").as("wt_us"),
-        $"inst_enabled".as("instance_enabled_us"),
-        $"inst_start".as("instance_start_us"),
-        // checkpoint columns (config.py:40-42, analysis.py:96-105):
-        // batch_case_enabled / batch_instance_enabled / batch_start
-        $"case_enabled".as("case_enabled_us"),
-        $"case_start".as("case_start_us"),
-        $"case_end".as("case_end_us"))
+    val in = discovered.schema
+    val Seq(iB, iT, iC) = Seq("batch_id", "batch_type", "case_id").map(in.fieldIndex)
+    val out = StructType(Seq(in(iB), in(iT), in(iC)) ++ Seq("total_wt_us", "creation_wt_us",
+      "ready_wt_us", "other_wt_us", "pt_us", "wt_us", "instance_enabled_us", "instance_start_us",
+      "case_enabled_us", "case_start_us", "case_end_us").map(StructField(_, LongType)))
+    pass(discovered.filter(col("batch_id").isNotNull), out) { (rows, wt) =>
+      val w = wt.get
+      val r = rows.head
+      Iterator(Row(r.get(iB), r.get(iT), r.get(iC), w.total, w.creation, w.ready, w.other, w.pt,
+        w.total, w.instEnabled, w.instStart, w.caseEnabled, w.caseStart, w.caseEnd))
+    }
+  }
+
+  /** The event grain of the decomposition, the reference's write-back
+    * (analysis.py:82-95): every row of `discovered` with its batch case's
+    * six durations (zero outside batches, analysis.py:53-58) and, with
+    * `checkpoints`, its batch_case_enabled / batch_instance_enabled /
+    * batch_start instants (null outside batches). Computed in the same pass
+    * as [[batchCaseWT]], so no join writes it back. */
+  def eventWT(discovered: DataFrame, checkpoints: Boolean = false): DataFrame = {
+    val durations = Seq("batch_pt_us", "batch_wt_us", "batch_total_wt_us",
+      "batch_creation_wt_us", "batch_ready_wt_us", "batch_other_wt_us")
+    val cps = if (checkpoints)
+      Seq("batch_case_enabled_us", "batch_instance_enabled_us", "batch_start_us") else Nil
+    val out = StructType(discovered.schema.fields ++ durations.map(StructField(_, LongType, nullable = false)) ++
+      cps.map(StructField(_, LongType)))
+    pass(discovered, out) { (rows, wt) =>
+      val vals = wt match {
+        case Some(w) => Seq(w.pt, w.total, w.total, w.creation, w.ready, w.other) ++
+          (if (checkpoints) Seq(w.caseEnabled, w.instEnabled, w.instStart) else Nil)
+        case None => Seq.fill(6)(0L) ++ cps.map(_ => null)
+      }
+      rows.iterator.map(r => Row.fromSeq(r.toSeq ++ vals))
+    }
   }
 
   /** K3 — sweep-line PT/WT per batch case: melt (enabled,start,end) into a

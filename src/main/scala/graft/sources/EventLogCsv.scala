@@ -1,8 +1,13 @@
 package graft.sources
 
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import scala.util.Try
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Physical-to-logical column mapping for external event logs — the
   * reference's EventLogIDs indirection (config.py:14-42), resolved once at
@@ -25,9 +30,44 @@ case class LogSchema(
   * batch_detection.R:50), start_us/end_us (+ enabled_us when present),
   * event_id (deterministic total-order row number). */
 object EventLogCsv {
-  def read(spark: SparkSession, path: String, schema: LogSchema = LogSchema()): DataFrame = {
+  /** The all-string schema Spark's CSV reader gives `path` with a header,
+    * read with no job when `path` names one file, or a directory whose one
+    * visible entry is a file (what [[writeCsvGz]] writes): that file's first
+    * non-empty line is read on the driver through Hadoop's codec factory and
+    * parsed by Spark's own CSV reader over a one-line local Dataset. None for
+    * anything else (a glob, several files, subdirectories, a missing path,
+    * no non-empty line): the scan then reads the header itself. */
+  private[graft] def headerSchema(spark: SparkSession, path: String): Option[StructType] = {
     import spark.implicits._
-    val raw = spark.read.option("header", "true").csv(path)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    // the names Spark's file listing skips
+    def hidden(f: FileStatus) = {
+      val n = f.getPath.getName
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")
+    }
+    Try(fs.getFileStatus(p)).toOption.flatMap { f =>
+      if (f.isFile) Some(f)
+      else fs.listStatus(p).filterNot(hidden) match {
+        case Array(g) if g.isFile => Some(g)
+        case _ => None
+      }
+    }.flatMap { f =>
+      val codec = new CompressionCodecFactory(conf).getCodec(f.getPath)
+      val raw = fs.open(f.getPath)
+      val lines = new BufferedReader(new InputStreamReader(
+        if (codec == null) raw else codec.createInputStream(raw), StandardCharsets.UTF_8))
+      // Hadoop's line reader drops a UTF-8 byte-order mark that opens the file
+      try (Option(lines.readLine()).map(_.stripPrefix("\uFEFF")).iterator ++
+        Iterator.continually(lines.readLine()).takeWhile(_ != null)).find(_.trim.nonEmpty)
+      finally lines.close()
+    }.map(h => spark.read.option("header", "true").csv(Seq(h).toDS()).schema)
+  }
+
+  def read(spark: SparkSession, path: String, schema: LogSchema = LogSchema()): DataFrame = {
+    val reader = spark.read.option("header", "true")
+    val raw = headerSchema(spark, path).fold(reader)(reader.schema).csv(path)
     val withEnabled = schema.enabled match {
       case Some(en) => raw.withColumn("enabled_us", graft.Det.us(to_timestamp(col(en))))
       case None => raw

@@ -121,8 +121,9 @@ class DiscoveryPropertySpec extends AnyFunSuite {
     for (sample <- 1 to 12) {
       val rows = randomRunLog(rnd)
       def clue(msg: String) = s"[sample $sample] $msg (log: $rows)"
-      def run(rs: List[(Long, Long, String, String, Long, Long, Long)]) = {
-        val d = pm.BatchDiscovery.discoverFull(toDf(rs))
+      def run(rs: List[(Long, Long, String, String, Long, Long, Long)]) =
+        collected(pm.BatchDiscovery.discoverFull(toDf(rs)))
+      def collected(d: org.apache.spark.sql.DataFrame) = {
         val out = d.select("event_id", "case_id", "activity", "resource", "batch_id", "batch_type")
           .collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3),
@@ -158,6 +159,18 @@ class DiscoveryPropertySpec extends AnyFunSuite {
 
       // 4. input-order invariance
       assert(run(rnd.shuffle(rows)).toSeq == out.toSeq, clue("discovery output depends on input row order"))
+
+      // 5. over caller stages whose segmentation lacks run_no: it is read
+      // from the runs log by a shuffle join (no broadcast), which loses the
+      // segmentation's layout
+      val runsEv = pm.SubprocessBatches.withRuns(toDf(rows))
+      val seg = Pinned.stage(pm.BatchDiscovery.segment(runsEv).drop("run_no"))
+      val bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try assert(collected(pm.BatchDiscovery.discoverFullFromStages(runsEv, seg)).toSeq == out.toSeq,
+        clue("discoverFullFromStages over a segmentation without run_no differs"))
+      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
+      Pinned.releaseFrame(seg)
       Pinned.release(spark)
     }
     assert(caseBased > 0, "no sample produced a case-based batch: the subprocess path went untested")

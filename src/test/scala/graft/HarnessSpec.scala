@@ -52,21 +52,27 @@ class HarnessSpec extends AnyFunSuite {
     } finally telemetry.close()
   }
 
-  /** `body` on the staged sf0.001 log with AQE on, as the graded sessions
-    * run: enabled times and segmentation staged and materialized. */
-  private def withStagedLog[A](body: (DataFrame, DataFrame) => A): A = {
+  /** `body` with AQE on, as the graded sessions run. */
+  private def withAqe[A](body: => A): A = {
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    try {
-      val en = Pinned.stage(EnabledTime.withEnabled(graft.pm.EventLogOps.fromEvents(spark, sfDir)))
-      val seg = Pinned.stage(BatchDiscovery.segment(en))
-      seg.count()
-      try body(en, seg) finally Seq(seg, en).foreach(Pinned.releaseFrame)
-    } finally {
+    try body
+    finally {
       spark.conf.set("spark.sql.adaptive.enabled", aqe)
       Pinned.release(spark)
     }
   }
+
+  /** `body` on the staged sf0.001 log with AQE on: enabled times and
+    * segmentation staged and materialized. */
+  private def withStagedLog[A](body: (DataFrame, DataFrame) => A): A = withAqe {
+    val en = Pinned.stage(EnabledTime.withEnabled(graft.pm.EventLogOps.fromEvents(spark, sfDir)))
+    val seg = Pinned.stage(BatchDiscovery.segment(en))
+    seg.count()
+    try body(en, seg) finally Seq(seg, en).foreach(Pinned.releaseFrame)
+  }
+
+  private def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
   // Job counts do not depend on machine load, so they lock the pass
   // structure: each extra shuffle, staged kernel, join or action shows up
@@ -74,10 +80,31 @@ class HarnessSpec extends AnyFunSuite {
   test("batch discovery job counts stay at or below the key-sorted kernel's") {
     val (full, task) = withStagedLog { (en, seg) =>
       (jobsOf(Pinned.releaseFrame(BatchDiscovery.discoverFullFromStages(en, seg))),
-        jobsOf(BatchDiscovery.discoverFromSeg(seg).write.format("noop").mode("overwrite").save()))
+        jobsOf(noop(BatchDiscovery.discoverFromSeg(seg))))
     }
-    assert(full <= 9, s"discoverFullFromStages ran $full jobs")
-    assert(task <= 5, s"one action over discoverFromSeg ran $task jobs")
+    assert(full <= 6, s"discoverFullFromStages ran $full jobs")
+    assert(task <= 3, s"one action over discoverFromSeg ran $task jobs")
+  }
+
+  test("enabled times, the WT pass and EP1 job counts stay at or below the one-pass forms'") {
+    // the K2 oracle is one counting pass and one action, run at construction
+    val log = graft.pm.EventLogOps.fromEvents(spark, sfDir)
+    val oracle = withAqe(jobsOf(EnabledTime.withEnabled(log)))
+    val wt = withStagedLog { (_, seg) =>
+      val disc = Pinned.stage(BatchDiscovery.discoverFromSeg(seg))
+      disc.count()
+      try jobsOf(noop(graft.pm.WaitingTimes.batchCaseWT(disc))) finally Pinned.releaseFrame(disc)
+    }
+    // Ep1.main's path: CSV scan, analysis staged, one action over it
+    val csv = sources.CsvQueries.eventsCsv(spark, sfDir)
+    val ep1 = withAqe(jobsOf {
+      val f = Pinned.stage(graft.pm.Ep1.analyze(sources.EventLogCsv.read(spark, csv)))
+      noop(f)
+      Pinned.releaseFrame(f)
+    })
+    assert(oracle <= 2, s"building withEnabled ran $oracle jobs")
+    assert(wt <= 2, s"one action over batchCaseWT ran $wt jobs")
+    assert(ep1 <= 13, s"Ep1.analyze over the CSV twin ran $ep1 jobs")
   }
 
   test("report and feature table job counts stay at or below the two-action/two-pass forms'") {

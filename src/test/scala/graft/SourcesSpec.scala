@@ -200,6 +200,35 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
+  test("CSV header read on the driver gives Spark's own header schema, or defers to it") {
+    import spark.implicits._
+    SparkSuite.withTempDir("graft_csv_header") { base =>
+      def sparks(path: String) = spark.read.option("header", "true").csv(path).schema
+      def gz(path: String, text: String): Unit = {
+        val out = new java.util.zip.GZIPOutputStream(new java.io.FileOutputStream(path))
+        try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally out.close()
+      }
+      val rows = "\n\ncase_id,Activity,start_time,end_time,Resource,case_id\nC1,A,2024-01-01 10:00:00,2024-01-01 11:00:00,r1,x\n"
+      // a BOM-prefixed gzip file behind blank lines, with a duplicate column name
+      gz(s"$base/bom.csv.gz", "\uFEFF" + rows)
+      // a directory as writeCsvGz leaves it: one part file beside hidden files
+      val df = Seq(("C1", "A", "2024-01-01 10:00:00")).toDF("case_id", "Activity", "start_time")
+      EventLogCsv.writeCsvGz(df, s"$base/dir")
+      for (path <- Seq(s"$base/bom.csv.gz", s"$base/dir")) {
+        val got = EventLogCsv.headerSchema(spark, path)
+        assert(got.isDefined, s"no driver-side header for $path")
+        assert(got.get == sparks(path), s"header schema differs from Spark's for $path")
+      }
+      // several files, a subdirectory, a glob, a missing path: Spark reads the header
+      Seq("two", "nested/k=1").foreach(d => new java.io.File(s"$base/$d").mkdirs())
+      gz(s"$base/two/a.csv.gz", rows)
+      gz(s"$base/two/b.csv.gz", "x,y\n1,2\n")
+      gz(s"$base/nested/k=1/a.csv.gz", rows)
+      for (path <- Seq(s"$base/two", s"$base/nested", s"$base/two/*.csv.gz", s"$base/missing"))
+        assert(EventLogCsv.headerSchema(spark, path).isEmpty, s"driver-side header for $path")
+    }
+  }
+
   test("A11 compaction: 8 files/day bin-pack to the ceil(rows/target) bound, content intact") {
     import spark.implicits._
     val d = s"${Fixtures.testdata}/sf0.001"
