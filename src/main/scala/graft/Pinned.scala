@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
 
 /** Session-scoped registry of persisted INTERMEDIATE DataFrames.
@@ -81,6 +81,13 @@ object Pinned {
     * lifetime. (A lazy stage cannot do this — its blocks are computed at
     * the first downstream ACTION, which still reads the intermediates.) */
   def stageEager(df: DataFrame): DataFrame = df.localCheckpoint(true)
+
+  /** `df` hash-clustered by `keys`, read back as a leaf over the shuffled
+    * RDD: every plan over the result reads the one shuffle output, with
+    * local sorts, and holds no block (shuffle files are not RDD blocks).
+    * With AQE on, the shuffle's map stage runs at call time. */
+  def shuffled(df: DataFrame, keys: Column*): DataFrame =
+    df.sparkSession.createDataFrame(df.repartition(keys: _*).rdd, df.schema)
 
   /** Unpersist every tracked intermediate of `s` (non-blocking) and any
     * entries of already-stopped sessions. */

@@ -295,7 +295,8 @@ object PmQueries {
 
     // Full discovery INCLUDING case-based (subprocess) batches — the
     // reference's complete pass order with the nullification path.
-    // discoverFullFromStages returns an EAGERLY staged frame whose
+    // discoverFullFromStages returns a staged frame (built by its first
+    // action, while the memoized enabled and segmentation stages live) whose
     // lifecycle belongs to the caller — memoized per (session, dataset) with the
     // standard eviction so one session computes it once and the staged
     // blocks are released on dataset switch.
@@ -312,7 +313,7 @@ object PmQueries {
     // *_WTs.csv.gz artifact (Ep1.wtLogView renders the reference layout).
     "pm_wt_log" -> ((s, d) => {
       import s.implicits._
-      WaitingTimes.eventWT(disc(s, d))
+      WaitingTimes.eventWT(disc(s, d), checkpoints = false, clustered = true)
         .select($"event_id", $"case_id", $"activity", $"resource",
           $"enabled_us", $"start_us", $"end_us", $"batch_id", $"batch_type",
           $"batch_pt_us", $"batch_wt_us", $"batch_total_wt_us",
@@ -325,7 +326,7 @@ object PmQueries {
     // (NULL outside batches).
     "pm_checkpoints" -> ((s, d) => {
       import s.implicits._
-      WaitingTimes.eventWT(disc(s, d), checkpoints = true)
+      WaitingTimes.eventWT(disc(s, d), checkpoints = true, clustered = true)
         .select($"event_id", $"case_id", $"activity", $"batch_id",
           $"batch_case_enabled_us", $"batch_instance_enabled_us", $"batch_start_us")
     }),

@@ -2,27 +2,12 @@ package graft.pm
 
 import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StringType, StructField, StructType}
 import graft.Tables
-
-/** An activity instance in the canonical event log (times in epoch micros). */
-case class Ev(event_id: Long, case_id: Long, activity: String, resource: String,
-              start_us: Long, end_us: Long)
-
-/** [[Ev]] plus its derived enabled time. */
-case class EvEn(event_id: Long, case_id: Long, activity: String, resource: String,
-                start_us: Long, end_us: Long, enabled_us: Long)
-
-/** [[EvEn]] plus the within-case same-resource contiguous run index
-  * ([[SubprocessBatches.withRuns]] semantics, computed inside the same K2
-  * sweep — the events are already (start, end, id)-sorted per case there,
-  * so the run index costs three comparisons per event instead of a second
-  * event-grain window pass + checkpoint downstream). */
-case class EvEnR(event_id: Long, case_id: Long, activity: String, resource: String,
-                 start_us: Long, end_us: Long, enabled_us: Long, run_no: Long)
 
 /** Pass-1 input of case-based discovery: an event of a same-resource run
   * with its segment's task-level link `tk`. */
@@ -114,14 +99,14 @@ object EventLogOps {
   *    zero-duration events, which otherwise enable THEMSELVES (end == start)
   *    — 9 of the 13 round-3 golden enabled-time mismatches.
   *
-  * Scale posture: phase 1 is one pass clustered by case_id that counts the
-  * directly-follows pairs (and trigrams, with the l2l gate) per partition;
-  * the driver merges each partition's counts into one map, bounded by
-  * |activities|^2, as its task ends, and closure-broadcasts it (one
-  * shuffle, one action).
-  * Phase 2 shuffles once on case_id and runs an O(n·|activities|) sweep
-  * per case — bounded by trace length, no cross-case state, spill-safe at
-  * 100 TB.
+  * Scale posture: the log is shuffled once on case_id, and both phases
+  * read that one shuffle output with local sorts only. Phase 1 is one pass
+  * that counts the directly-follows pairs (and trigrams, with the l2l gate)
+  * per partition; the driver merges each partition's counts into one map,
+  * bounded by |activities|^2, as its task ends, and closure-broadcasts it
+  * (one action). Phase 2 maps over the same shuffled RDD, so its map side
+  * is not run again, and sweeps each case in O(n·|activities|) — bounded
+  * by trace length, no cross-case state, spill-safe at 100 TB.
   */
 object EnabledTime {
   /** Heuristics-miner dependency threshold (the reference's oracle is the
@@ -154,18 +139,34 @@ object EnabledTime {
     * the 1.0.0-package semantics (the Loan golden replay does). */
   val L2lThreshold = 0.9
 
+  /** The canonical columns the sweep reads, with their types. */
+  private val Canon = Seq("event_id" -> LongType, "case_id" -> LongType, "activity" -> StringType,
+    "resource" -> StringType, "start_us" -> LongType, "end_us" -> LongType)
+
+  /** `log`'s canonical columns, cast to their types and shuffled once on
+    * case_id, read back as a leaf over the shuffled RDD, so both phases of
+    * [[withEnabled]] sort locally and read the same shuffle output. */
+  private def byCase(log: DataFrame): DataFrame =
+    graft.Pinned.shuffled(log.select(Canon.map { case (c, t) => col(c).cast(t).as(c) }: _*), col("case_id"))
+
+  /** The counting pass's columns of `log`, clustered by case_id: lazy, for
+    * the callers that share the shuffle with nothing. */
+  private def counted(log: DataFrame): DataFrame =
+    log.select(col("case_id"), col("activity"), col("start_us"), col("event_id")).repartition(col("case_id"))
+
   /** The one counting pass behind [[dfPairs]], [[l2Pairs]] and
-    * [[concurrencySet]]: events clustered by case_id and sorted by
-    * (start_us, event_id) — same-start ties break by input order, NOT end
-    * time (see the object Scaladoc, golden-validated). Per partition, every
-    * directly-follows pair (a, b) counts under kind 0 and, with `trigrams`,
-    * every in-case `a, b, a` trigram under kind 1 keyed (a, b). A pair seen
-    * in several partitions has one row per partition. A null activity is
-    * counted as SQL's lag counts it: never as a predecessor, in no trigram. */
-  private def pairCounts(log: DataFrame, trigrams: Boolean): Dataset[PairN] = {
-    import log.sparkSession.implicits._
-    log.select($"case_id", $"activity", $"start_us", $"event_id")
-      .repartition($"case_id").sortWithinPartitions("case_id", "start_us", "event_id")
+    * [[concurrencySet]] over a log clustered by case_id: each case
+    * sorted by (start_us, event_id) — same-start ties break by input
+    * order, NOT end time (see the object Scaladoc, golden-validated). Per
+    * partition, every directly-follows pair (a, b) counts under kind 0 and,
+    * with `trigrams`, every in-case `a, b, a` trigram under kind 1 keyed
+    * (a, b). A pair seen in several partitions has one row per partition. A
+    * null activity is counted as SQL's lag counts it: never as a
+    * predecessor, in no trigram. */
+  private def pairCounts(cased: DataFrame, trigrams: Boolean): Dataset[PairN] = {
+    import cased.sparkSession.implicits._
+    cased.select($"case_id", $"activity", $"start_us", $"event_id")
+      .sortWithinPartitions("case_id", "start_us", "event_id")
       .mapPartitions { it =>
         val n = mutable.HashMap.empty[(Int, String, String), Long].withDefaultValue(0L)
         var c: Any = None // before the first case
@@ -185,14 +186,14 @@ object EnabledTime {
     * event_id) order. */
   def dfPairs(log: DataFrame): DataFrame = {
     import log.sparkSession.implicits._
-    pairCounts(log, trigrams = false).groupBy($"a", $"b").agg(sum($"n").as("n"))
+    pairCounts(counted(log), trigrams = false).groupBy($"a", $"b").agg(sum($"n").as("n"))
   }
 
   /** Length-2-loop trigram counts: rows where the in-case sequence reads
     * `a, b, a` (same ordering + tie-break as [[dfPairs]]), keyed (a, b). */
   def l2Pairs(log: DataFrame): DataFrame = {
     import log.sparkSession.implicits._
-    pairCounts(log, trigrams = true).filter($"kind" === 1)
+    pairCounts(counted(log), trigrams = true).filter($"kind" === 1)
       .groupBy($"a", $"b").agg(sum($"n").as("nl"))
   }
 
@@ -263,10 +264,15 @@ object EnabledTime {
     * bounded by |activities|^2 (a schema-sized constant, never data-sized),
     * so the threshold rule runs on the merged map. */
   private[graft] def concurrencySet(log: DataFrame, depThreshold: Double,
-                                    l2lThreshold: Option[Double]): Set[(String, String)] = {
+                                    l2lThreshold: Option[Double]): Set[(String, String)] =
+    concurrent(counted(log), depThreshold, l2lThreshold)
+
+  /** [[concurrencySet]] over a log clustered by case_id. */
+  private def concurrent(cased: DataFrame, depThreshold: Double,
+                         l2lThreshold: Option[Double]): Set[(String, String)] = {
     type Counts = Map[(Int, String, String), Long]
     def add(m: Counts, k: (Int, String, String), n: Long): Counts = m.updated(k, m.getOrElse(k, 0L) + n)
-    val counts = pairCounts(log, l2lThreshold.isDefined).rdd.aggregate(Map.empty: Counts)(
+    val counts = pairCounts(cased, l2lThreshold.isDefined).rdd.aggregate(Map.empty: Counts)(
       (m, p) => add(m, (p.kind, p.a, p.b), p.n),
       (m, o) => o.foldLeft(m) { case (acc, (k, n)) => add(acc, k, n) })
     def merged(kind: Int): Map[(String, String), Long] =
@@ -286,72 +292,70 @@ object EnabledTime {
     }.toSet
   }
 
-  /** Adds `enabled_us` and `run_no`. One shuffle on case_id; per-case time-ordered sweep
-    * keeps a last-completed-end per activity (O(n·A) per case). */
+  /** The canonical columns plus `enabled_us` and `run_no`. One shuffle on
+    * case_id, read by the counting pass and by the sweep: per case,
+    * time-ordered, a last-completed-end per activity (O(n·A) per case). */
   def withEnabled(log: DataFrame,
                   depThreshold: Double = DependencyThreshold,
                   l2lThreshold: Option[Double] = None,
                   runGapUs: Long = PmConfig.SeqGapUs): DataFrame = {
-    val spark = log.sparkSession
-    import spark.implicits._
-    val conc: Set[(String, String)] = concurrencySet(log, depThreshold, l2lThreshold)
-    log.select($"event_id", $"case_id", $"activity", $"resource", $"start_us", $"end_us")
-      .as[Ev]
-      .groupByKey(_.case_id)
-      .flatMapGroups { (_, it) =>
-        val evs = it.toArray.sortBy(e => (e.start_us, e.end_us, e.event_id))
-        val caseStart = evs.head.start_us
-        val byEnd = evs.sortBy(e => (e.end_us, e.event_id))
+    val cased = byCase(log)
+    val conc: Set[(String, String)] = concurrent(cased, depThreshold, l2lThreshold)
+    val schema = cased.schema.add("enabled_us", LongType, nullable = false).add("run_no", LongType, nullable = false)
+    cased.sortWithinPartitions("case_id", "start_us", "end_us", "event_id")
+      .mapPartitions(it => BatchDiscovery.groups(it)(_.getLong(1)).flatMap { evs =>
+        // the columns are Canon: event_id, case_id, activity, resource, start_us, end_us
+        val caseStart = evs.head.getLong(4)
+        val byEnd = evs.sortBy(e => (e.getLong(5), e.getLong(0)))
         val lastEnd = scala.collection.mutable.HashMap.empty[String, Long]
         var j = 0
-        val out = new Array[EvEnR](evs.length)
+        val out = new Array[Row](evs.length)
         var prevRes: String = null
         var prevEnd = 0L
         var runNo = 0L
         var i = 0
         while (i < evs.length) {
           val e = evs(i)
+          val (act, res, start, end) = (e.getString(2), e.getString(3), e.getLong(4), e.getLong(5))
           // run_no: same order and same rule as SubprocessBatches.withRuns
           // (new run on first event, resource change, or gap beyond
           // within_case_seq_tolerated_gap)
-          if (prevRes == null || prevRes != e.resource || e.start_us > prevEnd + runGapUs)
+          if (prevRes == null || prevRes != res || start > prevEnd + runGapUs)
             runNo += 1
-          prevRes = e.resource
-          prevEnd = e.end_us
+          prevRes = res
+          prevEnd = end
           // accrue predecessors that ended STRICTLY before this start; the
           // end == start boundary is handled per-event below so the event
           // itself (zero-duration: own end == own start) never qualifies
           // as its own enabler
-          while (j < byEnd.length && byEnd(j).end_us < e.start_us) {
+          while (j < byEnd.length && byEnd(j).getLong(5) < start) {
             val p = byEnd(j)
-            if (lastEnd.getOrElse(p.activity, Long.MinValue) < p.end_us)
-              lastEnd(p.activity) = p.end_us
+            if (lastEnd.getOrElse(p.getString(2), Long.MinValue) < p.getLong(5))
+              lastEnd(p.getString(2)) = p.getLong(5)
             j += 1
           }
           var best = Long.MinValue
           lastEnd.foreach { case (a, en) =>
-            if (en > best && !conc.contains((a, e.activity))) best = en
+            if (en > best && !conc.contains((a, act))) best = en
           }
           // boundary: another event ending exactly at this start enables it
-          if (best < e.start_us) {
+          if (best < start) {
             var k = j
             var found = false
-            while (!found && k < byEnd.length && byEnd(k).end_us == e.start_us) {
+            while (!found && k < byEnd.length && byEnd(k).getLong(5) == start) {
               val p = byEnd(k)
-              if (p.event_id != e.event_id && !conc.contains((p.activity, e.activity)))
+              if (p.getLong(0) != e.getLong(0) && !conc.contains((p.getString(2), act)))
                 found = true
               k += 1
             }
-            if (found) best = e.start_us
+            if (found) best = start
           }
           val enb = if (best == Long.MinValue) caseStart else best
-          out(i) = EvEnR(e.event_id, e.case_id, e.activity, e.resource,
-            e.start_us, e.end_us, enb, runNo)
+          out(i) = Row.fromSeq(e.toSeq :+ enb :+ runNo)
           i += 1
         }
         out.iterator
-      }
-      .toDF()
+      })(Encoders.row(schema))
   }
 }
 
@@ -380,28 +384,52 @@ object EnabledTime {
   * is the one implementation of both rules; it serves the event grain
   * ([[segment]]) and the subsequence-unit grain ([[SubprocessBatches]]).
   *
-  * [[segment]] carries each segment's task link `tk` (the shared link of
-  * its non-boundary rows), so no later pass recomputes it. The passes of
+  * [[segment]] clusters by (resource, activity) and carries each segment's
+  * task link `tk` (the shared link of its non-boundary rows), so no later
+  * pass recomputes it. Task-only discovery ([[discoverFromSeg]]) reads
+  * those partitions with local sorts: a task batch is one activity's. Full
+  * discovery needs whole resources: a same-resource run and a unit chain
+  * span activities, but every run, chain and batch lies inside one
+  * resource. So [[discoverFull]] segments by resource, and
+  * [[discoverFullFromStages]] re-clusters the segmentation it is given by
+  * resource once; every pass of full discovery, and EP1's WT pass over its
+  * output, then sorts locally. The trade-off: the resource is the unit of
+  * parallelism of full discovery and of EP1's WT pass. On a small log the
+  * saved jobs dominate; a large log with fewer resources than cores, or
+  * with one busy resource, runs them in fewer tasks than the exchanges
+  * they replace (sweeps/job-floor-r4/README.md). The passes of
   * [[discoverFullFromStages]]:
-  *   1. units per (case_id, run_no), each with the set of its events'
-  *      task-level types (their `tk`, [[SubprocessBatches]]);
-  *   2. units clustered by (resource, subseq) and chained; per closed chain:
-  *      candidacy, W6, W4 split, min size — one claim row per unit (the
-  *      only staged intermediate, at unit grain);
-  *   3. events left-joined to the broadcast claims on (case_id, run_no),
-  *      read in the partitions [[segment]] clustered them in (no exchange)
-  *      and sorted by segment: per segment, the W4 split of its unclaimed
-  *      cases and every event's task or subprocess batch key;
-  *   4. W8 renumbering: the distinct keys coalesced into one task that
-  *      runs their final aggregate and sorts them, task keys first (kind 0,
-  *      then kind 1: discovery.py:161-181 unify order), numbered in that
-  *      order, and broadcast into one join-back.
-  * Task-only discovery ([[discoverFromSeg]]) is passes 3–4 with no claims.
+  *   1. events sorted by (resource, case_id, run_no): units per run, each
+  *      with the set of its events' task-level types (their `tk`,
+  *      [[SubprocessBatches]]);
+  *   2. units sorted by (resource, subseq) and chained; per closed chain:
+  *      candidacy, W6, W4 split, min size — one claim per unit;
+  *   3. events sorted by segment, each looking up its claim by (case_id,
+  *      run_no): per segment, the W4 split of its unclaimed cases and every
+  *      event's task or subprocess batch key;
+  *   4. W8 renumbering: the distinct keys sorted in [[keyOrder]] (task keys
+  *      first: kind 0, then kind 1, discovery.py:161-181 unify order),
+  *      numbered from 1 and broadcast as a map over the keyed events.
+  * One action runs passes 1–3 in each partition and sends its claims (unit
+  * grain) and its distinct keys (batch grain) to the driver, merged as the
+  * tasks end; the driver numbers the keys, and the output stage runs pass 3
+  * again with the claims and the ids broadcast.
+  * Task-only discovery ([[discoverFromSeg]]) is passes 3–4 with no claims
+  * and stays lazy: one task sorts its keys in the same order and numbers
+  * them, and one broadcast join writes the ids back.
   */
 object BatchDiscovery {
   private val TaskLabels = Map("P" -> "Parallel", "S" -> "Sequential task-based",
     "C" -> "Concurrent task-based")
+  /** A batch key: kind (0 task, 1 subprocess), batch start, resource,
+    * activity or subsequence, segment or chain, W4 generation. */
+  private[pm] type Key = (Int, Long, String, String, Long, Int)
   private val KeyCols = Seq("k_kind", "k_start", "resource", "k_grp", "k_seg", "k_sub")
+  /** The W8 order of the keys, Spark's ascending sort over [[KeyCols]]:
+    * nulls first, strings by their UTF-8 bytes. The lazy numbering sorts
+    * the key columns, the eager one sorts [[Key]]s with this. */
+  private[pm] val keyOrder: Ordering[Key] = Ordering.Tuple6(Ordering.Int, Ordering.Long,
+    graft.Det.utf8Order, graft.Det.utf8Order, Ordering.Long, Ordering.Int)
 
   /** Streams the typed-link chain rule over a key-sorted iterator: every
     * element with its (lnk, bnd, seg_no, tk); seg_no counts boundaries
@@ -497,7 +525,8 @@ object BatchDiscovery {
     out.result()
   }
 
-  /** Adds lnk / bnd / seg_no / tk within (resource, activity). Ordered by
+  /** Adds lnk / bnd / seg_no / tk within (resource, activity), clustered
+    * by (resource, activity). Ordered by
     * (start_us, end_us, event_id) — round 5: same-start ties break by END
     * time, then input order. The end tie-break is what reproduces golden
     * instances 314 and 334 (both contain a same-start pair whose SHORTER
@@ -505,10 +534,15 @@ object BatchDiscovery {
     * put the longer one first and stranded a member behind an equal-end
     * non-link). Same-interval rows still fall back to input order, which
     * golden batch 384 requires (Case110's row precedes Case78's). */
-  def segment(en: DataFrame, seqGapUs: Long = PmConfig.SeqGapUs): DataFrame = {
+  def segment(en: DataFrame, seqGapUs: Long = PmConfig.SeqGapUs): DataFrame =
+    segmentBy(en, seqGapUs, Seq("resource", "activity"))
+
+  /** [[segment]] clustered by `keys`: (resource, activity), or resource for
+    * the passes that need whole resources. */
+  private def segmentBy(en: DataFrame, seqGapUs: Long, keys: Seq[String]): DataFrame = {
     val in = en.schema
     val Seq(iR, iA, iS, iE) = Seq("resource", "activity", "start_us", "end_us").map(in.fieldIndex)
-    en.repartition(col("resource"), col("activity"))
+    en.repartition(keys.map(col): _*)
       .sortWithinPartitions("resource", "activity", "start_us", "end_us", "event_id")
       .mapPartitions(it => linked(it, seqGapUs)(r => (r.getString(iR), r.getString(iA)),
           _.getLong(iS), _.getLong(iE))
@@ -516,62 +550,88 @@ object BatchDiscovery {
         .add("lnk", StringType).add("bnd", BooleanType).add("seg_no", LongType).add("tk", StringType)))
   }
 
-  /** Passes 3 and 4 over the segmented events `ev` (with the claim columns
-    * of [[SubprocessBatches.claims]] when case-based discovery ran): per
-    * segment, the task type (its `tk` from [[segment]]; singletons get
-    * null), the W4 split of the UNCLAIMED cases (reference
-    * W4/min-size filter on isna(subprocess_type)) and each event's batch
-    * key and type; then W8 dense renumbering and the join-back. A claimed
-    * event carries its subprocess batch key, or none when that batch is
-    * undersized — it then loses its task batch too (the NULLIFICATION
-    * path, discovery.py:128-147); a "task-based" subprocess batch keeps
-    * the event's task-level type (discovery.py:183-187).
+  /** Pass 3 over the segmented events `ev`: per segment, the task type
+    * (its `tk` from [[segment]]; singletons get null), the W4 split of the
+    * UNCLAIMED cases (reference W4/min-size filter on
+    * isna(subprocess_type)) and each event's batch key (the [[KeyCols]],
+    * null when unbatched) and batch_type. An event claimed in `claims`
+    * (keyed by case_id, run_no; [[SubprocessBatches.claims]]) carries its
+    * subprocess batch key, or none when that batch is undersized — it then
+    * loses its task batch too (the NULLIFICATION path,
+    * discovery.py:128-147); a "task-based" subprocess batch keeps the
+    * event's task-level type (discovery.py:183-187).
     *
-    * `ev` keeps [[segment]]'s clustering: all rows of a (resource,
-    * activity) in one partition. [[segment]]'s output as it leaves the
-    * pass, staged or persisted, has it, and so does that output streamed
-    * through a broadcast join. */
-  private def assign(ev: DataFrame, minSize: Int, cols: Seq[String]): DataFrame = {
+    * In `ev`, all rows of a (resource, activity) lie in one partition:
+    * [[segment]]'s output as it leaves the pass, staged or persisted, and
+    * full discovery's resource clustering both have it. */
+  private def assign(ev: DataFrame, minSize: Int,
+                     claims: Option[Broadcast[Map[(Long, Long), SpClaim]]]): DataFrame = {
     val in = ev.schema
-    val Seq(iR, iA, iG, iC, iS, iEn, iK) = Seq("resource", "activity", "seg_no", "case_id",
-      "start_us", "enabled_us", "tk").map(in.fieldIndex)
-    val Seq(iT, iQ, iP, iU, iBs, iOk) =
-      if (in.fieldNames.contains("sp_type"))
-        Seq("sp_type", "subseq", "sp_seg", "sp_sub", "sp_start", "sp_ok").map(in.fieldIndex)
-      else Seq.fill(6)(-1)
-    val none = Seq.fill(6)(null) // the five key fields + batch_type
     // ev is clustered (see above): a local sort, not an exchange, makes
     // each segment one run of rows
-    val keyed = ev.sortWithinPartitions("resource", "activity", "seg_no")
-      .mapPartitions(it => groups(it)(r => (r.getString(iR), r.getString(iA), r.getLong(iG))).flatMap { seg =>
-        val tk = Option(seg.head.getString(iK)).map(TaskLabels).orNull
-        def claimed(r: Row) = iT >= 0 && !r.isNullAt(iT)
-        val g = gens(seg.iterator.filterNot(claimed).map(r => (r.getLong(iC), r.getLong(iS), r.getLong(iEn))),
-          minSize)
-        seg.iterator.map { r =>
-          val key =
-            if (claimed(r)) {
-              if (!r.getBoolean(iOk)) none
-              else Seq(1, r.getLong(iBs), r.getString(iQ), r.getLong(iP), r.getInt(iU),
-                if (r.getString(iT) == "task-based") tk else r.getString(iT))
-            } else g(r.getLong(iC)) match {
-              case Gen(sub, start, true) => Seq(0, start, r.getString(iA), r.getLong(iG), sub, tk)
-              case _ => none
-            }
-          Row.fromSeq(r.toSeq ++ key)
+    ev.sortWithinPartitions("resource", "activity", "seg_no")
+      .mapPartitions(it => assignRows(it, in, claims.fold(Map.empty[(Long, Long), SpClaim])(_.value), minSize))(
+        Encoders.row(keyedSchema(in)))
+  }
+
+  /** [[assign]]'s output schema over rows of schema `in`. */
+  private def keyedSchema(in: StructType): StructType =
+    in.add("k_kind", IntegerType).add("k_start", LongType).add("k_grp", StringType)
+      .add("k_seg", LongType).add("k_sub", IntegerType).add("batch_type", StringType)
+
+  /** [[assign]] over one partition's rows (schema `in`) sorted by
+    * (resource, activity, seg_no), with the claims of its resources. */
+  private def assignRows(it: Iterator[Row], in: StructType, cl: Map[(Long, Long), SpClaim],
+                         minSize: Int): Iterator[Row] = {
+    val Seq(iR, iA, iG, iC, iS, iEn, iK) = Seq("resource", "activity", "seg_no", "case_id",
+      "start_us", "enabled_us", "tk").map(in.fieldIndex)
+    val iRun = if (cl.isEmpty) -1 else in.fieldIndex("run_no")
+    val none = Seq.fill(6)(null) // the five key fields + batch_type
+    def claim(r: Row) = if (iRun < 0) None else cl.get((r.getLong(iC), r.getLong(iRun)))
+    groups(it)(r => (r.getString(iR), r.getString(iA), r.getLong(iG))).flatMap { seg =>
+      val tk = Option(seg.head.getString(iK)).map(TaskLabels).orNull
+      val g = gens(seg.iterator.filter(claim(_).isEmpty)
+        .map(r => (r.getLong(iC), r.getLong(iS), r.getLong(iEn))), minSize)
+      seg.iterator.map { r =>
+        val key = claim(r) match {
+          case Some(c) =>
+            if (!c.sp_ok) none
+            else Seq(1, c.sp_start, c.subseq, c.sp_seg, c.sp_sub,
+              if (c.sp_type == "task-based") tk else c.sp_type)
+          case None => g(r.getLong(iC)) match {
+            case Gen(sub, start, true) => Seq(0, start, r.getString(iA), r.getLong(iG), sub, tk)
+            case _ => none
+          }
         }
-      })(Encoders.row(in.add("k_kind", IntegerType).add("k_start", LongType).add("k_grp", StringType)
-        .add("k_seg", LongType).add("k_sub", IntegerType).add("batch_type", StringType)))
-    // W8 canonical renumbering: one row per batch key, ordered by the full
-    // key, so the row number IS dense_rank. The key frame is batch grain and
-    // is broadcast into the join-back anyway, so one task runs the final
-    // aggregate and sorts it (coalesce, no second exchange); it stays lazy
-    // (`keyed` is recomputed, and its keys depend only on each segment's
-    // member set)
-    val bid = keyed.filter(col("k_kind").isNotNull).select(KeyCols.map(col): _*).distinct()
-      .coalesce(1).sortWithinPartitions(KeyCols.map(col): _*)
+        Row.fromSeq(r.toSeq ++ key)
+      }
+    }
+  }
+
+  private def keyOf(r: Row, at: Seq[Int]): Key =
+    (r.getInt(at(0)), r.getLong(at(1)), r.getString(at(2)), r.getString(at(3)), r.getLong(at(4)), r.getInt(at(5)))
+
+  /** W8 canonical renumbering, lazy: one row per batch key, sorted by the
+    * key, so the row number IS dense_rank. The key frame is batch grain and
+    * is broadcast into the join-back anyway, so one task runs the final
+    * aggregate and sorts it (coalesce, no second exchange); `keyed` is
+    * recomputed, and its keys depend only on each segment's member set. */
+  private def numberLazy(keyed: DataFrame, cols: Seq[String]): DataFrame = {
+    val bid = keyed.filter(col("k_kind").isNotNull).select(KeyCols.map(c => col(c).as(s"b_$c")): _*)
+      .distinct().coalesce(1).sortWithinPartitions(KeyCols.map(c => col(s"b_$c")): _*)
       .withColumn("batch_id", monotonically_increasing_id() + 1)
-    keyed.join(broadcast(bid), KeyCols, "left")
+    // null-safe: a key may hold a null activity or resource
+    keyed.join(broadcast(bid), KeyCols.map(c => col(c) <=> col(s"b_$c")).reduce(_ && _), "left")
+      .select((cols :+ "batch_id" :+ "batch_type").map(col): _*)
+  }
+
+  /** `keyed` with the batch_id of each row's key from `ids`, then `cols`. */
+  private def withIds(keyed: DataFrame, ids: Broadcast[Map[Key, Long]], cols: Seq[String]): DataFrame = {
+    val at = KeyCols.map(keyed.schema.fieldIndex)
+    keyed.mapPartitions { it =>
+      val m = ids.value
+      it.map(r => Row.fromSeq(r.toSeq :+ (if (r.isNullAt(at.head)) null else m(keyOf(r, at)))))
+    }(Encoders.row(keyed.schema.add("batch_id", LongType)))
       .select((cols :+ "batch_id" :+ "batch_type").map(col): _*)
   }
 
@@ -589,11 +649,11 @@ object BatchDiscovery {
     * `run_no` column is dropped so the output schema matches
     * discover(en)'s exactly; so is [[segment]]'s `tk`. `seg` must be
     * [[segment]]'s output as that pass leaves it (staged, persisted or
-    * lazy; not re-partitioned or joined): each (resource, activity) is read
-    * in the partition [[segment]] put it in, with no exchange. */
+    * lazy; not re-partitioned or joined): each (resource, activity) is
+    * read in the partition [[segment]] put it in, with no exchange. */
   def discoverFromSeg(seg: DataFrame, minSize: Int = 2): DataFrame = {
     val front = Seq("resource", "activity", "seg_no", "case_id")
-    assign(seg, minSize, front ++ seg.columns.filterNot((front :+ "run_no" :+ "tk").contains))
+    numberLazy(assign(seg, minSize, None), front ++ seg.columns.filterNot((front :+ "run_no" :+ "tk").contains))
   }
 
   /** Full pipeline INCLUDING case-based (subprocess) batches, mirroring the
@@ -603,34 +663,62 @@ object BatchDiscovery {
   def discoverFull(en: DataFrame, minSize: Int = 2,
                    seqGapUs: Long = PmConfig.SeqGapUs): DataFrame = {
     val runsEv = if (en.columns.contains("run_no")) en else SubprocessBatches.withRuns(en, seqGapUs)
-    val seg = graft.Pinned.stage(segment(runsEv, seqGapUs))
-    val out = discoverFullFromStages(runsEv, seg, minSize, seqGapUs)
+    // every pass of full discovery reads whole resources
+    val seg = graft.Pinned.stage(segmentBy(runsEv, seqGapUs, Seq("resource")))
+    val out = byResource(seg, minSize, seqGapUs, seg.columns, eager = true)
     graft.Pinned.releaseFrame(seg)
     out
   }
 
   /** [[discoverFull]] over caller-owned stages: `seg` is the segmentation of
-    * `runsEv` as [[segment]] leaves it (see [[discoverFromSeg]]; run_no is
-    * read from `runsEv` only when `seg` lacks it) and a
-    * reusable leaf, NOT released here — PmQueries owns it via its
-    * dataset-switch eviction, so one session segments the log once for
-    * task-only AND subprocess discovery. Returns an EAGER stage (the claims
-    * stage is released before returning); its lifecycle is the caller's. */
+    * `runsEv` by [[segment]] (run_no is read from `runsEv` only when `seg`
+    * lacks it) and a reusable leaf, NOT released here — PmQueries owns it
+    * via its dataset-switch eviction, so one session segments the log once
+    * for task-only AND subprocess discovery. A run and a unit chain span
+    * activities, so the passes re-cluster `seg` by resource once (one
+    * exchange, no staged intermediate). Returns a stage in those partitions
+    * (each resource in one), built by its first action; its lifecycle is
+    * the caller's, and `runsEv` and `seg` must live until that action. */
   def discoverFullFromStages(runsEv: DataFrame, seg: DataFrame,
                              minSize: Int = 2,
                              seqGapUs: Long = PmConfig.SeqGapUs): DataFrame = {
-    // the join loses segment's clustering, which assign reads: re-cluster
-    val ev = if (seg.columns.contains("run_no")) seg
-      else seg.join(runsEv.select("event_id", "run_no"), "event_id")
-        .repartition(col("resource"), col("activity"))
-    val claims = graft.Pinned.stage(SubprocessBatches.claims(ev, minSize, seqGapUs))
+    val ev = if (seg.columns.contains("run_no")) seg else seg.join(runsEv.select("event_id", "run_no"), "event_id")
+    byResource(graft.Pinned.shuffled(ev, col("resource")), minSize, seqGapUs, seg.columns, eager = false)
+  }
+
+  /** Passes 1–4 over `ev`, segmented events with run_no in which every
+    * resource lies in one partition; the output carries the [[discoverFromSeg]]
+    * columns of `cols`. One action: a partition holds whole resources, so
+    * the claims of its units are all its events look up; each task sends
+    * both to the driver, which appends them as the task ends (each claim
+    * and key copied once). The output is staged, `eager`ly when the caller
+    * releases `ev` next; a lazy stage holds the claims and ids broadcasts
+    * until it is built and dropped. */
+  private def byResource(ev: DataFrame, minSize: Int, seqGapUs: Long, cols: Seq[String],
+                         eager: Boolean): DataFrame = {
+    val sc = ev.sparkSession.sparkContext
+    val in = ev.schema
+    val at = KeyCols.map(keyedSchema(in).fieldIndex)
+    val found = mutable.HashMap.empty[(Long, Long), SpClaim]
+    val keys = ArrayBuffer.empty[Key] // distinct: a batch lies in one partition
+    val parts = ev.sortWithinPartitions("resource", "activity", "seg_no").rdd
+      .zipPartitions(SubprocessBatches.claims(ev, minSize, seqGapUs).rdd) { (evs, units) =>
+        val cl = units.map(c => (c.case_id, c.run_no) -> c).toMap
+        Iterator((cl, assignRows(evs, in, cl, minSize).filterNot(_.isNullAt(at.head)).map(keyOf(_, at)).toSet))
+      }
+    sc.runJob(parts, (it: Iterator[(Map[(Long, Long), SpClaim], Set[Key])]) => it.next(),
+      (_: Int, r: (Map[(Long, Long), SpClaim], Set[Key])) => { found ++= r._1; keys ++= r._2 })
+    val claims = sc.broadcast(found.toMap)
+    val ids = sc.broadcast(keys.sorted(keyOrder).iterator.zipWithIndex.map { case (k, i) => k -> (i + 1L) }.toMap)
     val front = Seq("event_id", "resource", "activity", "seg_no", "case_id")
-    // claims are unit grain and only the units of candidate chains
-    val out = graft.Pinned.stageEager(assign(
-      ev.join(broadcast(claims), Seq("case_id", "run_no"), "left"), minSize,
-      front ++ seg.columns.filterNot((front :+ "tk").contains)))
-    graft.Pinned.releaseFrame(claims)
-    out
+    val keyed = withIds(assign(ev, minSize, Some(claims)), ids, front ++ cols.filterNot((front :+ "tk").contains))
+    if (!eager) graft.Pinned.stage(keyed)
+    else {
+      val out = graft.Pinned.stageEager(keyed)
+      claims.destroy()
+      ids.destroy()
+      out
+    }
   }
 }
 
@@ -719,18 +807,19 @@ object SubprocessBatches {
     }
   }
 
-  /** Passes 1 and 2 over segmented events with run_no: one claim row per
-    * unit of every W6-clean candidate chain, keyed (case_id, run_no). An
-    * event's task-level type is its segment's `tk` ([[BatchDiscovery.segment]]). */
-  private[pm] def claims(seg: DataFrame, minSize: Int, seqGapUs: Long): DataFrame = {
+  /** Passes 1 and 2 over segmented events with run_no: one claim per unit
+    * of every W6-clean candidate chain, keyed (case_id, run_no). An event's
+    * task-level type is its segment's `tk` ([[BatchDiscovery.segment]]).
+    * Every resource of `seg` lies in one partition (full discovery's
+    * clustering); a run is one resource's by construction, and so is every
+    * chain, so both passes sort locally. */
+  private[pm] def claims(seg: DataFrame, minSize: Int, seqGapUs: Long): Dataset[SpClaim] = {
     val spark = seg.sparkSession
     import spark.implicits._
     seg.select($"case_id", $"run_no", $"resource", $"activity", $"start_us", $"end_us",
         $"event_id", $"enabled_us", $"tk").as[RunEv]
-      .repartition($"case_id", $"run_no")
-      .sortWithinPartitions("case_id", "run_no", "start_us", "end_us", "event_id")
+      .sortWithinPartitions("resource", "case_id", "run_no", "start_us", "end_us", "event_id")
       .mapPartitions(it => BatchDiscovery.groups(it)(e => (e.case_id, e.run_no)).flatMap(unit))
-      .repartition($"resource", $"subseq")
       .sortWithinPartitions("resource", "subseq", "unit_start", "unit_end", "case_id", "run_no")
       .mapPartitions { it =>
         val chained = BatchDiscovery.linked(it, seqGapUs)(u => (u.resource, u.subseq),
@@ -738,7 +827,6 @@ object SubprocessBatches {
         BatchDiscovery.groups(chained)(c => (c._1.resource, c._1.subseq, c._4))
           .flatMap(chainClaims(_, minSize))
       }
-      .toDF()
   }
 }
 
@@ -761,16 +849,18 @@ object WaitingTimes {
   }
 
   /** The WT kernel: one key-sorted pass. Rows are clustered by batch_id —
-    * unbatched rows by event_id, so they spread over the tasks — and sorted
-    * by (batch_id, batch_type, case_id); one batch is held in memory. `emit`
-    * gets each batch case's rows with their [[Wt]], and each unbatched row
-    * alone with none. */
-  private def pass(discovered: DataFrame, out: StructType)(
+    * unbatched rows by event_id, so they spread over the tasks — or, when
+    * `clustered`, read where they are (the caller vouches that each batch
+    * already lies in one partition: see the private [[eventWT]]); then
+    * sorted by (batch_id, batch_type, case_id), one batch
+    * held in memory. `emit` gets each batch case's rows with their [[Wt]],
+    * and each unbatched row alone with none. */
+  private def pass(discovered: DataFrame, out: StructType, clustered: Boolean = false)(
       emit: (ArrayBuffer[Row], Option[Wt]) => Iterator[Row]): DataFrame = {
     val in = discovered.schema
     val Seq(iB, iT, iC, iS, iEn, iE, iId) = Seq("batch_id", "batch_type", "case_id",
       "start_us", "enabled_us", "end_us", "event_id").map(in.fieldIndex)
-    discovered.repartition(coalesce(col("batch_id"), col("event_id")))
+    (if (clustered) discovered else discovered.repartition(coalesce(col("batch_id"), col("event_id"))))
       .sortWithinPartitions("batch_id", "batch_type", "case_id")
       .mapPartitions(it => BatchDiscovery.groups(it)(r =>
           if (r.isNullAt(iB)) (false, r.getLong(iId)) else (true, r.getLong(iB))).flatMap { batch =>
@@ -810,14 +900,27 @@ object WaitingTimes {
     * `checkpoints`, its batch_case_enabled / batch_instance_enabled /
     * batch_start instants (null outside batches). Computed in the same pass
     * as [[batchCaseWT]], so no join writes it back. */
-  def eventWT(discovered: DataFrame, checkpoints: Boolean = false): DataFrame = {
+  def eventWT(discovered: DataFrame, checkpoints: Boolean = false): DataFrame =
+    eventWT(discovered, checkpoints, clustered = false)
+
+  /** [[eventWT]]; with `clustered`, read in place with no exchange. The
+    * caller vouches that every batch of `discovered` lies in one partition,
+    * which holds for the output of [[BatchDiscovery.discoverFromSeg]] (each
+    * (resource, activity) in one partition) and of
+    * [[BatchDiscovery.discoverFull]] / [[BatchDiscovery.discoverFullFromStages]]
+    * (each resource in one) as they leave it, staged or lazy, and for
+    * nothing derived from it by an exchange; over other rows the pass sees parts of batches and its
+    * durations are wrong, with no error. EP1 and the graded `pm_wt_log` /
+    * `pm_checkpoints` pass discovery output; the public forms keep the
+    * exchange for frames of unknown layout (ScaleProbe's inflated log). */
+  private[graft] def eventWT(discovered: DataFrame, checkpoints: Boolean, clustered: Boolean): DataFrame = {
     val durations = Seq("batch_pt_us", "batch_wt_us", "batch_total_wt_us",
       "batch_creation_wt_us", "batch_ready_wt_us", "batch_other_wt_us")
     val cps = if (checkpoints)
       Seq("batch_case_enabled_us", "batch_instance_enabled_us", "batch_start_us") else Nil
     val out = StructType(discovered.schema.fields ++ durations.map(StructField(_, LongType, nullable = false)) ++
       cps.map(StructField(_, LongType)))
-    pass(discovered, out) { (rows, wt) =>
+    pass(discovered, out, clustered) { (rows, wt) =>
       val vals = wt match {
         case Some(w) => Seq(w.pt, w.total, w.total, w.creation, w.ready, w.other) ++
           (if (checkpoints) Seq(w.caseEnabled, w.instEnabled, w.instStart) else Nil)

@@ -1,13 +1,14 @@
 package graft.pm
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
+import scala.collection.mutable
+import org.apache.spark.sql.DataFrame
 
 /** EP2 — the human-readable batch waiting-time report
-  * (reporting.py:11-206). The report data is provably tiny (one row per
-  * batch instance / batch case), so aggregation happens in Spark down to
-  * the batch / batch-case grain and the final stats + text render run on
-  * the driver, exactly like the reference's print path.
+  * (reporting.py:11-206). The report data is small (the batched events,
+  * reduced to one row per batch instance / batch case), so the batched
+  * events are collected, and the grouping, the final stats and the text
+  * render run on the driver, like the reference's print path. Only the
+  * occurrence counts read every event, in one Spark pass.
   */
 object Reporting {
   case class BatchRow(activities: String, batchType: String, batchId: Long, size: Long,
@@ -27,22 +28,24 @@ object Reporting {
   private def minStr(xs: Iterable[String]): String =
     xs.filter(_ != null).minOption(strOrd).orNull
 
-  /** Render the full report for a discovered log in two actions: one
-    * aggregate at batch-case grain, collected once and reduced in Scala to
-    * the batches, activity keys, the six WT components
-    * ([[WaitingTimes.batchCaseWT]]'s definition) and the representative
-    * sequences; then one event-grain aggregate that counts every key's
-    * occurrences. */
+  private val evOrd: Ordering[(Long, Long, Long, String)] =
+    Ordering.Tuple4(Ordering.Long, Ordering.Long, Ordering.Long, strOrd)
+
+  /** Render the full report for a discovered log in two actions: the
+    * batched events, collected and grouped on the driver into batch cases,
+    * then reduced in Scala to the batches, activity keys, the six WT
+    * components ([[WaitingTimes.batchCaseWT]]'s definition) and the
+    * representative sequences; then one pass clustered by case_id that
+    * counts every key's occurrences ([[occurrences]]). */
   def render(disc: DataFrame): String = {
     import disc.sparkSession.implicits._
     val bc = disc.filter($"batch_id".isNotNull)
-      .groupBy($"batch_id", $"batch_type", $"case_id")
-      .agg(min($"resource"), min(struct($"start_us", $"enabled_us")), max($"end_us"),
-        sort_array(collect_list(struct($"start_us", $"end_us", $"event_id", $"activity"))))
-      .collect().map { r =>
-        val m = r.getStruct(4)
-        BCase(r.getLong(0), r.getString(1), r.getLong(2), r.getString(3), m.getLong(0), m.getLong(1),
-          r.getLong(5), r.getSeq[Row](6).map(e => (e.getLong(0), e.getLong(1), e.getLong(2), e.getString(3))))
+      .select($"batch_id", $"batch_type", $"case_id", $"resource", $"start_us", $"enabled_us", $"end_us",
+        $"event_id", $"activity")
+      .collect().groupBy(r => (r.getLong(0), r.getString(1), r.getLong(2))).toArray.map { case ((b, t, c), rs) =>
+        val (start, enabled) = rs.map(r => (r.getLong(4), r.getLong(5))).min
+        BCase(b, t, c, minStr(rs.map(_.getString(3))), start, enabled, rs.map(_.getLong(6)).max,
+          rs.map(r => (r.getLong(4), r.getLong(6), r.getLong(7), r.getString(8))).sorted(evOrd).toSeq)
       }
     val byBatch = bc.groupBy(_.batchId)
     // concat_ws(",", sort_array(collect_set(activity))) per batch
@@ -77,36 +80,14 @@ object Reporting {
     // executed the activity twice makes even a single-activity group a
     // sequence count (golden Lapping: 112 'Lapping','Lapping' windows, not
     // 370 events).
-    val evOrd: Ordering[(Long, Long, Long, String)] =
-      Ordering.Tuple4(Ordering.Long, Ordering.Long, Ordering.Long, strOrd)
     val firstKey = Ordering.Tuple3(strOrd, Ordering.Long, Ordering.Long)
     val repSeq: Map[String, Seq[String]] = byBatch.groupBy { case (b, _) => acts(b) }.map { case (key, bs) =>
       val (_, rep) = bs.minBy { case (b, cs) => (minStr(cs.map(_.resource)), cs.map(_.start).min, b) }(firstKey)
       val repCase = rep.minBy { c => val (s, e, id, _) = c.evs.head; (s, e, id, c.caseId) }.caseId
       key -> rep.filter(_.caseId == repCase).flatMap(_.evs).sorted(evOrd).map(_._4).toSeq
     }
-    // every key's count in ONE event-grain aggregate: single-activity keys
-    // as conditional counts, multi-activity keys as rolling-window matches
-    // whose frames of different lengths share one WindowExec (same
-    // partition/order spec). The counts are bit-identical to one filter+count
-    // per key; GoldenReplaySpec pins the rendered bytes.
-    val keys = repSeq.toSeq.sortBy(_._1)
-    val lens = keys.map(_._2.length).filter(_ > 1).distinct
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("case_id").orderBy("start_us", "end_us", "event_id")
-    val withWins = lens.foldLeft(disc) { (df, l) =>
-      df.withColumn(s"_win_$l", collect_list($"activity").over(w.rowsBetween(0, l - 1)))
-    }
-    val occCounts: Map[String, Long] =
-      if (keys.isEmpty) Map.empty
-      else {
-        val aggs = keys.map {
-          case (_, Seq(a)) => count_if($"activity" === a)
-          case (_, sq) => count_if(col(s"_win_${sq.length}") === array(sq.map(lit): _*))
-        }
-        val row = withWins.agg(aggs.head, aggs.tail: _*).head()
-        keys.zipWithIndex.map { case ((key, _), i) => key -> row.getLong(i) }.toMap
-      }
+    val occ = occurrences(disc, repSeq.values.toSeq)
+    val occCounts: Map[String, Long] = repSeq.map { case (key, sq) => key -> occ.getOrElse(sq, 0L) }
 
     val typeOrder = Seq("Parallel", "Sequential task-based", "Concurrent task-based",
       "Sequential case-based", "Concurrent case-based")
@@ -142,6 +123,35 @@ object Reporting {
     }
     sb.result()
   }
+
+  /** How often each of `seqs` occurs in `disc`: a sequence of length n
+    * counts the windows of n consecutive events of a case, ordered by
+    * (start_us, end_us, event_id), whose non-null activities equal it (the
+    * window + `collect_list` form, which skips nulls; a sequence holding a
+    * null never occurs). One pass clustered by case_id counts every
+    * sequence per partition, and the driver merges the counts as each task
+    * ends. */
+  private[graft] def occurrences(disc: DataFrame, seqs: Seq[Seq[String]]): Map[Seq[String], Long] =
+    if (seqs.isEmpty) Map.empty
+    else {
+      import disc.sparkSession.implicits._
+      val byLen = seqs.map(_.toVector).distinct.groupBy(_.length).map { case (l, ss) => l -> ss.toSet }
+      disc.select($"case_id", $"start_us", $"end_us", $"event_id", $"activity")
+        .repartition($"case_id").sortWithinPartitions("case_id", "start_us", "end_us", "event_id")
+        .rdd.mapPartitions { it =>
+          val n = mutable.HashMap.empty[Vector[String], Long].withDefaultValue(0L)
+          BatchDiscovery.groups(it)(_.get(0)).foreach { rows =>
+            val acts = rows.map(_.getString(4)).toVector
+            for (i <- acts.indices; (l, want) <- byLen) {
+              val w = acts.slice(i, i + l).filter(_ != null)
+              if (want(w)) n(w) += 1
+            }
+          }
+          n.iterator
+        }
+        .aggregate(Map.empty[Seq[String], Long])((m, kv) => m.updated(kv._1, m.getOrElse(kv._1, 0L) + kv._2),
+          (m, o) => o.foldLeft(m) { case (acc, (k, v)) => acc.updated(k, acc.getOrElse(k, 0L) + v) })
+    }
 
   private def statBlock(indent: String, cs: Array[CaseRow]): String = {
     val sb = new StringBuilder

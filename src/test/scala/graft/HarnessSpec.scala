@@ -27,7 +27,7 @@ class HarnessSpec extends AnyFunSuite {
     val tracked = Pinned.trackedCount(spark)
     val out = BatchDiscovery.discoverFull(en)
     out.count()
-    // discoverFull releases its segmentation and claims stages itself and
+    // discoverFull releases its segmentation stage itself and
     // tracks no persists (its W8 key frame is recomputed, not cached). The
     // returned frame is an EAGER stage whose lifecycle belongs to the
     // caller (pm_sp_batches memoizes it; here we release it directly).
@@ -82,7 +82,7 @@ class HarnessSpec extends AnyFunSuite {
       (jobsOf(Pinned.releaseFrame(BatchDiscovery.discoverFullFromStages(en, seg))),
         jobsOf(noop(BatchDiscovery.discoverFromSeg(seg))))
     }
-    assert(full <= 6, s"discoverFullFromStages ran $full jobs")
+    assert(full <= 2, s"discoverFullFromStages ran $full jobs")
     assert(task <= 3, s"one action over discoverFromSeg ran $task jobs")
   }
 
@@ -104,7 +104,7 @@ class HarnessSpec extends AnyFunSuite {
     })
     assert(oracle <= 2, s"building withEnabled ran $oracle jobs")
     assert(wt <= 2, s"one action over batchCaseWT ran $wt jobs")
-    assert(ep1 <= 13, s"Ep1.analyze over the CSV twin ran $ep1 jobs")
+    assert(ep1 <= 7, s"Ep1.analyze over the CSV twin ran $ep1 jobs")
   }
 
   test("report and feature table job counts stay at or below the two-action/two-pass forms'") {
@@ -117,7 +117,7 @@ class HarnessSpec extends AnyFunSuite {
         jobsOf(Pinned.releaseFrame(graft.rules.Features.featuresTable(disc))))
       finally Pinned.releaseFrame(disc)
     }
-    assert(render1 <= 6, s"Reporting.render ran $render1 jobs")
+    assert(render1 <= 3, s"Reporting.render ran $render1 jobs")
     assert(render1 == render2, s"Reporting.render ran $render1 jobs, then $render2 on the same input")
     assert(feats <= 10, s"featuresTable ran $feats jobs")
   }
