@@ -85,7 +85,9 @@ object Pinned {
   /** `df` hash-clustered by `keys`, read back as a leaf over the shuffled
     * RDD: every plan over the result reads the one shuffle output, with
     * local sorts, and holds no block (shuffle files are not RDD blocks).
-    * With AQE on, the shuffle's map stage runs at call time. */
+    * With AQE on, the shuffle's map stage runs at call time. The K2 sweep
+    * and full discovery read their clustering this way, so they stage
+    * nothing of their own. */
   def shuffled(df: DataFrame, keys: Column*): DataFrame =
     df.sparkSession.createDataFrame(df.repartition(keys: _*).rdd, df.schema)
 

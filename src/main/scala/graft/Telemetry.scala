@@ -3,6 +3,7 @@ package graft
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{SQLExecution, SparkPlan}
@@ -25,6 +26,12 @@ import org.apache.spark.sql.graftbridge.Bus
   *     planning phases of its `QueryExecution.tracker` and the node counts
   *     of its executed plan ([[planCounts]]). Plan strings are never
   *     printed: that is the cost `Pinned.stage` exists to avoid.
+  *   - `compiles` counts the Janino compilations that finished during the
+  *     span, on any thread of the JVM (driver and local executors): the
+  *     count delta of `CodegenMetrics.METRIC_COMPILATION_TIME`. That
+  *     metric is JVM-wide, so the count is exact only when spans do not
+  *     overlap: concurrent spans each count the other's compiles, and a
+  *     parent span counts those of the spans nested in it.
   *   - The listener bus is drained only when rows are read
   *     ([[Telemetry.rows]]), never at a span boundary, so a span's wall
   *     carries no tracing wait.
@@ -112,7 +119,7 @@ object Telemetry {
     private[graft] var wallS = 0.0
     private[graft] var error: Option[String] = None
     private[graft] var jobs, stages, tasks, failedTasks, executions = 0
-    private[graft] var taskMs, shuffleReadBytes, shuffleWriteBytes, spillBytes = 0L
+    private[graft] var taskMs, shuffleReadBytes, shuffleWriteBytes, spillBytes, compiles = 0L
     private[graft] val phaseMs = mutable.TreeMap.empty[String, Long]
     private[graft] var plan = PlanCounts()
 
@@ -140,7 +147,7 @@ object Telemetry {
         s""""jobs":$jobs,"stages":$stages,""" +
         f""""tasks":$tasks,"task_s":${taskMs / 1e3}%.3f,"shuffle_read_bytes":$shuffleReadBytes,""" +
         s""""shuffle_write_bytes":$shuffleWriteBytes,"spill_bytes":$spillBytes,""" +
-        s""""failed_tasks":$failedTasks,"executions":$executions,""" +
+        s""""failed_tasks":$failedTasks,"executions":$executions,"compiles":$compiles,""" +
         phaseMs.map { case (k, v) => s"${jsonString(k)}:$v" }.mkString("\"phases_ms\":{", ",", "},") +
         s""""plan":${plan.json},"error":${error.map(jsonString).getOrElse("null")}}"""
   }
@@ -168,14 +175,17 @@ final class Telemetry private (sc: SparkContext) extends SparkListener {
     spans.put(id, row)
     opened.add(row)
     sc.setLocalProperty(SpanProperty, id)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val t0 = System.nanoTime()
     try body
     catch { case e: Throwable => synchronized(row.error = Some(String.valueOf(e.getMessage))); throw e }
     finally {
       val wallS = (System.nanoTime() - t0) / 1e9
       val endMs = System.currentTimeMillis()
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
       synchronized {
         row.wallS = wallS
+        row.compiles = compiles
         row.endMs = endMs
         parent.foreach(_.childIntervals += ((row.startMs, endMs)))
       }

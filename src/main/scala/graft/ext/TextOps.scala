@@ -575,8 +575,8 @@ object TextOps {
     import spark.implicits._
     val wWord = org.apache.spark.sql.expressions.Window.partitionBy("w").orderBy("pos")
     val wRun = wWord.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    // STAGE boundaries per round (the discoverFull lifecycle: intermediates
-    // collected, final output eager, then released): round r+1's symbol
+    // STAGE boundaries per round (intermediates collected, final output
+    // eager, then released): round r+1's symbol
     // table is consumed twice (pair counts + merge application) and the
     // rounds are inherently sequential, so a lazy-persist form re-analyzed
     // the exponentially-referenced round chain instead — 6.1s vs 3.1s at

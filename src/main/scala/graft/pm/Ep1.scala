@@ -17,20 +17,18 @@ object Ep1 {
     * analysis.py:82-95 with no join. The pass reads the discovered events
     * in the partitions discovery left (each batch in one), so it sorts
     * locally with no exchange. Unbatched events carry zero durations
-    * (analysis.py:53-58 initialization). */
+    * (analysis.py:53-58 initialization). Every other column of `log`, such
+    * as the original case string `case_str`, rides the K2 case shuffle and
+    * discovery's two shuffles; nothing is staged, so a caller with
+    * several consumers stages the result. */
   def analyze(log: DataFrame, checkpoints: Boolean = false): DataFrame = {
     val en = if (log.columns.contains("enabled_us")) log else EnabledTime.withEnabled(log)
     val wt = WaitingTimes.eventWT(BatchDiscovery.discoverFull(en), checkpoints, clustered = true)
-    // the numeric artifact's column order: the batch-case key first
-    val keys = Seq("batch_id", "case_id")
-    val out = wt.select((keys ++ wt.columns.filterNot(keys.contains)).map(col): _*)
-    // the enabled-time kernel keeps only canonical columns; re-attach the
-    // original case string (collision-free id for external output) by
-    // event. Carrying it through discovery instead holds it in two more
-    // staged frames (pipebench paper_2k block_mb_peak +2%)
-    if (log.columns.contains("case_str") && !out.columns.contains("case_str"))
-      out.join(log.select(col("event_id"), col("case_str")), Seq("event_id"))
-    else out
+    // the numeric artifact's column order: the event and its batch-case key
+    // first, the original case string last
+    val front = Seq("event_id", "batch_id", "case_id")
+    val back = wt.columns.filter(_ == "case_str").toSeq
+    wt.select((front ++ wt.columns.filterNot((front ++ back).contains) ++ back).map(col): _*)
   }
 
   /** pandas-Timedelta rendering of a micros duration: `D days HH:MM:SS` with

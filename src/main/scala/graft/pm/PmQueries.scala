@@ -295,15 +295,14 @@ object PmQueries {
 
     // Full discovery INCLUDING case-based (subprocess) batches — the
     // reference's complete pass order with the nullification path.
-    // discoverFullFromStages returns a staged frame (built by its first
-    // action, while the memoized enabled and segmentation stages live) whose
-    // lifecycle belongs to the caller — memoized per (session, dataset) with the
-    // standard eviction so one session computes it once and the staged
-    // blocks are released on dataset switch.
+    // discoverFullFromStages returns a lazy frame; the memo stages it (built
+    // by its first action, while the memoized enabled and segmentation
+    // stages live), as pm_disc stages discoverFromSeg, so one session
+    // computes it once and the staged blocks are released on dataset switch.
     "pm_sp_batches" -> ((s, d) => {
       import s.implicits._
-      graft.SessionMemo(s, d, "pm_sp_batches")(
-        BatchDiscovery.discoverFullFromStages(enabledStage(s, d), segStage(s, d)))
+      graft.SessionMemo(s, d, "pm_sp_batches")(graft.Pinned.stage(
+        BatchDiscovery.discoverFullFromStages(enabledStage(s, d), segStage(s, d))))
         .select($"event_id", $"case_id", $"activity", $"resource",
           $"start_us", $"end_us", $"enabled_us", $"batch_id", $"batch_type")
     }),

@@ -143,11 +143,15 @@ object EnabledTime {
   private val Canon = Seq("event_id" -> LongType, "case_id" -> LongType, "activity" -> StringType,
     "resource" -> StringType, "start_us" -> LongType, "end_us" -> LongType)
 
-  /** `log`'s canonical columns, cast to their types and shuffled once on
-    * case_id, read back as a leaf over the shuffled RDD, so both phases of
+  /** `log`'s canonical columns, cast to their types, then its other
+    * columns but the two the sweep emits, shuffled once on case_id and read
+    * back as a leaf over the shuffled RDD, so both phases of
     * [[withEnabled]] sort locally and read the same shuffle output. */
-  private def byCase(log: DataFrame): DataFrame =
-    graft.Pinned.shuffled(log.select(Canon.map { case (c, t) => col(c).cast(t).as(c) }: _*), col("case_id"))
+  private def byCase(log: DataFrame): DataFrame = {
+    val own = Canon.map(_._1) ++ Seq("enabled_us", "run_no")
+    graft.Pinned.shuffled(log.select(Canon.map { case (c, t) => col(c).cast(t).as(c) } ++
+      log.columns.filterNot(own.contains).map(col): _*), col("case_id"))
+  }
 
   /** The counting pass's columns of `log`, clustered by case_id: lazy, for
     * the callers that share the shuffle with nothing. */
@@ -292,9 +296,12 @@ object EnabledTime {
     }.toSet
   }
 
-  /** The canonical columns plus `enabled_us` and `run_no`. One shuffle on
-    * case_id, read by the counting pass and by the sweep: per case,
-    * time-ordered, a last-completed-end per activity (O(n·A) per case). */
+  /** The canonical columns, every other column of `log` (an input
+    * `enabled_us` or `run_no` dropped), then `enabled_us` and `run_no`. One
+    * shuffle on case_id, read by the counting pass and by the sweep: per
+    * case, time-ordered, a last-completed-end per activity (O(n·A) per
+    * case). The other columns ride the shuffle, so a caller that needs one
+    * later (EP1's `case_str`) joins nothing back. */
   def withEnabled(log: DataFrame,
                   depThreshold: Double = DependencyThreshold,
                   l2lThreshold: Option[Double] = None,
@@ -304,7 +311,7 @@ object EnabledTime {
     val schema = cased.schema.add("enabled_us", LongType, nullable = false).add("run_no", LongType, nullable = false)
     cased.sortWithinPartitions("case_id", "start_us", "end_us", "event_id")
       .mapPartitions(it => BatchDiscovery.groups(it)(_.getLong(1)).flatMap { evs =>
-        // the columns are Canon: event_id, case_id, activity, resource, start_us, end_us
+        // the columns lead with Canon: event_id, case_id, activity, resource, start_us, end_us
         val caseStart = evs.head.getLong(4)
         val byEnd = evs.sortBy(e => (e.getLong(5), e.getLong(0)))
         val lastEnd = scala.collection.mutable.HashMap.empty[String, Long]
@@ -390,9 +397,9 @@ object EnabledTime {
   * those partitions with local sorts: a task batch is one activity's. Full
   * discovery needs whole resources: a same-resource run and a unit chain
   * span activities, but every run, chain and batch lies inside one
-  * resource. So [[discoverFull]] segments by resource, and
-  * [[discoverFullFromStages]] re-clusters the segmentation it is given by
-  * resource once; every pass of full discovery, and EP1's WT pass over its
+  * resource. So [[discoverFullFromStages]] re-clusters the segmentation
+  * it is given by resource once ([[discoverFull]] gives it a lazy one);
+  * every pass of full discovery, and EP1's WT pass over its
   * output, then sorts locally. The trade-off: the resource is the unit of
   * parallelism of full discovery and of EP1's WT pass. On a small log the
   * saved jobs dominate; a large log with fewer resources than cores, or
@@ -412,7 +419,7 @@ object EnabledTime {
   *      numbered from 1 and broadcast as a map over the keyed events.
   * One action runs passes 1–3 in each partition and sends its claims (unit
   * grain) and its distinct keys (batch grain) to the driver, merged as the
-  * tasks end; the driver numbers the keys, and the output stage runs pass 3
+  * tasks end; the driver numbers the keys, and the output runs pass 3
   * again with the claims and the ids broadcast.
   * Task-only discovery ([[discoverFromSeg]]) is passes 3–4 with no claims
   * and stays lazy: one task sorts its keys in the same order and numbers
@@ -534,15 +541,10 @@ object BatchDiscovery {
     * put the longer one first and stranded a member behind an equal-end
     * non-link). Same-interval rows still fall back to input order, which
     * golden batch 384 requires (Case110's row precedes Case78's). */
-  def segment(en: DataFrame, seqGapUs: Long = PmConfig.SeqGapUs): DataFrame =
-    segmentBy(en, seqGapUs, Seq("resource", "activity"))
-
-  /** [[segment]] clustered by `keys`: (resource, activity), or resource for
-    * the passes that need whole resources. */
-  private def segmentBy(en: DataFrame, seqGapUs: Long, keys: Seq[String]): DataFrame = {
+  def segment(en: DataFrame, seqGapUs: Long = PmConfig.SeqGapUs): DataFrame = {
     val in = en.schema
     val Seq(iR, iA, iS, iE) = Seq("resource", "activity", "start_us", "end_us").map(in.fieldIndex)
-    en.repartition(keys.map(col): _*)
+    en.repartition(col("resource"), col("activity"))
       .sortWithinPartitions("resource", "activity", "start_us", "end_us", "event_id")
       .mapPartitions(it => linked(it, seqGapUs)(r => (r.getString(iR), r.getString(iA)),
           _.getLong(iS), _.getLong(iE))
@@ -659,31 +661,35 @@ object BatchDiscovery {
   /** Full pipeline INCLUDING case-based (subprocess) batches, mirroring the
     * reference's pass order (discovery.py:255-263). A `run_no` column on
     * `en` (the one [[EnabledTime.withEnabled]] emits) must follow
-    * `seqGapUs`; without one, [[SubprocessBatches.withRuns]] derives it. */
+    * `seqGapUs`; without one, [[SubprocessBatches.withRuns]] derives it.
+    * Every other column of `en` is kept. [[discoverFullFromStages]] over
+    * the lazy [[segment]] of `en`: the segment pass runs once, on the
+    * map side of the resource shuffle, which the claims action and every
+    * action over the returned lazy frame re-read. Nothing is staged; the
+    * output's lifecycle (a stage for several consumers) is the caller's. */
   def discoverFull(en: DataFrame, minSize: Int = 2,
                    seqGapUs: Long = PmConfig.SeqGapUs): DataFrame = {
     val runsEv = if (en.columns.contains("run_no")) en else SubprocessBatches.withRuns(en, seqGapUs)
-    // every pass of full discovery reads whole resources
-    val seg = graft.Pinned.stage(segmentBy(runsEv, seqGapUs, Seq("resource")))
-    val out = byResource(seg, minSize, seqGapUs, seg.columns, eager = true)
-    graft.Pinned.releaseFrame(seg)
-    out
+    discoverFullFromStages(runsEv, segment(runsEv, seqGapUs), minSize, seqGapUs)
   }
 
-  /** [[discoverFull]] over caller-owned stages: `seg` is the segmentation of
-    * `runsEv` by [[segment]] (run_no is read from `runsEv` only when `seg`
-    * lacks it) and a reusable leaf, NOT released here — PmQueries owns it
+  /** [[discoverFull]] over a given segmentation: `seg` is the segmentation
+    * of `runsEv` by [[segment]] (run_no is read from `runsEv` only when
+    * `seg` lacks it), NOT released here. PmQueries passes a stage it owns
     * via its dataset-switch eviction, so one session segments the log once
-    * for task-only AND subprocess discovery. A run and a unit chain span
-    * activities, so the passes re-cluster `seg` by resource once (one
-    * exchange, no staged intermediate). Returns a stage in those partitions
-    * (each resource in one), built by its first action; its lifecycle is
-    * the caller's, and `runsEv` and `seg` must live until that action. */
+    * for task-only AND subprocess discovery; [[discoverFull]] passes a lazy
+    * one, which runs once, on the resource shuffle's map side. A run and
+    * a unit chain span activities, so the passes re-cluster `seg` by
+    * resource once (one exchange, no staged intermediate). Returns a lazy
+    * frame in those partitions (each resource in one) that every action
+    * rebuilds from the resource shuffle; a caller with several consumers
+    * stages it (the `pm_sp_batches` memo does), and `runsEv` and `seg` must
+    * live until its last action. */
   def discoverFullFromStages(runsEv: DataFrame, seg: DataFrame,
                              minSize: Int = 2,
                              seqGapUs: Long = PmConfig.SeqGapUs): DataFrame = {
     val ev = if (seg.columns.contains("run_no")) seg else seg.join(runsEv.select("event_id", "run_no"), "event_id")
-    byResource(graft.Pinned.shuffled(ev, col("resource")), minSize, seqGapUs, seg.columns, eager = false)
+    byResource(graft.Pinned.shuffled(ev, col("resource")), minSize, seqGapUs, seg.columns)
   }
 
   /** Passes 1–4 over `ev`, segmented events with run_no in which every
@@ -691,11 +697,9 @@ object BatchDiscovery {
     * columns of `cols`. One action: a partition holds whole resources, so
     * the claims of its units are all its events look up; each task sends
     * both to the driver, which appends them as the task ends (each claim
-    * and key copied once). The output is staged, `eager`ly when the caller
-    * releases `ev` next; a lazy stage holds the claims and ids broadcasts
-    * until it is built and dropped. */
-  private def byResource(ev: DataFrame, minSize: Int, seqGapUs: Long, cols: Seq[String],
-                         eager: Boolean): DataFrame = {
+    * and key copied once). The output is lazy: it reads `ev` again and
+    * holds the claims and ids broadcasts while a plan refers to it. */
+  private def byResource(ev: DataFrame, minSize: Int, seqGapUs: Long, cols: Seq[String]): DataFrame = {
     val sc = ev.sparkSession.sparkContext
     val in = ev.schema
     val at = KeyCols.map(keyedSchema(in).fieldIndex)
@@ -711,14 +715,7 @@ object BatchDiscovery {
     val claims = sc.broadcast(found.toMap)
     val ids = sc.broadcast(keys.sorted(keyOrder).iterator.zipWithIndex.map { case (k, i) => k -> (i + 1L) }.toMap)
     val front = Seq("event_id", "resource", "activity", "seg_no", "case_id")
-    val keyed = withIds(assign(ev, minSize, Some(claims)), ids, front ++ cols.filterNot((front :+ "tk").contains))
-    if (!eager) graft.Pinned.stage(keyed)
-    else {
-      val out = graft.Pinned.stageEager(keyed)
-      claims.destroy()
-      ids.destroy()
-      out
-    }
+    withIds(assign(ev, minSize, Some(claims)), ids, front ++ cols.filterNot((front :+ "tk").contains))
   }
 }
 

@@ -19,27 +19,33 @@ class HarnessSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
   private val sfDir = s"${Fixtures.testdata}/sf0.001"
 
-  test("Pinned.release + releaseFrame drop every block discoverFull creates") {
+  /** The ids of the RDDs persisted (staged, tracked or cached) now. */
+  private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("discoverFull persists no RDD") {
     // memoized STAGE caches from other suites (untracked by design) may
-    // already exist in the shared session — assert we return to that set
-    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // already exist in the shared session — assert none is added to them
+    val before = persisted
     val en = EnabledTime.withEnabled(graft.pm.EventLogOps.fromEvents(spark, sfDir))
     val tracked = Pinned.trackedCount(spark)
-    val out = BatchDiscovery.discoverFull(en)
-    out.count()
-    // discoverFull releases its segmentation stage itself and
-    // tracks no persists (its W8 key frame is recomputed, not cached). The
-    // returned frame is an EAGER stage whose lifecycle belongs to the
-    // caller (pm_sp_batches memoizes it; here we release it directly).
+    // the claims action and the output re-read one resource shuffle, whose
+    // map side runs the segment pass; the output is lazy, and staging it is
+    // the caller's
+    noop(BatchDiscovery.discoverFull(en))
     assert(Pinned.trackedCount(spark) == tracked, "discoverFull should track no persists")
-    Pinned.release(spark)
-    assert(Pinned.trackedCount(spark) == 0)
-    Pinned.releaseFrame(out)
-    // unpersist is async — poll briefly for the blocks to drop
-    val deadline = System.nanoTime() + 30e9.toLong
-    def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
-    assert(leaked.isEmpty, s"persistent RDDs leaked after release: $leaked")
+    assert(persisted == before, s"discoverFull persisted RDDs ${persisted -- before}")
+  }
+
+  test("staging Ep1.analyze and writing it once leaves exactly one new persisted RDD") {
+    val csv = sources.CsvQueries.eventsCsv(spark, sfDir)
+    val added = withAqe {
+      val before = persisted
+      val f = Pinned.stage(graft.pm.Ep1.analyze(sources.EventLogCsv.read(spark, csv)))
+      noop(f)
+      try persisted -- before finally Pinned.releaseFrame(f)
+    }
+    // the caller's stage is EP1's one held event-grain copy
+    assert(added.size == 1, s"Ep1.analyze staged and written once persisted RDDs $added")
   }
 
   /** Jobs `body` starts, counted by a [[Telemetry]] span. */
@@ -79,7 +85,8 @@ class HarnessSpec extends AnyFunSuite {
   // here. The ceilings are the counts of the key-sorted kernels.
   test("batch discovery job counts stay at or below the key-sorted kernel's") {
     val (full, task) = withStagedLog { (en, seg) =>
-      (jobsOf(Pinned.releaseFrame(BatchDiscovery.discoverFullFromStages(en, seg))),
+      // construction: the resource shuffle and the claims action
+      (jobsOf(BatchDiscovery.discoverFullFromStages(en, seg)),
         jobsOf(noop(BatchDiscovery.discoverFromSeg(seg))))
     }
     assert(full <= 2, s"discoverFullFromStages ran $full jobs")
@@ -95,7 +102,9 @@ class HarnessSpec extends AnyFunSuite {
       disc.count()
       try jobsOf(noop(graft.pm.WaitingTimes.batchCaseWT(disc))) finally Pinned.releaseFrame(disc)
     }
-    // Ep1.main's path: CSV scan, analysis staged, one action over it
+    // Ep1.main's path: CSV scan, analysis staged, one action over it. Six
+    // jobs: the K2 shuffle and counting action, discovery's segment and
+    // resource shuffles and its claims action, and the action itself
     val csv = sources.CsvQueries.eventsCsv(spark, sfDir)
     val ep1 = withAqe(jobsOf {
       val f = Pinned.stage(graft.pm.Ep1.analyze(sources.EventLogCsv.read(spark, csv)))
@@ -104,7 +113,7 @@ class HarnessSpec extends AnyFunSuite {
     })
     assert(oracle <= 2, s"building withEnabled ran $oracle jobs")
     assert(wt <= 2, s"one action over batchCaseWT ran $wt jobs")
-    assert(ep1 <= 7, s"Ep1.analyze over the CSV twin ran $ep1 jobs")
+    assert(ep1 <= 6, s"Ep1.analyze over the CSV twin ran $ep1 jobs")
   }
 
   test("report and feature table job counts stay at or below the two-action/two-pass forms'") {
@@ -127,11 +136,11 @@ class HarnessSpec extends AnyFunSuite {
     // (tiny pair relation) — build `en` before counting; likewise touch
     // the embeddings table first so Spark's own parquet schema-inference
     // job (launched by spark.read, not by our plan building) is done.
-    // discoverFull and the CC/nearDupGroups kernels are since round 7
-    // DELIBERATELY eager (stage-boundary pipelines that materialize at
-    // construction and release their intermediates) — the lock guards the
-    // still-lazy constructors, where a job at plan build means an
-    // accidental driver action (the round-3 .first() bug class).
+    // discoverFull runs its shuffles and its claims action at construction,
+    // and the CC/nearDupGroups kernels are eager stage-boundary pipelines
+    // that materialize at construction and release their intermediates —
+    // the lock guards the lazy constructors, where a job at plan build
+    // means an accidental driver action (the round-3 .first() bug class).
     val en = EnabledTime.withEnabled(graft.pm.EventLogOps.fromEvents(spark, sfDir))
     val emb = Tables.embeddings(spark, sfDir)
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -263,9 +263,14 @@ class PmPassPropertySpec extends AnyFunSuite {
           case (name, i) => assert(got(i) == want(i), clue(s"$name differs at aqe=$aqe, $n partitions"))
         }
       }
-      val ep1 = Ep1.analyze(withStr).columns.toSeq
-      assert(ep1.take(3) == Seq("event_id", "batch_id", "case_id") && ep1.last == "case_str" &&
-        ep1.count(_ == "case_str") == 1, clue(s"EP1 columns $ep1"))
+      // the same column order over a log with its own enabled times, which
+      // skips the K2 sweep
+      val withEnStr = toDf(log).withColumn("case_str", concat(lit("c"), $"case_id"))
+      Seq(withStr, withEnStr).foreach { in =>
+        val ep1 = Ep1.analyze(in).columns.toSeq
+        assert(ep1.take(3) == Seq("event_id", "batch_id", "case_id") && ep1.last == "case_str" &&
+          ep1.count(_ == "case_str") == 1, clue(s"EP1 columns $ep1"))
+      }
       // a case-based batch's units span two activities: a clustering finer
       // than the resource would split them
       val full = want(1)
@@ -387,7 +392,7 @@ class PmPassPropertySpec extends AnyFunSuite {
       val rows = pairLog(rnd).map(r => r.copy(_4 = s"r${rnd.nextInt(2)}"))
       def clue(msg: String) = s"[sample $sample, ($dep, $l2l)] $msg (log: $rows)"
       import spark.implicits._
-      // an input enabled_us and any other column are dropped
+      // an input enabled_us is dropped; any other column rides the shuffle
       val log = rows.toDF("event_id", "case_id", "activity", "resource", "start_us", "end_us")
         .withColumn("case_str", concat(lit("c"), $"case_id")).withColumn("enabled_us", lit(-1L))
       val conc = EnabledTime.concurrencyPairs(log, dep, l2l).collect().map(r => (r.getString(0), r.getString(1))).toSet
@@ -409,7 +414,8 @@ class PmPassPropertySpec extends AnyFunSuite {
       }.toMap
       val out = EnabledTime.withEnabled(log, dep, l2l)
       assert(out.columns.toSeq == Seq("event_id", "case_id", "activity", "resource", "start_us", "end_us",
-        "enabled_us", "run_no"), clue(s"columns ${out.columns.toSeq}"))
+        "case_str", "enabled_us", "run_no"), clue(s"columns ${out.columns.toSeq}"))
+      assert(out.filter($"case_str" =!= concat(lit("c"), $"case_id")).isEmpty, clue("case_str left its event"))
       val got = out.select($"event_id", $"enabled_us", $"run_no").collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
       assert(got == want, clue(s"got $got, want $want"))

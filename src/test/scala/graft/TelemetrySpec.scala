@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The telemetry contract: jobs are charged to the span of the thread
   * that started them (concurrent and nested spans apart, memo builds to
   * their node), a span restores the outer span when its body throws, the
-  * driver gap is the wall its jobs do not cover, and each execution's plan
-  * node counts are charged with its jobs. */
+  * driver gap is the wall its jobs do not cover, each execution's plan
+  * node counts are charged with its jobs, and a span counts the codegen
+  * compilations made while it runs. */
 class TelemetrySpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
   private def sc = spark.sparkContext
@@ -86,6 +87,20 @@ class TelemetrySpec extends AnyFunSuite {
     val rows = recorded(Telemetry.span(spark, "sleepy") { Thread.sleep(300); oneJob() })
     val r = row(rows, "sleepy")
     assert(r.jobs == 1 && r.driverS >= 0.3 && r.driverS <= r.wallS, r.json())
+  }
+
+  test("compiles counts the span's codegen compilations; a plan compiled before counts none") {
+    // a literal no earlier plan holds makes new generated code
+    val df = spark.range(0, 100).selectExpr(s"id * ${System.nanoTime()} AS x").filter("x % 3 = 0")
+    val rows = recorded {
+      Telemetry.span(spark, "first")(df.count())
+      Telemetry.span(spark, "again")(df.count())
+      Telemetry.span(spark, "driver only")(Thread.sleep(10))
+    }
+    val first = row(rows, "first")
+    assert(first.compiles >= 1, first.json())
+    assert(row(rows, "again").compiles == 0, row(rows, "again").json())
+    assert(row(rows, "driver only").compiles == 0 && first.json().contains("\"compiles\":"))
   }
 
   test("plan counts and the broadcast job are charged to the span (AQE off)") {

@@ -8,7 +8,8 @@ Usage:
 
 One file: the top rows by wall and by jobs. Two files: per query and per
 family (name prefix up to the first `_`) the wall delta with each side's
-pass spread (max - min over passes), jobs and shuffle bytes (read + write);
+pass spread (max - min over passes), jobs, shuffle bytes (read + write)
+and codegen compiles (`compiles`; 0 in files written before the field);
 memo rows (`memo:<node>`, one per session-memo build) in their own table.
 Wall is each span's self time (`self_s`: its wall minus the memo builds
 nested in it), so a shared build counts once, in its memo row. Each name's
@@ -23,14 +24,16 @@ TOP = 20
 
 
 def load(path):
-    """name -> pass -> {"wall", "jobs", "shuffle", "error"}, summed when a
-    name has several rows in one pass."""
-    rows = defaultdict(lambda: defaultdict(lambda: {"wall": 0.0, "jobs": 0, "shuffle": 0, "error": None}))
+    """name -> pass -> {"wall", "jobs", "shuffle", "compiles", "error"},
+    summed when a name has several rows in one pass."""
+    rows = defaultdict(lambda: defaultdict(
+        lambda: {"wall": 0.0, "jobs": 0, "shuffle": 0, "compiles": 0, "error": None}))
     for r in json.load(open(path))["rows"]:
         v = rows[r["name"]][r.get("pass", 1)]
         v["wall"] += r["self_s"]
         v["jobs"] += r["jobs"]
         v["shuffle"] += r["shuffle_read_bytes"] + r["shuffle_write_bytes"]
+        v["compiles"] += r.get("compiles", 0)
         v["error"] = v["error"] or r.get("error")
     return rows
 
@@ -51,10 +54,11 @@ def mb(b):
 def single(rows):
     def table(key):
         print(f"\n== top {TOP} by {'self time' if key == 'wall' else key}")
-        print(f"{'name':44} {'self_s':>8} {'jobs':>6} {'shuffle_mb':>10}")
+        print(f"{'name':44} {'self_s':>8} {'jobs':>6} {'shuffle_mb':>10} {'compiles':>8}")
         for n, p in sorted(rows.items(), key=lambda kv: -med(kv[1], key))[:TOP]:
             err = "  FAILED" if any(v["error"] for v in p.values()) else ""
-            print(f"{n:44} {med(p, 'wall'):8.3f} {med(p, 'jobs'):6.0f} {mb(med(p, 'shuffle')):>10}{err}")
+            print(f"{n:44} {med(p, 'wall'):8.3f} {med(p, 'jobs'):6.0f} {mb(med(p, 'shuffle')):>10}"
+                  f" {med(p, 'compiles'):8.0f}{err}")
     table("wall")
     table("jobs")
 
@@ -64,10 +68,11 @@ def compare(ra, rb):
         wa, wb = med(a, "wall"), med(b, "wall")
         return (f"{n:44} {wa:8.3f} {wb:8.3f} {wb - wa:+8.3f} {spread(a):6.3f} {spread(b):6.3f}"
                 f" {med(a, 'jobs'):5.0f} -> {med(b, 'jobs'):<5.0f}"
-                f" {mb(med(a, 'shuffle')):>8} -> {mb(med(b, 'shuffle'))}")
+                f" {mb(med(a, 'shuffle')):>8} -> {mb(med(b, 'shuffle')):<8}"
+                f" {med(a, 'compiles'):5.0f} -> {med(b, 'compiles'):.0f}")
 
     header = (f"{'name':44} {'A self':>8} {'B self':>8} {'delta':>8} {'A sprd':>6} {'B sprd':>6}"
-              f" {'jobs A -> B':13} shuffle MB A -> B")
+              f" {'jobs A -> B':13} {'shuffle MB A -> B':20} compiles A -> B")
     names = sorted(set(ra) & set(rb))
     queries = [n for n in names if not n.startswith("memo:") and n != "(no span)"]
     memos = [n for n in names if n.startswith("memo:")]
@@ -82,7 +87,7 @@ def compare(ra, rb):
         print(line(n, ra[n], rb[n]))
 
     def families(rows):
-        fam = defaultdict(lambda: defaultdict(lambda: {"wall": 0.0, "jobs": 0, "shuffle": 0}))
+        fam = defaultdict(lambda: defaultdict(lambda: {"wall": 0.0, "jobs": 0, "shuffle": 0, "compiles": 0}))
         for n in queries:
             for p, v in rows[n].items():
                 f = fam[n.split("_")[0]][p]
